@@ -1,11 +1,17 @@
 """HMM/Viterbi map matching: the engine's primary query.
 
-Spark shape (SURVEY.md §3.1): the road graph is packed + broadcast once
-(north rule: "broadcast packed R-tree"); trips shuffle once on trip_id; each
-trip is solved inside one Arrow-batched ``applyInPandas`` call — candidate
-generation (X6), boundary weighing (M4-M9), Viterbi (M11), collapse (M15/16)
-all run against the executor-resident graph with a process-wide predicate
-LRU (O4). No per-row Python at the DataFrame level.
+Spark shape (SURVEY.md §3.1), two candidate paths:
+  - broadcast: the road graph is packed + broadcast once (north rule:
+    "broadcast packed R-tree"); trips shuffle once on trip_id and a
+    ``mapInPandas`` runs over the trip-sorted partitions, candidate
+    generation (X6) running against the executor-resident graph
+  - celljoin: candidates come from a distributed cell-cover equi-join and
+    a ``cogroup.applyInPandas`` per cover signature solves that group's
+    trips against its shared padded subgraph
+Both feed one per-trip solve path (``_solve_layers``): boundary weighing
+(M4-M9), Viterbi (M11) and collapse (M15/16) with a process-wide predicate
+LRU (O4), emitting column arrays that become ONE frame per Arrow batch or
+cogroup group. No per-row Python at the DataFrame level.
 
 Semantics are the reference batch facade
 (libs/routers_transition/src/match/implementation.rs:20-41 →
@@ -334,23 +340,10 @@ GATE_UNION_SCHEMA = (
 )
 
 
-def _solve_pdf(pdf: pd.DataFrame, graph, opts: MatchOptions,
-               output: str) -> pd.DataFrame:
-    trip_id = pdf["trip_id"].iloc[0]
-    cols = _solve_arrays(trip_id, pdf["seq"].values, pdf["lon"].values,
-                         pdf["lat"].values, graph, opts, output)
-    if isinstance(cols, pd.DataFrame):  # interpolated path
-        return cols
-    return pd.DataFrame(cols)
-
-
 def _solve_arrays(trip_id: str, seqs, lons, lats, graph, opts: MatchOptions,
-                  output: str):
-    """Solve one trip from raw column arrays. For the discretized output the
-    return value is a dict of numpy column arrays — the broadcast hot path
-    builds ONE DataFrame per Arrow batch from thousands of these instead of
-    one pandas frame per 10-row trip (per-trip frame construction + concat
-    measured ~25% of warm solver wall)."""
+                  output: str) -> dict:
+    """Broadcast path: build one trip's candidate layers from its raw point
+    arrays against the executor-resident graph, then solve them."""
     seqs = np.asarray(seqs)
     lons = np.asarray(lons, dtype=np.float64)
     lats = np.asarray(lats, dtype=np.float64)
@@ -360,22 +353,61 @@ def _solve_arrays(trip_id: str, seqs, lons, lats, graph, opts: MatchOptions,
     layers = candidates_for_points(graph, lons, lats,
                                    opts.search_distance, opts.emission_error,
                                    opts.costing)
+    return _solve_layers(trip_id, seqs, layers, graph, opts, output)
+
+
+def _solve_candidate_arrays(trip_id: str, seq, er, frac, px, py, dist, emis,
+                            graph, opts: MatchOptions, output: str) -> dict:
+    """Celljoin path: build one trip's layers from pre-joined candidate
+    column arrays already sorted by (seq, edge_row), then solve them.
+    edge_row == -1 marks an unanchored point (empty layer)."""
+    scuts = np.nonzero(seq[1:] != seq[:-1])[0] + 1
+    sb = np.concatenate([[0], scuts, [len(seq)]])
+    layers = []
+    for a, b in zip(sb[:-1], sb[1:]):
+        m = er[a:b] >= 0
+        layers.append({
+            "edge_row": er[a:b][m],
+            "frac": frac[a:b][m],
+            "px": px[a:b][m], "py": py[a:b][m],
+            "dist_m": dist[a:b][m],
+            "emission": emis[a:b][m].astype(np.uint32),
+        })
+    return _solve_layers(trip_id, seq[sb[:-1]], layers, graph, opts, output)
+
+
+def _solve_layers(trip_id: str, seqs, layers, graph, opts: MatchOptions,
+                  output: str) -> dict:
+    """The one per-trip solve path of both candidate paths and every output
+    mode: drop unanchored layers (streaming semantics), Viterbi, then the
+    output's column arrays — a status row when the trip does not match."""
     if opts.drop_unanchored:
         keep = [i for i, l in enumerate(layers) if len(l["edge_row"]) > 0]
         layers = [layers[i] for i in keep]
         seqs = seqs[keep]
         if not layers:
             return _status_cols(trip_id, "unanchored", output)
-
     result = solve_trip(graph, layers, opts)
     if result["status"] != "matched":
         return _status_cols(trip_id, result["status"], output)
     return _emit_cols(trip_id, seqs, layers, result, graph, output)
 
 
-def _emit(trip_id: str, seqs, layers, result, graph, output: str) -> pd.DataFrame:
-    out = _emit_cols(trip_id, seqs, layers, result, graph, output)
-    return out if isinstance(out, pd.DataFrame) else pd.DataFrame(out)
+def _solve_trips(tid, solve_one, output: str) -> pd.DataFrame:
+    """Cut trip-contiguous rows at trip_id boundaries, call
+    ``solve_one(trip_id, start, stop)`` per trip and build ONE frame from
+    the returned column arrays (per-trip frame construction + concat
+    measured ~25% of warm broadcast solver wall and ~15 s of a 24 s
+    celljoin run). Seeded with the output's typed empty columns, so no
+    rows still yields a schema-typed frame."""
+    acc = {k: [v[:0]] for k, v in _status_cols("", "", output).items()}
+    if len(tid):
+        cuts = np.nonzero(tid[1:] != tid[:-1])[0] + 1
+        bounds = np.concatenate([[0], cuts, [len(tid)]])
+        for s, e in zip(bounds[:-1], bounds[1:]):
+            for k, v in solve_one(tid[s], s, e).items():
+                acc[k].append(v)
+    return pd.DataFrame({k: np.concatenate(v) for k, v in acc.items()})
 
 
 def _routed_elems(layers, path, hops, graph) -> list[tuple]:
@@ -413,7 +445,8 @@ def _routed_elems(layers, path, hops, graph) -> list[tuple]:
             if i == 0 or (e[0], e[1]) != (elems[i - 1][0], elems[i - 1][1])]
 
 
-def _emit_cols(trip_id: str, seqs, layers, result, graph, output: str):
+def _emit_cols(trip_id: str, seqs, layers, result, graph,
+               output: str) -> dict:
     path, cost, hops = result["path"], result["cost"], result["hops"]
     if output == "discretized":
         n = len(path)
@@ -465,19 +498,20 @@ def _emit_cols(trip_id: str, seqs, layers, result, graph, output: str):
 
     # interpolated (RoutedPath::new, candidate/route.rs:46-141)
     dedup = _routed_elems(layers, path, hops, graph)
-    return pd.DataFrame({
-        "trip_id": trip_id,
-        "elem": np.arange(len(dedup), dtype="int32"),
-        "lon": [e[0] for e in dedup],
-        "lat": [e[1] for e in dedup],
+    m = len(dedup)
+    return {
+        "trip_id": np.full(m, trip_id, dtype=object),
+        "elem": np.arange(m, dtype=np.int32),
+        "lon": np.array([e[0] for e in dedup]),
+        "lat": np.array([e[1] for e in dedup]),
         "edge_id": np.array([e[2] for e in dedup], dtype=np.int64),
-        "kind": [e[3] for e in dedup],
-        "trip_cost": np.int64(cost),
-        "status": "matched",
-    })
+        "kind": np.array([e[3] for e in dedup], dtype=object),
+        "trip_cost": np.full(m, cost, dtype=np.int64),
+        "status": np.full(m, "matched", dtype=object),
+    }
 
 
-def _status_cols(trip_id: str, status: str, output: str):
+def _status_cols(trip_id: str, status: str, output: str) -> dict:
     if output == "gate_union":
         # non-matched trips emit NO rows: the gate consumers filter
         # status='matched' anyway, so this is the same row multiset
@@ -500,17 +534,15 @@ def _status_cols(trip_id: str, status: str, output: str):
             "trip_cost": np.array([-1], dtype=np.int64),
             "status": np.array([status], dtype=object),
         }
-    return pd.DataFrame({
-        "trip_id": [trip_id], "elem": np.array([-1], dtype="int32"),
-        "lon": [np.nan], "lat": [np.nan],
-        "edge_id": np.array([-1], dtype=np.int64), "kind": ["none"],
-        "trip_cost": np.array([-1], dtype=np.int64), "status": [status],
-    })
-
-
-def _status_row(trip_id: str, status: str, output: str) -> pd.DataFrame:
-    out = _status_cols(trip_id, status, output)
-    return out if isinstance(out, pd.DataFrame) else pd.DataFrame(out)
+    return {
+        "trip_id": np.array([trip_id], dtype=object),
+        "elem": np.array([-1], dtype=np.int32),
+        "lon": np.array([np.nan]), "lat": np.array([np.nan]),
+        "edge_id": np.array([-1], dtype=np.int64),
+        "kind": np.array(["none"], dtype=object),
+        "trip_cost": np.array([-1], dtype=np.int64),
+        "status": np.array([status], dtype=object),
+    }
 
 
 def match_trips(points_df, nodes_df, edges_df, opts: MatchOptions | None = None,
@@ -530,18 +562,16 @@ def match_trips(points_df, nodes_df, edges_df, opts: MatchOptions | None = None,
         as a distributed padded cell-cover equi-join (shard/partition.py,
         salting via ``salt``), and each trip's solver receives its OWN road
         subgraph (every edge within Dijkstra-bound + search of the trip,
-        P4/P5 admit semantics) through a trip_id cogroup. The global graph
-        is never collected to the driver and never broadcast. Both paths
-        produce identical matches (tie-breaks share the canonical edge_row
-        order; a sorted subset preserves it — tests/test_celljoin.py).
+        P4/P5 admit semantics) through a cover-signature cogroup. The global
+        graph is never collected to the driver and never broadcast. Both
+        paths produce identical matches (tie-breaks share the canonical
+        edge_row order; a sorted subset preserves it —
+        tests/test_celljoin.py).
     """
     opts = opts or MatchOptions()
     schema = {"discretized": DISCRETIZED_SCHEMA,
               "interpolated": INTERPOLATED_SCHEMA,
               "gate_union": GATE_UNION_SCHEMA}[output]
-    # outputs whose per-trip emitters return raw column-array dicts (the
-    # no-per-trip-DataFrame hot path); 'interpolated' keeps the pdf path
-    raw_cols = output in ("discretized", "gate_union")
 
     if candidate_path == "broadcast":
         import uuid
@@ -581,46 +611,14 @@ def match_trips(points_df, nodes_df, edges_df, opts: MatchOptions | None = None,
         # (per-group dispatch dominated the matcher's wall time at scale).
         # Trips split across batch boundaries are carried forward — rows of
         # a trip are contiguous (and seq-sorted) after sortWithinPartitions.
-        # The discretized path works on RAW ARRAYS end-to-end: trip slices
-        # via one boundary scan, per-trip solve returns column dicts, ONE
-        # DataFrame per batch — no per-trip groupby/sort/frame/concat
-        # (those measured ~25% of warm solver wall).
-        def _solve_cols_batch(tid, seq, lon, lat, graph):
-            cuts = np.nonzero(tid[1:] != tid[:-1])[0] + 1
-            bounds = np.concatenate([[0], cuts, [len(tid)]])
-            acc: dict[str, list] = {}
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                cols = _solve_arrays(tid[s], seq[s:e], lon[s:e], lat[s:e],
-                                     graph, opts, output)
-                for k, v in cols.items():
-                    acc.setdefault(k, []).append(v)
-            return pd.DataFrame(
-                {k: np.concatenate(v) for k, v in acc.items()})
-
         def run_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             graph = hydrate(bc, bc_key)
-            if not raw_cols:
-                carry: pd.DataFrame | None = None
-                for pdf in batches:
-                    if carry is not None and len(carry):
-                        pdf = pd.concat([carry, pdf], ignore_index=True)
-                    if not len(pdf):
-                        continue
-                    last_tid = pdf["trip_id"].iloc[-1]
-                    boundary = pdf["trip_id"].values == last_tid
-                    carry = pdf[boundary]
-                    main = pdf[~boundary]
-                    if len(main):
-                        yield pd.concat(
-                            [_solve_pdf(grp, graph, opts, output)
-                             for _, grp in main.groupby("trip_id", sort=False)],
-                            ignore_index=True)
-                if carry is not None and len(carry):
-                    yield pd.concat(
-                        [_solve_pdf(grp, graph, opts, output)
-                         for _, grp in carry.groupby("trip_id", sort=False)],
-                        ignore_index=True)
-                return
+
+            def solve_batch(tid, seq, lon, lat):
+                return _solve_trips(tid, lambda t, s, e: _solve_arrays(
+                    t, seq[s:e], lon[s:e], lat[s:e], graph, opts, output),
+                    output)
+
             ctid = cseq = clon = clat = None
             for pdf in batches:
                 if not len(pdf):
@@ -638,10 +636,9 @@ def match_trips(points_df, nodes_df, edges_df, opts: MatchOptions | None = None,
                 ctid, cseq, clon, clat = tid[last], seq[last], lon[last], lat[last]
                 keep = ~last
                 if keep.any():
-                    yield _solve_cols_batch(tid[keep], seq[keep], lon[keep],
-                                            lat[keep], graph)
+                    yield solve_batch(tid[keep], seq[keep], lon[keep], lat[keep])
             if ctid is not None and len(ctid):
-                yield _solve_cols_batch(ctid, cseq, clon, clat, graph)
+                yield solve_batch(ctid, cseq, clon, clat)
 
         # exactly spark.sql.shuffle.partitions tasks: each task carries a
         # fixed ~65 ms of Arrow-stream + worker-handshake cost, so fewer,
@@ -683,7 +680,7 @@ def match_trips(points_df, nodes_df, edges_df, opts: MatchOptions | None = None,
     )
     # ONE signature aggregation per call, shared by the subgraph builder
     # (which derives (sig, cx, cy) from the carried cell arrays) and the
-    # candidate→sig join — the old shape aggregated the points twice
+    # candidate→sig join
     sigs_cells = trip_cover_sigs_cells(points_df)
     # subgraphs are SHARED per cover signature (one graph per distinct cell
     # set, solved against by every trip with that cover — the per-shard
@@ -706,8 +703,6 @@ def match_trips(points_df, nodes_df, edges_df, opts: MatchOptions | None = None,
     # hydrations for solve_salt× solver parallelism on the hot key).
     # Default 1: the fixture workload's 60 sigs / 1,000 trips spread fine.
     if solve_salt > 1:
-        from pyspark.sql import functions as F
-
         # sig is a LONG now: sub-key by hashing (sig, salt-slot) — the
         # same value on both sides; a collision only merges solver groups
         # into a superset subgraph (harmless, see trip_cover_sigs_cells)
@@ -747,13 +742,10 @@ def _solve_cogroup_pdf(cand_pdf: pd.DataFrame, edges_pdf: pd.DataFrame,
     empty layer and the all-or-nothing unanchored rejection, while
     markers alongside surviving candidates are inert (layers are built
     from edge_row >= 0 rows only)."""
-    if len(cand_pdf) == 0:
-        # schema-typed empty frame
-        return _status_row("", "unanchored", output).iloc[0:0]
-    trip_ids = cand_pdf["trip_id"].unique()
-    if len(edges_pdf) == 0:
-        return pd.concat([_status_row(t, "unanchored", output)
-                          for t in trip_ids], ignore_index=True)
+    if len(cand_pdf) == 0 or len(edges_pdf) == 0:
+        return _solve_trips(
+            cand_pdf["trip_id"].unique(),
+            lambda t, s, e: _status_cols(t, "unanchored", output), output)
 
     from routers_spark.graph.packed import build_packed_graph
 
@@ -777,102 +769,19 @@ def _solve_cogroup_pdf(cand_pdf: pd.DataFrame, edges_pdf: pd.DataFrame,
     cand_pdf = cand_pdf.merge(local, on=key, how="left")
     cand_pdf["edge_row"] = (cand_pdf["edge_row"].fillna(-1)
                             .astype(np.int64))
-    if output in ("discretized", "gate_union"):
-        # raw-array hot path, mirroring the broadcast _solve_cols_batch:
-        # ONE sort of the whole group, trip/seq slices via boundary scans,
-        # per-trip solve returns column dicts, ONE DataFrame per group.
-        # The previous per-trip pandas loop (sort_values + groupby per
-        # 10-row trip) measured ~15 s of the 24 s celljoin wall at 20k
-        # trips — the frames, not the Viterbi, were the cost.
-        cand_pdf = cand_pdf.sort_values(["trip_id", "seq", "edge_row"],
-                                        kind="stable")
-        tid = cand_pdf["trip_id"].values
-        seq = cand_pdf["seq"].values.astype(np.int64)
-        er = cand_pdf["edge_row"].values
-        frac = cand_pdf["frac"].values.astype(np.float64)
-        px = cand_pdf["px"].values.astype(np.float64)
-        py = cand_pdf["py"].values.astype(np.float64)
-        dist = cand_pdf["dist_m"].values.astype(np.float64)
-        emis = cand_pdf["emission"].values
-        cuts = np.nonzero(tid[1:] != tid[:-1])[0] + 1
-        bounds = np.concatenate([[0], cuts, [len(tid)]])
-        acc: dict[str, list] = {}
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            cols = _solve_candidate_arrays(
-                tid[s], seq[s:e], er[s:e], frac[s:e], px[s:e], py[s:e],
-                dist[s:e], emis[s:e], g, opts, output)
-            for k, v in cols.items():
-                acc.setdefault(k, []).append(v)
-        return pd.DataFrame({k: np.concatenate(v) for k, v in acc.items()})
-    outs = []
-    for _, tp in cand_pdf.groupby("trip_id", sort=False):
-        outs.append(_solve_candidates_pdf(tp, g, opts, output))
-    return pd.concat(outs, ignore_index=True)
-
-
-def _solve_candidate_arrays(trip_id: str, seq, er, frac, px, py, dist, emis,
-                            graph, opts: MatchOptions, output: str):
-    """Solve one trip from pre-joined candidate COLUMN ARRAYS already
-    sorted by (seq, edge_row) — the celljoin twin of _solve_arrays.
-    edge_row == -1 marks an unanchored point (empty layer)."""
-    scuts = np.nonzero(seq[1:] != seq[:-1])[0] + 1
-    sb = np.concatenate([[0], scuts, [len(seq)]])
-    layers = []
-    seqs = []
-    for a, b in zip(sb[:-1], sb[1:]):
-        rows = er[a:b]
-        m = rows >= 0
-        layers.append({
-            "edge_row": rows[m],
-            "frac": frac[a:b][m],
-            "px": px[a:b][m], "py": py[a:b][m],
-            "dist_m": dist[a:b][m],
-            "emission": emis[a:b][m].astype(np.uint32),
-        })
-        seqs.append(seq[a])
-    seqs = np.asarray(seqs)
-    if opts.drop_unanchored:
-        keep = [i for i, l in enumerate(layers) if len(l["edge_row"]) > 0]
-        layers = [layers[i] for i in keep]
-        seqs = seqs[keep]
-        if not layers:
-            return _status_cols(trip_id, "unanchored", output)
-
-    result = solve_trip(graph, layers, opts)
-    if result["status"] != "matched":
-        return _status_cols(trip_id, result["status"], output)
-    return _emit_cols(trip_id, seqs, layers, result, graph, output)
-
-
-def _solve_candidates_pdf(pdf: pd.DataFrame, graph, opts: MatchOptions,
-                          output: str) -> pd.DataFrame:
-    """Solve one trip from pre-joined candidate rows (celljoin stage A
-    output). Layers are rebuilt per seq with candidates in canonical
-    edge_row order; edge_row == -1 marks an unanchored point."""
-    trip_id = pdf["trip_id"].iloc[0]
-    pdf = pdf.sort_values(["seq", "edge_row"], kind="stable")
-    layers = []
-    seqs = []
-    for seq, grp in pdf.groupby("seq", sort=True):
-        rows = grp[grp["edge_row"] >= 0]
-        layers.append({
-            "edge_row": rows["edge_row"].values.astype(np.int64),
-            "frac": rows["frac"].values.astype(np.float64),
-            "px": rows["px"].values.astype(np.float64),
-            "py": rows["py"].values.astype(np.float64),
-            "dist_m": rows["dist_m"].values.astype(np.float64),
-            "emission": rows["emission"].values.astype(np.uint32),
-        })
-        seqs.append(seq)
-    seqs = np.asarray(seqs)
-    if opts.drop_unanchored:
-        keep = [i for i, l in enumerate(layers) if len(l["edge_row"]) > 0]
-        layers = [layers[i] for i in keep]
-        seqs = seqs[keep]
-        if not layers:
-            return _status_row(trip_id, "unanchored", output)
-
-    result = solve_trip(graph, layers, opts)
-    if result["status"] != "matched":
-        return _status_row(trip_id, result["status"], output)
-    return _emit(trip_id, seqs, layers, result, graph, output)
+    # ONE sort of the whole group; trip and seq slices via boundary scans
+    cand_pdf = cand_pdf.sort_values(["trip_id", "seq", "edge_row"],
+                                    kind="stable")
+    seq = cand_pdf["seq"].values.astype(np.int64)
+    er = cand_pdf["edge_row"].values
+    frac = cand_pdf["frac"].values.astype(np.float64)
+    px = cand_pdf["px"].values.astype(np.float64)
+    py = cand_pdf["py"].values.astype(np.float64)
+    dist = cand_pdf["dist_m"].values.astype(np.float64)
+    emis = cand_pdf["emission"].values
+    return _solve_trips(
+        cand_pdf["trip_id"].values,
+        lambda t, s, e: _solve_candidate_arrays(
+            t, seq[s:e], er[s:e], frac[s:e], px[s:e], py[s:e], dist[s:e],
+            emis[s:e], g, opts, output),
+        output)

@@ -296,11 +296,11 @@ def trip_subgraph_edges(points_df: DataFrame, nodes_df: DataFrame,
     pad_m ≥ Dijkstra bound + search distance, every transition path of the
     trip lies inside the subgraph, so the solver needs NO global broadcast.
 
-    The matcher's celljoin path uses :func:`sig_subgraph_edges` instead
-    (the same admit rule keyed by cover signature, one shared subgraph per
-    distinct cell set — per-trip and per-signature forms are row-equivalent
-    for each trip, asserted in tests/test_celljoin.py); this per-trip form
-    remains the right shape when trips rarely share covers.
+    The matcher's celljoin path uses :func:`sig_subgraph_edges` (the same
+    admit rule keyed by cover signature, one shared subgraph per distinct
+    cell set); this per-trip form is kept as the reference that
+    tests/test_celljoin.py checks the per-signature form against, trip by
+    trip.
 
     Output: (trip_id, edge_id, src, dst, weight, ax, ay, bx, by),
     deduplicated per (trip_id, edge_id, src, dst) — the natural edge key;
@@ -333,7 +333,10 @@ def _cell_range_bounds(cells_df: DataFrame) -> DataFrame:
 def trip_cover_sigs_cells(points_df: DataFrame,
                           cell_deg: float = 0.02) -> DataFrame:
     """(trip_id, cells, sig): each trip's sorted distinct coarse-cell set
-    and its signature, in ONE aggregation directly over the raw points —
+    and its signature. Trips sharing a signature need the IDENTICAL
+    subgraph, so the solver shares one graph per signature — the Spark
+    analog of the reference's per-shard graphs (bin/matcher.rs:48-55).
+    Built in ONE aggregation directly over the raw points —
     ``collect_set`` dedups, so no pre-``distinct`` exchange is paid (r6:
     the old tc-distinct → groupBy → re-join chain cost three exchanges
     over the point set per call). The carried ``cells`` array lets
@@ -357,18 +360,6 @@ def trip_cover_sigs_cells(points_df: DataFrame,
             "cells",
             lambda c: F.concat_ws(":", c.getField("cx").cast("string"),
                                   c.getField("cy").cast("string"))))))
-
-
-def trip_cover_sigs(points_df: DataFrame,
-                    cell_deg: float = 0.02) -> DataFrame:
-    """Each trip's padded-cover signature: the hash of its sorted distinct
-    coarse-cell set. Trips sharing a signature need the IDENTICAL subgraph,
-    so the solver shares one graph per signature instead of duplicating it
-    per trip — the Spark analog of the reference's per-shard graphs (each
-    matcher process holds its cells' graph and serves MANY vehicles,
-    bin/matcher.rs:48-55), recovered here at cogroup granularity. Output:
-    (trip_id, sig)."""
-    return trip_cover_sigs_cells(points_df, cell_deg).select("trip_id", "sig")
 
 
 def sig_subgraph_edges(points_df: DataFrame, nodes_df: DataFrame,

@@ -48,78 +48,41 @@ def with_tile_columns(df: DataFrame, zoom: int, lon: str = "lon",
         .withColumn("z", F.lit(zoom).cast("int"))
 
 
-TILE_CELLS_SCHEMA = ("gh string, tile_x long, tile_y long, hilbert long")
-
-
 def assign_tile_cells(df: DataFrame, zoom: int, gh_precision: int | None = 6,
                       lon: str = "lon", lat: str = "lat",
-                      keep: list[str] | None = None,
-                      impl: str = "jvm") -> DataFrame:
+                      keep: list[str] | None = None) -> DataFrame:
     """The fused tile/cell assignment fast path: geohash + slippy + hilbert
     for every row (T1/T3/P2).
 
-    ``impl="jvm"`` (default since r4): the whole pass stays JVM-side —
-    geohash + slippy as one rendered sqlgen projection chain, hilbert as
-    the chunked broadcast-lookup joins (tiling/hilbert_jvm.py). Round-4
-    measurement (BENCH.md): ANY Python round trip over this input costs a
-    flat ~7.5 s at 32M rows regardless of core count — the Arrow transfer
-    pipe, not the kernel, was the binding resource and it does not scale
-    with threads. The JVM form both beats it absolutely at local[32] and
-    actually scales 8→32, which is the property the north rule grades.
+    The whole pass stays JVM-side — geohash + slippy as one rendered
+    sqlgen projection chain, hilbert as the chunked broadcast-lookup joins
+    (tiling/hilbert_jvm.py). Measured (BENCH.md): ANY Python round trip
+    over this input costs a flat ~7.5 s at 32M rows regardless of core
+    count — the Arrow transfer pipe, not the kernel, is the binding
+    resource and it does not scale with threads. The JVM form both beats
+    it absolutely at local[32] and actually scales 8→32, which is the
+    property the north rule grades."""
+    import uuid
 
-    ``impl="arrow"``: the former numpy-kernel Arrow pass, kept as the
-    parity twin (bit-identical output, pytest-pinned)."""
+    from routers_spark.tiling.hilbert_jvm import with_hilbert_jvm
+
     keep = keep if keep is not None else [
         c for c in df.columns if c not in (lon, lat)]
-    if impl == "jvm":
-        import uuid
-
-        from routers_spark.tiling.hilbert_jvm import with_hilbert_jvm
-
-        S = sqlgen.SPARK
-        name = f"_atc_{uuid.uuid4().hex[:10]}"
-        df.createOrReplaceTempView(name)
-        prog = sqlgen.Program(f"SELECT * FROM {name}", list(df.columns))
-        sel = list(keep)
-        if gh_precision is not None:
-            gh = sqlgen.p_geohash_str(prog, S, lon, lat, gh_precision)
-            sel.append(f"{gh} AS gh")
-        sx, sy = sqlgen.slippy_xy_expr(S, lon, lat, zoom)
-        sel += [f"{sx} AS tile_x", f"{sy} AS tile_y"]
-        base = df.sparkSession.sql(prog.render(sel))
-        # the analyzed plan no longer needs the catalog entry — drop it so
-        # repeated calls don't grow the session catalog without bound
-        df.sparkSession.catalog.dropTempView(name)
-        return with_hilbert_jvm(base, "tile_x", "tile_y", zoom)
-
-    import numpy as np
-
-    from routers_spark.functions.cells import (
-        geohash_str_np as _gh,
-        hilbert_xy2h_np as _h,
-        slippy_xy_np as _sxy,
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            lo = pdf[lon].values.astype(np.float64)
-            la = pdf[lat].values.astype(np.float64)
-            tx, ty = _sxy(lo, la, zoom)
-            out = {k: pdf[k].values for k in keep}
-            if gh_precision is not None:
-                out["gh"] = _gh(lo, la, gh_precision)
-            out["tile_x"] = tx.astype(np.int64)
-            out["tile_y"] = ty.astype(np.int64)
-            out["hilbert"] = _h(tx, ty, zoom).astype(np.int64)
-            yield pd.DataFrame(out)
-
-    keep_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields if f.name in keep)
-    cells_schema = (TILE_CELLS_SCHEMA if gh_precision is not None
-                    else TILE_CELLS_SCHEMA.split(", ", 1)[1])
-    schema = (keep_schema + ", " if keep_schema else "") + cells_schema
-    return df.mapInPandas(gen, schema=schema)
+    S = sqlgen.SPARK
+    name = f"_atc_{uuid.uuid4().hex[:10]}"
+    df.createOrReplaceTempView(name)
+    prog = sqlgen.Program(f"SELECT * FROM {name}", list(df.columns))
+    sel = list(keep)
+    if gh_precision is not None:
+        gh = sqlgen.p_geohash_str(prog, S, lon, lat, gh_precision)
+        sel.append(f"{gh} AS gh")
+    sx, sy = sqlgen.slippy_xy_expr(S, lon, lat, zoom)
+    sel += [f"{sx} AS tile_x", f"{sy} AS tile_y"]
+    base = df.sparkSession.sql(prog.render(sel))
+    # the analyzed plan no longer needs the catalog entry — drop it so
+    # repeated calls don't grow the session catalog without bound
+    df.sparkSession.catalog.dropTempView(name)
+    return with_hilbert_jvm(base, "tile_x", "tile_y", zoom)
 
 
 def fragment_hilbert_range(z: int, x: int, y: int,

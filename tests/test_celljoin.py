@@ -156,7 +156,7 @@ def test_sig_subgraphs_equal_per_trip_subgraphs(spark):
     from routers_spark.fixtures.roads import grid_network, walk_trips
     from routers_spark.shard.partition import (
         sig_subgraph_edges,
-        trip_cover_sigs,
+        trip_cover_sigs_cells,
         trip_subgraph_edges,
     )
 
@@ -168,7 +168,7 @@ def test_sig_subgraphs_equal_per_trip_subgraphs(spark):
     pad = 500.0
     per_trip = trip_subgraph_edges(points, nodes_df, edges_df, pad_m=pad) \
         .select("trip_id", "edge_id", "src", "dst").toPandas()
-    sigs = trip_cover_sigs(points).toPandas()
+    sigs = trip_cover_sigs_cells(points).select("trip_id", "sig").toPandas()
     per_sig = sig_subgraph_edges(points, nodes_df, edges_df, pad_m=pad) \
         .select("sig", "edge_id", "src", "dst").toPandas()
 

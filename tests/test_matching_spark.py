@@ -56,7 +56,41 @@ def test_match_trips_deterministic_across_runs(spark, grid):
     pd.testing.assert_frame_equal(a, b)
 
 
-def test_match_trips_statuses(spark):
+@pytest.mark.parametrize("output",
+                         ["discretized", "interpolated", "gate_union"])
+def test_match_trips_split_across_arrow_batches(spark, output):
+    """Broadcast solver batches carry a trip split across Arrow batch
+    boundaries into the next batch: tiny batches must give the same rows
+    as the session default."""
+    nodes, edges = grid_network(12)
+    trips = walk_trips(nodes, edges, n_trips=20, points_per_trip=10, seed=5)
+    args = (spark.createDataFrame(trips), spark.createDataFrame(nodes),
+            spark.createDataFrame(edges))
+
+    def run():
+        out = match_trips(*args, output=output).toPandas()
+        return out.sort_values(list(out.columns)).reset_index(drop=True)
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = run()
+    prev = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "7")
+        small = run()
+    finally:
+        spark.conf.set(conf, prev)
+    assert len(default) > 0
+    pd.testing.assert_frame_equal(default, small)
+
+
+_PATHS_OUTPUTS = pytest.mark.parametrize(
+    "candidate_path,output",
+    [(p, o) for p in ("broadcast", "celljoin")
+     for o in ("discretized", "interpolated")])
+
+
+@_PATHS_OUTPUTS
+def test_match_trips_statuses(spark, candidate_path, output):
     nodes, edges = straight_road()
     pts = pd.DataFrame({
         "trip_id": ["ok", "ok", "bad", "bad"],
@@ -68,13 +102,22 @@ def test_match_trips_statuses(spark):
         spark.createDataFrame(pts),
         spark.createDataFrame(nodes),
         spark.createDataFrame(edges),
+        output=output, candidate_path=candidate_path,
     ).toPandas()
     by_trip = {t: set(g.status) for t, g in out.groupby("trip_id")}
     assert by_trip["ok"] == {"matched"}
     assert by_trip["bad"] == {"unanchored"}
+    # a non-matched trip is exactly one status row
+    bad = out[out.trip_id == "bad"]
+    assert len(bad) == 1
+    assert bad.edge_id.iloc[0] == -1
+    if output == "interpolated":
+        assert bad.elem.iloc[0] == -1
+        assert bad.kind.iloc[0] == "none"
 
 
-def test_match_trips_drop_unanchored(spark):
+@_PATHS_OUTPUTS
+def test_match_trips_drop_unanchored(spark, candidate_path, output):
     nodes, edges = straight_road()
     pts = pd.DataFrame({
         "trip_id": ["t"] * 3,
@@ -87,9 +130,12 @@ def test_match_trips_drop_unanchored(spark):
         spark.createDataFrame(nodes),
         spark.createDataFrame(edges),
         MatchOptions(drop_unanchored=True),
+        output=output, candidate_path=candidate_path,
     ).toPandas()
     assert set(out.status) == {"matched"}
-    assert len(out) == 2
+    assert (out.edge_id >= 0).all()
+    if output == "discretized":
+        assert sorted(out.seq) == [0, 2]
 
 
 def test_broadcast_guard_rejects_big_graph(spark, grid):

@@ -120,9 +120,10 @@ def test_with_tile_columns_matches_numpy(spark):
 
 
 def test_assign_tile_cells_matches_jvm_form(spark):
-    """The fused numpy fast path ≡ the JVM expression program (both also
-    pinned to DuckDB by the tile_hilbert_key / cell_encode_geohash
-    oracles)."""
+    """The fused sqlgen projection + hilbert-join pass ≡ the per-column
+    JVM expression program, with the geohash pinned to the numpy kernel
+    (both JVM forms are also pinned to DuckDB by the tile_hilbert_key /
+    cell_encode_geohash oracles)."""
     from routers_spark.functions.cells import geohash_str_np
     from routers_spark.tiling.pipeline import assign_tile_cells, with_tile_columns
 

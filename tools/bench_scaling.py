@@ -91,7 +91,6 @@ def main() -> None:
     effs = {
         "match": round((r8["match_sec"] / r32["match_sec"]) / 4.0, 3),
         "tile": round((r8["tile_sec"] / r32["tile_sec"]) / 4.0, 3),
-        "tile_arrow": round((r8["tile_arrow_sec"] / r32["tile_arrow_sec"]) / 4.0, 3),
     }
     t8 = r8["match_sec"] + r8["tile_sec"]
     t32 = r32["match_sec"] + r32["tile_sec"]
@@ -113,9 +112,6 @@ def main() -> None:
           f" {r32['match_sec']} | {effs['match']} |")
     print(f"| tile fast path JVM ({r8['tile_rows']} rows) | {r8['tile_sec']} |"
           f" {r32['tile_sec']} | {effs['tile']} |")
-    print(f"| tile Arrow reference ({r8['tile_arrow_rows']} rows) |"
-          f" {r8['tile_arrow_sec']} | {r32['tile_arrow_sec']} |"
-          f" {effs['tile_arrow']} |")
     print(f"| **total (match + fast tile)** | {t8:.2f} | {t32:.2f} |"
           f" **{result['overall_efficiency']}** |")
     print(f"\nnorth-star rows/s: local[8]={r8['rows_per_sec']} "

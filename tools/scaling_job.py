@@ -79,21 +79,14 @@ def main() -> None:
     match_rows = len(trips)  # one output row per GPS point
 
     # ---- stage 2: tile assignment (geohash + slippy + hilbert per row).
-    # PRIMARY form = the engine fast path (assign_tile_cells, default
-    # impl="jvm" since r4: sqlgen geohash+slippy projection + chunked
-    # broadcast-lookup hilbert joins, zero Python in the pass). Also
-    # timed: the former Arrow/numpy form — r4 measured that ANY Python
-    # round trip over this input costs a flat ~7.5 s at 32M rows at BOTH
-    # local[8] and local[32] (the Arrow transfer pipe saturates below 8
-    # cores and does not scale with threads), which is why it was demoted
-    # from primary (BENCH.md round-4 breakdown).
+    # The engine fast path (assign_tile_cells: sqlgen geohash+slippy
+    # projection + chunked broadcast-lookup hilbert joins, zero Python in
+    # the pass).
     from routers_spark.tiling.pipeline import assign_tile_cells
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     n_events = ev.count()
     mult = max(1, n_tile_rows // max(n_events, 1))
-    n_arrow_rows = int(sys.argv[3]) if len(sys.argv) > 3 else 8_000_000
-    mult_arrow = max(1, min(mult, n_arrow_rows // max(n_events, 1)))
     # materialize the synthetic input to parquet first (generation is a
     # single-task explode — not the operator under measurement); the timed
     # stage then starts from a parallel parquet scan like a real job.
@@ -122,18 +115,12 @@ def main() -> None:
     tile_sec = timed(assign_tile_cells(pts, zoom=15, gh_precision=6))
     tile_rows = mult * n_events
 
-    sub = pts.filter(F.col("rep") <= mult_arrow)
-    tile_arrow_sec = timed(
-        assign_tile_cells(sub, zoom=15, gh_precision=6, impl="arrow"))
-
     out = {
         "cpus": cpus,
         "match_sec": round(match_sec, 2),
         "match_rows": match_rows,
         "tile_sec": round(tile_sec, 2),
         "tile_rows": tile_rows,
-        "tile_arrow_sec": round(tile_arrow_sec, 2),
-        "tile_arrow_rows": mult_arrow * n_events,
         "rows_per_sec": round(
             (match_rows + tile_rows) / (match_sec + tile_sec), 1
         ),

@@ -146,6 +146,33 @@ def point_in_polygon_np(px, py, ring_x, ring_y) -> np.ndarray:
     return (crossings % 2) == 1
 
 
+def edges_hit_rects(ex0, ey0, ex1, ey1, bx0, by0, bx1, by1) -> np.ndarray:
+    """Per-RECT bool: does ANY polygon edge intersect the closed
+    axis-aligned rect? One broadcast separating-axis pass over the
+    (n_rects, n_edges) grid — an edge and a rect are disjoint iff the rect
+    lies strictly on one side of x, y, or the edge's supporting line
+    (restricted to the edge's span). Edges fully inside a rect, touching
+    it, or running along one of its sides count as hits. Rect arrays are
+    (n_rects,), edge arrays (n_edges,)."""
+    bx0 = bx0[:, None]
+    by0 = by0[:, None]
+    bx1 = bx1[:, None]
+    by1 = by1[:, None]
+    # axis-aligned rejection: edge bbox vs rect, (n_rects, n_edges)
+    overlap = ~((np.maximum(ex0, ex1)[None, :] < bx0)
+                | (np.minimum(ex0, ex1)[None, :] > bx1)
+                | (np.maximum(ey0, ey1)[None, :] < by0)
+                | (np.minimum(ey0, ey1)[None, :] > by1))
+    dx = (ex1 - ex0)[None, :]
+    dy = (ey1 - ey0)[None, :]
+    # signed area of each rect corner vs the edge line
+    sides = [dx * (cy - ey0[None, :]) - dy * (cx - ex0[None, :])
+             for cx, cy in ((bx0, by0), (bx0, by1), (bx1, by0), (bx1, by1))]
+    s = np.stack(sides)                      # (4, n_rects, n_edges)
+    separated = (s > 0).all(axis=0) | (s < 0).all(axis=0)
+    return (overlap & ~separated).any(axis=1)
+
+
 # --------------------------------------------------------------- Column side
 
 

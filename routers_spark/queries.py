@@ -265,11 +265,19 @@ FROM ev JOIN st ON ev.cell = st.cell
 """
 
 
-def _knn_ctes() -> dict[str, str]:
+_KNN_CELL = "2.0e-2"  # degrees; lon & lat share the kNN grid step
+
+
+def _knn_ctes(radius: int = 1) -> dict[str, str]:
     """The ring-expansion kNN's CTE bodies, shared verbatim by the one-shot
     oracle SQL and the Spark two-stage materialized plan (identical
-    expressions → bit-stable results across engines)."""
-    cell = "2.0e-2"  # degrees; lon & lat share the grid step
+    expressions → bit-stable results across engines). ``radius`` sets the
+    ring: (2*radius+1)^2 cells around the event's cell, with the accept
+    guarantee measured to that block's boundary."""
+    cell = _KNN_CELL
+    offsets = ", ".join(f"({dx}, {dy})"
+                        for dx in range(-radius, radius + 1)
+                        for dy in range(-radius, radius + 1))
     dist = haversine_m_sql("e.lon", "e.lat", "s.lon", "s.lat")
     # conservative metres-per-degree floors over the fixture band (|lat|<35):
     # lat: 1 deg >= 111000 m; lon: 1 deg >= 111000 * cos(35deg) > 90000 m
@@ -283,10 +291,10 @@ def _knn_ctes() -> dict[str, str]:
   FROM events""",
         "ev_g": f"""
   SELECT *,
-         least(lon + 180.0e0 - (cx - 1) * {cell},
-               (cx + 2) * {cell} - (lon + 180.0e0)) AS glon,
-         least(lat + 90.0e0 - (cy - 1) * {cell},
-               (cy + 2) * {cell} - (lat + 90.0e0)) AS glat
+         least(lon + 180.0e0 - (cx - {radius}) * {cell},
+               (cx + {radius + 1}) * {cell} - (lon + 180.0e0)) AS glon,
+         least(lat + 90.0e0 - (cy - {radius}) * {cell},
+               (cy + {radius + 1}) * {cell} - (lat + 90.0e0)) AS glat
   FROM ev""",
         "st": f"""
   SELECT CAST(s_suppkey AS BIGINT) AS s_suppkey,
@@ -294,12 +302,10 @@ def _knn_ctes() -> dict[str, str]:
          CAST(floor(({SUPP_LON} + 180.0e0) / {cell}) AS BIGINT) AS cx,
          CAST(floor(({SUPP_LAT} + 90.0e0) / {cell}) AS BIGINT) AS cy
   FROM supplier""",
-        "nbr": """
-  SELECT -1 AS dx, -1 AS dy UNION ALL SELECT -1, 0 UNION ALL SELECT -1, 1
-  UNION ALL SELECT 0, -1 UNION ALL SELECT 0, 0 UNION ALL SELECT 0, 1
-  UNION ALL SELECT 1, -1 UNION ALL SELECT 1, 0 UNION ALL SELECT 1, 1""",
-        # 9-offset explode keeps this an EQUI-join (hash join); a BETWEEN
-        # range join degenerates to a nested-loop cross product
+        "nbr": f"""
+  SELECT * FROM (VALUES {offsets}) AS t(dx, dy)""",
+        # the explicit offset table keeps this an EQUI-join (hash join);
+        # a BETWEEN range join degenerates to a nested-loop cross product
         "ring": f"""
   SELECT e.event_id, s.s_suppkey, {dist} AS dist_m, {guarantee} AS g_m
   FROM ev_g e
@@ -699,24 +705,6 @@ GROUP BY l_returnflag, l_linestatus
 """
 
 
-@sql_query("top_revenue_orders")
-def _q_top_orders(dialect: str) -> str:
-    """Broadcast-join + windowed top-k per segment (M9 top-k analog)."""
-    return """
-WITH rev AS (
-  SELECT o.o_orderkey, c.c_mktsegment, o.o_totalprice,
-         ROW_NUMBER() OVER (PARTITION BY c.c_mktsegment
-                            ORDER BY o.o_totalprice DESC, o.o_orderkey) AS rn
-  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-)
-SELECT c_mktsegment,
-       CAST(o_orderkey AS BIGINT) AS o_orderkey,
-       round(o_totalprice, 2) AS o_totalprice,
-       CAST(rn AS BIGINT) AS rank
-FROM rev WHERE rn <= 10
-"""
-
-
 # Maxspeed-parse gate fixture: 14 tag shapes over the part table, each
 # with a CLOSED-FORM expected parse (the degenerate-config recipe — the
 # engine runs the real vectorized parser, the oracle restates the known
@@ -1074,7 +1062,6 @@ def _shingle_source(dialect: str, k: int = 5) -> str:
 _I64_MSB = -9223372036854775808  # sign-flip constant: signed MIN == u64 MIN
 
 
-@sql_query("minhash_signature")
 def _q_minhash(dialect: str) -> str:
     """MinHash signatures (8 hashes) over 5-codepoint shingles — the exact
     contract of pipeline.dedup.minhash_signature (FNV-1a codepoints +
@@ -1126,7 +1113,6 @@ def _minhash_engine_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@sql_query("simhash64")
 def _q_simhash(dialect: str) -> str:
     """SimHash-64 per document: per-bit majority vote over splitmix-mixed
     shingle hashes — contract of pipeline.dedup.simhash64."""
@@ -1211,35 +1197,6 @@ def _simhash_dedup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@sql_query("ngram_jaccard_pairs")
-def _q_jaccard(dialect: str) -> str:
-    """Exact n-gram (5-codepoint shingle) Jaccard over all candidate pairs
-    sharing any shingle, thresholded — the dedup verify stage as a pure
-    shingle-set self-join (no float-order hazards: set sizes are integers)."""
-    from routers_spark.functions.hashing import p_fnv1a_chars
-
-    p = sqlgen.Program(_shingle_source(dialect), ["doc_id"])
-    h = p_fnv1a_chars(p, "text", "i", 5, dialect)
-    sh = p.render([f"doc_id AS doc_id, {h} AS h"], distinct=True)
-    return f"""
-WITH sh AS ({sh}),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-  FROM sh a JOIN sh b ON a.h = b.h AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT CAST(i.doc_a AS BIGINT) AS doc_a,
-       CAST(i.doc_b AS BIGINT) AS doc_b,
-       CAST(i.c AS BIGINT) AS n_shared,
-       round(CAST(i.c AS DOUBLE) / CAST(sa.n + sb.n - i.c AS DOUBLE), 6) AS jaccard
-FROM inter i
-JOIN sizes sa ON sa.doc_id = i.doc_a
-JOIN sizes sb ON sb.doc_id = i.doc_b
-WHERE CAST(i.c AS DOUBLE) / CAST(sa.n + sb.n - i.c AS DOUBLE) >= 0.5
-"""
-
-
 @sql_query("embedding_topk_cosine")
 def _q_embed_topk(dialect: str) -> str:
     """Brute-force cosine top-5 of every vector against the 8 query vectors
@@ -1285,18 +1242,6 @@ SELECT CAST(query_id AS BIGINT) AS query_id,
        round(cosine, 6) AS cosine,
        CAST(rnk AS BIGINT) AS rank
 FROM ranked WHERE rnk <= 5
-"""
-
-
-@sql_query("doc_fingerprint_md5")
-def _q_fingerprint(dialect: str) -> str:
-    """Content-addressed document fingerprint (md5 hex — both engines ship
-    it) + length; the exact-dedup key at corpus scale."""
-    return """
-SELECT CAST(doc_id AS BIGINT) AS doc_id,
-       md5(text) AS fingerprint,
-       CAST(length(text) AS BIGINT) AS n_chars_fp
-FROM documents
 """
 
 
@@ -1401,13 +1346,12 @@ def _wt_case(hw: str) -> str:
     return f"(CASE {hw} {whens} ELSE 100 END)"
 
 
-@sql_query("way_edge_expansion")
 def _q_way_edges(dialect: str) -> str:
     """S2/S3: way→edge expansion with the highway whitelist filter and the
     bidirectional reversed twin (graph.rs:226-252), over a ways table
-    derived from lineitem (way = order, refs = parts by line number).
-    The Spark side is the ENGINE operator (graph/build.py ways_to_edges);
-    this oracle is the windowed-SQL restatement."""
+    derived from lineitem (way = order, refs = parts by line number) —
+    the windowed-SQL restatement of graph/build.py ways_to_edges, and the
+    oracle of osm_pbf_way_expansion."""
     from routers_spark.config import VALID_ROADWAYS
 
     valid = ", ".join(f"'{c}'" for c in VALID_ROADWAYS)
@@ -1438,45 +1382,14 @@ FROM edges WHERE NOT oneway
 """
 
 
-def _way_edges_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark side of way_edge_expansion: the engine's S2/S3 DataFrame
-    operator (posexplode + lead window + whitelist + reversed-twin union)
-    over the identical derived ways table."""
-    from pyspark.sql import functions as F
-
-    from routers_spark.graph.build import ways_to_edges
-
-    register_views(spark, sf_dir)
-    ways = spark.sql(f"""
-        SELECT way_id,
-               transform(array_sort(collect_list(struct(ln, node))),
-                         s -> s.node) AS refs,
-               {_hw_case("way_id")} AS highway,
-               (way_id % 3 = 0) AS oneway
-        FROM (SELECT CAST(l_orderkey AS BIGINT) AS way_id,
-                     l_linenumber AS ln,
-                     CAST(l_partkey AS BIGINT) AS node
-              FROM lineitem)
-        GROUP BY way_id
-    """)
-    e = ways_to_edges(ways)
-    return e.select(
-        F.col("edge_id").cast("long").alias("edge_id"),
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-        F.col("weight").cast("long").alias("weight"),
-        "fwd",
-    )
-
-
 @sql_query("osm_pbf_way_expansion")
 def _q_pbf_way_edges(dialect: str) -> str:
-    """S1 OSM PBF source, ORACLE-GATED: the way_edge_expansion corpus is
+    """S1 OSM PBF source, ORACLE-GATED: the _q_way_edges corpus is
     ENCODED into a spec-compliant OSM PBF file (io/osm_pbf.py writer:
     zlib blobs, stringtable tags, delta-coded refs), then DECODED by the
     distributed blob reader and expanded by the S2/S3 relational pipeline.
     Way/node ids are integers, so the PBF cycle is exact and the oracle is
-    the SAME windowed SQL as way_edge_expansion — a hash mismatch anywhere
+    the SAME windowed SQL as _q_way_edges — a hash mismatch anywhere
     in framing, varint/zigzag, stringtable, or tag handling fails the
     gate."""
     return _q_way_edges(dialect)
@@ -2188,7 +2101,7 @@ _ZS_BOX = _zonal_ring_px(_PIP_RING2)
 def _ray_cast_px_sql(ring_px: list[tuple], px: str, py: str) -> str:
     """Crossing-number test over a projected ring — full-precision DOUBLE
     literals (repr round-trips exactly), expression shape identical to
-    _ray_cast_sql / tiling/zonal.py _ray_cast_np."""
+    _ray_cast_sql / functions/geo.py point_in_polygon_np."""
     terms = []
     n = len(ring_px)
     for i in range(n):
@@ -3106,10 +3019,6 @@ def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------------------------------- registry
 
 
-def sql_queries() -> dict[str, Callable[[str], str]]:
-    return dict(_SQL_QUERIES)
-
-
 def _knn_spark_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark override for knn_nearest_station: Spark inlines (re-executes)
     a CTE per reference, and ring_best is referenced twice (union + the
@@ -3123,8 +3032,6 @@ def _knn_spark_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexicographic = the window's ORDER BY dist_m, s_suppkey), but the agg
     partial-combines map-side and never sorts the ring join's output."""
     register_views(spark, sf_dir)
-    c = _knn_ctes()
-
     # Engine-side ring radius 3 (7x7 cells; the oracle keeps the one-shot
     # 3x3 form). Both radii are EXACT by the same argument: a ring winner
     # is accepted only when its distance is <= the conservative
@@ -3135,38 +3042,21 @@ def _knn_spark_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Why: at bench density the 3x3 guarantee clears only ~37% of events,
     # leaving a ~63k-event x full-station fallback cross join; 7x7 clears
     # ~98%, ~6x fewer haversine evaluations overall.
-    _r = 3
-    _cell = "2.0e-2"  # must match _knn_ctes
-    c = dict(
-        c,
-        ev_g=f"""
-  SELECT *,
-         least(lon + 180.0e0 - (cx - {_r}) * {_cell},
-               (cx + {_r + 1}) * {_cell} - (lon + 180.0e0)) AS glon,
-         least(lat + 90.0e0 - (cy - {_r}) * {_cell},
-               (cy + {_r + 1}) * {_cell} - (lat + 90.0e0)) AS glat
-  FROM ev""",
-        nbr=f"""
-  SELECT x.dx, y.dy
-  FROM (SELECT explode(sequence(-{_r}, {_r})) AS dx) x
-  CROSS JOIN (SELECT explode(sequence(-{_r}, {_r})) AS dy) y""",
-    )
+    c = _knn_ctes(radius=3)
 
     def with_ctes(names: list[str], final: str) -> str:
         ctes = ",\n".join(f"{n} AS ({c[n]}\n)" for n in names)
         return f"WITH {ctes}\n{final}"
 
     # ev_g (events + guarantee bands) feeds the ring join AND the fallback
-    # anti-join: materialize it ONCE (r6). localCheckpoint, not persist —
-    # a persisted view referenced from two branches of one query trips a
+    # anti-join: materialize it ONCE as the temp view ev_g, which the ring
+    # and fallback bodies then read. localCheckpoint, not persist — a
+    # persisted view referenced from two branches of one query trips a
     # Spark analyzer internal error (DeduplicateRelations under InlineCTE
     # on the cached subtree); a checkpointed LogicalRDD dedups cleanly.
     evg = spark.sql(with_ctes(["ev", "ev_g"], "SELECT * FROM ev_g")) \
         .localCheckpoint(eager=True)
-    evg.createOrReplaceTempView("ev_g_mat")
-    c = dict(c, ring=c["ring"].replace("FROM ev_g e", "FROM ev_g_mat e"),
-             fallback=c["fallback"].replace("FROM ev_g eg",
-                                            "FROM ev_g_mat eg"))
+    evg.createOrReplaceTempView("ev_g")
 
     ring_best_agg = """
   SELECT event_id, mn.s AS s_suppkey, mn.d AS dist_m
@@ -3178,8 +3068,8 @@ def _knn_spark_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     rb = spark.sql(with_ctes(
         ["st", "nbr", "ring"], ring_best_agg)).persist()
     rb.createOrReplaceTempView("ring_best")
-    # the fallback still needs the cheap st CTE; ev_g_mat / ring_best
-    # inside resolve to the materialized temp views
+    # the fallback still needs the cheap st CTE; ev_g / ring_best inside
+    # resolve to the materialized temp views
     fallback_best_agg = """
   SELECT event_id, mn.s AS s_suppkey, mn.d AS dist_m FROM (
     SELECT event_id, min(named_struct('d', dist_m, 's', s_suppkey)) AS mn
@@ -3216,7 +3106,6 @@ _SPARK_OVERRIDES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "minhash_engine": _minhash_engine_spark,
     "simhash_dedup_pairs": _simhash_dedup_spark,
     "spatial_cell_join": _spatial_cell_join_spark,
-    "way_edge_expansion": _way_edges_spark,
     "tile_range_scan": _tile_range_spark,
     "geo_route_assign": _geo_route_spark,
     "phash_hamming_pairs": _phash_hamming_spark,
@@ -3257,55 +3146,8 @@ def spark_fn(name: str) -> Callable[[SparkSession, str], DataFrame]:
     return run
 
 
-# Driver-record budget: round 3 registered 51 queries and the driver's
-# CORRECTNESS record held exactly 50 rows — the last-registered query
-# (ann_ivf_topk) was silently absent (round-3 verdict What's-wrong #2).
-# The driver surface therefore carries AT MOST 50 entries. These three are
-# excluded from the DRIVER registry ONLY — each is a pure-SQL dual-dialect
-# twin (no engine code on the Spark side) whose engine-path sibling remains
-# oracle-gated (minhash_signature → minhash_engine + minhash_dedup_pipeline;
-# simhash64 → simhash_dedup_pairs; doc_fingerprint_md5 → dedup_exact_docs)
-# and whose dialect parity stays pytest-gated (tests/test_pipeline_sql.py
-# runs them via sql_queries(), which still lists them).
-# ngram_jaccard_pairs retired late-r4 to make room for maxspeed_parse: its
-# shingle + int-exact-Jaccard machinery runs INSIDE the still-gated
-# minhash_dedup_pipeline (the inter/verified CTEs) and the kernels stay
-# pytest-gated (test_jaccard_behaviour, test_minhash_estimates_jaccard).
-# top_revenue_orders retired late-r4 for access_parse: it is a generic
-# TPC-H-style relational demo with no engine code on either side (the
-# relational-glue story keeps pricing_summary as its gated demo), while
-# access_parse is reference surface (access_tag/access.rs).
-# way_edge_expansion retired r5 for opening_hours_parse: its ENTIRE gate
-# (the same derived corpus through the same windowed-SQL oracle, Spark
-# running the same engine expansion) runs INSIDE the still-registered
-# osm_pbf_way_expansion — which additionally pushes the corpus through
-# the PBF encode→decode wire cycle, so the retained row is strictly
-# stronger. The pure expansion stays in sql_queries() for dialect-parity
-# pytest and as an importable operator.
-#
-# REGISTRY TRUNCATION PRIORITY (round-4 verdict Next #8): if a future
-# driver truncates past 50 again, retire in THIS order — rows whose gate
-# is strongest elsewhere first:
-#   1. ann_ivf_topk / ann_lsh_topk   (rows-only; exact twins are gated)
-#   2. map_match_discretized / map_match_celljoin (rows-only perf rows;
-#      map_match_exact[_celljoin] gate the same facade paths)
-#   3. anything in this excluded set being temporarily restored.
-# queries() already orders the dict so these sit at the tail.
-# Round 5 registers 52 (cell_encode_s2 and raster_zonal_stats joined the
-# gated set): if the 50-row cap observed in round 3 is still enforced,
-# the loss lands on map_match_discretized + map_match_celljoin — the two
-# tail rows, both rows-only perf rows whose facade paths are gated by
-# their hash-green exact twins (map_match_exact / map_match_exact_celljoin)
-# — by construction the cheapest possible drops. Both remain in bench.py's
-# headline list regardless (bench reads queries(), not the driver record).
-_DRIVER_EXCLUDED = {"minhash_signature", "simhash64", "doc_fingerprint_md5",
-                    "ngram_jaccard_pairs", "top_revenue_orders",
-                    "way_edge_expansion"}
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out = {name: spark_fn(name) for name in _SQL_QUERIES
-           if name not in _DRIVER_EXCLUDED}
+    out = {name: spark_fn(name) for name in _SQL_QUERIES}
     nos = dict(_NOSQL_QUERIES)
     # keep the historically-dropped rows away from the registry tail: if a
     # future driver truncates again, the loss lands on a row whose gate is
@@ -3318,5 +3160,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {name: gen("duckdb") for name, gen in _SQL_QUERIES.items()
-            if name not in _DRIVER_EXCLUDED}
+    return {name: gen("duckdb") for name, gen in _SQL_QUERIES.items()}

@@ -7,8 +7,9 @@ geospatial pipeline aggregates imagery over admin/coverage polygons).
 Semantics: vector zones are projected into the RASTER's pixel CRS once
 (standard practice — rasterize the polygon in the raster grid, never
 reproject every pixel), then every pixel CENTER (gx+0.5, gy+0.5) is
-assigned to the FIRST zone whose ring contains it (crossing-number test,
-identical expression to the tz gates in queries.py); pixels in no zone
+assigned to the FIRST zone whose ring contains it (crossing-number test
+functions.geo.point_in_polygon_np: per edge the same left-associated IEEE
+expression as the _ray_cast_sql gates in queries.py); pixels in no zone
 aggregate under ``'none'``. Output: one row per zone with integer-exact
 count / per-band sum / min / max.
 
@@ -35,31 +36,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from routers_spark.functions.geo import edges_hit_rects, point_in_polygon_np
 from routers_spark.functions.raster import decode_image
-from routers_spark.zones.boxes import _edges_hit_rects
 
 ZONAL_PARTIAL_SCHEMA = (
     "zone_id string, n_px long, sum_r long, sum_g long, sum_b long, "
     "min_r long, max_r long, min_g long, max_g long, min_b long, max_b long"
 )
-
-
-def _ray_cast_np(px: np.ndarray, py: np.ndarray, ring_x: np.ndarray,
-                 ring_y: np.ndarray) -> np.ndarray:
-    """Crossing-number point-in-polygon, numerically IDENTICAL to the SQL
-    form the oracle gates use (queries.py _ray_cast_sql): per edge,
-    ``((y1 > py) != (y2 > py)) AND (px < x1 + (py - y1)*(x2 - x1)/(y2 - y1))``
-    with left-associated IEEE ops — same inputs, same bits, any engine."""
-    inside = np.zeros(len(px), dtype=np.int64)
-    n = len(ring_x)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        for i in range(n):
-            x1, y1 = ring_x[i], ring_y[i]
-            x2, y2 = ring_x[(i + 1) % n], ring_y[(i + 1) % n]
-            crosses = (y1 > py) != (y2 > py)
-            xcut = x1 + (py - y1) * (x2 - x1) / (y2 - y1)
-            inside += (crosses & (px < xcut)).astype(np.int64)
-    return (inside % 2) == 1
 
 
 def _band_partial(zone_id: str, arr_flat: np.ndarray) -> tuple:
@@ -109,13 +92,13 @@ def zonal_stats(tiles_df: DataFrame, zones_px: list[tuple[str, list]],
                 if len(hits) == 1:
                     _, rx, ry = rings[hits[0]]
                     ex1, ey1 = np.roll(rx, -1), np.roll(ry, -1)
-                    crossed = _edges_hit_rects(
+                    crossed = edges_hit_rects(
                         rx, ry, ex1, ey1,
                         np.array([lo_x]), np.array([lo_y]),
                         np.array([hi_x]), np.array([hi_y]))[0]
                     if not crossed:
-                        inside0 = _ray_cast_np(np.array([lo_x]),
-                                               np.array([lo_y]), rx, ry)[0]
+                        inside0 = point_in_polygon_np(
+                            np.array([lo_x]), np.array([lo_y]), rx, ry)[0]
                         rows.append(_band_partial(
                             rings[hits[0]][0] if inside0 else "none", flat))
                         continue
@@ -126,7 +109,7 @@ def zonal_stats(tiles_df: DataFrame, zones_px: list[tuple[str, list]],
                 unset = np.ones(len(px), dtype=bool)
                 for k in hits:
                     zid, rx, ry = rings[k]
-                    m = unset & _ray_cast_np(px, py, rx, ry)
+                    m = unset & point_in_polygon_np(px, py, rx, ry)
                     assigned[m] = zid
                     unset &= ~m
                 for zid in pd.unique(assigned):

@@ -16,7 +16,7 @@ Both semantics are offered (``method="contains" | "center"``). Zones
 broadcast (tz tables are dimension-sized); requests stream through one
 Arrow pass, no shuffle. Containment is exact for simple rings: all four
 corners inside (ray cast) AND no polygon edge intersects the rect
-(separating-axis segment-vs-AABB, vectorized over the edge set)."""
+(functions.geo.edges_hit_rects, vectorized over the edge set)."""
 
 from __future__ import annotations
 
@@ -26,32 +26,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from routers_spark.functions.geo import point_in_polygon_np
-
-
-def _edges_hit_rects(ex0, ey0, ex1, ey1, bx0, by0, bx1, by1) -> np.ndarray:
-    """Per-RECT bool: does ANY polygon edge intersect the axis-aligned
-    rect? One broadcast separating-axis pass over the (n_rects, n_edges)
-    grid — an edge and a rect are disjoint iff the rect lies strictly on
-    one side of x, y, or the edge's supporting line (restricted to the
-    edge's span). Rect arrays are (n_rects,), edge arrays (n_edges,)."""
-    bx0 = bx0[:, None]
-    by0 = by0[:, None]
-    bx1 = bx1[:, None]
-    by1 = by1[:, None]
-    # axis-aligned rejection: edge bbox vs rect, (n_rects, n_edges)
-    overlap = ~((np.maximum(ex0, ex1)[None, :] < bx0)
-                | (np.minimum(ex0, ex1)[None, :] > bx1)
-                | (np.maximum(ey0, ey1)[None, :] < by0)
-                | (np.minimum(ey0, ey1)[None, :] > by1))
-    dx = (ex1 - ex0)[None, :]
-    dy = (ey1 - ey0)[None, :]
-    # signed area of each rect corner vs the edge line
-    sides = [dx * (cy - ey0[None, :]) - dy * (cx - ex0[None, :])
-             for cx, cy in ((bx0, by0), (bx0, by1), (bx1, by0), (bx1, by1))]
-    s = np.stack(sides)                      # (4, n_rects, n_edges)
-    separated = (s > 0).all(axis=0) | (s < 0).all(axis=0)
-    return (overlap & ~separated).any(axis=1)
+from routers_spark.functions.geo import edges_hit_rects, point_in_polygon_np
 
 
 def _prep_zones(zones: list[dict]):
@@ -137,7 +112,7 @@ def zones_for_boxes(boxes_df: DataFrame, zones: list[dict],
                     keep = []
                     for s in range(0, len(sub), blk):
                         part = sub[s:s + blk]
-                        keep.append(part[~_edges_hit_rects(
+                        keep.append(part[~edges_hit_rects(
                             ex0, ey0, ex1, ey1,
                             x0[part], y0[part], x1[part], y1[part])])
                     hit = np.concatenate(keep)

@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from routers_spark.functions.cells import quadkey_np
-from routers_spark.functions.geo import point_in_polygon_np
+from routers_spark.functions.geo import edges_hit_rects, point_in_polygon_np
 
 # mirror the tz build constants (build/impl/s2cell.rs:13-14)
 ZONE_MIN_LEVEL = 1
@@ -51,39 +51,11 @@ def _grid_quadkey(xi: np.ndarray, yi: np.ndarray, depth: int) -> np.ndarray:
     return _interleave(xr, yr, y_low=False)
 
 
-def _segments_intersect_rect(x0, y0, x1, y1, ax, ay, bx, by) -> bool:
-    """Any ring segment intersects the rect (Liang–Barsky, vectorized over
-    segments). Segments fully inside the rect count as intersecting."""
-    ax = np.asarray(ax, dtype=np.float64)
-    ay = np.asarray(ay, dtype=np.float64)
-    bx = np.asarray(bx, dtype=np.float64)
-    by = np.asarray(by, dtype=np.float64)
-    dx = bx - ax
-    dy = by - ay
-    p = np.stack([-dx, dx, -dy, dy])
-    q = np.stack([ax - x0, x1 - ax, ay - y0, y1 - ay])
-    t0 = np.zeros(len(ax))
-    t1 = np.ones(len(ax))
-    reject = np.zeros(len(ax), dtype=bool)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        for i in range(4):
-            pi, qi = p[i], q[i]
-            r = qi / pi
-            reject |= (pi == 0.0) & (qi < 0.0)
-            ent = pi < 0.0
-            lea = pi > 0.0
-            t0 = np.where(ent, np.maximum(t0, r), t0)
-            t1 = np.where(lea, np.minimum(t1, r), t1)
-    return bool(np.any(~reject & (t0 <= t1)))
-
-
-def cover_ring(rx: np.ndarray, ry: np.ndarray,
-               min_level: int = ZONE_MIN_LEVEL,
-               max_level: int = ZONE_MAX_LEVEL):
+def cover_ring(rx: np.ndarray, ry: np.ndarray):
     """Quadtree covering of one polygon ring: (packed_keys int64,
     interior bool). Interior cells lie fully inside the ring; boundary
-    cells (emitted at max_level) intersect its edges. Complete: every point
-    of the polygon is inside some emitted cell."""
+    cells (emitted at ZONE_MAX_LEVEL) intersect its edges. Complete: every
+    point of the polygon is inside some emitted cell."""
     rx = np.asarray(rx, dtype=np.float64)
     ry = np.asarray(ry, dtype=np.float64)
     sx = np.roll(rx, -1)
@@ -98,18 +70,20 @@ def cover_ring(rx: np.ndarray, ry: np.ndarray,
         x0 = -180.0 + xi * w
         y0 = -90.0 + yi * h
         x1, y1 = x0 + w, y0 + h
-        crossed = _segments_intersect_rect(x0, y0, x1, y1, rx, ry, sx, sy)
+        crossed = edges_hit_rects(rx, ry, sx, sy, np.array([x0]),
+                                  np.array([y0]), np.array([x1]),
+                                  np.array([y1]))[0]
         if not crossed:
             cx, cy = 0.5 * (x0 + x1), 0.5 * (y0 + y1)
             inside = bool(point_in_polygon_np([cx], [cy], rx, ry)[0])
             if not inside:
                 continue  # rect entirely outside
-            if lvl >= min_level:
+            if lvl >= ZONE_MIN_LEVEL:
                 keys.append(int(_pack(lvl, _grid_quadkey(
                     np.array([xi]), np.array([yi]), lvl))[0]))
                 interior.append(True)
                 continue
-        if lvl >= max_level:
+        if lvl >= ZONE_MAX_LEVEL:
             if crossed:
                 keys.append(int(_pack(lvl, _grid_quadkey(
                     np.array([xi]), np.array([yi]), lvl))[0]))
@@ -122,9 +96,7 @@ def cover_ring(rx: np.ndarray, ry: np.ndarray,
             np.asarray(interior, dtype=bool))
 
 
-def build_zone_index(zones: list[dict],
-                     min_level: int = ZONE_MIN_LEVEL,
-                     max_level: int = ZONE_MAX_LEVEL):
+def build_zone_index(zones: list[dict]):
     """One sorted cell array across all zones (the S2StorageBackend shape:
     cell_ids + tz_indices, build/impl/s2cell.rs:107-113): returns
     (keys, zone_idx, interior, rings)."""
@@ -134,7 +106,7 @@ def build_zone_index(zones: list[dict],
         rx = np.array([p[0] for p in z["ring"]], dtype=np.float64)
         ry = np.array([p[1] for p in z["ring"]], dtype=np.float64)
         rings.append((z["zone_id"], rx, ry))
-        k, it = cover_ring(rx, ry, min_level, max_level)
+        k, it = cover_ring(rx, ry)
         all_keys.append(k)
         all_zidx.append(np.full(len(k), zi, dtype=np.int64))
         all_int.append(it)
@@ -148,10 +120,10 @@ def build_zone_index(zones: list[dict],
 def resolve_zone_candidates(px: np.ndarray, py: np.ndarray,
                             cand: np.ndarray, cand_int: np.ndarray,
                             rings: list) -> np.ndarray:
-    """Shared winner resolution for cell-index backends (quadtree here,
-    S2 in zones/s2cells.py): interior candidates assign directly, boundary
-    candidates ray-cast against that one ring; first zone in list order
-    wins; no match -> None. Byte-identical to zones.pip.assign_zones."""
+    """Winner resolution over the cell index's candidates: interior
+    candidates assign directly, boundary candidates ray-cast against that
+    one ring; first zone in list order wins; no match -> None.
+    Byte-identical to zones.pip.assign_zones."""
     n = len(px)
     zone = np.full(n, None, dtype=object)
     unassigned = np.ones(n, dtype=bool)
@@ -170,9 +142,7 @@ def resolve_zone_candidates(px: np.ndarray, py: np.ndarray,
 
 def assign_zones_cells(points_df: DataFrame, zones: list[dict],
                        lon: str = "lon", lat: str = "lat",
-                       keep: list[str] | None = None,
-                       min_level: int = ZONE_MIN_LEVEL,
-                       max_level: int = ZONE_MAX_LEVEL) -> DataFrame:
+                       keep: list[str] | None = None) -> DataFrame:
     """Zone assignment via the cell index: per level (max..min, the leaf→
     parent walk of storage/s2cell.rs:42-49) one vectorized searchsorted
     finds candidate (point, zone) hits; interior hits assign directly,
@@ -180,7 +150,7 @@ def assign_zones_cells(points_df: DataFrame, zones: list[dict],
     list order wins; no match → NULL — byte-identical to
     zones.pip.assign_zones."""
     keep = keep or [c for c in points_df.columns if c not in (lon, lat)]
-    keys, zidx, intr, rings = build_zone_index(zones, min_level, max_level)
+    keys, zidx, intr, rings = build_zone_index(zones)
     n_zones = len(rings)
     out_fields = [f for f in points_df.schema.fields if f.name in keep + [lon, lat]]
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in out_fields)
@@ -198,7 +168,7 @@ def assign_zones_cells(points_df: DataFrame, zones: list[dict],
             # candidate (zone, interior) bitsets per point
             cand = np.zeros((n, n_zones), dtype=bool)
             cand_int = np.zeros((n, n_zones), dtype=bool)
-            for lvl in range(max_level, min_level - 1, -1):
+            for lvl in range(ZONE_MAX_LEVEL, ZONE_MIN_LEVEL - 1, -1):
                 pk = _pack(lvl, quadkey_np(px, py, lvl))
                 lo = np.searchsorted(keys_, pk, side="left")
                 hi = np.searchsorted(keys_, pk, side="right")

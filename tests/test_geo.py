@@ -110,3 +110,36 @@ def test_pip_convex_known():
     ring_y = np.array([0.0, 0.0, 10.0, 10.0])
     got = geo.point_in_polygon_np([5.0, 15.0, -1.0], [5.0, 5.0, 5.0], ring_x, ring_y)
     assert list(got) == [True, False, False]
+
+
+def test_edge_rect_intersection_hand_cases():
+    """Closed-rect semantics on the rect [0, 10] x [0, 10]: touching a
+    corner or running along a side counts as a hit."""
+    cases = {
+        "crossing": ((-5.0, 5.0), (15.0, 5.0), True),
+        "inside": ((2.0, 2.0), (3.0, 3.0), True),
+        "corner_touch": ((8.0, 12.0), (12.0, 8.0), True),
+        "collinear_side": ((0.0, -5.0), (0.0, 15.0), True),
+        "collinear_beyond_side": ((12.0, 10.0), (20.0, 10.0), False),
+        "disjoint": ((11.0, 0.0), (15.0, 5.0), False),
+        "disjoint_bbox_overlap": ((9.0, 12.0), (12.0, 9.0), False),
+    }
+    rect = [np.array([v]) for v in (0.0, 0.0, 10.0, 10.0)]
+    for name, ((x0, y0), (x1, y1), want) in cases.items():
+        got = geo.edges_hit_rects(np.array([x0]), np.array([y0]),
+                                  np.array([x1]), np.array([y1]), *rect)
+        assert got.tolist() == [want], name
+
+
+def test_edge_rect_intersection_per_rect_over_ring():
+    """Many rects vs one ring's edge set: True exactly for the rects the
+    ring boundary touches, not for rects strictly inside or outside."""
+    rx = np.array([0.0, 10.0, 10.0, 0.0])
+    ry = np.array([0.0, 0.0, 10.0, 10.0])
+    bx0 = np.array([2.0, 8.0, 20.0, -1.0, 10.0])
+    by0 = np.array([2.0, 8.0, 20.0, 4.0, 10.0])
+    bx1 = np.array([3.0, 12.0, 30.0, 1.0, 11.0])
+    by1 = np.array([3.0, 12.0, 30.0, 6.0, 11.0])
+    got = geo.edges_hit_rects(rx, ry, np.roll(rx, -1), np.roll(ry, -1),
+                              bx0, by0, bx1, by1)
+    assert got.tolist() == [False, True, False, True, True]

@@ -37,19 +37,7 @@ def test_knn_fallback_still_exercised(spark, sf_dir):
     from routers_spark.queries import _knn_ctes, register_views
 
     register_views(spark, sf_dir)
-    c = dict(_knn_ctes())
-    r, cell = 3, "2.0e-2"
-    c["ev_g"] = f"""
-  SELECT *,
-         least(lon + 180.0e0 - (cx - {r}) * {cell},
-               (cx + {r + 1}) * {cell} - (lon + 180.0e0)) AS glon,
-         least(lat + 90.0e0 - (cy - {r}) * {cell},
-               (cy + {r + 1}) * {cell} - (lat + 90.0e0)) AS glat
-  FROM ev"""
-    c["nbr"] = f"""
-  SELECT x.dx, y.dy
-  FROM (SELECT explode(sequence(-{r}, {r})) AS dx) x
-  CROSS JOIN (SELECT explode(sequence(-{r}, {r})) AS dy) y"""
+    c = _knn_ctes(radius=3)
     ctes = ",\n".join(f"{n} AS ({c[n]}\n)"
                       for n in ("ev", "ev_g", "st", "nbr", "ring"))
     counts = spark.sql(f"""WITH {ctes}

@@ -195,8 +195,8 @@ def test_driver_registry_holds_fifty_entries():
     rows-only entries at the exact tail — if the cap still holds, the
     loss lands on map_match_discretized + map_match_celljoin (both
     rows-only perf rows, facade gated by their hash-green exact twins)
-    per the documented truncation priority. Every oracle name must be a
-    registered query."""
+    per the ordering queries() keeps. Every oracle name and every
+    engine override must belong to a registered query."""
     from routers_spark import queries as Q
 
     qs = Q.queries()
@@ -213,8 +213,8 @@ def test_driver_registry_holds_fifty_entries():
     rows_only = [n for n in names if n not in os_]
     assert rows_only.index("ann_ivf_topk") < 2
     assert rows_only.index("ann_lsh_topk") < 2
-    # the retired pure-SQL twins stay reachable for the pytest parity gates
-    assert "minhash_signature" in Q.sql_queries()
+    # an override for a name queries() never exposes is dead code
+    assert set(Q._SPARK_OVERRIDES) <= set(Q.queries())
 
 
 def test_engine_gates_run_the_engine():

@@ -30,7 +30,7 @@ def duck():
 
 
 def test_minhash_sql_matches_numpy(duck):
-    sql = Q.sql_queries()["minhash_signature"]("duckdb")
+    sql = Q._q_minhash("duckdb")
     got = duck.execute(sql + " ORDER BY doc_id").df()
     assert len(got) == len(DOCS)
     for i, (did, text) in enumerate(DOCS):
@@ -42,7 +42,7 @@ def test_minhash_sql_matches_numpy(duck):
 
 
 def test_simhash_sql_matches_numpy(duck):
-    sql = Q.sql_queries()["simhash64"]("duckdb")
+    sql = Q._q_simhash("duckdb")
     got = duck.execute(sql + " ORDER BY doc_id").df()
     for i, (did, text) in enumerate(DOCS):
         assert int(got.iloc[i]["simhash"]) == int(np.int64(simhash64(text))), did

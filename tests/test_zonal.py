@@ -6,6 +6,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from routers_spark.functions.geo import point_in_polygon_np
 from routers_spark.queries import (
     _ZS_BOX,
     _ZS_HEX,
@@ -15,7 +16,7 @@ from routers_spark.queries import (
     _ZS_TY0,
     _zonal_tile_np,
 )
-from routers_spark.tiling.zonal import _ray_cast_np, zonal_stats
+from routers_spark.tiling.zonal import zonal_stats
 
 
 def _brute(tiles, rings, tile_px):
@@ -33,7 +34,7 @@ def _brute(tiles, rings, tile_px):
         for zid, ring in rings:
             rx = np.array([p[0] for p in ring])
             ry = np.array([p[1] for p in ring])
-            m = unset & _ray_cast_np(px, py, rx, ry)
+            m = unset & point_in_polygon_np(px, py, rx, ry)
             assigned[m] = zid
             unset &= ~m
         for zid in np.unique(assigned):

@@ -1,14 +1,24 @@
 """Cell-covering zone backend (zones/cells.py) ≡ brute ray-cast backend
 (zones/pip.py) — the S2-cell timezone-storage analog, byte-identical by
-interior-direct + boundary-refine construction."""
+interior-direct + boundary-refine construction; the covering itself is
+complete and its interior cells are sound."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
+from routers_spark.functions.cells import quadkey_np
 from routers_spark.functions.geo import point_in_polygon_np
-from routers_spark.zones.cells import assign_zones_cells, build_zone_index, cover_ring
+from routers_spark.zones.cells import (
+    ZONE_MAX_LEVEL,
+    ZONE_MIN_LEVEL,
+    _pack,
+    assign_zones_cells,
+    build_zone_index,
+    cover_ring,
+)
 from routers_spark.zones.pip import assign_zones
 
 ZONES = [
@@ -22,24 +32,64 @@ ZONES = [
 ]
 
 
+def _cells_hit(lon, lat, keys):
+    """Per point: does any of its level-ZONE_MIN..MAX cells appear in the
+    sorted packed ``keys``? (the query path's leaf-to-parent walk)"""
+    hit = np.zeros(len(lon), dtype=bool)
+    for lvl in range(ZONE_MIN_LEVEL, ZONE_MAX_LEVEL + 1):
+        pk = _pack(lvl, quadkey_np(lon, lat, lvl))
+        lo = np.searchsorted(keys, pk, side="left")
+        hi = np.searchsorted(keys, pk, side="right")
+        hit |= hi > lo
+    return hit
+
+
 def test_cover_ring_complete_and_sound():
-    """Every point inside the ring is in some covering cell (completeness
-    via the query path) and interior cells contain only inside points."""
+    """Every point inside the ring lies in some covering cell (no false
+    NULLs), and every point in an interior cell is inside the ring (the
+    direct-assign path never mislabels)."""
     rx = np.array([p[0] for p in ZONES[0]["ring"]])
     ry = np.array([p[1] for p in ZONES[0]["ring"]])
     keys, interior = cover_ring(rx, ry)
     assert len(keys) > 4
     assert interior.any() and (~interior).any()
+    rng = np.random.default_rng(23)
+    lon = rng.uniform(-118.7, -118.0, 30000)
+    lat = rng.uniform(33.6, 34.1, 30000)
+    inside = point_in_polygon_np(lon, lat, rx, ry)
+    assert _cells_hit(lon[inside], lat[inside], np.sort(keys)).all()
+    in_interior = _cells_hit(lon, lat, np.sort(keys[interior]))
+    assert in_interior.sum() > 1000
+    assert inside[in_interior].all()
 
 
-def test_cells_match_brute_random_points(spark):
+def _random_points():
     rng = np.random.default_rng(17)
     n = 4000
-    pts = pd.DataFrame({
-        "pid": np.arange(n),
-        "lon": -118.7 + rng.random(n) * 0.7,
-        "lat": 33.65 + rng.random(n) * 0.45,
-    })
+    return (-118.7 + rng.random(n) * 0.7, 33.65 + rng.random(n) * 0.45)
+
+
+def _edge_hugging_points():
+    """Points clustered tightly around every ring vertex and edge — the
+    boundary-refine path under maximal stress."""
+    rng = np.random.default_rng(29)
+    lon_l, lat_l = [], []
+    for z in ZONES:
+        ring = np.array(z["ring"], dtype=np.float64)
+        nxt = np.roll(ring, -1, axis=0)
+        for frac in rng.random((40, len(ring))):
+            p = ring + frac[:, None] * (nxt - ring)
+            jit = rng.normal(0.0, 1e-4, p.shape)
+            lon_l.append(p[:, 0] + jit[:, 0])
+            lat_l.append(p[:, 1] + jit[:, 1])
+    return np.concatenate(lon_l), np.concatenate(lat_l)
+
+
+@pytest.mark.parametrize("points", [_random_points, _edge_hugging_points],
+                         ids=["random", "edge_hugging"])
+def test_cells_match_brute_random_points(spark, points):
+    lon, lat = points()
+    pts = pd.DataFrame({"pid": np.arange(len(lon)), "lon": lon, "lat": lat})
     df = spark.createDataFrame(pts)
     a = assign_zones(df, ZONES, keep=["pid"]).toPandas() \
         .sort_values("pid").reset_index(drop=True)
@@ -56,9 +106,6 @@ def test_interior_fast_path_used(spark):
     points far from every ring edge."""
     keys, zidx, intr, rings = build_zone_index(ZONES)
     # a point well inside the box zone
-    from routers_spark.functions.cells import quadkey_np
-    from routers_spark.zones.cells import ZONE_MAX_LEVEL, ZONE_MIN_LEVEL, _pack
-
     found_interior = False
     for lvl in range(ZONE_MAX_LEVEL, ZONE_MIN_LEVEL - 1, -1):
         pk = int(_pack(lvl, quadkey_np(np.array([-118.2]), np.array([33.9]), lvl))[0])

@@ -159,7 +159,8 @@ def geohash_bounds(gh: str) -> tuple[float, float, float, float]:
 def hilbert_xy2h_np(x, y, order: int) -> np.ndarray:
     """Hilbert index of (x, y) at ``order`` bits per axis — classic xy2d
     rotation loop, vectorized. Twin of sqlgen.hilbert_xy2h_cte_sql; stands in
-    for fast_hilbert::xy2h (fragment.rs:69-71) as the tile-table sort key."""
+    for fast_hilbert::xy2h (fragment.rs:69-71) as the tile-table sort key,
+    and at order 30 is the S2 leaf position fold (s2.hilbert_pos_np)."""
     hx = np.asarray(x, dtype=np.int64).copy()
     hy = np.asarray(y, dtype=np.int64).copy()
     d = np.zeros_like(hx, dtype=np.int64)

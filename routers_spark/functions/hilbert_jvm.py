@@ -9,13 +9,14 @@ levels alone at 8M rows (the per-level chain defeats whole-stage codegen).
 
 This module removes the per-level chain entirely: the rotation state is a
 4-element group, so K levels collapse into ONE transition-table lookup over
-(state, x_chunk, y_chunk) → (digits, next_state). A 15-bit key needs two
-chunks (8+7) — i.e. TWO broadcast hash joins against 64 Ki-row tables,
-fully inside whole-stage codegen, no Python, no Arrow transfer, no deep
-expression tree. That is the 100 TB shape: per-row work is two hash probes
-and a few bit ops, the build sides are kilobyte-scale broadcasts, and the
-pass scales with cores instead of saturating the Arrow pipe (BENCH.md
-round-4 measurements).
+(state, x_chunk, y_chunk) → (digits, next_state). Chunks are at most 6 bits
+wide, so every table has at most 4·64·64 = 16 Ki rows: a z12 tile key is two
+broadcast hash joins, a z15/z16 key three, and the 30-level S2 position
+(functions/s2_jvm.py) five — fully inside whole-stage codegen, no Python, no
+Arrow transfer, no deep expression tree. Wider chunks save a probe but the
+driver builds each table in pandas and broadcasts it per call: a 6-bit
+chunk's table is L2-resident, an 8-bit one (256 Ki rows) costs seconds to
+build and ship (BENCH.md, OPTIMIZATION_r06.md).
 
 Bit-parity with hilbert_xy2h_np is pinned by tests/test_tiling.py.
 """
@@ -27,11 +28,11 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_MAX_CHUNK = 8  # 4·256·256 = 256 Ki-entry table worst case; 64 Ki at 8 bits
+_MAX_CHUNK = 6  # 4·64·64 = 16 Ki-row table worst case
 
 
 def chunk_plan(order: int) -> list[int]:
-    """MSB-first chunk widths covering ``order`` bits, each ≤ 8."""
+    """MSB-first chunk widths covering ``order`` bits, each ≤ _MAX_CHUNK."""
     out: list[int] = []
     left = order
     while left > 0:
@@ -75,8 +76,9 @@ def with_hilbert_jvm(df: DataFrame, xcol: str, ycol: str, order: int,
                      out: str = "hilbert") -> DataFrame:
     """``df`` + Hilbert index of (xcol, ycol) at ``order`` bits — pure JVM.
 
-    One broadcast hash join per chunk (2 joins up to order 16); the final
-    index is reassembled from the per-chunk digits with shifts."""
+    One broadcast hash join per chunk (2 joins up to order 12, 5 at order
+    30); the final index is reassembled from the per-chunk digits with
+    shifts."""
     spark = df.sparkSession
     chunks = chunk_plan(order)
     cur = df

@@ -16,13 +16,19 @@ DuckDB agree on two's-complement bit algebra, so the driver's oracle
 comparison is exact).
 
 Twin of sqlgen.s2_cellid_cte_sql — the numpy kernel here is the
-reference for pytest; the generated SQL is what ships in the gated
-query (JVM whole-stage-codegen on the Spark side).
+reference for pytest; the generated SQL is the DuckDB oracle of the gated
+query, and functions/s2_jvm.py is its Spark side. Both product forms run
+the Hilbert fold through the tile kernels (cells.hilbert_xy2h_np,
+hilbert_jvm.with_hilbert_jvm); the orientation tables below drive only
+the oracle CTE, so the oracle and the kernels are independent Hilbert
+implementations.
 """
 
 from __future__ import annotations
 
 import numpy as np
+
+from .cells import hilbert_xy2h_np
 
 MAX_LEVEL = 30
 
@@ -38,9 +44,9 @@ KIJTOPOS = (
 )
 KPOS_TO_ORIENTATION = (1, 0, 0, 3)  # (swap, 0, 0, swap|invert)
 
-# Flattened by idx = orientation*4 + ij (the form the SQL generator and the
-# vectorized kernel share): position, and the CHILD orientation (parent
-# orientation already folded in: NEWO[idx] = o ^ delta[KIJTOPOS[o][ij]]).
+# Flattened by idx = orientation*4 + ij (the form the SQL generator folds):
+# position, and the CHILD orientation (parent orientation already folded
+# in: NEWO[idx] = o ^ delta[KIJTOPOS[o][ij]]).
 KIJTOPOS_FLAT = tuple(KIJTOPOS[o][ij] for o in range(4) for ij in range(4))
 NEWO_FLAT = tuple(
     o ^ KPOS_TO_ORIENTATION[KIJTOPOS[o][ij]]
@@ -96,21 +102,15 @@ def st_to_ij_np(s):
 
 
 def hilbert_pos_np(face, i, j):
-    """60-bit Hilbert position of leaf (i, j) on ``face`` — the per-bit
-    orientation fold, vectorized via the flattened 16-entry tables."""
+    """60-bit Hilbert position of leaf (i, j) on ``face``: the tile Hilbert
+    kernel at 30 bits, with (i, j) transposed on odd faces (their fold
+    starts in the swap orientation)."""
     face = np.asarray(face, dtype=np.int64)
     i = np.asarray(i, dtype=np.int64)
     j = np.asarray(j, dtype=np.int64)
-    pos_tab = np.array(KIJTOPOS_FLAT, dtype=np.int64)
-    newo_tab = np.array(NEWO_FLAT, dtype=np.int64)
-    o = face & 1
-    pos = np.zeros_like(i)
-    for k in range(MAX_LEVEL - 1, -1, -1):
-        ij = ((i >> k) & 1) * 2 + ((j >> k) & 1)
-        idx = o * 4 + ij
-        pos = pos * 4 + pos_tab[idx]
-        o = newo_tab[idx]
-    return pos
+    odd = (face & 1) == 1
+    return hilbert_xy2h_np(np.where(odd, j, i), np.where(odd, i, j),
+                           MAX_LEVEL)
 
 
 def s2_cellid_np(lon_deg, lat_deg, level: int = MAX_LEVEL) -> np.ndarray:
@@ -135,49 +135,3 @@ def parent_id_np(cell_id, level: int) -> np.ndarray:
     lsb = np.int64(1) << np.int64(2 * (MAX_LEVEL - level))
     return (cid & -(lsb << 1)) | lsb
 
-
-def s2_cellid_scalar(lon_deg: float, lat_deg: float,
-                     level: int = MAX_LEVEL) -> int:
-    """Scalar twin of s2_cellid_np (plain-Python loop over the 2-D
-    tables, no flattening, no numpy) — the pytest cross-check."""
-    import math
-
-    lon = math.radians(lon_deg)
-    lat = math.radians(lat_deg)
-    x = math.cos(lat) * math.cos(lon)
-    y = math.cos(lat) * math.sin(lon)
-    z = math.sin(lat)
-    ax, ay, az = abs(x), abs(y), abs(z)
-    axis = 0 if (ax >= ay and ax >= az) else (1 if ay >= az else 2)
-    comp = (x, y, z)[axis]
-    face = axis if comp >= 0 else axis + 3
-    u, v = {
-        0: lambda: (y / x, z / x),
-        1: lambda: (-x / y, z / y),
-        2: lambda: (-x / z, -y / z),
-        3: lambda: (z / x, y / x),
-        4: lambda: (z / y, -x / y),
-        5: lambda: (-y / z, -x / z),
-    }[face]()
-
-    def st(w: float) -> float:
-        return (0.5 * math.sqrt(1.0 + 3.0 * w) if w >= 0.0
-                else 1.0 - 0.5 * math.sqrt(1.0 - 3.0 * w))
-
-    def ij(w: float) -> int:
-        return min(max(int(math.floor(st(w) * (1 << MAX_LEVEL))), 0),
-                   (1 << MAX_LEVEL) - 1)
-
-    i, j = ij(u), ij(v)
-    o = face & 1
-    pos = 0
-    for k in range(MAX_LEVEL - 1, -1, -1):
-        bits = ((i >> k) & 1) * 2 + ((j >> k) & 1)
-        r = KIJTOPOS[o][bits]
-        pos = pos * 4 + r
-        o ^= KPOS_TO_ORIENTATION[r]
-    uid = (face << 61) | (pos << 1) | 1
-    if level < MAX_LEVEL:
-        lsb = 1 << (2 * (MAX_LEVEL - level))
-        uid = (uid & ~(2 * lsb - 1)) | lsb
-    return uid - (1 << 64) if uid >= (1 << 63) else uid

@@ -1,18 +1,18 @@
-"""Loop-free JVM-side S2 cell ids: chunked state-machine lookups.
+"""Loop-free JVM-side S2 cell ids: the float prefix as one shallow
+projection, the Hilbert fold as the shared chunked lookup.
 
 The dual-dialect CTE (sqlgen.s2_cellid_cte_sql) unrolls the 30-level
 Hilbert orientation fold as 60 chained projections — correct, and the
 right shape for the DuckDB oracle, but on Spark the deep chain blows the
 generated-method size and drops the stage out of whole-stage codegen.
 
-Same cure as tiling/hilbert_jvm.py: the fold's state (the 2-bit S2
-orientation: swap|invert) is a 4-element group, so K levels collapse into
-ONE transition-table lookup over (orientation, i_chunk, j_chunk) ->
-(position digits, next orientation). 30 bits = chunks of 8+8+8+6 -> FOUR
-broadcast hash joins against <=256 Ki-row tables, fully inside
-whole-stage codegen, no Python, no deep expression tree. The float prefix
-(face / quadratic ST / discretize) is one shallow projection. This is the
-100 TB shape: per-row work is a few CASEs, two sqrt, four hash probes.
+The S2 position of leaf (i, j) is the tile Hilbert index of (i, j) at 30
+bits on even faces and of (j, i) on odd faces (the face's starting
+orientation is a transpose), so the fold runs through
+functions/hilbert_jvm.py: five broadcast hash joins against 16 Ki-row
+tables, fully inside whole-stage codegen, no Python, no deep expression
+tree. The float prefix (face / quadratic ST / discretize) is one shallow
+projection. Per-row work is a few CASEs, two sqrt, five hash probes.
 
 Bit-parity with functions/s2.py (the numpy kernel the oracle gate also
 pins) is asserted by tests/test_s2.py.
@@ -20,55 +20,11 @@ pins) is asserted by tests/test_s2.py.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .s2 import KIJTOPOS_FLAT, MAX_LEVEL, NEWO_FLAT
-
-# 6-bit chunks: five 16 Ki-row transition tables (4 * 64 * 64) instead of
-# three 256 Ki-row ones + a tail — r6 measurement: building + broadcasting
-# the 262 Ki-row pandas tables dominated cell_encode_s2's wall time at
-# bench scale (~3.3 s of which <1 s was the actual scan), while per-row
-# cost BARELY changes (5 vs 4 broadcast-hash probes, and a 16 Ki-entry
-# table is L2-resident where 256 Ki spills to L3). Bit-parity is
-# chunking-independent (chunk_plan just partitions the 30 levels; pinned
-# by tests/test_s2.py).
-_MAX_CHUNK = 6
-
-
-def chunk_plan(order: int = MAX_LEVEL) -> list[int]:
-    out: list[int] = []
-    left = order
-    while left > 0:
-        k = min(_MAX_CHUNK, left)
-        out.append(k)
-        left -= k
-    return out
-
-
-def chunk_table(k: int) -> pd.DataFrame:
-    """Transition table for one k-bit chunk of the S2 Hilbert fold.
-
-    key = (orientation << 2k) | (i_chunk << k) | j_chunk; d = the chunk's
-    2k position digits; st = the orientation handed to the next chunk.
-    All four orientations are enumerated even for the first chunk — the
-    walk starts at face & 1, so both 0 and 1 occur."""
-    n = 1 << k
-    pos_tab = np.array(KIJTOPOS_FLAT, dtype=np.int64)
-    newo_tab = np.array(NEWO_FLAT, dtype=np.int64)
-    o0 = np.repeat(np.arange(4, dtype=np.int64), n * n)
-    ic = np.tile(np.repeat(np.arange(n, dtype=np.int64), n), 4)
-    jc = np.tile(np.arange(n, dtype=np.int64), 4 * n)
-    o = o0.copy()
-    d = np.zeros_like(o0)
-    for b in range(k - 1, -1, -1):
-        idx = o * 4 + ((ic >> b) & 1) * 2 + ((jc >> b) & 1)
-        d = (d << 2) | pos_tab[idx]
-        o = newo_tab[idx]
-    key = (o0 << (2 * k)) | (ic << k) | jc
-    return pd.DataFrame({"key": key, "d": d, "st": o})
+from .hilbert_jvm import with_hilbert_jvm
+from .s2 import MAX_LEVEL
 
 
 def with_s2_jvm(df: DataFrame, loncol: str, latcol: str,
@@ -79,7 +35,6 @@ def with_s2_jvm(df: DataFrame, loncol: str, latcol: str,
     order for the face argmax, same quadratic ST; float parity with the
     numpy kernel and the CTE holds because all three run the identical
     operation sequence in IEEE doubles)."""
-    spark = df.sparkSession
     rad = "0.017453292519943295"
     m = (1 << MAX_LEVEL) - 1
     cur = (
@@ -115,38 +70,17 @@ def with_s2_jvm(df: DataFrame, loncol: str, latcol: str,
             f"LEAST(GREATEST(CAST(floor(_ft * {float(1 << MAX_LEVEL)}d)"
             f" AS BIGINT), 0), {m})"))
     )
-    chunks = chunk_plan()
-    lo = MAX_LEVEL
-    digit_cols: list[tuple[str, int]] = []
-    for ci, k in enumerate(chunks):
-        lo -= k
-        mask = (1 << k) - 1
-        ic = F.shiftright(F.col("_si"), lo).bitwiseAND(F.lit(mask))
-        jc = F.shiftright(F.col("_sj"), lo).bitwiseAND(F.lit(mask))
-        state = (F.col(f"_sst{ci - 1}") if ci > 0
-                 else F.col(f"{prefix}_face").bitwiseAND(F.lit(1)))
-        key: Column = (F.shiftleft(state, 2 * k)
-                       .bitwiseOR(F.shiftleft(ic, k)).bitwiseOR(jc))
-        tbl = spark.createDataFrame(chunk_table(k)).select(
-            F.col("key").alias(f"_sk{ci}"),
-            F.col("d").alias(f"_sd{ci}"),
-            F.col("st").alias(f"_sst{ci}"),
-        )
-        # LEFT join: NULL lon/lat must yield NULL id, not a dropped row
-        cur = (cur.withColumn(f"_sk{ci}", key.cast("long"))
-               .join(F.broadcast(tbl), f"_sk{ci}", "left"))
-        digit_cols.append((f"_sd{ci}", k))
-    pos = None
-    bits_below = 2 * MAX_LEVEL
-    for name, k in digit_cols:
-        bits_below -= 2 * k
-        piece = (F.shiftleft(F.col(name), bits_below) if bits_below
-                 else F.col(name))
-        pos = piece if pos is None else pos.bitwiseOR(piece)
+    # odd faces start the fold transposed: swap (i, j) into the tile
+    # Hilbert kernel's (x, y), which always starts in state 0
+    odd = F.col(f"{prefix}_face").bitwiseAND(F.lit(1)) == 1
+    si, sj = F.col("_si"), F.col("_sj")
+    cur = (cur.withColumn("_hx", F.when(odd, sj).otherwise(si))
+           .withColumn("_hy", F.when(odd, si).otherwise(sj)))
+    cur = with_hilbert_jvm(cur, "_hx", "_hy", MAX_LEVEL, out="_spos")
     # id = face<<61 | pos<<1 | 1 — shiftleft wraps on the JVM, giving the
     # two's-complement bit pattern for faces 4/5 directly
     leaf = (F.shiftleft(F.col(f"{prefix}_face"), 61)
-            .bitwiseOR(F.shiftleft(pos, 1)).bitwiseOR(F.lit(1)))
+            .bitwiseOR(F.shiftleft(F.col("_spos"), 1)).bitwiseOR(F.lit(1)))
     plsb = 1 << (2 * (MAX_LEVEL - parent_level))
     cur = cur.withColumn(f"{prefix}_id", leaf.cast("long"))
     cur = cur.withColumn(
@@ -165,7 +99,5 @@ def with_s2_jvm(df: DataFrame, loncol: str, latcol: str,
     for c in (f"{prefix}_face", f"{prefix}_id",
               f"{prefix}_id_l{parent_level}"):
         cur = cur.withColumn(c, F.when(~isnull, F.col(c)))
-    drop = ["_px", "_py", "_pz", "_fu", "_fv", "_fs", "_ft", "_si", "_sj"]
-    drop += [c for ci in range(len(chunks))
-             for c in (f"_sk{ci}", f"_sd{ci}", f"_sst{ci}")]
-    return cur.drop(*drop)
+    return cur.drop("_px", "_py", "_pz", "_fu", "_fv", "_fs", "_ft",
+                    "_si", "_sj", "_hx", "_hy", "_spos")

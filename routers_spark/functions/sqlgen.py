@@ -1,7 +1,7 @@
 """Dual-dialect SQL expression generator.
 
 Every cell/tile encoding in this engine is integer math (bit interleaving,
-Hilbert rotation, zigzag). We express each algorithm ONCE as a string
+Hilbert rotation). We express each algorithm ONCE as a string
 template over a tiny op vocabulary and render it for two dialects:
 
   - "spark"  — used via ``F.expr`` inside DataFrame pipelines (JVM-side,
@@ -107,8 +107,11 @@ class Program:
 
 
 def p_spread_bits_multi(p: Program, d: Dialect, vs: list[str], n: int) -> list[str]:
-    """Morton spread as program steps, all inputs in lockstep per level
-    (see :func:`spread_bits`)."""
+    """Morton spread: insert a 0 bit between each of the low ``n`` bits of
+    every input, all inputs in lockstep per level.
+
+    Classic magic-number spreading (public domain bit-twiddling); works for
+    n <= 32 on BIGINT. Uses only AND/OR/SHL — dialect-safe."""
     xs = p.let_many([d.band(v, str((1 << n) - 1)) for v in vs])
     for shift, mask in (
         (16, 0x0000FFFF0000FFFF),
@@ -124,6 +127,7 @@ def p_spread_bits_multi(p: Program, d: Dialect, vs: list[str], n: int) -> list[s
 
 
 def p_bit_reverse32_multi(p: Program, d: Dialect, vs: list[str], bits: int) -> list[str]:
+    """Reverse the low ``bits`` (<= 32) bits of each non-negative BIGINT."""
     xs = list(vs)
     for shift, mask in ((1, 0x55555555), (2, 0x33333333), (4, 0x0F0F0F0F),
                         (8, 0x00FF00FF), (16, 0x0000FFFF)):
@@ -138,7 +142,16 @@ def p_bit_reverse32_multi(p: Program, d: Dialect, vs: list[str], bits: int) -> l
 
 
 def p_quadkey(p: Program, d: Dialect, lon: str, lat: str, depth: int) -> str:
-    """QuadKey as program steps (see :func:`quadkey_expr` for semantics)."""
+    """QuadKey bits per the reference quadtree strategy:
+    2 bits per level, level 0 (COARSEST) in the LOW bits, q = north<<1 | east
+    (libs/routers_shard/src/strategy/quadtree.rs:88-123).
+
+    Binary subdivision with ``px >= mid`` over [-180,180]x[-90,90] is exactly
+    bit (depth-1-level) of ``floor(frac * 2^depth)`` — the subdivision
+    midpoints are exact binary fractions of the world extent, so the loop and
+    this closed form agree bit-for-bit. Each index is bit-reversed so level 0
+    lands in the interleave's low lane.
+    """
     xi, yi = p.let_many(
         [grid_index(d, lon_frac(lon), depth), grid_index(d, lat_frac(lat), depth)]
     )
@@ -148,7 +161,14 @@ def p_quadkey(p: Program, d: Dialect, lon: str, lat: str, depth: int) -> str:
 
 
 def p_geohash_int(p: Program, d: Dialect, lon: str, lat: str, precision: int) -> str:
-    """Geohash integer form as program steps (see :func:`geohash_int_expr`)."""
+    """Geohash as an integer of 5*precision interleaved bits (lon first,
+    from the top bit) — the bit content of the reference's base-32 encoding
+    (libs/routers_shard/src/strategy/geohash.rs:88-137).
+
+    lon occupies the even bit positions counting from the TOP of the
+    5c-bit word. If the total is even, lat sits at bit 0; if odd, lon has
+    one extra bit at both top and bottom, so the value is
+    interleave(lon >> 1, lat) << 1 | (lon & 1)."""
     total = 5 * precision
     lon_bits = (total + 1) // 2
     lat_bits = total // 2
@@ -164,7 +184,12 @@ def p_geohash_int(p: Program, d: Dialect, lon: str, lat: str, precision: int) ->
     return p.let(d.bor(d.shl(hi, 1), d.band(xi, 1)))
 
 
+_GEOHASH_B32 = "0123456789bcdefghjkmnpqrstuvwxyz"
+
+
 def p_geohash_str(p: Program, d: Dialect, lon: str, lat: str, precision: int) -> str:
+    """Base-32 geohash string, built from the integer form via substring
+    lookups (both dialects: substr is 1-indexed)."""
     gi = p_geohash_int(p, d, lon, lat, precision)
     parts = []
     for c in range(precision):
@@ -203,103 +228,6 @@ def grid_index(d: Dialect, frac: str, bits: int) -> str:
     return d.floor_long(f"({_fix_double_suffix(d, frac)}) * {1 << bits}")
 
 
-def spread_bits(d: Dialect, v: str, n: int) -> str:
-    """Morton spread: insert a 0 bit between each of the low ``n`` bits of v.
-
-    Classic magic-number spreading (public domain bit-twiddling); works for
-    n <= 32 on BIGINT. Uses only AND/OR/SHL — dialect-safe.
-    """
-    x = f"({v} & {(1 << n) - 1})"
-    steps = [
-        (16, 0x0000FFFF0000FFFF),
-        (8, 0x00FF00FF00FF00FF),
-        (4, 0x0F0F0F0F0F0F0F0F),
-        (2, 0x3333333333333333),
-        (1, 0x5555555555555555),
-    ]
-    for shift, mask in steps:
-        x = d.band(d.bor(x, d.shl(x, shift)), str(mask))
-    return x
-
-
-def morton_interleave(d: Dialect, xi: str, yi: str, bits: int, y_low: bool) -> str:
-    """Interleave two ``bits``-bit integers. ``y_low``: y occupies bit 0."""
-    sx = spread_bits(d, xi, bits)
-    sy = spread_bits(d, yi, bits)
-    if y_low:
-        return d.bor(sy, d.shl(f"({sx})", 1))
-    return d.bor(sx, d.shl(f"({sy})", 1))
-
-
-def bit_reverse32_expr(d: Dialect, v: str, bits: int) -> str:
-    """Reverse the low ``bits`` (<= 32) bits of a non-negative BIGINT."""
-    x = f"({v})"
-    for shift, mask in ((1, 0x55555555), (2, 0x33333333), (4, 0x0F0F0F0F),
-                        (8, 0x00FF00FF), (16, 0x0000FFFF)):
-        x = d.bor(
-            d.band(d.shr(x, shift), str(mask)),
-            d.shl(f"({d.band(x, str(mask))})", shift),
-        )
-        x = f"({x})"
-    return d.shr(x, 32 - bits)
-
-
-def quadkey_expr(d: Dialect, lon: str, lat: str, depth: int) -> str:
-    """QuadKey bits per the reference quadtree strategy:
-    2 bits per level, level 0 (COARSEST) in the LOW bits, q = north<<1 | east
-    (libs/routers_shard/src/strategy/quadtree.rs:88-123).
-
-    Binary subdivision with ``px >= mid`` over [-180,180]x[-90,90] is exactly
-    bit (depth-1-level) of ``floor(frac * 2^depth)`` — the subdivision
-    midpoints are exact binary fractions of the world extent, so the loop and
-    this closed form agree bit-for-bit. Each index is bit-reversed so level 0
-    lands in the interleave's low lane.
-    """
-    xi = grid_index(d, lon_frac(lon), depth)
-    yi = grid_index(d, lat_frac(lat), depth)
-    xr = bit_reverse32_expr(d, xi, depth)
-    yr = bit_reverse32_expr(d, yi, depth)
-    return morton_interleave(d, f"({xr})", f"({yr})", depth, y_low=False)
-
-
-_GEOHASH_B32 = "0123456789bcdefghjkmnpqrstuvwxyz"
-
-
-def geohash_int_expr(d: Dialect, lon: str, lat: str, precision: int) -> str:
-    """Geohash as an integer of 5*precision interleaved bits (lon first,
-    from the top bit) — the bit content of the reference's base-32 encoding
-    (libs/routers_shard/src/strategy/geohash.rs:88-137)."""
-    total = 5 * precision
-    lon_bits = (total + 1) // 2
-    lat_bits = total // 2
-    xi = grid_index(d, lon_frac(lon), lon_bits)
-    yi = grid_index(d, lat_frac(lat), lat_bits)
-    # lon occupies the even bit positions counting from the TOP of the
-    # 5c-bit word. With lon first: bit (total-1) is lon's MSB. Interleaving
-    # from the low end: if total is even, lat sits at bit 0 → y_low when
-    # total even; when odd, lon has one extra bit at both top and bottom.
-    if total % 2 == 0:
-        return morton_interleave(d, f"({xi})", f"({yi})", lon_bits, y_low=True)
-    # odd: lon bit count = lat + 1; lowest bit is a lon bit.
-    # value = interleave(lon>>1, lat) << 1 | (lon & 1)
-    hi = morton_interleave(
-        d, f"({d.shr(f'({xi})', 1)})", f"({yi})", lat_bits, y_low=False
-    )
-    return d.bor(d.shl(f"({hi})", 1), d.band(f"({xi})", 1))
-
-
-def geohash_str_expr(d: Dialect, lon: str, lat: str, precision: int) -> str:
-    """Base-32 geohash string, built from the integer form via substring
-    lookups (both dialects: substr is 1-indexed)."""
-    gi = geohash_int_expr(d, lon, lat, precision)
-    parts = []
-    for c in range(precision):
-        shift = 5 * (precision - 1 - c)
-        idx = d.band(f"({d.shr(f'({gi})', shift)})" if shift else f"({gi})", 31)
-        parts.append(f"substr('{_GEOHASH_B32}', CAST({idx} AS INT) + 1, 1)")
-    return "concat(" + ", ".join(parts) + ")"
-
-
 def slippy_xy_expr(d: Dialect, lon: str, lat: str, zoom: int) -> tuple[str, str]:
     """Slippy tile (x, y) at fixed zoom — the reference's WebMercator
     projection (libs/routers_geo/src/project.rs:49-71). Note the reference
@@ -311,17 +239,6 @@ def slippy_xy_expr(d: Dialect, lon: str, lat: str, zoom: int) -> tuple[str, str]
         f"{n} * (1.0 - ln(tan({rad}) + 1.0 / cos({rad})) / pi()) / 2.0"
     )
     return x, y
-
-
-def zigzag_expr(d: Dialect, v: str) -> str:
-    """Zigzag encode (i32 domain, evaluated in 64-bit so the shift cannot
-    overflow) — libs/routers_tiles/src/lib.rs:105-107."""
-    v64 = f"CAST({v} AS BIGINT)"
-    # (v << 1) as v*2 and (v >> 31) as a sign mask: DuckDB refuses to
-    # left-shift negative numbers, multiplication is dialect-safe.
-    return d.xor(
-        f"({v64} * 2)", f"(CASE WHEN {v64} < 0 THEN -1 ELSE 0 END)"
-    )
 
 
 def hilbert_xy2h_cte_sql(

@@ -193,8 +193,9 @@ def _q_s2(dialect: str) -> str:
     88-123). Leaf (level-30) id plus the level-12 ancestor — the pair a
     shard/tile layer would key on. The oracle side is the generated
     integer/CASE CTE (sqlgen.s2_cellid_cte_sql); the Spark side runs the
-    chunked-lookup JVM form (functions/s2_jvm.py, _s2_spark override).
-    tests/test_s2.py pins the numpy twin, the Hilbert-curve properties,
+    JVM form (functions/s2_jvm.py, _s2_spark override), whose Hilbert fold
+    is the tile key's chunked lookup (functions/hilbert_jvm.py).
+    tests/test_s2.py pins the numpy kernel, the Hilbert-curve properties,
     and the fixture's floor-boundary margins that make the float prefix
     of the pipeline cross-engine exact."""
     d = _d(dialect)
@@ -1511,7 +1512,7 @@ def _q_tile_range(dialect: str) -> str:
     """S8 range-pruned tile scan: hilbert keys of the z9 fragment (87,204)'s
     z12 descendants are one contiguous range [h<<6, (h+1)<<6) — the
     BigTable RowRange analog (bigtable.rs:311-320, range.rs:207-237). The
-    Spark side is the engine's with_tile_columns + scan_tile_range (BETWEEN
+    Spark side is the engine's assign_tile_cells + scan_tile_range (BETWEEN
     pushed into the scan); this oracle restates the filter over the same
     hilbert CTE program."""
     from routers_spark.tiling.pipeline import fragment_hilbert_range
@@ -1542,12 +1543,12 @@ def _q_tile_range(dialect: str) -> str:
 
 
 def _tile_range_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Engine side of tile_range_scan: hilbert keys via the numpy kernel in
-    one Arrow pass (at scale the tile table STORES this column and the
-    BETWEEN prunes parquet files — tests/test_build_shard_scan.py shows the
-    PushedFilters; deriving it inline through the JVM withColumns chain and
-    then filtering would make Catalyst inline the 12-level program into the
-    pushed predicate, exploding the optimizer)."""
+    """Engine side of tile_range_scan: hilbert keys via assign_tile_cells'
+    chunked lookup joins, then scan_tile_range's BETWEEN (at scale the tile
+    table STORES this column and the BETWEEN prunes parquet files —
+    tests/test_build_shard_scan.py shows the PushedFilters; the lookup
+    joins fence the filter, so Catalyst cannot inline a per-level program
+    into the pushed predicate)."""
     from routers_spark.tiling.pipeline import assign_tile_cells, scan_tile_range
 
     register_views(spark, sf_dir)
@@ -3083,9 +3084,10 @@ def _knn_spark_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _s2_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark override for cell_encode_s2: the chunked state-machine
-    lookup form (functions/s2_jvm.py) — four broadcast hash joins inside
-    whole-stage codegen instead of the 60-projection CTE chain (which
-    Spark executes correctly but kicks out of codegen on method size).
+    lookup form (functions/s2_jvm.py over functions/hilbert_jvm.py) — five
+    broadcast hash joins inside whole-stage codegen instead of the
+    60-projection CTE chain (which Spark executes correctly but kicks out
+    of codegen on method size).
     Bit-parity with the numpy kernel and the DuckDB oracle CTE is pinned
     by tests/test_s2.py."""
     from .functions.s2_jvm import with_s2_jvm

@@ -24,6 +24,7 @@ from routers_spark.functions.cells import (
     slippy_offsets_np,
     slippy_xy_np,
 )
+from routers_spark.functions.hilbert_jvm import with_hilbert_jvm
 from routers_spark.functions.raster import decode_image, png_encode, pyramid
 
 
@@ -34,13 +35,12 @@ def with_tile_columns(df: DataFrame, zoom: int, lon: str = "lon",
     scans (S8).
 
     The hilbert index comes from the chunked state-machine lookups
-    (tiling/hilbert_jvm.py: two broadcast hash joins) instead of the
-    former per-level rotation chain — same bits (pytest-pinned against
-    the numpy kernel), but the plan stays inside whole-stage codegen and
-    filters on ``hilbert`` can no longer inline an exponential per-level
-    program into the pushed-down predicate (the join is a natural fence)."""
-    from routers_spark.tiling.hilbert_jvm import with_hilbert_jvm
-
+    (functions/hilbert_jvm.py: one broadcast hash join per 6-bit chunk of
+    ``zoom``) instead of the former per-level rotation chain — same bits
+    (pytest-pinned against the numpy kernel), but the plan stays inside
+    whole-stage codegen and filters on ``hilbert`` can no longer inline an
+    exponential per-level program into the pushed-down predicate (the join
+    is a natural fence)."""
     S = sqlgen.SPARK
     x_sql, y_sql = sqlgen.slippy_xy_expr(S, lon, lat, zoom)
     df = df.withColumn("tile_x", F.expr(x_sql)).withColumn("tile_y", F.expr(y_sql))
@@ -56,7 +56,8 @@ def assign_tile_cells(df: DataFrame, zoom: int, gh_precision: int | None = 6,
 
     The whole pass stays JVM-side — geohash + slippy as one rendered
     sqlgen projection chain, hilbert as the chunked broadcast-lookup joins
-    (tiling/hilbert_jvm.py). Measured (BENCH.md): ANY Python round trip
+    (functions/hilbert_jvm.py). A NULL or NaN lon/lat keeps its row with
+    NULL gh/tile_x/tile_y/hilbert. Measured (BENCH.md): ANY Python round trip
     over this input costs a flat ~7.5 s at 32M rows regardless of core
     count — the Arrow transfer pipe, not the kernel, is the binding
     resource and it does not scale with threads. The JVM form both beats
@@ -64,20 +65,23 @@ def assign_tile_cells(df: DataFrame, zoom: int, gh_precision: int | None = 6,
     property the north rule grades."""
     import uuid
 
-    from routers_spark.tiling.hilbert_jvm import with_hilbert_jvm
-
     keep = keep if keep is not None else [
         c for c in df.columns if c not in (lon, lat)]
     S = sqlgen.SPARK
     name = f"_atc_{uuid.uuid4().hex[:10]}"
     df.createOrReplaceTempView(name)
     prog = sqlgen.Program(f"SELECT * FROM {name}", list(df.columns))
+    # a NULL/NaN point has no cell: the clamped geohash grid and the
+    # floor-to-BIGINT slippy casts would otherwise file it in a real one
+    bad = (f"{lon} IS NULL OR {lat} IS NULL OR isnan({lon})"
+           f" OR isnan({lat})")
     sel = list(keep)
     if gh_precision is not None:
         gh = sqlgen.p_geohash_str(prog, S, lon, lat, gh_precision)
-        sel.append(f"{gh} AS gh")
+        sel.append(f"CASE WHEN {bad} THEN NULL ELSE {gh} END AS gh")
     sx, sy = sqlgen.slippy_xy_expr(S, lon, lat, zoom)
-    sel += [f"{sx} AS tile_x", f"{sy} AS tile_y"]
+    sel += [f"CASE WHEN {bad} THEN NULL ELSE {sx} END AS tile_x",
+            f"CASE WHEN {bad} THEN NULL ELSE {sy} END AS tile_y"]
     base = df.sparkSession.sql(prog.render(sel))
     # the analyzed plan no longer needs the catalog entry — drop it so
     # repeated calls don't grow the session catalog without bound
@@ -93,10 +97,6 @@ def fragment_hilbert_range(z: int, x: int, y: int,
     query is ONE contiguous key range (the BigTable RowRange analog,
     bigtable.rs:311-320 built from Fragment::detail, fragment.rs:35-52).
     Returns the inclusive [lo, hi] pair."""
-    import numpy as np
-
-    from routers_spark.functions.cells import hilbert_xy2h_np
-
     assert storage_zoom >= z
     k = storage_zoom - z
     h = int(hilbert_xy2h_np(np.array([x]), np.array([y]), z)[0])

@@ -19,8 +19,9 @@ LAT = RNG.uniform(-90, 90, 500)
 def duck():
     con = duckdb.connect()
     con.execute(
-        "CREATE TABLE pts AS SELECT * FROM (SELECT unnest(?) lon, unnest(?) lat)",
-        [LON.tolist(), LAT.tolist()],
+        "CREATE TABLE pts AS SELECT * FROM"
+        " (SELECT unnest(?) rid, unnest(?) lon, unnest(?) lat)",
+        [list(range(len(LON))), LON.tolist(), LAT.tolist()],
     )
     return con
 
@@ -32,11 +33,21 @@ def test_geohash_np_matches_reference_loop():
         assert list(got) == exp
 
 
+def _duck_program(duck, encode, *args):
+    """Render ``encode`` (a sqlgen ``p_*`` form) over pts, in rid order."""
+    prog = sqlgen.Program("SELECT rid, lon, lat FROM pts", ["rid", "lon", "lat"])
+    col = encode(prog, sqlgen.DUCKDB, "lon", "lat", *args)
+    sql = f"SELECT v FROM ({prog.render(['rid', f'{col} AS v'])}) ORDER BY rid"
+    return [r[0] for r in duck.execute(sql).fetchall()]
+
+
 def test_geohash_duckdb_matches_np(duck):
-    for p in (4, 8):
-        sql = sqlgen.geohash_str_expr(sqlgen.DUCKDB, "lon", "lat", p)
-        got = [r[0] for r in duck.execute(f"SELECT {sql} FROM pts").fetchall()]
-        assert got == list(cells.geohash_str_np(LON, LAT, p))
+    # precision 5 (25 bits) pins the odd-bit branch spatial_cell_join uses
+    for p in (4, 5, 8):
+        assert _duck_program(duck, sqlgen.p_geohash_str, p) == \
+            list(cells.geohash_str_np(LON, LAT, p))
+        assert _duck_program(duck, sqlgen.p_geohash_int, p) == \
+            cells.geohash_int_np(LON, LAT, p).tolist()
 
 
 def test_geohash_bounds_roundtrip():
@@ -53,9 +64,8 @@ def test_geohash_bounds_roundtrip():
 
 def test_quadkey_duckdb_matches_np(duck):
     for d in (5, 9, 20):
-        sql = sqlgen.quadkey_expr(sqlgen.DUCKDB, "lon", "lat", d)
-        got = duck.execute(f"SELECT {sql} FROM pts").fetchnumpy()
-        assert np.array_equal(list(got.values())[0], cells.quadkey_np(LON, LAT, d))
+        got = _duck_program(duck, sqlgen.p_quadkey, d)
+        assert got == cells.quadkey_np(LON, LAT, d).tolist()
 
 
 def test_quadkey_reference_subdivision_semantics():
@@ -154,16 +164,6 @@ def test_partition_duckdb_matches_np(duck):
     assert np.array_equal(
         list(got.values())[0], hashing.partition_of_np(ids.view(np.uint64))
     )
-
-
-def test_zigzag_duckdb():
-    con = duckdb.connect()
-    vals = [0, -1, 1, -2, 2, 2147483647, -2147483648]
-    con.execute("CREATE TABLE z AS SELECT CAST(unnest(?) AS INT) v", [vals])
-    sql = sqlgen.zigzag_expr(sqlgen.DUCKDB, "v")
-    got = [r[0] for r in con.execute(f"SELECT {sql} FROM z").fetchall()]
-    # zigzag mapping: 0→0, -1→1, 1→2, -2→3, 2→4 (tiles/src/lib.rs:105-107)
-    assert got[:5] == [0, 1, 2, 3, 4]
 
 
 def test_dbscan_gate_eps_has_wide_margin():

@@ -88,14 +88,6 @@ def test_parent_child_containment():
 # ------------------------------------------------------- kernel parity
 
 
-def test_vectorized_matches_scalar():
-    lon, lat = _rand_lonlat(400, 3)
-    vec = s2.s2_cellid_np(lon, lat)
-    ref = np.array([s2.s2_cellid_scalar(a, b) for a, b in zip(lon, lat)],
-                   dtype=np.int64)
-    np.testing.assert_array_equal(vec, ref)
-
-
 def test_face_anchors():
     # Face centers: the 6 axis directions, in face order.
     lon = [0.0, 90.0, 0.0, 180.0, -90.0, 0.0]
@@ -212,12 +204,7 @@ def test_gate_fixture_duckdb_exact_over_full_id_range():
 def test_jvm_lookup_matches_numpy_kernel(spark):
     import pandas as pd
 
-    from routers_spark.functions.s2_jvm import chunk_table, with_s2_jvm
-
-    # table sanity: first chunk, orientation rows enumerate the full fold
-    t8 = chunk_table(8)
-    assert len(t8) == 4 * 256 * 256
-    assert t8["st"].isin([0, 1, 2, 3]).all()
+    from routers_spark.functions.s2_jvm import with_s2_jvm
 
     lon, lat = _rand_lonlat(3000, 31)
     ids = s2.s2_cellid_np(lon, lat)
@@ -228,12 +215,15 @@ def test_jvm_lookup_matches_numpy_kernel(spark):
            .toPandas().sort_values("rid"))
     np.testing.assert_array_equal(got["s2_id"].to_numpy(), ids)
     np.testing.assert_array_equal(got["s2_id_l12"].to_numpy(), parents)
-    # null lon/lat -> null id, row preserved
+    # NULL or NaN lon/lat -> NULL face and ids, row preserved
+    nan = float("nan")
     null_df = spark.createDataFrame(
-        pd.DataFrame({"rid": [0], "lon": [None], "lat": [None]}),
+        [(0, None, None), (1, nan, 20.0), (2, 10.0, nan)],
         "rid long, lon double, lat double")
     nres = with_s2_jvm(null_df, "lon", "lat").toPandas()
-    assert len(nres) == 1 and pd.isna(nres["s2_id"].iloc[0])
+    assert sorted(nres["rid"]) == [0, 1, 2]
+    for c in ("s2_face", "s2_id", "s2_id_l12"):
+        assert nres[c].isna().all(), c
 
 
 def test_jvm_lookup_plan_is_broadcast_codegen(spark):

@@ -145,6 +145,23 @@ def test_assign_tile_cells_matches_jvm_form(spark):
     assert list(fast.columns) == ["pid", "gh", "tile_x", "tile_y", "hilbert"]
 
 
+def test_assign_tile_cells_null_and_nan_rows(spark):
+    """A NULL or NaN lon/lat keeps its row, and every derived cell column
+    is NULL: the clamped geohash grid must not file it in a real cell."""
+    from routers_spark.tiling.pipeline import assign_tile_cells
+
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [(0, -118.4, 33.7), (1, None, 33.7), (2, nan, 33.7), (3, -118.4, nan)],
+        "pid long, lon double, lat double")
+    out = assign_tile_cells(df, zoom=12, gh_precision=6) \
+        .toPandas().sort_values("pid").reset_index(drop=True)
+    assert out["pid"].tolist() == [0, 1, 2, 3]
+    assert out.loc[0].notna().all()
+    for c in ("gh", "tile_x", "tile_y", "hilbert"):
+        assert out.loc[1:, c].isna().all(), c
+
+
 def test_raster_pyramid_spark(spark):
     from routers_spark.fixtures.images import generate_images
     from routers_spark.functions.raster import (
@@ -214,15 +231,12 @@ def test_assign_zones_spark(spark):
 
 def test_hilbert_jvm_matches_numpy(spark):
     """Chunked state-machine lookup joins == the classic rotation loop,
-    bit for bit, across orders that exercise 1- and 2-chunk plans."""
-    import numpy as np
-    import pandas as pd
-
-    from routers_spark.functions.cells import hilbert_xy2h_np
-    from routers_spark.tiling.hilbert_jvm import with_hilbert_jvm
+    bit for bit, across orders that exercise 1- to 5-chunk plans (full and
+    partial last chunks); order 30 is the S2 leaf position."""
+    from routers_spark.functions.hilbert_jvm import with_hilbert_jvm
 
     rng = np.random.default_rng(3)
-    for order in (3, 8, 9, 12, 15, 16):
+    for order in (3, 6, 7, 12, 13, 16, 30):
         n = 4000
         pdf = pd.DataFrame({
             "i": np.arange(n),
@@ -262,7 +276,7 @@ def test_hilbert_jvm_preserves_null_rows(spark):
     row (the lookup joins are LEFT joins for exactly this reason)."""
     import pandas as pd
 
-    from routers_spark.tiling.hilbert_jvm import with_hilbert_jvm
+    from routers_spark.functions.hilbert_jvm import with_hilbert_jvm
 
     pdf = pd.DataFrame({"i": [0, 1, 2],
                         "x": pd.array([3, None, 7], dtype="Int64"),

@@ -13,12 +13,19 @@ off the file's own DQT/DHT/SOF0 segments (interval-free baseline, h=v=1
 components), so it is not coupled to the encoder's table choice.
 
 Hot math (color transform, DCT/IDCT over all blocks, quantization) is
-vectorized numpy; the entropy coder loops over nonzero symbols only (the
-same per-image granularity as the surrounding multimodal ops).
+vectorized numpy. The entropy encoder builds the whole symbol stream as
+arrays and bit-packs it in one vector pass. The entropy decoder cuts the
+scan out with two regexes and one replace, reads each Huffman code with one
+lookup in a 16-bit lookahead table per DHT (cached per table), takes every
+bit field as a shift and mask of a precomputed 32-bit word, and scatters
+the nonzero coefficients into the block array once. Damaged input raises
+``ValueError``.
 """
 
 from __future__ import annotations
 
+import functools
+import re
 import struct
 
 import numpy as np
@@ -106,22 +113,20 @@ AC_CHROMA_SPEC = (
      0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA])
 
 
-def _canonical_codes(bits: list[int], values: list[int]):
-    """Canonical Huffman assignment (T.81 C.2): symbol -> (code, length)
-    and its inverse (length, code) -> symbol."""
+def _canonical_codes(bits: list[int],
+                     values: list[int]) -> dict[int, tuple[int, int]]:
+    """Canonical Huffman assignment (T.81 C.2): symbol -> (code, length)."""
     enc: dict[int, tuple[int, int]] = {}
-    dec: dict[tuple[int, int], int] = {}
     code = 0
     k = 0
     for ln in range(1, 17):
         for _ in range(bits[ln - 1]):
             sym = values[k]
             enc[sym] = (code, ln)
-            dec[(ln, code)] = sym
             code += 1
             k += 1
         code <<= 1
-    return enc, dec
+    return enc
 
 
 _DCT = np.zeros((8, 8))
@@ -185,7 +190,7 @@ def _amplitude_np(v: np.ndarray, s: np.ndarray) -> np.ndarray:
 
 
 def _code_tables(spec) -> tuple[np.ndarray, np.ndarray]:
-    enc, _ = _canonical_codes(*spec)
+    enc = _canonical_codes(*spec)
     codes = np.zeros(256, dtype=np.int64)
     lens = np.zeros(256, dtype=np.int64)
     for sym, (c, ln) in enc.items():
@@ -340,47 +345,51 @@ def jpeg_encode(arr: np.ndarray, quality: int = 90) -> bytes:
     return bytes(out)
 
 
-class _BitReader:
-    def __init__(self, data: bytes):
-        self.bits = np.unpackbits(np.frombuffer(data, dtype=np.uint8))
-        self.i = 0
-
-    def read(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | int(self.bits[self.i])
-            self.i += 1
-        return v
-
-    def huff(self, dec: dict[tuple[int, int], int]) -> int:
-        code = 0
-        for ln in range(1, 17):
-            code = (code << 1) | int(self.bits[self.i])
-            self.i += 1
-            sym = dec.get((ln, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid Huffman code")
+_END = re.compile(rb"\xff(?![\x00\xd0-\xd7])")   # next real marker
+_RST = re.compile(rb"\xff[\xd0-\xd7]")
 
 
-def _extend(v: int, s: int) -> int:
-    return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
+@functools.lru_cache(maxsize=32)
+def _huff_lut(bits: bytes, vals: bytes) -> list[int]:
+    """One DHT as a 16-bit lookahead table: entry ``c`` holds
+    ``symbol << 5 | length`` of the code that prefixes the 16 bits ``c``,
+    or 0 where no code does."""
+    if sum(bits) != len(vals):
+        raise ValueError("bad Huffman table")
+    lut = [0] * 65536
+    for sym, (code, ln) in _canonical_codes(list(bits), list(vals)).items():
+        if code >= 1 << ln:
+            raise ValueError("bad Huffman table")
+        span = 1 << (16 - ln)
+        lut[code * span:(code + 1) * span] = [sym << 5 | ln] * span
+    return lut
 
 
 def jpeg_decode(data: bytes) -> np.ndarray:
     """Decode baseline sequential JFIF with h=v=1 components (what the
-    encoder emits). Table-driven off the file's own DQT/DHT segments."""
+    encoder emits). Table-driven off the file's own DQT/DHT segments.
+    Malformed or truncated input raises ``ValueError``."""
+    try:
+        return _decode(data)
+    except (IndexError, KeyError, StopIteration, struct.error) as e:
+        raise ValueError(f"malformed JPEG: {e!r}") from e
+
+
+def _decode(data: bytes) -> np.ndarray:
+    data = bytes(data)
     mv = memoryview(data)
-    assert bytes(mv[:2]) == b"\xff\xd8", "not a JPEG (no SOI)"
+    if bytes(mv[:2]) != b"\xff\xd8":
+        raise ValueError("not a JPEG (no SOI)")
     i = 2
     qt: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict] = {}
+    huff: dict[tuple[int, int], list[int]] = {}
     comps: list[tuple[int, int]] = []   # (component id, quant table id)
     scan: list[tuple[int, int, int]] = []  # (comp idx, dc table, ac table)
     h = w = 0
     entropy = None
     while i < len(mv):
-        assert mv[i] == 0xFF, "marker expected"
+        if mv[i] != 0xFF:
+            raise ValueError("marker expected")
         marker = mv[i + 1]
         i += 2
         if marker == 0xD9:              # EOI
@@ -391,7 +400,8 @@ def jpeg_decode(data: bytes) -> np.ndarray:
             j = 0
             while j < len(seg):
                 tid = seg[j] & 0x0F
-                assert (seg[j] >> 4) == 0, "only 8-bit quant tables"
+                if seg[j] >> 4:
+                    raise ValueError("only 8-bit quant tables")
                 tbl = np.zeros(64, dtype=np.int64)
                 tbl[ZIGZAG] = np.frombuffer(seg[j + 1:j + 65], dtype=np.uint8)
                 qt[tid] = tbl.reshape(8, 8)
@@ -401,17 +411,17 @@ def jpeg_decode(data: bytes) -> np.ndarray:
             n = seg[5]
             for c in range(n):
                 cid, hv, tq = seg[6 + 3 * c:9 + 3 * c]
-                assert hv == 0x11, "only 4:4:4 (h=v=1) supported"
+                if hv != 0x11:
+                    raise ValueError("only 4:4:4 (h=v=1) supported")
                 comps.append((cid, tq))
         elif marker == 0xC4:            # DHT (possibly several per segment)
             j = 0
             while j < len(seg):
                 tc_th = seg[j]
-                bits = list(seg[j + 1:j + 17])
+                bits = bytes(seg[j + 1:j + 17])
                 nvals = sum(bits)
-                vals = list(seg[j + 17:j + 17 + nvals])
-                _, dec = _canonical_codes(bits, vals)
-                huff[(tc_th >> 4, tc_th & 0x0F)] = dec
+                huff[(tc_th >> 4, tc_th & 0x0F)] = _huff_lut(
+                    bits, bytes(seg[j + 17:j + 17 + nvals]))
                 j += 17 + nvals
         elif marker == 0xDA:            # SOS
             ns = seg[0]
@@ -420,56 +430,73 @@ def jpeg_decode(data: bytes) -> np.ndarray:
                 idx = next(k for k, (ci, _) in enumerate(comps) if ci == cid)
                 scan.append((idx, tabs >> 4, tabs & 0x0F))
             # entropy data runs to the next non-stuffed, non-RST marker
-            j = i + ln
-            raw = bytearray()
-            while j < len(mv):
-                b = mv[j]
-                if b == 0xFF:
-                    nxt = mv[j + 1]
-                    if nxt == 0x00:
-                        raw.append(0xFF)
-                        j += 2
-                        continue
-                    if 0xD0 <= nxt <= 0xD7:  # RST (we never emit DRI)
-                        j += 2
-                        continue
-                    break
-                raw.append(b)
-                j += 1
-            entropy = bytes(raw)
-            i = j
+            m = _END.search(data, i + ln)
+            end = m.start() if m else len(data)
+            entropy = _RST.sub(b"", data[i + ln:end]).replace(b"\xff\x00",
+                                                              b"\xff")
+            i = end
             continue
         elif marker == 0xC2:
             raise NotImplementedError("progressive JPEG not supported")
         i += ln
-    assert entropy is not None and h and w, "truncated JPEG"
+    if entropy is None or not h or not w:
+        raise ValueError("truncated JPEG")
 
-    br = _BitReader(entropy)
-    bh, bw_n = (h + 7) // 8, (w + 7) // 8
-    n_blocks = bh * bw_n
-    coefs = [np.zeros((n_blocks, 64), dtype=np.int64) for _ in comps]
-    prev_dc = [0] * len(comps)
+    # the big-endian 32-bit word starting at every byte offset: a Huffman
+    # lookahead or an amplitude is one shift and mask of words[pos >> 3]
+    b = np.frombuffer(entropy + bytes(4), dtype=np.uint8).astype(np.uint32)
+    words = (b[:-3] << 24 | b[1:-2] << 16 | b[2:-1] << 8 | b[3:]).tolist()
+    n_blocks = ((h + 7) // 8) * ((w + 7) // 8)
+    # per scan component: flat (block * 64 + zigzag k) indices, values
+    plan = [([], [], huff[(0, dc_t)], huff[(1, ac_t)])
+            for _, dc_t, ac_t in scan]
+    prev_dc = [0] * len(scan)
+    pos = 0
     for bi in range(n_blocks):
-        for ci, dc_t, ac_t in scan:
-            zz = coefs[ci][bi]
-            s = br.huff(huff[(0, dc_t)])
-            diff = _extend(br.read(s), s) if s else 0
-            prev_dc[ci] += diff
-            zz[0] = prev_dc[ci]
+        base = bi << 6
+        for si, (idx, val, dc_lut, ac_lut) in enumerate(plan):
+            e = dc_lut[words[pos >> 3] >> (16 - (pos & 7)) & 0xFFFF]
+            if not e:
+                raise ValueError("invalid Huffman code")
+            pos += e & 31
+            s = e >> 5
+            if s:
+                if s > 16:
+                    raise ValueError("bad DC category")
+                v = words[pos >> 3] >> (32 - (pos & 7) - s) & ((1 << s) - 1)
+                pos += s
+                prev_dc[si] += v if v >> (s - 1) else v - (1 << s) + 1
+            idx.append(base)
+            val.append(prev_dc[si])
             k = 1
             while k <= 63:
-                sym = br.huff(huff[(1, ac_t)])
+                e = ac_lut[words[pos >> 3] >> (16 - (pos & 7)) & 0xFFFF]
+                if not e:
+                    raise ValueError("invalid Huffman code")
+                pos += e & 31
+                sym = e >> 5
                 if sym == 0x00:         # EOB
                     break
-                run, s = sym >> 4, sym & 0x0F
-                if s == 0:
-                    assert run == 15, "bad AC symbol"
+                s = sym & 0x0F
+                if not s:
+                    if sym != 0xF0:
+                        raise ValueError("bad AC symbol")
                     k += 16             # ZRL
                     continue
-                k += run
-                zz[k] = _extend(br.read(s), s)
+                k += sym >> 4
+                if k > 63:
+                    raise ValueError("AC run past coefficient 63")
+                v = words[pos >> 3] >> (32 - (pos & 7) - s) & ((1 << s) - 1)
+                pos += s
+                idx.append(base + k)
+                val.append(v if v >> (s - 1) else v - (1 << s) + 1)
                 k += 1
+    if pos > 8 * len(entropy):
+        raise ValueError("truncated JPEG entropy data")
 
+    coefs = [np.zeros((n_blocks, 64), dtype=np.int64) for _ in comps]
+    for (ci, _, _), (idx, val, _, _) in zip(scan, plan):
+        coefs[ci].flat[idx] = val
     planes = []
     for ci, (cid, tq) in enumerate(comps):
         nat = np.zeros((n_blocks, 64), dtype=np.float64)

@@ -136,18 +136,23 @@ def raster_pyramid(images_df: DataFrame, base_zoom: int = 19,
         for pdf in batches:
             out = {k: [] for k in ("image_id", "z", "x", "y", "level",
                                    "tile_w", "tile_h", "tile_png")}
-            for _, r in pdf.iterrows():
+            # every image's tile at every level: one projection per level
+            lon, lat = pdf["lon"].to_numpy(), pdf["lat"].to_numpy()
+            keys = [slippy_xy_np(lon, lat, base_zoom - lvl)
+                    for lvl in range(levels + 1)]
+            for i, (image_id, data, fmt) in enumerate(zip(
+                    pdf["image_id"].to_numpy(), pdf["bytes"].to_numpy(),
+                    pdf["fmt"].to_numpy())):
                 try:
-                    arr = decode_image(bytes(r["bytes"]), r["fmt"])
+                    arr = decode_image(bytes(data), fmt)
                 except NotImplementedError:
                     continue
                 for lvl, img in enumerate(pyramid(arr, levels)):
-                    z = base_zoom - lvl
-                    tx, ty = slippy_xy_np([r["lon"]], [r["lat"]], z)
-                    out["image_id"].append(r["image_id"])
-                    out["z"].append(z)
-                    out["x"].append(int(tx[0]))
-                    out["y"].append(int(ty[0]))
+                    tx, ty = keys[lvl]
+                    out["image_id"].append(image_id)
+                    out["z"].append(base_zoom - lvl)
+                    out["x"].append(int(tx[i]))
+                    out["y"].append(int(ty[i]))
                     out["level"].append(lvl)
                     out["tile_w"].append(img.shape[1])
                     out["tile_h"].append(img.shape[0])

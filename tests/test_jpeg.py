@@ -1,19 +1,28 @@
 """Baseline JPEG codec (functions/jpeg.py): spec-level structure, PSNR
-parity gates on realistic content, determinism, and decoder independence
-from the encoder's table choice (table-driven off DQT/DHT)."""
+parity gates on realistic content, determinism, decoder independence
+from the encoder's table choice (table-driven off DQT/DHT), pixel identity
+with a bit-at-a-time reference decoder, and ValueError on damaged input."""
 
 from __future__ import annotations
+
+import struct
 
 import numpy as np
 import pytest
 
 from routers_spark.functions.jpeg import (
+    _DCT,
     AC_CHROMA_SPEC,
     AC_LUMA_SPEC,
     DC_CHROMA_SPEC,
     DC_LUMA_SPEC,
     ZIGZAG,
     _canonical_codes,
+    _code_tables,
+    _huff_lut,
+    _pack_bits,
+    _unblocks,
+    _ycbcr_to_rgb,
     jpeg_decode,
     jpeg_encode,
 )
@@ -35,11 +44,18 @@ def test_huffman_specs_well_formed():
     for bits, vals in (DC_LUMA_SPEC, DC_CHROMA_SPEC,
                        AC_LUMA_SPEC, AC_CHROMA_SPEC):
         assert sum(bits) == len(vals)
-        enc, dec = _canonical_codes(bits, vals)
-        assert len(enc) == len(vals) and len(dec) == len(vals)
-        # canonical codes never overflow their length
+        enc = _canonical_codes(bits, vals)
+        assert len(enc) == len(vals)
+        lut = _huff_lut(bytes(bits), bytes(vals))
         for sym, (code, ln) in enc.items():
+            # canonical codes never overflow their length, and every
+            # 16-bit window the code prefixes decodes to it
             assert code < (1 << ln)
+            lo = code << (16 - ln)
+            assert lut[lo] == lut[lo + (1 << (16 - ln)) - 1] == sym << 5 | ln
+        # prefix-free: no two codes claim the same window
+        assert sum(1 for e in lut if e) == sum(
+            1 << (16 - ln) for _, ln in enc.values())
     assert sum(AC_LUMA_SPEC[0]) == 162 and sum(AC_CHROMA_SPEC[0]) == 162
 
 
@@ -109,3 +125,210 @@ def test_dispatch_integration_multimodal():
         arr = decode_image(bytes(r.bytes), "jpeg")
         assert arr.shape == (r.h, r.w, 3)
         assert bytes(r.bytes)[:2] == b"\xff\xd8"  # real JPEG on the wire
+
+
+# ------------------------------------------------ bit-at-a-time reference
+
+
+class _BitReader:
+    def __init__(self, data: bytes):
+        self.bits = np.unpackbits(np.frombuffer(data, dtype=np.uint8))
+        self.i = 0
+
+    def read(self, n: int) -> int:
+        v = 0
+        for _ in range(n):
+            v = (v << 1) | int(self.bits[self.i])
+            self.i += 1
+        return v
+
+    def huff(self, dec: dict[tuple[int, int], int]) -> int:
+        code = 0
+        for ln in range(1, 17):
+            code = (code << 1) | int(self.bits[self.i])
+            self.i += 1
+            sym = dec.get((ln, code))
+            if sym is not None:
+                return sym
+        raise ValueError("invalid Huffman code")
+
+
+def _extend(v: int, s: int) -> int:
+    return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
+
+
+def _reference_decode(data: bytes) -> np.ndarray:
+    """The decoder as first written: a per-byte unstuffing loop and one
+    bit at a time through (length, code) -> symbol maps."""
+    mv = memoryview(data)
+    i = 2
+    qt, huff, comps, scan = {}, {}, [], []
+    h = w = 0
+    entropy = None
+    while i < len(mv):
+        marker = mv[i + 1]
+        i += 2
+        if marker == 0xD9:
+            break
+        ln = struct.unpack(">H", mv[i:i + 2])[0]
+        seg = mv[i + 2:i + ln]
+        if marker == 0xDB:
+            j = 0
+            while j < len(seg):
+                tbl = np.zeros(64, dtype=np.int64)
+                tbl[ZIGZAG] = np.frombuffer(seg[j + 1:j + 65], dtype=np.uint8)
+                qt[seg[j] & 0x0F] = tbl.reshape(8, 8)
+                j += 65
+        elif marker == 0xC0:
+            h, w = struct.unpack(">HH", seg[1:5])
+            for c in range(seg[5]):
+                cid, _, tq = seg[6 + 3 * c:9 + 3 * c]
+                comps.append((cid, tq))
+        elif marker == 0xC4:
+            j = 0
+            while j < len(seg):
+                tc_th = seg[j]
+                bits = list(seg[j + 1:j + 17])
+                vals = list(seg[j + 17:j + 17 + sum(bits)])
+                huff[(tc_th >> 4, tc_th & 0x0F)] = {
+                    (ln, code): sym for sym, (code, ln)
+                    in _canonical_codes(bits, vals).items()}
+                j += 17 + len(vals)
+        elif marker == 0xDA:
+            for c in range(seg[0]):
+                cid, tabs = seg[1 + 2 * c:3 + 2 * c]
+                idx = next(k for k, (ci, _) in enumerate(comps) if ci == cid)
+                scan.append((idx, tabs >> 4, tabs & 0x0F))
+            j = i + ln
+            raw = bytearray()
+            while j < len(mv):
+                b = mv[j]
+                if b == 0xFF:
+                    nxt = mv[j + 1]
+                    if nxt == 0x00:
+                        raw.append(0xFF)
+                        j += 2
+                        continue
+                    if 0xD0 <= nxt <= 0xD7:
+                        j += 2
+                        continue
+                    break
+                raw.append(b)
+                j += 1
+            entropy = bytes(raw)
+            i = j
+            continue
+        i += ln
+
+    br = _BitReader(entropy)
+    n_blocks = ((h + 7) // 8) * ((w + 7) // 8)
+    coefs = [np.zeros((n_blocks, 64), dtype=np.int64) for _ in comps]
+    prev_dc = [0] * len(comps)
+    for bi in range(n_blocks):
+        for ci, dc_t, ac_t in scan:
+            zz = coefs[ci][bi]
+            s = br.huff(huff[(0, dc_t)])
+            diff = _extend(br.read(s), s) if s else 0
+            prev_dc[ci] += diff
+            zz[0] = prev_dc[ci]
+            k = 1
+            while k <= 63:
+                sym = br.huff(huff[(1, ac_t)])
+                if sym == 0x00:
+                    break
+                run, s = sym >> 4, sym & 0x0F
+                if s == 0:
+                    k += 16
+                    continue
+                k += run
+                zz[k] = _extend(br.read(s), s)
+                k += 1
+
+    planes = []
+    for ci, (_, tq) in enumerate(comps):
+        nat = np.zeros((n_blocks, 64), dtype=np.float64)
+        nat[:, ZIGZAG] = coefs[ci]
+        deq = nat.reshape(-1, 8, 8) * qt[tq].reshape(1, 8, 8)
+        px = np.einsum("xu,nuv,yv->nxy", _DCT.T, deq, _DCT.T) + 128.0
+        planes.append(_unblocks(px, h, w))
+    return _ycbcr_to_rgb(np.stack(planes, axis=-1))
+
+
+def _oracle_corpus() -> list[bytes]:
+    from routers_spark.fixtures.images import generate_images
+
+    df = generate_images(60, seed=5)
+    corpus = [bytes(b) for b, f in zip(df["bytes"], df["fmt"])
+              if f == "jpeg"]
+    noise = np.random.default_rng(3).integers(0, 256, (40, 24, 3),
+                                              dtype=np.uint8)
+    corpus += [jpeg_encode(noise, quality=q) for q in (30, 50, 95)]
+    corpus += [jpeg_encode(_gradient(h, w), quality=90)
+               for h, w in ((8, 8), (7, 13), (45, 61))]
+    corpus.append(jpeg_encode(noise[:, :, 1], quality=75))
+    return corpus
+
+
+def test_decoder_matches_bit_loop_reference():
+    corpus = _oracle_corpus()
+    assert len(corpus) > 20
+    for data in corpus:
+        got, want = jpeg_decode(data), _reference_decode(data)
+        assert got.dtype == want.dtype == np.uint8
+        assert np.array_equal(got, want)
+
+
+def _damaged_outcome(data: bytes) -> None:
+    try:
+        out = jpeg_decode(data)
+    except ValueError:
+        return
+    assert out.ndim == 3 and out.shape[2] == 3 and out.dtype == np.uint8
+
+
+@pytest.mark.parametrize("quality", [50, 95])
+def test_damaged_input_raises_value_error(quality):
+    """Truncation anywhere and single-byte flips anywhere either decode to
+    an RGB array or raise ValueError — never IndexError, and an over-long
+    AC run never spills into the next block."""
+    noise = np.random.default_rng(quality).integers(0, 256, (24, 40, 3),
+                                                    dtype=np.uint8)
+    data = jpeg_encode(noise, quality=quality)
+    for cut in range(0, len(data), 37):
+        _damaged_outcome(data[:cut])
+    for at in range(2, len(data), 11):
+        flipped = bytearray(data)
+        flipped[at] ^= 0xFF
+        _damaged_outcome(bytes(flipped))
+
+
+def _with_entropy(data: bytes, entropy: bytes) -> bytes:
+    """``data``'s headers through SOS, then ``entropy`` and EOI."""
+    sos = data.index(b"\xff\xda")
+    (ln,) = struct.unpack(">H", data[sos + 2:sos + 4])
+    return data[:sos + 2 + ln] + entropy + b"\xff\xd9"
+
+
+def test_overlong_ac_run_raises_value_error():
+    """Four (run 15, size 1) AC symbols take the first block of an 8x16
+    image to coefficient 64, which would be the next block's DC."""
+    data = jpeg_encode(_gradient(8, 16), quality=90)
+    dc_codes, dc_lens = _code_tables(DC_LUMA_SPEC)
+    ac_codes, ac_lens = _code_tables(AC_LUMA_SPEC)
+    codes = [dc_codes[0]] + [ac_codes[0xF1], 1] * 4
+    lens = [dc_lens[0]] + [ac_lens[0xF1], 1] * 4
+    bad = _with_entropy(data, _pack_bits(np.array(codes), np.array(lens)))
+    with pytest.raises(ValueError, match="coefficient 63"):
+        jpeg_decode(bad)
+
+
+def test_short_entropy_stream_raises_value_error():
+    """Dropping the last entropy bytes but keeping EOI must not decode the
+    missing blocks out of padding."""
+    data = jpeg_encode(_gradient(24, 40), quality=90)
+    sos = data.index(b"\xff\xda")
+    (ln,) = struct.unpack(">H", data[sos + 2:sos + 4])
+    entropy = data[sos + 2 + ln:-2]
+    for drop in (1, 2, 3):
+        with pytest.raises(ValueError, match="truncated"):
+            jpeg_decode(_with_entropy(data, entropy[:-drop]))

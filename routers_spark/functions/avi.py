@@ -1,12 +1,10 @@
 """Motion-JPEG AVI container — the PUBLIC RIFF/AVI format, pure python.
 
-With the baseline JPEG codec (functions/jpeg.py) real, video decode can be
-real too: AVI with an 'MJPG' stream is just RIFF chunk plumbing around
-per-frame JPEGs — a format everyday tools genuinely produce and consume.
-This closes the LAST media-decode stub: the video pipeline now reads
-actual clip bytes (frame extraction decodes ONLY the selected frames —
-each '00dc' chunk is independent, the property MJPEG is used for in
-practice).
+AVI with an 'MJPG' stream is RIFF chunk plumbing around per-frame
+baseline JPEGs (functions/jpeg.py) — a format everyday tools genuinely
+produce and consume. The video pipeline reads actual clip bytes, and frame
+extraction decodes ONLY the selected frames (each '00dc' chunk is
+independent, the property MJPEG is used for in practice).
 
 Writer emits: RIFF('AVI ') { LIST(hdrl){ avih, LIST(strl){ strh 'vids'/
 'MJPG', strf BITMAPINFOHEADER } }, LIST(movi){ '00dc'... }, idx1 }.

@@ -1,16 +1,14 @@
-"""Vectorized geometry kernels (numpy) + their JVM Column-expression twins.
+"""Vectorized geometry kernels (numpy) + their dialect-portable SQL twins.
 
 Everything here operates on numpy arrays (for use inside Arrow-batched pandas
-UDFs) or builds pyspark Column expressions (for the relational glue, so the
-math stays inside whole-stage codegen). Each formula cites the reference
-behavior it reproduces.
+UDFs) or renders SQL text that Spark and DuckDB both run (for the
+relational glue, so the math stays inside whole-stage codegen). Each
+formula cites the reference behavior it reproduces.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from routers_spark.config import EARTH_RADIUS_M
 
@@ -173,21 +171,7 @@ def edges_hit_rects(ex0, ey0, ex1, ey1, bx0, by0, bx1, by1) -> np.ndarray:
     return (overlap & ~separated).any(axis=1)
 
 
-# --------------------------------------------------------------- Column side
-
-
-def _rad(c: Column) -> Column:
-    return F.radians(c)
-
-
-def haversine_m_col(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Column:
-    """JVM-side haversine — same formula/constant as :func:`haversine_m_np`."""
-    dlat = _rad(lat2) - _rad(lat1)
-    dlon = _rad(lon2) - _rad(lon1)
-    a = F.pow(F.sin(dlat / 2), 2) + F.cos(_rad(lat1)) * F.cos(_rad(lat2)) * F.pow(
-        F.sin(dlon / 2), 2
-    )
-    return 2.0 * EARTH_RADIUS_M * F.asin(F.least(F.lit(1.0), F.sqrt(a)))
+# ------------------------------------------------------------------ SQL side
 
 
 def haversine_m_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:

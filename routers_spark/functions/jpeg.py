@@ -1,9 +1,8 @@
 """Baseline JPEG (ITU-T T.81 / JFIF) encoder + decoder, pure numpy.
 
-Implements the PUBLIC spec from scratch — no image libraries ship in this
-sandbox, and the round-2 verdict noted the PSNR parity gate only fully
-bound on PNG while JPEG was a deterministic stand-in. This closes that:
-``fmt="jpeg"`` now really is baseline sequential JPEG.
+Implements the PUBLIC spec from scratch (no image libraries are
+required): ``fmt="jpeg"`` is baseline sequential JPEG, so the PSNR parity
+gate binds on an actual lossy codec.
 
 Scope (what the ENCODER emits): baseline sequential DCT, 8-bit, YCbCr
 4:4:4 (no chroma subsampling), Annex-K quantization tables scaled by the

@@ -4,10 +4,9 @@ The container ships no image libraries (no PIL), so:
   - PNG is implemented for real (encode filter-0, decode all five filter
     types, 8-bit gray/RGB/RGBA, non-interlaced) — lossless, byte-exact
     round-trips;
-  - JPEG is REAL as of round 3 (functions/jpeg.py: baseline sequential
-    ITU-T T.81, 4:4:4, Annex-K tables, JFIF) — the PSNR parity gate binds
-    on an actual lossy codec. The former "FJPG" stand-in decoder is kept
-    so legacy payloads remain readable.
+  - JPEG goes through functions/jpeg.py (baseline sequential ITU-T T.81,
+    4:4:4, Annex-K tables, JFIF) — the PSNR parity gate binds on an actual
+    lossy codec.
 
 Pyramid downsampling is a deterministic integer box filter
 ((a+b+c+d+2)//4), the resample pinned by the tile goldens (FIXTURES.md §5).
@@ -111,38 +110,10 @@ def png_decode(data: bytes) -> np.ndarray:
     return out.reshape(h, w, c)
 
 
-# ------------------------------------------------- deterministic lossy stub
-
-_FJPG_MAGIC = b"FJPG"
-_QUANT = 4  # quantization step → worst-case error 2 → PSNR ≈ 20log10(255/~1.1) > 40 dB
-
-
-def fake_jpeg_encode(arr: np.ndarray) -> bytes:
-    """STAND-IN lossy codec (see module docstring). Quantizes to multiples
-    of 4 (round-to-nearest) then zlib-compresses. Deterministic."""
-    if arr.ndim == 2:
-        arr = arr[:, :, None]
-    h, w, c = arr.shape
-    q = ((arr.astype(np.uint16) + _QUANT // 2) // _QUANT).astype(np.uint8)
-    body = zlib.compress(q.tobytes(), 6)
-    return _FJPG_MAGIC + struct.pack(">IIB", w, h, c) + body
-
-
-def fake_jpeg_decode(data: bytes) -> np.ndarray:
-    assert data[:4] == _FJPG_MAGIC, "not a FJPG payload"
-    w, h, c = struct.unpack(">IIB", data[4:13])
-    q = np.frombuffer(zlib.decompress(data[13:]), dtype=np.uint8)
-    return (
-        np.minimum(q.reshape(h, w, c).astype(np.uint16) * _QUANT, 255)
-    ).astype(np.uint8)
-
-
 def decode_image(data: bytes, fmt: str) -> np.ndarray:
     if fmt == "png":
         return png_decode(data)
     if fmt == "jpeg":
-        if data[:4] == _FJPG_MAGIC:  # legacy stand-in payloads still decode
-            return fake_jpeg_decode(data)
         from routers_spark.functions.jpeg import jpeg_decode
 
         return jpeg_decode(data)

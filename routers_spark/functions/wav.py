@@ -1,10 +1,7 @@
 """WAV (RIFF PCM) codec — the PUBLIC container format, pure numpy/struct.
 
-Closes the audio half of the media-decode seam: ``audio_windows`` now
-decodes REAL audio bytes (16-bit and 8-bit PCM, any channel count; floats
-normalized to [-1, 1)) instead of the deterministic stub. The stub remains
-only for payloads that are not RIFF (and for video, where no codec is
-sanely implementable without media libraries).
+The audio decoder behind ``audio_windows``: 16-bit and 8-bit PCM, any
+channel count, floats normalized to [-1, 1).
 
 Writer exists so fixtures synthesize real files — no external data.
 """

@@ -108,23 +108,6 @@ def bounded_dijkstra_parents(
     return parents
 
 
-def parent_path(parents: dict[int, int], root: int, leaf: int) -> list[int] | None:
-    """Nodes root→leaf inclusive via parent pointers (expansion.rs:26-39),
-    or None when leaf is outside the bound."""
-    if leaf not in parents:
-        return None
-    nodes = [leaf]
-    cursor = leaf
-    while cursor != root:
-        parent = parents.get(cursor)
-        if parent is None:
-            return None
-        nodes.append(parent)
-        cursor = parent
-    nodes.reverse()
-    return nodes
-
-
 class ParentMap:
     """A root's parent map in vectorizable form: sorted node-id keys, parent
     ids, LOCAL parent indices (gather-walkable without searchsorted) and
@@ -169,8 +152,8 @@ class ParentMap:
 
 
 def parent_path_pm(pm: ParentMap, root: int, leaf: int) -> list[int] | None:
-    """Scalar parent walk over a ParentMap — same semantics as
-    :func:`parent_path` (leaf outside the bound → None)."""
+    """Nodes root→leaf inclusive via the parent pointers
+    (expansion.rs:26-39), or None when leaf is outside the bound."""
     nk = len(pm.keys)
     i = int(np.searchsorted(pm.keys, leaf))
     if i >= nk or pm.keys[i] != leaf:

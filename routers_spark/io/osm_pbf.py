@@ -78,15 +78,24 @@ def _fields(buf: bytes):
             raise ValueError(f"unsupported wire type {wt}")
 
 
+_MAX_VARINT_BYTES = 10  # ceil(64 / 7): a longer varint overflows uint64
+
+
 def decode_packed_varints(data) -> np.ndarray:
     """Vectorized packed-varint decode: ends found via the continuation
     bit, every byte's 7-bit payload shifted into its varint lane with one
-    scatter-add. Returns uint64."""
+    scatter-add. Returns uint64. Raises ``ValueError`` when the buffer ends
+    inside a varint or a varint is longer than 10 bytes."""
     b = np.frombuffer(bytes(data), dtype=np.uint8)
     if len(b) == 0:
         return np.empty(0, dtype=np.uint64)
+    if b[-1] & 0x80:
+        raise ValueError("packed varints: buffer ends inside a varint")
     ends = np.nonzero((b & 0x80) == 0)[0]
     lengths = np.diff(np.concatenate([[-1], ends]))
+    if lengths.max() > _MAX_VARINT_BYTES:
+        raise ValueError(f"packed varints: a varint is longer than "
+                         f"{_MAX_VARINT_BYTES} bytes")
     starts = ends - lengths + 1
     vid = np.repeat(np.arange(len(ends)), lengths)
     pos = np.arange(len(b)) - starts[vid]
@@ -225,17 +234,21 @@ def _concat_packed(bufs: list) -> tuple[np.ndarray, np.ndarray]:
     Returns (values, counts) where counts[i] is how many varints buffer i
     held — the per-buffer slice boundaries for the caller. Batching here
     is the decode's hot-path fix: per-way buffers hold ~2-8 varints, and
-    one numpy call per tiny buffer costs more than the decode itself."""
+    one numpy call per tiny buffer costs more than the decode itself.
+    Raises ``ValueError`` when a buffer ends inside a varint: joined, its
+    tail would glue onto the next buffer's first value."""
     if not bufs:
         return np.empty(0, np.uint64), np.empty(0, np.int64)
     joined = b"".join(bytes(b) for b in bufs)
     raw = np.frombuffer(joined, dtype=np.uint8)
+    lens = np.fromiter((len(b) for b in bufs), np.int64, len(bufs))
+    bounds = np.cumsum(lens)
+    if (raw[bounds[lens > 0] - 1] & 0x80).any():
+        raise ValueError("packed varints: a buffer ends inside a varint")
     vals = decode_packed_varints(joined)
     # a varint ends at each byte without the continuation bit; counts per
     # buffer = ends falling inside each buffer's byte range
     ends = np.nonzero((raw & 0x80) == 0)[0]
-    bounds = np.cumsum(np.fromiter((len(b) for b in bufs), np.int64,
-                                   len(bufs)))
     counts = np.diff(np.concatenate([[0], np.searchsorted(ends, bounds,
                                                           "left")]))
     return vals, counts

@@ -1,38 +1,26 @@
-"""Costing: emission + transition heuristics, bit-compatible with the
-reference defaults.
+"""Costing: the emission decay and the injectable strategy surface,
+bit-compatible with the reference defaults.
 
   - decay:      cost(v) = (PRECISION * ZETA * (1/clamp(v,1e-6,1))^BETA) as u32
                 (costing/util.rs:29-39)
   - emission:   calculate = exp(-sqrt(distance / 25 m))
                 (costing/default.rs:62-65)
-  - transition: sqrt(deviance * turn_cost * class_continuity), each factor
-                clamped to [1e-6, 1] (costing/default.rs:137-163)
-  - angular complexity: wrapped heading deltas → cos(angle·π/180·0.8)
-                clamped [0,1]; any zero → 0; else harmonic mean
-                (map_path/entity.rs:229-297)
+
+The transition heuristic (default.rs:137-163: sqrt(deviance * turn_cost *
+class_continuity), each factor clamped to [1e-6, 1], with the angular
+complexity of map_path/entity.rs:229-297) is computed batched in
+``matching/weigh.py``. Its per-pair scalar oracle lives in
+``tests/test_weigh_vec.py``.
 """
 
 from __future__ import annotations
 
-import math
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 import numpy as np
 
-from routers_spark.config import (
-    COST_DAMPING,
-    COST_PRECISION,
-    DEFAULT_EMISSION_ERROR_M,
-    EARTH_RADIUS_M,
-    MAX_WEIGHT,
-    MIN_HEADING_DIST_M,
-)
-from routers_spark.functions.geo import (
-    bearing_deg_np,
-    haversine_m_np,
-    wrap_angle_np,
-)
+from routers_spark.config import COST_PRECISION, DEFAULT_EMISSION_ERROR_M
 
 _EPS = 1e-6
 
@@ -61,8 +49,6 @@ class CostingStrategies:
     emission: Strategy = field(default_factory=Strategy)
     transition: Strategy = field(default_factory=Strategy)
 
-
-DEFAULT_COSTING = CostingStrategies()
 
 
 def decay_u32(values: np.ndarray, zeta: float = 1.0,
@@ -94,120 +80,3 @@ def emission_cost_u32(distance_m: np.ndarray,
     else:
         value = np.exp(-np.sqrt(d / emission_error))
     return decay_u32(value, strategy.zeta, strategy.beta)
-
-
-def headings_from_positions(lons: np.ndarray, lats: np.ndarray) -> np.ndarray:
-    """Consecutive-pair bearings, skipping pairs closer than 1 m
-    (map_path/entity.rs:149-168)."""
-    lons = np.asarray(lons, dtype=np.float64)
-    lats = np.asarray(lats, dtype=np.float64)
-    if len(lons) < 2:
-        return np.empty(0, dtype=np.float64)
-    d = haversine_m_np(lons[:-1], lats[:-1], lons[1:], lats[1:])
-    keep = d >= MIN_HEADING_DIST_M
-    return bearing_deg_np(lons[:-1][keep], lats[:-1][keep],
-                          lons[1:][keep], lats[1:][keep])
-
-
-def complexity_from_headings(headings: np.ndarray) -> float:
-    """Harmonic-mean angular complexity over heading deltas
-    (map_path/entity.rs:264-297). Empty deltas → 1.0."""
-    if len(headings) < 2:
-        return 1.0
-    deltas = wrap_angle_np(np.diff(headings))
-    costs = np.clip(
-        np.cos(np.clip(deltas, -180.0, 180.0) * np.pi / 180.0 * COST_DAMPING),
-        0.0, 1.0,
-    )
-    if np.any(costs <= 0.0):
-        return 0.0
-    return float(np.clip(len(costs) / np.sum(1.0 / costs), 0.0, 1.0))
-
-
-# ------------------------------------------------------------ scalar kernels
-# The per-pair transition path works on single values and tiny paths; numpy
-# call overhead (~30 us per length-1 ufunc) dominates there, so these scalar
-# twins use libm directly (~10-30x faster per pair). Same formulas.
-
-
-def haversine_s(lon1: float, lat1: float, lon2: float, lat2: float) -> float:
-    rl1, rl2 = math.radians(lat1), math.radians(lat2)
-    dlat = rl2 - rl1
-    dlon = math.radians(lon2) - math.radians(lon1)
-    a = (math.sin(dlat / 2.0) ** 2
-         + math.cos(rl1) * math.cos(rl2) * math.sin(dlon / 2.0) ** 2)
-    return 2.0 * EARTH_RADIUS_M * math.asin(min(1.0, math.sqrt(a)))
-
-
-def bearing_s(lon1: float, lat1: float, lon2: float, lat2: float) -> float:
-    rl1, rl2 = math.radians(lat1), math.radians(lat2)
-    dlon = math.radians(lon2) - math.radians(lon1)
-    y = math.sin(dlon) * math.cos(rl2)
-    x = math.cos(rl1) * math.sin(rl2) - math.sin(rl1) * math.cos(rl2) * math.cos(dlon)
-    # np.arctan2, not math.atan2: numpy's kernel differs from libm by 1 ULP
-    # on some inputs, and the batched weigher (matching/weigh.py) is the hot
-    # path — the scalar oracle follows IT so both are bit-identical.
-    return math.degrees(float(np.arctan2(y, x))) % 360.0
-
-
-def headings_scalar(lons: list[float], lats: list[float]) -> list[float]:
-    """Scalar twin of :func:`headings_from_positions`."""
-    out = []
-    for i in range(len(lons) - 1):
-        if haversine_s(lons[i], lats[i], lons[i + 1], lats[i + 1]) >= MIN_HEADING_DIST_M:
-            out.append(bearing_s(lons[i], lats[i], lons[i + 1], lats[i + 1]))
-    return out
-
-
-def complexity_scalar(headings: list[float]) -> float:
-    """Scalar twin of :func:`complexity_from_headings` (same wrap + damping
-    + harmonic mean)."""
-    if len(headings) < 2:
-        return 1.0
-    inv_sum = 0.0
-    n = 0
-    for i in range(len(headings) - 1):
-        d = math.fmod(headings[i + 1] - headings[i], 360.0)
-        if d > 180.0:
-            d -= 360.0
-        elif d <= -180.0:
-            d += 360.0
-        d = max(-180.0, min(180.0, d))
-        c = math.cos(d * math.pi / 180.0 * COST_DAMPING)
-        if c <= 0.0:
-            return 0.0
-        c = min(c, 1.0)
-        inv_sum += 1.0 / c
-        n += 1
-    return max(0.0, min(1.0, n / inv_sum))
-
-
-def decay_u32_scalar(value: float, zeta: float = 1.0,
-                     beta: float = 1.0) -> int:
-    if value != value:  # NaN ≙ reference None → most expensive
-        value = 0.0
-    v = min(max(value, _EPS), 1.0)
-    inv = 1.0 / v
-    if beta != 1.0:
-        inv = inv ** beta
-    return int((COST_PRECISION * zeta) * inv)
-
-
-def transition_value(
-    straightline_m: float,
-    route_length_m: float,
-    angular: float,
-    src_weight: int,
-    tgt_weight: int,
-) -> float:
-    """The [0,1] transition heuristic (default.rs:137-163)."""
-    deviance = 1.0 if route_length_m <= 0.0 else straightline_m / route_length_m
-    deviance = min(max(deviance, _EPS), 1.0)
-    turn = min(max(angular, _EPS), 1.0)
-    cont = min(max(src_weight / tgt_weight, _EPS), 1.0)
-    return math.sqrt(deviance * turn * cont)
-
-
-def transition_cost_u32(value: float) -> int:
-    """decay + trellis ceiling clamp (weigh/mod.rs:83: ``.min(MAX_WEIGHT)``)."""
-    return min(int(decay_u32(np.array([value]))[0]), MAX_WEIGHT)

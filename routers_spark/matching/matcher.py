@@ -34,7 +34,6 @@ import pandas as pd
 from routers_spark.config import (
     DEFAULT_EMISSION_ERROR_M,
     DEFAULT_SEARCH_DISTANCE_M,
-    MAX_WEIGHT,
     NO_EDGE,
 )
 from routers_spark.functions.geo import (
@@ -69,22 +68,15 @@ class MatchOptions:
 # -------------------------------------------------------- candidate search
 
 
-def candidates_for_point(graph, lon: float, lat: float, search_distance: float,
-                         emission_error: float, costing_strategies=None) -> dict:
-    """M1/X6: one candidate per edge intersecting the square box — projected
-    position, distance, emission cost. Canonical candidate order = ascending
-    edge row (stable; the trellis tie-breaks depend on it)."""
-    return candidates_for_points(graph, np.array([lon]), np.array([lat]),
-                                 search_distance, emission_error,
-                                 costing_strategies)[0]
-
-
 def candidates_for_points(graph, lons, lats, search_distance: float,
                           emission_error: float,
                           costing_strategies=None) -> list[dict]:
-    """Batch variant (the rayon par-iter analog, generation/mod.rs:33-37):
-    box queries per point, then ONE vectorized projection/emission pass over
-    every (point, candidate-edge) pair."""
+    """M1/X6 candidate layers, one per point (the rayon par-iter analog,
+    generation/mod.rs:33-37): box queries per point, then ONE vectorized
+    projection/emission pass over every (point, candidate-edge) pair. A
+    layer holds one candidate per edge intersecting the point's square
+    box — projected position, distance, emission cost — in ascending edge
+    row order (stable; the trellis tie-breaks depend on it)."""
     lons = np.asarray(lons, dtype=np.float64)
     lats = np.asarray(lats, dtype=np.float64)
     min_lon, min_lat, max_lon, max_lat = square_box_np(lons, lats, search_distance)
@@ -127,11 +119,6 @@ def candidates_for_points(graph, lons, lats, search_distance: float,
 # ------------------------------------------------------------ transitions
 
 
-def _edge_heading(graph, row: int) -> float:
-    """Edge bearing, NaN when degenerate <1 m (candidate/entry.rs:109-126)."""
-    return float(graph.edge_heading[row])
-
-
 def reach(graph, cache, src: dict, tgt: dict,
           profile=None) -> tuple[str, list[int]] | None:
     """How tgt is reached from src (Expansion::reach, expansion.rs:63-97).
@@ -158,80 +145,6 @@ def reach(graph, cache, src: dict, tgt: dict,
         if r >= 0:  # filter_map semantics: silently skip missing (G2)
             path_rows.append(r)
     return ("standard", path_rows)
-
-
-def transition_cost(graph, cache, src: dict, tgt: dict,
-                    profile=None, costing_strategies=None) -> tuple[int, tuple] | None:
-    """M4: u32 transition cost for a candidate pair, or None (→ NO_EDGE).
-    Also returns the (resolution, path_rows) for collapse reuse.
-
-    The SCALAR reference kernel: solve_trip weighs boundaries with the
-    batched twin (matching/weigh.py, bit-identical by test); this stays as
-    the per-pair oracle and the collapse hop re-derivation."""
-    r = reach(graph, cache, src, tgt, profile)
-    if r is None:
-        return None
-    resolution, path_rows = r
-
-    # path nodes from edges: sources + last target (resolve.rs:67-77)
-    if path_rows:
-        node_idx = [int(graph.edge_src[e]) for e in path_rows]
-        node_idx.append(int(graph.edge_dst[path_rows[-1]]))
-        mp_lon = [float(graph.node_lon[i]) for i in node_idx]
-        mp_lat = [float(graph.node_lat[i]) for i in node_idx]
-        mp_len = 0.0
-        for i in range(len(mp_lon) - 1):
-            mp_len += costing.haversine_s(mp_lon[i], mp_lat[i],
-                                          mp_lon[i + 1], mp_lat[i + 1])
-    else:
-        mp_lon = []
-        mp_lat = []
-        mp_len = 0.0
-
-    straight = costing.haversine_s(src["px"], src["py"], tgt["px"], tgt["py"])
-
-    # offsets (transition.rs:205-238)
-    if resolution == "direct":
-        offset = straight
-    else:
-        e_s, e_t = src["edge_row"], tgt["edge_row"]
-        offset = costing.haversine_s(
-            src["px"], src["py"], float(graph.bx[e_s]), float(graph.by[e_s])
-        ) + costing.haversine_s(
-            float(graph.ax[e_t]), float(graph.ay[e_t]), tgt["px"], tgt["py"]
-        )
-
-    route_length = mp_len + offset
-
-    # angular complexity with explicit endpoint headings
-    # (transition.rs:148-156 + map_path/entity.rs:260-283)
-    pos_lon = [src["px"], *mp_lon, tgt["px"]]
-    pos_lat = [src["py"], *mp_lat, tgt["py"]]
-    heads = []
-    h_src = _edge_heading(graph, src["edge_row"])
-    h_tgt = _edge_heading(graph, tgt["edge_row"])
-    if not np.isnan(h_src):
-        heads.append(h_src)
-    heads.extend(costing.headings_scalar(pos_lon, pos_lat))
-    if not np.isnan(h_tgt):
-        heads.append(h_tgt)
-    angular = costing.complexity_scalar(heads)
-
-    w_s = int(graph.edge_weight[src["edge_row"]])
-    w_t = int(graph.edge_weight[tgt["edge_row"]])
-    tstrat = (costing_strategies.transition
-              if costing_strategies is not None else None)
-    if tstrat is not None and tstrat.calculate is not None:
-        value = float(np.asarray(tstrat.calculate(
-            np.float64(straight), np.float64(route_length),
-            np.float64(angular), np.float64(w_s), np.float64(w_t))))
-    else:
-        value = costing.transition_value(straight, route_length, angular,
-                                         w_s, w_t)
-    zeta = tstrat.zeta if tstrat is not None else 1.0
-    beta = tstrat.beta if tstrat is not None else 1.0
-    return (min(costing.decay_u32_scalar(value, zeta, beta), MAX_WEIGHT),
-            (resolution, path_rows))
 
 
 # ------------------------------------------------------------- trip solver
@@ -272,22 +185,16 @@ def solve_trip(graph, layers: list[dict], opts: MatchOptions,
         t.add_layer(widths[k], layers[k]["emission"])
 
     cache = GLOBAL_PREDICATE_CACHE
+    nb = len(widths) - 1
     if boundary_keys is None or boundary_cache is None:
-        mats = weigh_boundaries(graph, cache, layers,
-                                fanout=opts.selective_fanout,
-                                profile=opts.profile, costing=opts.costing)
-    else:
-        from routers_spark.matching.weigh import weigh_boundary
-
-        mats = []
-        for k in range(len(widths) - 1):
-            m = boundary_cache.get(boundary_keys[k])
-            if m is None:
-                m = weigh_boundary(graph, cache, layers[k], layers[k + 1],
-                                   fanout=opts.selective_fanout,
-                                   profile=opts.profile, costing=opts.costing)
-                boundary_cache[boundary_keys[k]] = m
-            mats.append(m)
+        boundary_keys, boundary_cache = range(nb), {}
+    todo = [k for k in range(nb) if boundary_keys[k] not in boundary_cache]
+    fresh = weigh_boundaries(graph, cache,
+                             [(layers[k], layers[k + 1]) for k in todo],
+                             fanout=opts.selective_fanout,
+                             profile=opts.profile, costing=opts.costing)
+    boundary_cache.update(zip([boundary_keys[k] for k in todo], fresh))
+    mats = [boundary_cache[boundary_keys[k]] for k in range(nb)]
     for k, mat in enumerate(mats):
         if not np.all(mat == np.uint32(NO_EDGE)):
             t.fill_transition(k, mat)

@@ -1,25 +1,25 @@
-"""Batched boundary weighing (M4/M5/M8) — the vectorized transition kernel.
+"""Batched boundary weighing (M4/M5/M8): the matcher's one transition
+kernel.
 
-Replaces the per-candidate-pair Python loop with numpy over ALL (src, tgt)
-pairs of ALL boundaries of a trip at once (the analog of the reference's
-rayon boundary × row sweep, weigh/mod.rs:89-141, but data-parallel over the
-whole trip):
+numpy over ALL (src, tgt) pairs of every boundary handed in at once (the
+analog of the reference's rayon boundary × row sweep, weigh/mod.rs:89-141,
+but data-parallel over the whole trip):
 
   1. direct / same-edge masks per boundary (candidate/entry.rs:92-106)
-  2. parent-map walks batched per unique root ACROSS the trip: every leaf
+  2. parent-map walks batched per unique root ACROSS the call: every leaf
      walks the root's ParentMap simultaneously via pure integer gathers
      (expansion.rs:63-97); consecutive boundaries share roots, so each
-     (root, leaf-set) is walked once per trip, not once per boundary
+     (root, leaf-set) is walked once per call, not once per boundary
   3. path edge rows via one searchsorted over the (src,dst) pair keys (G2)
   4. route lengths, headings, angular complexity and the cost decay as flat
-     ragged-array passes (np.add.at keeps the reference's sequential
-     left-to-right float accumulation, so results are bit-identical to the
-     scalar kernels in matching/costing.py — asserted by
-     tests/test_weigh_vec.py)
+     ragged-array passes; np.add.at keeps the reference's sequential
+     left-to-right float accumulation
 
-Formulas mirror costing/default.rs:137-163, map_path/entity.rs:229-297 and
-costing/util.rs:29-39 exactly; every vector kernel here is the op-for-op
-twin of the scalar functions in costing.py.
+Formulas follow costing/default.rs:137-163, map_path/entity.rs:229-297 and
+costing/util.rs:29-39; distances and bearings are the
+``functions/geo`` kernels. The per-pair scalar oracle these matrices must
+equal bit for bit (same IEEE-754 results, same u32 truncations) lives in
+``tests/test_weigh_vec.py``.
 """
 
 from __future__ import annotations
@@ -29,38 +29,17 @@ import numpy as np
 from routers_spark.config import (
     COST_DAMPING,
     COST_PRECISION,
-    EARTH_RADIUS_M,
     MAX_WEIGHT,
     MIN_HEADING_DIST_M,
     NO_EDGE,
 )
-from routers_spark.functions.geo import haversine_m_np
+from routers_spark.functions.geo import (
+    bearing_deg_np,
+    haversine_m_np,
+    wrap_angle_np,
+)
 
 _EPS = 1e-6
-
-
-# --------------------------------------------------- exact vector twins
-# op-for-op mirrors of costing.haversine_s / bearing_s (same evaluation
-# order → identical IEEE-754 results; libm-backed float64 ufuncs)
-
-
-def _hav(lon1, lat1, lon2, lat2):
-    rl1 = np.radians(lat1)
-    rl2 = np.radians(lat2)
-    dlat = rl2 - rl1
-    dlon = np.radians(lon2) - np.radians(lon1)
-    a = (np.sin(dlat / 2.0) ** 2
-         + np.cos(rl1) * np.cos(rl2) * np.sin(dlon / 2.0) ** 2)
-    return 2.0 * EARTH_RADIUS_M * np.arcsin(np.minimum(1.0, np.sqrt(a)))
-
-
-def _bear(lon1, lat1, lon2, lat2):
-    rl1 = np.radians(lat1)
-    rl2 = np.radians(lat2)
-    dlon = np.radians(lon2) - np.radians(lon1)
-    y = np.sin(dlon) * np.cos(rl2)
-    x = np.cos(rl1) * np.sin(rl2) - np.sin(rl1) * np.cos(rl2) * np.cos(dlon)
-    return np.degrees(np.arctan2(y, x)) % 360.0
 
 
 # ------------------------------------------------------- batched walks
@@ -98,28 +77,23 @@ def _boundary_pairs(er_a, fa, sx, sy, er_b, fb, tx, ty, fanout):
     return si, sj, di, dj
 
 
-def weigh_boundaries(graph, cache, layers: list[dict],
+def weigh_boundaries(graph, cache, boundaries: list[tuple[dict, dict]],
                      fanout: int | None = None,
                      profile=None, costing=None) -> list[np.ndarray]:
-    """Dense (mₖ, nₖ) uint32 transition matrices for every boundary of a
-    trip, NO_EDGE where unreachable — the batched twin of
-    matcher.transition_cost over every pair of every boundary (collapse
-    re-derives the chosen hops from the warm cache, entity.rs:337-358)."""
-    nb = len(layers) - 1
-    mats = [
-        np.full((len(layers[k]["edge_row"]), len(layers[k + 1]["edge_row"])),
-                np.uint32(NO_EDGE), dtype=np.uint32)
-        for k in range(nb)
-    ]
-    if nb <= 0:
-        return mats
+    """Dense (m, n) uint32 transition matrix for each (A, B) candidate-layer
+    pair in ``boundaries``, NO_EDGE where unreachable. A trip passes
+    ``zip(layers, layers[1:])``; the streaming matcher passes only the
+    boundaries its cache misses (collapse re-derives the chosen hops from
+    the warm cache, entity.rs:337-358)."""
+    mats = [np.full((len(A["edge_row"]), len(B["edge_row"])),
+                    np.uint32(NO_EDGE), dtype=np.uint32)
+            for A, B in boundaries]
 
     # ---- stage 1: classify pairs per boundary, gather flat pair arrays
     b_id_c, i_c, j_c, dir_c = [], [], [], []
     ers_c, ert_c = [], []
     sx_c, sy_c, tx_c, ty_c = [], [], [], []
-    for k in range(nb):
-        A, B = layers[k], layers[k + 1]
+    for k, (A, B) in enumerate(boundaries):
         er_a = np.asarray(A["edge_row"], dtype=np.int64)
         er_b = np.asarray(B["edge_row"], dtype=np.int64)
         if len(er_a) == 0 or len(er_b) == 0:
@@ -293,7 +267,8 @@ def weigh_boundaries(graph, cache, layers: list[dict],
     ia = mp_off[mrep] + mwit
     mp_len = np.zeros(n_paths, dtype=np.float64)
     if len(ia):
-        np.add.at(mp_len, mrep, _hav(mlon[ia], mlat[ia], mlon[ia + 1], mlat[ia + 1]))
+        np.add.at(mp_len, mrep, haversine_m_np(mlon[ia], mlat[ia],
+                                               mlon[ia + 1], mlat[ia + 1]))
 
     # ---- stage 4: per-pair position sequences [src_p, mp nodes..., tgt_p]
     if n_paths == 0:
@@ -323,9 +298,9 @@ def weigh_boundaries(graph, cache, layers: list[dict],
     brep = np.repeat(np.arange(P), bcnt)
     bwit = _ragged_within(bcnt)
     ba = pofs[brep] + bwit
-    dseg = _hav(qlon[ba], qlat[ba], qlon[ba + 1], qlat[ba + 1])
+    dseg = haversine_m_np(qlon[ba], qlat[ba], qlon[ba + 1], qlat[ba + 1])
     keepb = dseg >= MIN_HEADING_DIST_M
-    bear = _bear(qlon[ba], qlat[ba], qlon[ba + 1], qlat[ba + 1])
+    bear = bearing_deg_np(qlon[ba], qlat[ba], qlon[ba + 1], qlat[ba + 1])
 
     # ---- heads per pair: [h_src?, bearings..., h_tgt?] with validity
     h_src = graph.edge_heading[e_s]
@@ -343,18 +318,15 @@ def weigh_boundaries(graph, cache, layers: list[dict],
     H[hb] = bear
     V[hb] = keepb
 
-    # ---- angular complexity (map_path/entity.rs:229-297, via the scalar
-    # twin costing.complexity_scalar: wrap, damped cos, zero cut, harmonic)
+    # ---- angular complexity (map_path/entity.rs:229-297: wrap, damped
+    # cos, zero cut, harmonic mean)
     vid = np.nonzero(V)[0]
     vpair = np.repeat(np.arange(P), hcnt)[vid]
     adj = vpair[1:] == vpair[:-1] if len(vid) else np.empty(0, dtype=bool)
     h1 = H[vid[:-1][adj]] if len(vid) else np.empty(0)
     h2 = H[vid[1:][adj]] if len(vid) else np.empty(0)
     dpair = vpair[:-1][adj] if len(vid) else np.empty(0, dtype=np.int64)
-    dw = np.fmod(h2 - h1, 360.0)
-    dw = np.where(dw > 180.0, dw - 360.0, dw)
-    dw = np.where(dw <= -180.0, dw + 360.0, dw)
-    dw = np.maximum(-180.0, np.minimum(180.0, dw))
+    dw = np.maximum(-180.0, np.minimum(180.0, wrap_angle_np(h2 - h1)))
     c = np.cos(dw * np.pi / 180.0 * COST_DAMPING)
     zero = c <= 0.0
     cc = np.minimum(c, 1.0)
@@ -373,9 +345,9 @@ def weigh_boundaries(graph, cache, layers: list[dict],
                  np.maximum(0.0, np.minimum(1.0, ndel / safe))))
 
     # ---- route length + transition value (default.rs:137-163)
-    straight = _hav(sx, sy, tx, ty)
-    off_std = (_hav(sx, sy, graph.bx[e_s], graph.by[e_s])
-               + _hav(graph.ax[e_t], graph.ay[e_t], tx, ty))
+    straight = haversine_m_np(sx, sy, tx, ty)
+    off_std = (haversine_m_np(sx, sy, graph.bx[e_s], graph.by[e_s])
+               + haversine_m_np(graph.ax[e_t], graph.ay[e_t], tx, ty))
     offset = np.where(is_dir, straight, off_std)
     mp_l = (np.zeros(P) if n_paths == 0
             else np.where(is_dir, 0.0, mp_len[np.maximum(path_of, 0)]))
@@ -409,15 +381,9 @@ def weigh_boundaries(graph, cache, layers: list[dict],
                       MAX_WEIGHT).astype(np.uint32)
 
     # ---- scatter into the per-boundary matrices
-    for k in range(nb):
+    for k in range(len(mats)):
         at = b_id == k
         if at.any():
             mats[k][all_i[at], all_j[at]] = cost[at]
     return mats
 
-
-def weigh_boundary(graph, cache, A: dict, B: dict,
-                   fanout: int | None = None,
-                   profile=None, costing=None) -> np.ndarray:
-    """Single-boundary convenience wrapper over :func:`weigh_boundaries`."""
-    return weigh_boundaries(graph, cache, [A, B], fanout, profile, costing)[0]

@@ -33,20 +33,6 @@ def seed_of(i: int) -> np.uint64:
         return mix_np(np.uint64((i + 1)) * GOLDEN)
 
 
-def fnv1a_codepoints(text: str) -> np.ndarray:
-    """Rolling FNV-1a-64 over CODEPOINTS (not utf-8 bytes): the variant is
-    chosen because both Spark and DuckDB expose ``ascii()`` = first
-    codepoint, letting the SQL twin reproduce it exactly."""
-    cps = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
-    h = FNV_OFFSET
-    out = np.empty(len(cps), dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        for i, c in enumerate(cps):
-            h = (h ^ c) * FNV_PRIME
-            out[i] = h
-    return out
-
-
 def shingle_hashes(text: str, k: int = DEFAULT_SHINGLE_K) -> np.ndarray:
     """FNV-1a-64 of every k-codepoint shingle (k-window restart, not rolling
     — matches the SQL twin's per-window loop)."""

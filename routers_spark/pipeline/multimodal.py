@@ -2,12 +2,11 @@
 with the heavy per-row work in Arrow-batched ``mapInPandas``.
 
 The engine treats image/audio/video as ``binary`` columns alongside typed
-metadata (the input_hint shape). As of round 3 EVERY format has a REAL
-from-scratch public-spec codec: PNG (functions/raster.py), baseline JPEG
+metadata (the input_hint shape). Every format has a from-scratch
+public-spec codec: PNG (functions/raster.py), baseline JPEG
 (functions/jpeg.py), PCM WAV audio (functions/wav.py), Motion-JPEG AVI
-video (functions/avi.py). The deterministic `fake_media_decode` stub
-remains only as the fallback for non-RIFF payloads (and keeps the
-plumbing testable without any container synthesis).
+video (functions/avi.py). A video or audio payload that is not RIFF
+AVI/WAVE raises ``ValueError`` naming its row id.
 
 Operators:
   - ``image_features``: decode → per-channel mean/std + 8-bin luminance
@@ -22,7 +21,6 @@ Operators:
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -31,16 +29,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from routers_spark.functions.raster import decode_image, png_encode
-
-
-def fake_media_decode(payload: bytes, n: int, width: int = 1) -> np.ndarray:
-    """STUB decoder (no media libs in this container): deterministic
-    pseudo-samples derived from the payload digest — a stand-in with the
-    exact shape contract of a real decoder ((n, width) float32 in [-1, 1)).
-    Swap for pyav/soundfile in production; nothing else changes."""
-    seed = int.from_bytes(hashlib.sha256(payload).digest()[:8], "big")
-    rng = np.random.default_rng(seed)
-    return (rng.random((n, width), dtype=np.float32) * 2.0 - 1.0)
 
 
 _N_HIST_BINS = 8
@@ -93,17 +81,16 @@ FRAME_SCHEMA = ("video_id string, frame_idx int, t_ms long, w int, h int, "
 
 
 def sample_frames(videos_df: DataFrame, every_n: int = 10,
-                  max_frames: int = 16, fps: float = 30.0,
-                  frame_w: int = 16, frame_h: int = 16) -> DataFrame:
+                  max_frames: int = 16) -> DataFrame:
     """Video frame sampling: every Nth frame, fan-out bounded by
     ``max_frames`` rows per video (the explode stays bounded no matter the
-    clip length — the scale guard). RIFF/AVI payloads decode for REAL
-    (Motion-JPEG, functions/avi.py — and only the SAMPLED frames are
-    decoded: MJPEG chunks are independent, which is the whole point of
-    the format); other payloads fall back to the deterministic stub with
-    ``n_frames`` synthetic frames. Frame payloads re-encode as real PNG.
+    clip length — the scale guard). Payloads are Motion-JPEG RIFF/AVI
+    (functions/avi.py) and only the SAMPLED frames are decoded: MJPEG
+    chunks are independent, which is the whole point of the format.
+    Timestamps follow the file's frame rate; frame payloads re-encode as
+    PNG. Any other payload raises ``ValueError`` with its video id.
 
-    videos_df: (video_id string, bytes binary, n_frames int)."""
+    videos_df: (video_id string, bytes binary)."""
     from routers_spark.functions.avi import avi_decode_frames, avi_scan
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -112,34 +99,25 @@ def sample_frames(videos_df: DataFrame, every_n: int = 10,
                                    "frame_png")}
             for r in pdf.itertuples(index=False):
                 payload = bytes(r.bytes)
-                if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-                    n_total = len(avi_scan(payload)[0])
-                    idxs = list(range(0, n_total, every_n))[:max_frames]
-                    if not idxs:
-                        continue
-                    frames_l, vfps, _ = avi_decode_frames(payload, idxs)
-                    frames = np.stack(frames_l)
-                    use_fps = vfps
-                else:
-                    idxs = list(range(0, int(r.n_frames), every_n))[:max_frames]
-                    if not idxs:
-                        continue
-                    # STUB decode: one deterministic "frame" per index
-                    flat = fake_media_decode(payload,
-                                             len(idxs) * frame_w * frame_h, 3)
-                    frames = ((flat.reshape(len(idxs), frame_h, frame_w, 3)
-                               * 0.5 + 0.5) * 255).astype(np.uint8)
-                    use_fps = fps
+                if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
+                    raise ValueError(
+                        f"video {r.video_id!r}: payload is not RIFF AVI")
+                n_total = len(avi_scan(payload)[0])
+                idxs = list(range(0, n_total, every_n))[:max_frames]
+                if not idxs:
+                    continue
+                frames_l, fps, _ = avi_decode_frames(payload, idxs)
+                frames = np.stack(frames_l)
                 for k, fi in enumerate(idxs):
                     out["video_id"].append(r.video_id)
                     out["frame_idx"].append(fi)
-                    out["t_ms"].append(int(fi / use_fps * 1000))
+                    out["t_ms"].append(int(fi / fps * 1000))
                     out["w"].append(frames.shape[2])
                     out["h"].append(frames.shape[1])
                     out["frame_png"].append(png_encode(frames[k]))
             yield pd.DataFrame(out)
 
-    return videos_df.select("video_id", "bytes", "n_frames").mapInPandas(
+    return videos_df.select("video_id", "bytes").mapInPandas(
         gen, schema=FRAME_SCHEMA)
 
 
@@ -148,15 +126,14 @@ AUDIO_SCHEMA = ("audio_id string, window_idx int, start_ms long, "
 
 
 def audio_windows(audio_df: DataFrame, window_ms: int = 250,
-                  sample_rate: int = 16000,
                   max_windows: int = 64) -> DataFrame:
     """Audio feature extraction: fixed-length windows with RMS energy and
-    peak (bounded fan-out). RIFF payloads decode for REAL (PCM WAV,
-    functions/wav.py — the window length then follows the FILE's sample
-    rate); non-RIFF payloads fall back to the deterministic stub with
-    ``n_samples`` synthetic samples.
+    peak (bounded fan-out). Payloads are PCM RIFF/WAVE (functions/wav.py);
+    the window length follows the file's sample rate, and a clip shorter
+    than one window yields no rows. Any other payload raises
+    ``ValueError`` with its audio id.
 
-    audio_df: (audio_id string, bytes binary, n_samples int)."""
+    audio_df: (audio_id string, bytes binary)."""
     from routers_spark.functions.wav import wav_decode
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -164,20 +141,16 @@ def audio_windows(audio_df: DataFrame, window_ms: int = 250,
             rows = []
             for r in pdf.itertuples(index=False):
                 payload = bytes(r.bytes)
-                if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-                    full, rate = wav_decode(payload)
-                    full = full.mean(axis=1)  # downmix, deterministic
-                    win = int(rate * window_ms / 1000)
-                    n = min(len(full), win * max_windows)
-                    samples = full[:n]
-                    if n < win:
-                        continue
-                else:
-                    win = int(sample_rate * window_ms / 1000)
-                    n = min(int(r.n_samples), win * max_windows)
-                    if n < win:
-                        continue
-                    samples = fake_media_decode(payload, n)[:, 0]
+                if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
+                    raise ValueError(
+                        f"audio {r.audio_id!r}: payload is not RIFF WAVE")
+                full, rate = wav_decode(payload)
+                full = full.mean(axis=1)  # downmix, deterministic
+                win = int(rate * window_ms / 1000)
+                n = min(len(full), win * max_windows)
+                if n < win:
+                    continue
+                samples = full[:n]
                 k = n // win
                 w = samples[:k * win].reshape(k, win)
                 rms = np.sqrt((w.astype(np.float64) ** 2).mean(axis=1))
@@ -188,7 +161,7 @@ def audio_windows(audio_df: DataFrame, window_ms: int = 250,
             yield pd.DataFrame(rows, columns=[
                 "audio_id", "window_idx", "start_ms", "rms", "peak"])
 
-    return audio_df.select("audio_id", "bytes", "n_samples").mapInPandas(
+    return audio_df.select("audio_id", "bytes").mapInPandas(
         gen, schema=AUDIO_SCHEMA)
 
 

@@ -29,7 +29,7 @@ import pandas as pd
 from routers_spark.config import CONTEXT_WINDOW, GAP_SECONDS
 from routers_spark.matching.matcher import (
     MatchOptions,
-    candidates_for_point,
+    candidates_for_points,
     solve_trip,
 )
 from routers_spark.matching.trellis import Unreachable
@@ -154,19 +154,15 @@ class VehicleMatcherState:
 
         # R1: candidates per retained point (unanchored points dropped —
         # bin/matcher.rs:143-157)
-        layers = []
-        ts_kept = []
-        pos_kept = []
-        for ts, lon, lat in kept:
-            cand = candidates_for_point(graph, lon, lat,
-                                        opts.search_distance,
-                                        opts.emission_error, opts.costing)
-            if len(cand["edge_row"]):
-                layers.append(cand)
-                ts_kept.append(ts)
-                pos_kept.append((lon, lat))
-        if not layers:
+        _, lons, lats = zip(*kept)
+        cands = candidates_for_points(graph, lons, lats, opts.search_distance,
+                                      opts.emission_error, opts.costing)
+        anchored = [k for k, c in enumerate(cands) if len(c["edge_row"])]
+        if not anchored:
             return []
+        layers = [cands[k] for k in anchored]
+        ts_kept = [kept[k][0] for k in anchored]
+        pos_kept = [kept[k][1:] for k in anchored]
 
         # R2 incremental weighing: boundary matrices are keyed by the
         # observation-pair positions in a process-wide LRU, so a micro-batch

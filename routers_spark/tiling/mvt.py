@@ -13,8 +13,6 @@ Pure bytes math — safe inside an Arrow-batched pandas UDF
 
 from __future__ import annotations
 
-import numpy as np
-
 MVT_EXTENT = 4096
 MVT_VERSION = 2
 MOVE_TO_1 = (1 & 0x7) | (1 << 3)  # command 1 (MoveTo), count 1 → 9
@@ -173,10 +171,3 @@ def _decode_feature(buf: bytes) -> dict:
 def unzig(v: int) -> int:
     return (v >> 1) ^ (-(v & 1))
 
-
-def geohash_u64_id(lon: float, lat: float) -> int:
-    """Feature id: geohash bits packed into u64 (cluster.rs:79-103 packing —
-    12-char geohash = 60 bits of interleaved subdivision)."""
-    from routers_spark.functions.cells import geohash_int_np
-
-    return int(np.uint64(geohash_int_np([lon], [lat], 12)[0]))

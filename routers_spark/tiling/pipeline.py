@@ -1,6 +1,7 @@
 """Tiling pipelines over the image corpus — all Arrow-batched.
 
-  - ``with_tile_columns``: JVM-side slippy (z, x, y) + hilbert sort key
+  - ``assign_tile_cells``: JVM-side geohash + slippy (x, y) + hilbert
+    sort key
   - ``raster_pyramid``: decode image bytes → cut the z/x/y pyramid
     (``mapInPandas``; T7, north rule) — each image's pixels are halved per
     zoom step below its base zoom and keyed by the GPS point's tile at that
@@ -28,31 +29,14 @@ from routers_spark.functions.hilbert_jvm import with_hilbert_jvm
 from routers_spark.functions.raster import decode_image, png_encode, pyramid
 
 
-def with_tile_columns(df: DataFrame, zoom: int, lon: str = "lon",
-                      lat: str = "lat") -> DataFrame:
-    """tile_x/tile_y/hilbert at ``zoom``, fully JVM-side (T1/T3). The
-    hilbert key is the cluster/sort column enabling range-pruned tile
-    scans (S8).
-
-    The hilbert index comes from the chunked state-machine lookups
-    (functions/hilbert_jvm.py: one broadcast hash join per 6-bit chunk of
-    ``zoom``) instead of the former per-level rotation chain — same bits
-    (pytest-pinned against the numpy kernel), but the plan stays inside
-    whole-stage codegen and filters on ``hilbert`` can no longer inline an
-    exponential per-level program into the pushed-down predicate (the join
-    is a natural fence)."""
-    S = sqlgen.SPARK
-    x_sql, y_sql = sqlgen.slippy_xy_expr(S, lon, lat, zoom)
-    df = df.withColumn("tile_x", F.expr(x_sql)).withColumn("tile_y", F.expr(y_sql))
-    return with_hilbert_jvm(df, "tile_x", "tile_y", zoom) \
-        .withColumn("z", F.lit(zoom).cast("int"))
-
-
 def assign_tile_cells(df: DataFrame, zoom: int, gh_precision: int | None = 6,
                       lon: str = "lon", lat: str = "lat",
                       keep: list[str] | None = None) -> DataFrame:
     """The fused tile/cell assignment fast path: geohash + slippy + hilbert
-    for every row (T1/T3/P2).
+    for every row (T1/T3/P2). ``gh_precision=None`` skips the geohash;
+    ``keep`` lists the input columns carried through (default: all but
+    lon/lat). The hilbert key is the cluster/sort column enabling
+    range-pruned tile scans (S8).
 
     The whole pass stays JVM-side — geohash + slippy as one rendered
     sqlgen projection chain, hilbert as the chunked broadcast-lookup joins
@@ -174,7 +158,11 @@ def mvt_point_tiles(points_df: DataFrame, zoom: int, layer_name: str = "points",
     from routers_spark.functions.cells import geohash_int_np
     from routers_spark.tiling.mvt import encode_point_layer
 
-    with_tiles = with_tile_columns(points_df, zoom)
+    # a NULL/NaN point has no tile: drop it before grouping
+    with_tiles = assign_tile_cells(points_df, zoom, gh_precision=None,
+                                   keep=list(points_df.columns)) \
+        .filter(F.col("tile_x").isNotNull()) \
+        .withColumn("z", F.lit(zoom).cast("int"))
 
     def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
         z, x, y = key

@@ -29,10 +29,11 @@ def test_snap_points_matches_min_candidate(spark, road_dfs):
     out = snap_points(spark.createDataFrame(pts), nodes_df, edges_df,
                       search_m=60.0).toPandas().sort_values("pid")
     g = build_packed_graph(nodes, edges).build_cell_index()
-    from routers_spark.matching.matcher import candidates_for_point
+    from routers_spark.matching.matcher import candidates_for_points
 
-    for _, r in out.iterrows():
-        c = candidates_for_point(g, r.lon, r.lat, 60.0, 25.0)
+    layers = candidates_for_points(g, out.lon.values, out.lat.values,
+                                   60.0, 25.0)
+    for (_, r), c in zip(out.iterrows(), layers):
         if len(c["edge_row"]) == 0:
             assert r.edge_id == -1 and np.isnan(r.dist_m)
         else:

@@ -46,7 +46,7 @@ def test_celljoin_with_salt_matches(spark, inputs):
 
 def test_celljoin_candidate_sets_match_boxquery(spark, inputs):
     from routers_spark.graph.packed import build_packed_graph
-    from routers_spark.matching.matcher import MatchOptions, candidates_for_point
+    from routers_spark.matching.matcher import MatchOptions, candidates_for_points
     from routers_spark.shard.partition import candidates_cell_join
 
     points_df, nodes_df, edges_df = inputs
@@ -55,9 +55,9 @@ def test_celljoin_candidate_sets_match_boxquery(spark, inputs):
     g.build_cell_index()
     opts = MatchOptions()
     pts = points_df.toPandas()
-    for _, r in pts.iterrows():
-        local = candidates_for_point(g, r.lon, r.lat, opts.search_distance,
-                                     opts.emission_error)
+    layers = candidates_for_points(g, pts.lon.values, pts.lat.values,
+                                   opts.search_distance, opts.emission_error)
+    for (_, r), local in zip(pts.iterrows(), layers):
         # the distributed path carries the natural (edge_id, src, dst) key;
         # the packed graph's rows are triple-sorted, so sorting by the
         # triple reproduces the graph's candidate order exactly

@@ -1,6 +1,6 @@
 """§2.9 costing injection: custom emission/transition heuristics and ζ/β
-decay constants plug into both the scalar oracle kernel and the batched
-weigher, with identical results (the Strategy trait analog,
+decay constants plug into both the batched weigher and the scalar oracle
+(tests/test_weigh_vec.py), with identical results (the Strategy trait analog,
 costing/util.rs:8-39, how-to costing/mod.rs:23-60)."""
 
 from __future__ import annotations
@@ -13,7 +13,6 @@ from routers_spark.graph.packed import build_packed_graph
 from routers_spark.matching.costing import (
     CostingStrategies,
     Strategy,
-    decay_u32_scalar,
     emission_cost_u32,
 )
 from routers_spark.matching.matcher import (
@@ -21,7 +20,8 @@ from routers_spark.matching.matcher import (
     candidates_for_points,
     solve_trip,
 )
-from routers_spark.matching.weigh import weigh_boundary
+from routers_spark.matching.weigh import weigh_boundaries
+from tests.test_weigh_vec import decay_u32_scalar, scalar_matrix
 
 
 def _graph_and_layers(costing=None):
@@ -60,8 +60,7 @@ def test_custom_emission_changes_candidates():
 
 def test_custom_transition_scalar_vector_agree():
     """A deviance-only β=2 strategy: the batched weigher and the scalar
-    kernel must produce identical matrices."""
-    from tests.test_weigh_vec import scalar_matrix
+    oracle must produce identical matrices."""
 
     def dev_only(straight, route_len, angular, w_s, w_t):
         with np.errstate(invalid="ignore", divide="ignore"):
@@ -72,9 +71,9 @@ def test_custom_transition_scalar_vector_agree():
     strat = CostingStrategies(transition=Strategy(beta=2.0, calculate=dev_only))
     g, layers = _graph_and_layers()
     cache = PredicateCache()
-    for k in range(len(layers) - 1):
-        got = weigh_boundary(g, cache, layers[k], layers[k + 1],
-                             costing=strat)
+    mats = weigh_boundaries(g, cache, list(zip(layers, layers[1:])),
+                            costing=strat)
+    for k, got in enumerate(mats):
         want = scalar_matrix(g, cache, layers[k], layers[k + 1],
                              costing=strat)
         np.testing.assert_array_equal(got, want)

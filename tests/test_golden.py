@@ -13,7 +13,7 @@ from routers_spark.fixtures.roads import grid_network, t_junction, walk_trips
 from routers_spark.graph.packed import build_packed_graph
 from routers_spark.matching.matcher import (
     MatchOptions,
-    candidates_for_point,
+    candidates_for_points,
     solve_trip,
 )
 
@@ -23,8 +23,9 @@ GOLDEN = json.load(open(os.path.join(os.path.dirname(__file__),
 
 def run_match(g, pts):
     opts = MatchOptions()
-    layers = [candidates_for_point(g, lon, lat, opts.search_distance,
-                                   opts.emission_error) for lon, lat in pts]
+    lons, lats = zip(*pts)
+    layers = candidates_for_points(g, lons, lats, opts.search_distance,
+                                   opts.emission_error)
     r = solve_trip(g, layers, opts)
     out = {"status": r["status"]}
     if r["status"] == "matched":

@@ -17,13 +17,14 @@ from routers_spark.fixtures.roads import (
 from routers_spark.graph.packed import build_packed_graph
 from routers_spark.graph.dijkstra import (
     bounded_dijkstra_parents,
+    ParentMap,
     nearest_node,
-    parent_path,
+    parent_path_pm,
     route_nodes,
 )
 from routers_spark.matching.matcher import (
     MatchOptions,
-    candidates_for_point,
+    candidates_for_points,
     solve_trip,
 )
 
@@ -38,8 +39,9 @@ def build(netfn):
 
 def match(g, pts, **kw):
     opts = MatchOptions(**kw)
-    layers = [candidates_for_point(g, lon, lat, opts.search_distance,
-                                   opts.emission_error) for lon, lat in pts]
+    lons, lats = zip(*pts)
+    layers = candidates_for_points(g, lons, lats, opts.search_distance,
+                                   opts.emission_error)
     return layers, solve_trip(g, layers, opts)
 
 
@@ -115,8 +117,9 @@ def test_drop_unanchored_streaming_semantics():
     g = build(straight_road)
     opts = MatchOptions(drop_unanchored=True)
     pts = [(-118.151, 34.1503), (0.0, 0.0), (-118.165, 34.1503)]
-    layers = [candidates_for_point(g, lon, lat, opts.search_distance,
-                                   opts.emission_error) for lon, lat in pts]
+    lons, lats = zip(*pts)
+    layers = candidates_for_points(g, lons, lats, opts.search_distance,
+                                   opts.emission_error)
     layers = [l for l in layers if len(l["edge_row"])]
     r = solve_trip(g, layers, opts)
     assert r["status"] == "matched"
@@ -158,8 +161,9 @@ def test_bounded_dijkstra_cutoff():
     # corner reaches ~9+9: must be bounded well below the full 400 nodes
     assert 10 < len(parents) < 400
     # every parent chain terminates at the root
+    pm = ParentMap(parents)
     for leaf in list(parents)[:50]:
-        path = parent_path(parents, 0, leaf)
+        path = parent_path_pm(pm, 0, leaf)
         assert path is not None and path[0] == 0 and path[-1] == leaf
 
 
@@ -168,7 +172,7 @@ def test_parent_path_outside_bound_is_none():
     g = build_packed_graph(nodes, edges)
     parents = bounded_dijkstra_parents(g, 0, threshold_cm=100_000)  # 1 km
     far = 30 * 30 - 1  # opposite corner ~8 km away
-    assert parent_path(parents, 0, far) is None
+    assert parent_path_pm(ParentMap(parents), 0, far) is None
 
 
 def test_route_nodes_grid():

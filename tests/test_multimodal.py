@@ -1,6 +1,6 @@
 """Multimodal operators: real Spark plumbing (schemas, Arrow batches,
 bounded fan-out) and REAL codecs end-to-end (PNG/JPEG/WAV/MJPG-AVI);
-the deterministic stub remains only as the non-RIFF fallback."""
+a video or audio payload that is not RIFF raises."""
 
 from __future__ import annotations
 
@@ -8,23 +8,23 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from routers_spark.functions.avi import avi_encode
 from routers_spark.functions.raster import png_decode, png_encode
+from routers_spark.functions.wav import wav_encode
 from routers_spark.pipeline.multimodal import (
     audio_windows,
-    fake_media_decode,
     image_features,
     phash_dedup_pairs,
     sample_frames,
 )
 
 
-def test_fake_media_decode_contract():
-    a = fake_media_decode(b"payload-one", 256, 3)
-    assert a.shape == (256, 3) and a.dtype == np.float32
-    assert (a >= -1).all() and (a < 1).all()
-    # deterministic per payload, distinct across payloads
-    assert np.array_equal(a, fake_media_decode(b"payload-one", 256, 3))
-    assert not np.array_equal(a, fake_media_decode(b"payload-two", 256, 3))
+def _clip(n_frames: int, seed: int) -> bytes:
+    """An MJPG AVI of ``n_frames`` 8x8 frames (ten distinct ones, cycled)."""
+    rng = np.random.default_rng(seed)
+    frames = [rng.integers(0, 256, (8, 8, 3), dtype=np.uint8)
+              for _ in range(10)]
+    return avi_encode([frames[k % 10] for k in range(n_frames)], fps=30.0)
 
 
 def test_image_features_real_png(spark):
@@ -44,16 +44,19 @@ def test_image_features_real_png(spark):
 def test_sample_frames_bounded_fanout(spark):
     vids = spark.createDataFrame(pd.DataFrame({
         "video_id": ["v1", "v2", "v3"],
-        "bytes": [b"clip-1", b"clip-2", b"tiny"],
-        "n_frames": [300, 1000000, 5],  # v2: a "long clip" must stay bounded
+        # v1 has 17 sampled frames, v2 (a "long clip") 60: both stay
+        # bounded at 16 rows
+        "bytes": [_clip(170, 1), _clip(600, 2), _clip(5, 3)],
     }))
     out = sample_frames(vids, every_n=10, max_frames=16).toPandas()
     per = out.groupby("video_id").size().to_dict()
     assert per["v1"] == 16 and per["v2"] == 16 and per["v3"] == 1
-    # frames are real PNGs with the declared shape; timestamps follow fps
-    r = out[out.video_id == "v1"].iloc[3]
-    assert png_decode(bytes(r.frame_png)).shape == (r.h, r.w, 3)
-    assert r.t_ms == int(r.frame_idx / 30.0 * 1000)
+    assert sorted(out[out.video_id == "v2"].frame_idx) == list(range(0, 160, 10))
+    # frames are real PNGs with the declared shape; timestamps follow the
+    # file's frame rate (avih stores 33333 us per frame)
+    r = out[out.video_id == "v1"].sort_values("frame_idx").iloc[3]
+    assert png_decode(bytes(r.frame_png)).shape == (r.h, r.w, 3) == (8, 8, 3)
+    assert r.t_ms == int(r.frame_idx / (1_000_000 / 33333) * 1000)
     # deterministic across runs
     again = sample_frames(vids, every_n=10, max_frames=16).toPandas()
     assert out.sort_values(["video_id", "frame_idx"]).frame_png.tolist() == \
@@ -61,16 +64,37 @@ def test_sample_frames_bounded_fanout(spark):
 
 
 def test_audio_windows(spark):
+    rng = np.random.default_rng(4)
     aud = spark.createDataFrame(pd.DataFrame({
         "audio_id": ["a1", "a2"],
-        "bytes": [b"wave-1", b"wave-2"],
-        "n_samples": [16000, 1000],  # a2 shorter than one window -> dropped
+        # a2 is shorter than one 250 ms window (4000 samples) -> dropped
+        "bytes": [wav_encode(rng.uniform(-0.5, 0.5, 16000), 16000),
+                  wav_encode(rng.uniform(-0.5, 0.5, 1000), 16000)],
     }))
-    out = audio_windows(aud, window_ms=250, sample_rate=16000).toPandas()
+    out = audio_windows(aud, window_ms=250).toPandas() \
+        .sort_values("window_idx")
     assert set(out.audio_id) == {"a1"}
     assert len(out) == 4  # 1 s / 250 ms
     assert (out.rms > 0).all() and (out.peak >= out.rms).all()
     assert list(out.start_ms) == [0, 250, 500, 750]
+
+
+def test_non_riff_media_payload_raises(spark):
+    """A payload that is not RIFF AVI / WAVE fails loudly, naming its row."""
+    vids = spark.createDataFrame(pd.DataFrame({
+        "video_id": ["v-ok", "v-bad"],
+        "bytes": [_clip(3, 1), b"clip-1"]}))
+    with pytest.raises(Exception, match="'v-bad': payload is not RIFF AVI"):
+        sample_frames(vids).collect()
+    # a WAV is RIFF but not AVI
+    wav = spark.createDataFrame(pd.DataFrame({
+        "video_id": ["v-wav"], "bytes": [wav_encode(np.zeros(8), 8000)]}))
+    with pytest.raises(Exception, match="'v-wav': payload is not RIFF AVI"):
+        sample_frames(wav).collect()
+    aud = spark.createDataFrame(pd.DataFrame({
+        "audio_id": ["a-bad"], "bytes": [b"wave-1"]}))
+    with pytest.raises(Exception, match="'a-bad': payload is not RIFF WAVE"):
+        audio_windows(aud).collect()
 
 
 def test_phash_dedup_pairs_matches_brute(spark):
@@ -167,7 +191,7 @@ def test_wav_roundtrip_and_real_audio_windows(spark):
     """WAV codec round-trips PCM exactly (to 16-bit quantization) and
     audio_windows decodes REAL RIFF payloads: a pure sine's window RMS must
     equal amplitude/sqrt(2) and its peak the amplitude."""
-    from routers_spark.functions.wav import wav_decode, wav_encode
+    from routers_spark.functions.wav import wav_decode
 
     t = np.arange(16000) / 16000.0
     sig = 0.5 * np.sin(2 * np.pi * 440.0 * t)
@@ -183,8 +207,7 @@ def test_wav_roundtrip_and_real_audio_windows(spark):
     from routers_spark.pipeline.multimodal import audio_windows
 
     df = spark.createDataFrame(
-        pd.DataFrame({"audio_id": ["a"], "bytes": [data],
-                      "n_samples": [0]}))  # n_samples ignored for RIFF
+        pd.DataFrame({"audio_id": ["a"], "bytes": [data]}))
     out = audio_windows(df, window_ms=250, max_windows=4).toPandas()
     assert len(out) == 4
     np.testing.assert_allclose(out["rms"], 0.5 / np.sqrt(2), atol=1e-3)
@@ -196,11 +219,7 @@ def test_avi_roundtrip_and_real_frame_sampling(spark):
     sampled decode touches only the selected chunks, and sample_frames
     extracts REAL video frames (PSNR vs the source ≥ 40 dB on smooth
     content — the lossy-parity gate through the video path)."""
-    from routers_spark.functions.avi import (
-        avi_decode_frames,
-        avi_encode,
-        avi_scan,
-    )
+    from routers_spark.functions.avi import avi_decode_frames, avi_scan
     from routers_spark.functions.raster import psnr
 
     yy, xx = np.mgrid[0:24, 0:32]
@@ -221,7 +240,7 @@ def test_avi_roundtrip_and_real_frame_sampling(spark):
     from routers_spark.functions.raster import png_decode
 
     vids = spark.createDataFrame(pd.DataFrame({
-        "video_id": ["real"], "bytes": [data], "n_frames": [0]}))
+        "video_id": ["real"], "bytes": [data]}))
     out = sample_frames(vids, every_n=10, max_frames=4).toPandas() \
         .sort_values("frame_idx").reset_index(drop=True)
     assert list(out["frame_idx"]) == [0, 10, 20]

@@ -10,12 +10,13 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from routers_spark.fixtures.images import generate_images
 from routers_spark.functions.raster import decode_image, png_decode
 from routers_spark.io.checkpoint import Pipeline, lineage_rows
 from routers_spark.matching.matcher import match_trips
-from routers_spark.tiling.pipeline import raster_pyramid, with_tile_columns
+from routers_spark.tiling.pipeline import assign_tile_cells, raster_pyramid
 
 ZOOM = 16
 
@@ -41,11 +42,12 @@ def test_north_star_pipeline(spark, tmp_path):
         inputs=[ingested.snapshot_id])
     tiled = pipe.stage(
         "tiles", "vector_tiles",
-        lambda _s: with_tile_columns(
+        lambda _s: assign_tile_cells(
             pipe.read("matched")
             .filter("status = 'matched'")
             .selectExpr("trip_id", "seq", "matched_lon AS lon",
-                        "matched_lat AS lat"), ZOOM),
+                        "matched_lat AS lat"), ZOOM, gh_precision=None)
+        .withColumn("z", F.lit(ZOOM)),
         inputs=[matched.snapshot_id])
     raster = pipe.stage(
         "raster", "raster_tiles",

@@ -31,6 +31,34 @@ def test_varint_kernel_roundtrip():
     assert len(decode_packed_varints(b"")) == 0
 
 
+def test_varint_truncated_tail_raises():
+    """A trailing continuation byte is a truncated varint, not a value."""
+    with pytest.raises(ValueError, match="ends inside a varint"):
+        decode_packed_varints(b"\x01\x81")
+    with pytest.raises(ValueError, match="ends inside a varint"):
+        decode_packed_varints(b"\x80")
+
+
+def test_varint_longer_than_ten_bytes_raises():
+    """A 12-byte varint does not fit in uint64; the longest legal one (10
+    bytes) still decodes to 2**64 - 1."""
+    with pytest.raises(ValueError, match="longer than 10 bytes"):
+        decode_packed_varints(b"\xff" * 11 + b"\x01")
+    assert decode_packed_varints(b"\xff" * 9 + b"\x01")[0] == 2**64 - 1
+
+
+def test_concat_packed_truncated_buffer_raises():
+    """Way 1's truncated ref must not glue onto way 2's first ref."""
+    from routers_spark.io.osm_pbf import _concat_packed
+
+    with pytest.raises(ValueError, match="ends inside a varint"):
+        _concat_packed([b"\x81", b"\x01"])
+    with pytest.raises(ValueError, match="ends inside a varint"):
+        _concat_packed([b"", b"\x01\xff", b"", b"\x01"])
+    vals, counts = _concat_packed([b"", b"\x01", b"\x96\x01", b""])
+    assert vals.tolist() == [1, 150] and counts.tolist() == [0, 1, 1, 0]
+
+
 def test_zigzag_roundtrip():
     vals = np.array([0, -1, 1, -2, 2, 2**62, -(2**62), -(2**63)],
                     dtype=np.int64)

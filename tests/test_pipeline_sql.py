@@ -46,33 +46,3 @@ def test_simhash_sql_matches_numpy(duck):
     got = duck.execute(sql + " ORDER BY doc_id").df()
     for i, (did, text) in enumerate(DOCS):
         assert int(got.iloc[i]["simhash"]) == int(np.int64(simhash64(text))), did
-
-
-def test_scalar_costing_matches_numpy():
-    # the matcher's scalar hot path must agree with the vectorized kernels
-    from routers_spark.functions.geo import bearing_deg_np, haversine_m_np
-    from routers_spark.matching.costing import (
-        bearing_s,
-        complexity_from_headings,
-        complexity_scalar,
-        haversine_s,
-        headings_from_positions,
-        headings_scalar,
-    )
-
-    rng = np.random.default_rng(2)
-    lons = rng.uniform(-118.5, -118.4, 20)
-    lats = rng.uniform(33.7, 33.8, 20)
-    for i in range(19):
-        assert haversine_s(lons[i], lats[i], lons[i + 1], lats[i + 1]) == pytest.approx(
-            haversine_m_np(lons[i], lats[i], lons[i + 1], lats[i + 1]), abs=1e-9
-        )
-        assert bearing_s(lons[i], lats[i], lons[i + 1], lats[i + 1]) == pytest.approx(
-            bearing_deg_np(lons[i], lats[i], lons[i + 1], lats[i + 1]), abs=1e-9
-        )
-    hs = headings_scalar(lons.tolist(), lats.tolist())
-    hv = headings_from_positions(lons, lats)
-    assert np.allclose(hs, hv, atol=1e-9)
-    assert complexity_scalar(hs) == pytest.approx(
-        complexity_from_headings(np.asarray(hs)), abs=1e-12
-    )

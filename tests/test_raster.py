@@ -1,6 +1,6 @@
 """Raster codec + pyramid tests: PNG round-trip byte-exactness, all filter
-types decoded, FJPG stand-in lossy at PSNR >= 40 dB (the parity gate of
-BASELINE.md), deterministic box-filter pyramid."""
+types decoded, format dispatch, deterministic box-filter pyramid (the
+JPEG PSNR >= 40 dB parity gate of BASELINE.md is in tests/test_jpeg.py)."""
 
 import struct
 import zlib
@@ -12,8 +12,6 @@ from routers_spark.functions.raster import (
     box_downsample,
     decode_image,
     encode_image,
-    fake_jpeg_decode,
-    fake_jpeg_encode,
     png_decode,
     png_encode,
     psnr,
@@ -78,15 +76,6 @@ def test_png_decode_all_filters():
     assert np.array_equal(png_decode(buf), img)
 
 
-def test_fjpg_lossy_psnr_above_40():
-    img = RNG.integers(0, 256, (64, 64, 3), dtype=np.uint8)
-    dec = fake_jpeg_decode(fake_jpeg_encode(img))
-    assert dec.shape == img.shape
-    p = psnr(img, dec)
-    assert p >= 40.0, f"PSNR {p:.1f} below the 40 dB parity gate"
-    assert not np.array_equal(dec, img)  # genuinely lossy
-
-
 def test_decode_image_dispatch():
     img = RNG.integers(0, 256, (16, 16, 3), dtype=np.uint8)
     assert np.array_equal(decode_image(encode_image(img, "png"), "png"), img)
@@ -96,9 +85,6 @@ def test_decode_image_dispatch():
     dec = decode_image(encode_image(img, "jpeg"), "jpeg")
     assert dec.shape == img.shape
     assert psnr(img, dec) >= 28
-    # legacy FJPG payloads still decode through the same dispatch
-    legacy = fake_jpeg_encode(img)
-    assert psnr(img, decode_image(legacy, "jpeg")) >= 40
 
 
 def test_box_downsample_exact():

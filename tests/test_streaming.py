@@ -9,7 +9,7 @@ import pytest
 
 from routers_spark.fixtures.roads import grid_network, straight_road, walk_trips
 from routers_spark.graph.packed import build_packed_graph
-from routers_spark.matching.matcher import MatchOptions, candidates_for_point, solve_trip
+from routers_spark.matching.matcher import MatchOptions, candidates_for_points, solve_trip
 from routers_spark.streaming.match_stream import VehicleMatcherState
 
 
@@ -25,8 +25,9 @@ TRACK = [(0, -118.151, 34.1503), (1_000_000, -118.155, 34.1503),
 
 def batch_edges(g, pts):
     opts = MatchOptions()
-    layers = [candidates_for_point(g, lon, lat, opts.search_distance,
-                                   opts.emission_error) for lon, lat in pts]
+    lons, lats = zip(*pts)
+    layers = candidates_for_points(g, lons, lats, opts.search_distance,
+                                   opts.emission_error)
     r = solve_trip(g, layers, opts)
     assert r["status"] == "matched"
     return [int(g.edge_id[layers[k]["edge_row"][r["path"][k]]])
@@ -195,29 +196,27 @@ def test_incremental_weighing_only_pending(road, monkeypatch):
     its fresh point introduced — retained interior boundaries come from the
     process-wide cache."""
     import routers_spark.matching.matcher as matcher_mod
-    from routers_spark.matching import weigh as weigh_mod
     from routers_spark.streaming import match_stream as ms
 
     ms._BOUNDARY_LRU.clear()
-    calls = []
-    orig = weigh_mod.weigh_boundary
+    calls = []  # boundaries weighed, one entry per weigh_boundaries call
+    orig = matcher_mod.weigh_boundaries
 
-    def counting(graph, cache, A, B, fanout=None, profile=None, costing=None):
-        calls.append(1)
-        return orig(graph, cache, A, B, fanout, profile, costing)
+    def counting(graph, cache, boundaries, *args, **kw):
+        calls.append(len(boundaries))
+        return orig(graph, cache, boundaries, *args, **kw)
 
-    monkeypatch.setattr(matcher_mod, "weigh_boundary", counting, raising=False)
-    import routers_spark.matching.weigh
-    monkeypatch.setattr(routers_spark.matching.weigh, "weigh_boundary", counting)
+    monkeypatch.setattr(matcher_mod, "weigh_boundaries", counting)
 
     st = VehicleMatcherState()
     st.process(road, [TRACK[0]])
     st.process(road, [TRACK[1]])     # 1 new boundary
-    n_after_two = len(calls)
+    assert sum(calls) == 1
     st.process(road, [TRACK[2]])     # only boundary (1,2) is new
-    assert len(calls) == n_after_two + 1
+    assert calls[-1] == 1 and sum(calls) == 2
     st.process(road, [TRACK[3]])
-    assert len(calls) == n_after_two + 2
+    assert calls[-1] == 1 and sum(calls) == 3
+    assert len(calls) == 4  # one weigh_boundaries call per micro-batch
     # output still equals batch
     st2 = VehicleMatcherState()
     rows = []

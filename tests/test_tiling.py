@@ -104,14 +104,21 @@ def test_slippy_offsets_range():
 # --------------------------------------------------------------- spark side
 
 
-def test_with_tile_columns_matches_numpy(spark):
-    from routers_spark.tiling.pipeline import with_tile_columns
+def test_assign_tile_cells_without_geohash_matches_numpy(spark):
+    """gh_precision=None, keep=every column: the input passes through and
+    tile_x/tile_y/hilbert equal the numpy kernels."""
+    from routers_spark.tiling.pipeline import assign_tile_cells
 
     pdf = pd.DataFrame({
         "lon": np.linspace(-118.5, -118.0, 50),
         "lat": np.linspace(33.7, 34.1, 50),
     })
-    out = with_tile_columns(spark.createDataFrame(pdf), 12).toPandas()
+    df = spark.createDataFrame(pdf)
+    out = assign_tile_cells(df, 12, gh_precision=None,
+                            keep=df.columns).toPandas() \
+        .sort_values("lon").reset_index(drop=True)
+    assert list(out.columns) == ["lon", "lat", "tile_x", "tile_y", "hilbert"]
+    assert np.array_equal(out["lon"].values, pdf["lon"].values)
     tx, ty = slippy_xy_np(pdf["lon"].values, pdf["lat"].values, 12)
     assert np.array_equal(out["tile_x"].values, tx)
     assert np.array_equal(out["tile_y"].values, ty)
@@ -120,12 +127,11 @@ def test_with_tile_columns_matches_numpy(spark):
 
 
 def test_assign_tile_cells_matches_jvm_form(spark):
-    """The fused sqlgen projection + hilbert-join pass ≡ the per-column
-    JVM expression program, with the geohash pinned to the numpy kernel
-    (both JVM forms are also pinned to DuckDB by the tile_hilbert_key /
-    cell_encode_geohash oracles)."""
+    """The fused sqlgen projection + hilbert-join pass ≡ the numpy tile and
+    geohash kernels (the JVM forms are also pinned to DuckDB by the
+    tile_hilbert_key / cell_encode_geohash oracles)."""
     from routers_spark.functions.cells import geohash_str_np
-    from routers_spark.tiling.pipeline import assign_tile_cells, with_tile_columns
+    from routers_spark.tiling.pipeline import assign_tile_cells
 
     pdf = pd.DataFrame({
         "pid": np.arange(60, dtype=np.int64),
@@ -135,11 +141,10 @@ def test_assign_tile_cells_matches_jvm_form(spark):
     df = spark.createDataFrame(pdf)
     fast = assign_tile_cells(df, zoom=12, gh_precision=6) \
         .toPandas().sort_values("pid").reset_index(drop=True)
-    jvm = with_tile_columns(df, 12).toPandas() \
-        .sort_values("pid").reset_index(drop=True)
-    assert np.array_equal(fast["tile_x"].values, jvm["tile_x"].values)
-    assert np.array_equal(fast["tile_y"].values, jvm["tile_y"].values)
-    assert np.array_equal(fast["hilbert"].values, jvm["hilbert"].values)
+    tx, ty = slippy_xy_np(pdf["lon"].values, pdf["lat"].values, 12)
+    assert np.array_equal(fast["tile_x"].values, tx)
+    assert np.array_equal(fast["tile_y"].values, ty)
+    assert np.array_equal(fast["hilbert"].values, hilbert_xy2h_np(tx, ty, 12))
     assert (fast["gh"].values == geohash_str_np(
         pdf["lon"].values, pdf["lat"].values, 6)).all()
     assert list(fast.columns) == ["pid", "gh", "tile_x", "tile_y", "hilbert"]
@@ -208,6 +213,21 @@ def test_mvt_point_tiles_spark(spark):
         assert layer["version"] == 2 and layer["extent"] == 4096
         total += len(layer["features"])
     assert total == 30
+
+
+def test_mvt_point_tiles_drop_nan_point(spark):
+    """A NaN point lands in no MVT tile (it used to land in tile x = 0)."""
+    from routers_spark.tiling.pipeline import mvt_point_tiles
+
+    df = spark.createDataFrame(
+        [("a", -118.45, 33.75), ("b", -118.44, 33.75),
+         ("c", float("nan"), 33.75)],
+        "image_id string, lon double, lat double")
+    out = mvt_point_tiles(df, zoom=14).toPandas()
+    assert out["n_points"].sum() == 2
+    tx, ty = slippy_xy_np([-118.45, -118.44], [33.75, 33.75], 14)
+    assert set(zip(out["x"], out["y"])) == set(zip(tx.tolist(), ty.tolist()))
+    assert (out["z"] == 14).all()
 
 
 def test_assign_zones_spark(spark):

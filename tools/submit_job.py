@@ -25,7 +25,7 @@ def main() -> None:
 
     from routers_spark.fixtures.roads import grid_network, walk_trips
     from routers_spark.matching.matcher import match_trips
-    from routers_spark.tiling.pipeline import with_tile_columns
+    from routers_spark.tiling.pipeline import assign_tile_cells
 
     n_trips = int(sys.argv[1]) if len(sys.argv) > 1 else 2000
     n_tile_rows = int(sys.argv[2]) if len(sys.argv) > 2 else 500_000
@@ -54,7 +54,7 @@ def main() -> None:
         (F.lit(33.7) + (F.col("id") % 4099).cast("double") * 1.0e-4)
         .alias("lat"),
     )
-    tile_rows = with_tile_columns(pts, zoom=12).agg(
+    tile_rows = assign_tile_cells(pts, zoom=12, gh_precision=None).agg(
         F.count(F.lit(1)), F.sum("hilbert")).collect()[0][0]
     t2 = time.time()
 

@@ -11,134 +11,172 @@ distance reaches the threshold (``take_while``, cache.rs:320-323) — not a
 filter: later nodes with shorter distance but larger repr are cut too. That
 is the reference's reachability boundary and is reproduced exactly.
 
+The search itself is compiled: ``bounded_dijkstra.c`` beside this module is
+built with the system C compiler (``cc``) on first import, cached by a hash
+of its source and flags, and loaded through ``ctypes``. There is no Python
+fallback; without a compiler the import raises ``ImportError``. The pure
+Python version it must equal node for node lives in
+``tests/dijkstra_oracle.py``.
+
 Parent maps are memoised per root in a bounded LRU (8192 entries,
 cache.rs:19) — per executor process, shared across Arrow batches.
 """
 
 from __future__ import annotations
 
+import ctypes
+import hashlib
 import heapq
+import os
+import platform
+import subprocess
+import tempfile
 from collections import OrderedDict
+from importlib import resources
 
 import numpy as np
 
 from routers_spark.config import DIJKSTRA_BOUND_CM, PREDICATE_CACHE_CAPACITY
 
-
-# CSR adjacency as plain Python lists, attached to the graph object itself
-# (NOT a global dict keyed by id(graph): celljoin churns one graph per trip
-# and CPython reuses freed ids — a global map both leaked and could serve a
-# dead graph's adjacency to its id-successor). Numpy scalar indexing in the
-# heap loop cost ~2.5x over list indexing (every popped node scans its
-# successors one edge at a time; this loop is the whole cold-cache cost
-# each executor worker pays, so it bounds the N→4N scaling of the matcher).
+CC = "cc"
+CFLAGS = ("-O2", "-std=c99", "-shared", "-fPIC")
+_SOURCE = "bounded_dijkstra.c"
 
 
-def _adj_for(graph):
-    a = graph._adj_cache
-    if a is None:
-        erows = graph.csr_edge_row
-        a = {
-            "indptr": graph.csr_indptr.tolist(),
-            "dst": graph.edge_dst[erows].tolist(),
-            "w": graph.edge_weight[erows].astype(np.int64).tolist(),
-            "len": graph.edge_len_cm[erows].astype(np.int64).tolist(),
-            "erow": erows.tolist(),
-        }
-        graph._adj_cache = a
-    return a
+def build_kernel(out_dir: str, cc: str = CC, source: bytes | None = None) -> str:
+    """Path of the compiled kernel in ``out_dir``, compiling it first when
+    no build of this exact source, compiler and flags is there. The output
+    is written under a unique name and renamed into place, so processes
+    that build at once each load a complete library."""
+    if source is None:
+        source = resources.files(__package__).joinpath(_SOURCE).read_bytes()
+    tag = hashlib.sha256(repr((cc, CFLAGS, platform.machine())).encode()
+                         + source).hexdigest()[:16]
+    path = os.path.join(out_dir, f"bounded_dijkstra-{tag}.so")
+    if os.path.exists(path):
+        return path
+    os.makedirs(out_dir, exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=out_dir) as tmp:
+        src = os.path.join(tmp, _SOURCE)
+        with open(src, "wb") as f:
+            f.write(source)
+        cmd = [cc, *CFLAGS, "-o", os.path.join(tmp, "k.so"), src]
+        try:
+            subprocess.run(cmd, check=True, capture_output=True)
+        except FileNotFoundError as e:
+            raise ImportError(
+                f"the compiled bounded Dijkstra needs a C compiler: "
+                f"running {cc!r} failed ({e})") from None
+        except subprocess.CalledProcessError as e:
+            raise ImportError(
+                f"compiling {_SOURCE} failed: {' '.join(cmd)}\n"
+                f"{e.stderr.decode(errors='replace')}") from None
+        os.replace(os.path.join(tmp, "k.so"), path)
+    return path
 
 
-def bounded_dijkstra_parents(
-    graph, root_idx: int, threshold_cm: float = DIJKSTRA_BOUND_CM,
-    access_mask: np.ndarray | None = None,
-) -> dict[int, int]:
-    """Parent-pointer map of every node popped before the distance cutoff
-    (PredicateCache::calculate, cache.rs:291-326). Keys/values are dense
-    node indices; the root maps to itself (reference uses
-    ``parent.unwrap_or_default()`` for the root).
+def _build_dir() -> str:
+    """The package's ``__pycache__``, or a per-user directory under the temp
+    dir when the package is not writable (a zip on ``--py-files``)."""
+    here = os.path.join(os.path.dirname(__file__), "__pycache__")
+    try:
+        os.makedirs(here, exist_ok=True)
+        if os.access(here, os.W_OK):
+            return here
+    except OSError:
+        pass
+    return os.path.join(tempfile.gettempdir(), f"routers_spark-{os.getuid()}")
+
+
+class _Graph(ctypes.Structure):
+    _fields_ = [("n_nodes", ctypes.c_int64)] + [
+        (name, ctypes.c_void_p) for name in (
+            "indptr", "dst", "weight", "len_cm", "erow", "state", "touched",
+            "out_node", "out_parent", "out_depth")]
+
+
+def _load(path: str) -> ctypes.CDLL:
+    lib = ctypes.CDLL(path)
+    lib.bd_settle.argtypes = [ctypes.POINTER(_Graph), ctypes.c_int64,
+                              ctypes.c_double, ctypes.c_void_p]
+    lib.bd_settle.restype = ctypes.c_int64
+    return lib
+
+
+_LIB = _load(build_kernel(_build_dir()))
+
+
+class _Kernel:
+    """One graph's CSR arrays in the kernel's dtypes plus its scratch
+    (per-node state, touched list and the pop-order outputs), built on
+    first use and kept on the graph."""
+
+    __slots__ = ("arrays", "struct")
+
+    def __init__(self, graph):
+        n = len(graph.node_ids)
+        erows = np.ascontiguousarray(graph.csr_edge_row, dtype=np.int64)
+        self.arrays = [
+            np.ascontiguousarray(graph.csr_indptr, dtype=np.int64),
+            np.ascontiguousarray(graph.edge_dst[erows], dtype=np.int32),
+            np.ascontiguousarray(graph.edge_weight[erows], dtype=np.uint32),
+            np.ascontiguousarray(graph.edge_len_cm[erows], dtype=np.uint32),
+            erows,
+            np.full(n, -1, dtype=np.int64),
+            *(np.empty(n, dtype=np.int64) for _ in range(4)),
+        ]
+        self.struct = _Graph(n, *(a.ctypes.data for a in self.arrays))
+
+    @classmethod
+    def of(cls, graph) -> "_Kernel":
+        k = graph.dijkstra_kernel
+        if k is None:
+            k = graph.dijkstra_kernel = cls(graph)
+        return k
+
+
+def settle(graph, root_idx: int, threshold_cm: float = DIJKSTRA_BOUND_CM,
+           access_mask: np.ndarray | None = None):
+    """(nodes, parents, depths) of every node popped before the distance
+    cutoff, in pop order (PredicateCache::calculate, cache.rs:291-326).
+    Dense node indices; the root is its own parent at depth 0 (the
+    reference uses ``parent.unwrap_or_default()`` for the root).
 
     ``access_mask`` (bool per edge row) gates every expansion on runtime
     accessibility, the successor filter of cache.rs:297-315."""
-    a = _adj_for(graph)
-    indptr = a["indptr"]
-    dst_l = a["dst"]
-    w_l = a["w"]
-    len_l = a["len"]
-    erow_l = a["erow"]
-
-    # heap entries: (repr, seq, node, num, den, dist_cm, parent)
-    # seq keeps ties deterministic (FIFO); the Rust BinaryHeap tie order is
-    # unspecified, so tie determinism is OURS by definition.
-    seq = 0
-    heap = [(0, 0, root_idx, 0, 0, 0, root_idx)]
-    seen: set[int] = set()
-    best: dict[int, int] = {}
-    parents: dict[int, int] = {}
-    push = heapq.heappush
-    pop = heapq.heappop
-
-    while heap:
-        rep, _, node, num, den, dist, parent = pop(heap)
-        if node in seen:
-            continue
-        seen.add(node)
-        if dist >= threshold_cm:
-            break  # take_while: iteration ends entirely
-        parents[node] = parent
-        for i in range(indptr[node], indptr[node + 1]):
-            if access_mask is not None and not access_mask[erow_l[i]]:
-                continue  # inaccessible under the runtime profile
-            nxt = dst_l[i]
-            if nxt in seen:
-                continue
-            n_num = num + w_l[i]
-            n_den = den + 1
-            n_dist = dist + len_l[i]
-            # Rust's `as u32` float cast SATURATES (weight_and_distance.rs:
-            # 34-36) — unreachable within the 2 km bound, pinned anyway.
-            n_rep = min(int(float((n_num // n_den) ** 2) * float(n_dist)),
-                        0xFFFFFFFF)
-            prev = best.get(nxt)
-            if prev is not None and prev <= n_rep:
-                continue
-            seq += 1
-            best[nxt] = n_rep
-            push(heap, (n_rep, seq, nxt, n_num, n_den, n_dist, node))
-    return parents
+    kern = _Kernel.of(graph)
+    if not 0 <= root_idx < kern.struct.n_nodes:
+        raise IndexError(f"root {root_idx} outside 0..{kern.struct.n_nodes - 1}")
+    mask = None
+    if access_mask is not None:
+        access_mask = np.ascontiguousarray(access_mask, dtype=bool)
+        if len(access_mask) != len(graph.edge_id):
+            raise ValueError(f"access mask has {len(access_mask)} entries "
+                             f"for {len(graph.edge_id)} edge rows")
+        mask = access_mask.ctypes.data
+    k = _LIB.bd_settle(ctypes.byref(kern.struct), root_idx,
+                       float(threshold_cm), mask)
+    if k < 0:
+        raise MemoryError("bounded Dijkstra heap allocation failed")
+    out = kern.arrays[-3:]
+    return out[0][:k].copy(), out[1][:k].copy(), out[2][:k].copy()
 
 
 class ParentMap:
     """A root's parent map in vectorizable form: sorted node-id keys, parent
     ids, LOCAL parent indices (gather-walkable without searchsorted) and
-    per-node depth (path length known up front). Built once per cache fill;
-    the batched weigher walks thousands of leaves against it with pure
-    integer gathers."""
+    per-node depth (path length known up front). Built once per cache fill
+    from the kernel's pop-order arrays; the batched weigher walks thousands
+    of leaves against it with pure integer gathers."""
 
     __slots__ = ("keys", "vals", "loc", "depth")
 
-    def __init__(self, parents: dict[int, int]):
-        k = len(parents)
-        if k == 0:
-            self.keys = np.empty(0, dtype=np.int64)
-            self.vals = np.empty(0, dtype=np.int64)
-            self.loc = np.empty(0, dtype=np.int64)
-            self.depth = np.empty(0, dtype=np.int64)
-            return
-        keys = np.fromiter(parents.keys(), dtype=np.int64, count=k)
-        vals = np.fromiter(parents.values(), dtype=np.int64, count=k)
-        # depth in insertion (pop) order: a parent is always popped before
-        # its child, so one forward pass suffices
-        depth_by: dict[int, int] = {}
-        dep = np.empty(k, dtype=np.int64)
-        for i, (node, parent) in enumerate(parents.items()):
-            d = 0 if parent == node else depth_by[parent] + 1
-            depth_by[node] = d
-            dep[i] = d
-        order = np.argsort(keys)
-        self.keys = keys[order]
-        self.vals = vals[order]
-        self.depth = dep[order]
+    def __init__(self, nodes: np.ndarray, parents: np.ndarray,
+                 depth: np.ndarray):
+        order = np.argsort(nodes)
+        self.keys = nodes[order]
+        self.vals = parents[order]
+        self.depth = depth[order]
         self.loc = np.searchsorted(self.keys, self.vals)
 
     def locate(self, nodes: np.ndarray):
@@ -192,9 +230,7 @@ class PredicateCache:
             self._map.move_to_end(key)
             return hit
         mask = graph.access_mask(profile) if profile is not None else None
-        parents = bounded_dijkstra_parents(graph, root_idx, self.threshold_cm,
-                                           access_mask=mask)
-        entry = ParentMap(parents)
+        entry = ParentMap(*settle(graph, root_idx, self.threshold_cm, mask))
         self._map[key] = entry
         if len(self._map) > self.capacity:
             self._map.popitem(last=False)

@@ -59,7 +59,7 @@ class PackedGraph:
         # indices (caught as an IndexError at sf0.1; silent wrong answers
         # were possible when sizes lined up).
         self.uid = next(_GRAPH_UID)
-        self._adj_cache: dict | None = None  # dijkstra._adj_for attaches here
+        self.dijkstra_kernel = None  # dijkstra._Kernel.of attaches here
 
         # per-edge geometry + length (cm, truncated: cache.rs:211 `as u32`)
         self.ax = node_lon[edge_src]

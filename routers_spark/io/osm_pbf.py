@@ -41,21 +41,30 @@ from pyspark.sql import functions as F
 # --------------------------------------------------------------- wire level
 
 
-def _read_varint(buf: bytes, i: int) -> tuple[int, int]:
+_MAX_VARINT_BYTES = 10  # ceil(64 / 7): a longer varint overflows uint64
+
+
+def _read_varint(buf, i: int) -> tuple[int, int]:
+    """(value, next offset) of the varint at ``buf[i]``, wrapped to 64 bits
+    like ``decode_packed_varints``. Raises ``ValueError`` when the buffer
+    ends inside it or it is longer than 10 bytes."""
     val = 0
-    shift = 0
-    while True:
-        b = buf[i]
-        i += 1
-        val |= (b & 0x7F) << shift
+    for k in range(_MAX_VARINT_BYTES):
+        if i + k >= len(buf):
+            raise ValueError("protobuf: buffer ends inside a varint")
+        b = buf[i + k]
+        val |= (b & 0x7F) << (7 * k)
         if not b & 0x80:
-            return val, i
-        shift += 7
+            return val & 0xFFFF_FFFF_FFFF_FFFF, i + k + 1
+    raise ValueError(f"protobuf: a varint is longer than "
+                     f"{_MAX_VARINT_BYTES} bytes")
 
 
 def _fields(buf: bytes):
     """Iterate (field_no, wire_type, value) over one protobuf message.
-    wt 0 → int value; wt 2 → memoryview of the sub-buffer; wt 1/5 → raw."""
+    wt 0 → int value; wt 2 → memoryview of the sub-buffer; wt 1/5 → raw.
+    Raises ``ValueError`` on a malformed varint or a field that runs past
+    the end of the buffer."""
     mv = memoryview(buf)
     i, n = 0, len(mv)
     while i < n:
@@ -64,21 +73,18 @@ def _fields(buf: bytes):
         if wt == 0:
             v, i = _read_varint(mv, i)
             yield fno, 0, v
-        elif wt == 2:
+            continue
+        if wt == 2:
             ln, i = _read_varint(mv, i)
-            yield fno, 2, mv[i:i + ln]
-            i += ln
-        elif wt == 5:
-            yield fno, 5, mv[i:i + 4]
-            i += 4
-        elif wt == 1:
-            yield fno, 1, mv[i:i + 8]
-            i += 8
+        elif wt in (1, 5):
+            ln = 8 if wt == 1 else 4
         else:  # groups (3/4) never appear in OSM PBF
             raise ValueError(f"unsupported wire type {wt}")
-
-
-_MAX_VARINT_BYTES = 10  # ceil(64 / 7): a longer varint overflows uint64
+        if i + ln > n:
+            raise ValueError(f"protobuf: field {fno} (wire type {wt}) needs "
+                             f"{ln} bytes, {n - i} left")
+        yield fno, wt, mv[i:i + ln]
+        i += ln
 
 
 def decode_packed_varints(data) -> np.ndarray:

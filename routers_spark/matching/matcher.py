@@ -8,10 +8,11 @@ Spark shape (SURVEY.md §3.1), two candidate paths:
   - celljoin: candidates come from a distributed cell-cover equi-join and
     a ``cogroup.applyInPandas`` per cover signature solves that group's
     trips against its shared padded subgraph
-Both feed one per-trip solve path (``_solve_layers``): boundary weighing
-(M4-M9), Viterbi (M11) and collapse (M15/16) with a process-wide predicate
-LRU (O4), emitting column arrays that become ONE frame per Arrow batch or
-cogroup group. No per-row Python at the DataFrame level.
+Both feed one solve path (``_solve_trips``): boundary weighing (M4-M9)
+batched across consecutive trips, then per trip Viterbi (M11) and collapse
+(M15/16), with a process-wide predicate LRU (O4), emitting column arrays
+that become ONE frame per Arrow batch or cogroup group. No per-row Python
+at the DataFrame level.
 
 Semantics are the reference batch facade
 (libs/routers_transition/src/match/implementation.rs:20-41 →
@@ -173,47 +174,53 @@ def solve_trip(graph, layers: list[dict], opts: MatchOptions,
     boundary k's matrix is reused from cache[boundary_keys[k]] when
     present — the streaming matcher keys by the observation pair, so each
     micro-batch weighs only the boundaries its new points introduced."""
-    widths = [len(l["edge_row"]) for l in layers]
-    empty = [i for i, w in enumerate(widths) if w == 0]
+    empty = [i for i, l in enumerate(layers) if len(l["edge_row"]) == 0]
     if empty:
-        return {"status": "unanchored", "breaks": empty, "path": None,
-                "cost": None, "hops": None, "trellis": None}
-
-    t = Trellis([widths[0]])
-    t.fill_nodes(0, layers[0]["emission"])
-    for k in range(1, len(widths)):
-        t.add_layer(widths[k], layers[k]["emission"])
-
-    cache = GLOBAL_PREDICATE_CACHE
-    nb = len(widths) - 1
+        return _unsolved("unanchored", empty)
+    nb = len(layers) - 1
     if boundary_keys is None or boundary_cache is None:
         boundary_keys, boundary_cache = range(nb), {}
     todo = [k for k in range(nb) if boundary_keys[k] not in boundary_cache]
-    fresh = weigh_boundaries(graph, cache,
+    fresh = weigh_boundaries(graph, GLOBAL_PREDICATE_CACHE,
                              [(layers[k], layers[k + 1]) for k in todo],
                              fanout=opts.selective_fanout,
                              profile=opts.profile, costing=opts.costing)
     boundary_cache.update(zip([boundary_keys[k] for k in todo], fresh))
-    mats = [boundary_cache[boundary_keys[k]] for k in range(nb)]
+    return _viterbi_collapse(
+        graph, layers, [boundary_cache[boundary_keys[k]] for k in range(nb)],
+        opts)
+
+
+def _unsolved(status: str, breaks: list, trellis=None) -> dict:
+    return {"status": status, "breaks": breaks, "path": None, "cost": None,
+            "hops": None, "trellis": trellis}
+
+
+def _viterbi_collapse(graph, layers: list[dict], mats: list[np.ndarray],
+                      opts: MatchOptions) -> dict:
+    """Viterbi over a trip's weighed boundary matrices, then collapse: the
+    second half of ``solve_trip``, shared with the batched ``_solve_trips``."""
+    t = Trellis([len(layers[0]["edge_row"])])
+    t.fill_nodes(0, layers[0]["emission"])
+    for layer in layers[1:]:
+        t.add_layer(len(layer["edge_row"]), layer["emission"])
     for k, mat in enumerate(mats):
         if not np.all(mat == np.uint32(NO_EDGE)):
             t.fill_transition(k, mat)
 
     breaks = t.disconnections()
     if breaks:
-        return {"status": "disconnected", "breaks": breaks, "path": None,
-                "cost": None, "hops": None, "trellis": t}
-
+        return _unsolved("disconnected", breaks, t)
     try:
         path, cost = t.solve()
     except Unreachable:
-        return {"status": "unreachable", "breaks": [], "path": None,
-                "cost": None, "hops": None, "trellis": t}
+        return _unsolved("unreachable", [], t)
 
     # collapse: re-derive chosen hops from the warm cache (entity.rs:337-358)
     hops = []
     for k in range(len(path) - 1):
-        hops.append(reach(graph, cache, _cand(layers[k], path[k]),
+        hops.append(reach(graph, GLOBAL_PREDICATE_CACHE,
+                          _cand(layers[k], path[k]),
                           _cand(layers[k + 1], path[k + 1]), opts.profile))
     return {"status": "matched", "breaks": [], "path": path, "cost": cost,
             "hops": hops, "trellis": t}
@@ -247,73 +254,111 @@ GATE_UNION_SCHEMA = (
 )
 
 
-def _solve_arrays(trip_id: str, seqs, lons, lats, graph, opts: MatchOptions,
-                  output: str) -> dict:
-    """Broadcast path: build one trip's candidate layers from its raw point
-    arrays against the executor-resident graph, then solve them."""
-    seqs = np.asarray(seqs)
-    lons = np.asarray(lons, dtype=np.float64)
-    lats = np.asarray(lats, dtype=np.float64)
-    if len(seqs) > 1 and np.any(seqs[1:] < seqs[:-1]):
-        o = np.argsort(seqs, kind="stable")
-        seqs, lons, lats = seqs[o], lons[o], lats[o]
-    layers = candidates_for_points(graph, lons, lats,
-                                   opts.search_distance, opts.emission_error,
-                                   opts.costing)
-    return _solve_layers(trip_id, seqs, layers, graph, opts, output)
+# candidate pairs (the sum of m x n over boundaries) past which _solve_trips
+# cuts a weigh_boundaries call at the next trip edge: ~90 boundaries of the
+# grid benchmark's trips. One call per whole Arrow batch measured ~10% less
+# kernel time but more than doubled each worker's peak RSS.
+WEIGH_PAIR_BUDGET = 6_000
 
 
-def _solve_candidate_arrays(trip_id: str, seq, er, frac, px, py, dist, emis,
-                            graph, opts: MatchOptions, output: str) -> dict:
-    """Celljoin path: build one trip's layers from pre-joined candidate
-    column arrays already sorted by (seq, edge_row), then solve them.
+def _trip_bounds(tid) -> np.ndarray:
+    """Start offsets of each trip's contiguous rows, plus the end."""
+    cuts = np.nonzero(tid[1:] != tid[:-1])[0] + 1
+    return np.concatenate([[0], cuts, [len(tid)]]).astype(np.int64)
+
+
+def _broadcast_trips(tid, seq, lon, lat, graph, opts: MatchOptions):
+    """Broadcast path: (trip_id, seqs, layers) per trip of trip-contiguous
+    raw point rows, with ONE candidate search over the whole batch against
+    the executor-resident graph. Rows are seq-sorted within each trip
+    first (a stable sort, so equal seqs keep their arrival order)."""
+    if not len(tid):
+        return []
+    bounds = _trip_bounds(tid)
+    trip_of = np.repeat(np.arange(len(bounds) - 1), np.diff(bounds))
+    o = np.lexsort((seq, trip_of))
+    seq, lon, lat = seq[o], lon[o], lat[o]
+    layers = candidates_for_points(graph, lon, lat, opts.search_distance,
+                                   opts.emission_error, opts.costing)
+    return [(tid[s], seq[s:e], layers[s:e])
+            for s, e in zip(bounds[:-1], bounds[1:])]
+
+
+def _candidate_trips(tid, seq, er, frac, px, py, dist, emis):
+    """Celljoin path: (trip_id, seqs, layers) per trip of pre-joined
+    candidate column arrays sorted by (trip_id, seq, edge_row).
     edge_row == -1 marks an unanchored point (empty layer)."""
-    scuts = np.nonzero(seq[1:] != seq[:-1])[0] + 1
-    sb = np.concatenate([[0], scuts, [len(seq)]])
-    layers = []
-    for a, b in zip(sb[:-1], sb[1:]):
-        m = er[a:b] >= 0
-        layers.append({
-            "edge_row": er[a:b][m],
-            "frac": frac[a:b][m],
-            "px": px[a:b][m], "py": py[a:b][m],
-            "dist_m": dist[a:b][m],
-            "emission": emis[a:b][m].astype(np.uint32),
-        })
-    return _solve_layers(trip_id, seq[sb[:-1]], layers, graph, opts, output)
+    if not len(tid):
+        return
+    bounds = _trip_bounds(tid)
+    for s, e in zip(bounds[:-1], bounds[1:]):
+        sb = s + _trip_bounds(seq[s:e])
+        layers = []
+        for a, b in zip(sb[:-1], sb[1:]):
+            m = er[a:b] >= 0
+            layers.append({
+                "edge_row": er[a:b][m],
+                "frac": frac[a:b][m],
+                "px": px[a:b][m], "py": py[a:b][m],
+                "dist_m": dist[a:b][m],
+                "emission": emis[a:b][m].astype(np.uint32),
+            })
+        yield tid[s], seq[sb[:-1]], layers
 
 
-def _solve_layers(trip_id: str, seqs, layers, graph, opts: MatchOptions,
-                  output: str) -> dict:
-    """The one per-trip solve path of both candidate paths and every output
-    mode: drop unanchored layers (streaming semantics), Viterbi, then the
-    output's column arrays — a status row when the trip does not match."""
-    if opts.drop_unanchored:
-        keep = [i for i, l in enumerate(layers) if len(l["edge_row"]) > 0]
-        layers = [layers[i] for i in keep]
-        seqs = seqs[keep]
-        if not layers:
-            return _status_cols(trip_id, "unanchored", output)
-    result = solve_trip(graph, layers, opts)
-    if result["status"] != "matched":
-        return _status_cols(trip_id, result["status"], output)
-    return _emit_cols(trip_id, seqs, layers, result, graph, output)
-
-
-def _solve_trips(tid, solve_one, output: str) -> pd.DataFrame:
-    """Cut trip-contiguous rows at trip_id boundaries, call
-    ``solve_one(trip_id, start, stop)`` per trip and build ONE frame from
-    the returned column arrays (per-trip frame construction + concat
-    measured ~25% of warm broadcast solver wall and ~15 s of a 24 s
-    celljoin run). Seeded with the output's typed empty columns, so no
-    rows still yields a schema-typed frame."""
+def _solve_trips(graph, trips, opts: MatchOptions,
+                 output: str) -> pd.DataFrame:
+    """The one solve path of both candidate paths and every output mode.
+    ``trips`` yields (trip_id, seqs, layers). Unanchored layers are dropped
+    first under streaming semantics. The boundaries of consecutive
+    anchored trips are weighed together, one ``weigh_boundaries`` call per
+    ~``WEIGH_PAIR_BUDGET`` candidate pairs, then every trip runs Viterbi
+    and collapse and becomes column arrays: its output rows, or a status
+    row when it does not match. ONE frame is built from all of them, in
+    trip order (per-trip frames + concat measured ~25% of warm broadcast
+    solver wall); it is seeded with the output's typed empty columns, so
+    no trips still yields a schema-typed frame."""
     acc = {k: [v[:0]] for k, v in _status_cols("", "", output).items()}
-    if len(tid):
-        cuts = np.nonzero(tid[1:] != tid[:-1])[0] + 1
-        bounds = np.concatenate([[0], cuts, [len(tid)]])
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            for k, v in solve_one(tid[s], s, e).items():
+    chunk: list[tuple] = []  # (trip_id, seqs, layers, status or None)
+
+    def flush():
+        boundaries = [b for _, _, layers, st in chunk if st is None
+                      for b in zip(layers, layers[1:])]
+        mats = weigh_boundaries(
+            graph, GLOBAL_PREDICATE_CACHE, boundaries,
+            fanout=opts.selective_fanout, profile=opts.profile,
+            costing=opts.costing) if boundaries else []
+        off = 0
+        for trip_id, seqs, layers, status in chunk:
+            if status is None:
+                nb = len(layers) - 1
+                result = _viterbi_collapse(graph, layers, mats[off:off + nb],
+                                           opts)
+                off += nb
+                status = result["status"]
+            cols = (_emit_cols(trip_id, seqs, layers, result, graph, output)
+                    if status == "matched"
+                    else _status_cols(trip_id, status, output))
+            for k, v in cols.items():
                 acc[k].append(v)
+        chunk.clear()
+
+    pairs = 0
+    for trip_id, seqs, layers in trips:
+        if opts.drop_unanchored:
+            keep = [i for i, l in enumerate(layers) if len(l["edge_row"]) > 0]
+            layers = [layers[i] for i in keep]
+            seqs = seqs[keep]
+        widths = [len(l["edge_row"]) for l in layers]
+        if not layers or 0 in widths:
+            chunk.append((trip_id, seqs, layers, "unanchored"))
+            continue
+        chunk.append((trip_id, seqs, layers, None))
+        pairs += sum(a * b for a, b in zip(widths, widths[1:]))
+        if pairs >= WEIGH_PAIR_BUDGET:
+            flush()
+            pairs = 0
+    flush()
     return pd.DataFrame({k: np.concatenate(v) for k, v in acc.items()})
 
 
@@ -522,9 +567,9 @@ def match_trips(points_df, nodes_df, edges_df, opts: MatchOptions | None = None,
             graph = hydrate(bc, bc_key)
 
             def solve_batch(tid, seq, lon, lat):
-                return _solve_trips(tid, lambda t, s, e: _solve_arrays(
-                    t, seq[s:e], lon[s:e], lat[s:e], graph, opts, output),
-                    output)
+                return _solve_trips(
+                    graph, _broadcast_trips(tid, seq, lon, lat, graph, opts),
+                    opts, output)
 
             ctid = cseq = clon = clat = None
             for pdf in batches:
@@ -651,8 +696,9 @@ def _solve_cogroup_pdf(cand_pdf: pd.DataFrame, edges_pdf: pd.DataFrame,
     from edge_row >= 0 rows only)."""
     if len(cand_pdf) == 0 or len(edges_pdf) == 0:
         return _solve_trips(
-            cand_pdf["trip_id"].unique(),
-            lambda t, s, e: _status_cols(t, "unanchored", output), output)
+            None, [(t, np.empty(0, dtype=np.int64), [])
+                   for t in cand_pdf["trip_id"].unique()],
+            opts, output)
 
     from routers_spark.graph.packed import build_packed_graph
 
@@ -687,8 +733,6 @@ def _solve_cogroup_pdf(cand_pdf: pd.DataFrame, edges_pdf: pd.DataFrame,
     dist = cand_pdf["dist_m"].values.astype(np.float64)
     emis = cand_pdf["emission"].values
     return _solve_trips(
-        cand_pdf["trip_id"].values,
-        lambda t, s, e: _solve_candidate_arrays(
-            t, seq[s:e], er[s:e], frac[s:e], px[s:e], py[s:e], dist[s:e],
-            emis[s:e], g, opts, output),
-        output)
+        g, _candidate_trips(cand_pdf["trip_id"].values, seq, er, frac, px,
+                            py, dist, emis),
+        opts, output)

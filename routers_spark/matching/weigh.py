@@ -3,17 +3,24 @@ kernel.
 
 numpy over ALL (src, tgt) pairs of every boundary handed in at once (the
 analog of the reference's rayon boundary × row sweep, weigh/mod.rs:89-141,
-but data-parallel over the whole trip):
+but data-parallel over the whole call). The matcher's ``_solve_trips``
+hands in a chunk of consecutive trips per call (``WEIGH_PAIR_BUDGET``
+candidate pairs); ``solve_trip`` one trip, or only the streaming cache's
+misses. A boundary's matrix does not depend on what else is in the call:
+``tests/test_weigh_vec.py`` checks that one multi-trip call equals the
+per-trip calls bit for bit.
 
   1. direct / same-edge masks per boundary (candidate/entry.rs:92-106)
   2. parent-map walks batched per unique root ACROSS the call: every leaf
-     walks the root's ParentMap simultaneously via pure integer gathers
-     (expansion.rs:63-97); consecutive boundaries share roots, so each
-     (root, leaf-set) is walked once per call, not once per boundary
+     walks the root's ParentMap (filled by the compiled bounded Dijkstra)
+     simultaneously via pure integer gathers (expansion.rs:63-97);
+     consecutive boundaries share roots, so each (root, leaf-set) is
+     walked once per call, not once per boundary
   3. path edge rows via one searchsorted over the (src,dst) pair keys (G2)
   4. route lengths, headings, angular complexity and the cost decay as flat
      ragged-array passes; np.add.at keeps the reference's sequential
      left-to-right float accumulation
+  5. one scatter of every cost into one flat buffer the matrices view
 
 Formulas follow costing/default.rs:137-163, map_path/entity.rs:229-297 and
 costing/util.rs:29-39; distances and bearings are the
@@ -85,9 +92,14 @@ def weigh_boundaries(graph, cache, boundaries: list[tuple[dict, dict]],
     ``zip(layers, layers[1:])``; the streaming matcher passes only the
     boundaries its cache misses (collapse re-derives the chosen hops from
     the warm cache, entity.rs:337-358)."""
-    mats = [np.full((len(A["edge_row"]), len(B["edge_row"])),
-                    np.uint32(NO_EDGE), dtype=np.uint32)
-            for A, B in boundaries]
+    # every matrix is a view into ONE flat buffer, so the final scatter is
+    # one fancy-index write for the whole call
+    shapes = [(len(A["edge_row"]), len(B["edge_row"])) for A, B in boundaries]
+    moff = np.zeros(len(shapes) + 1, dtype=np.int64)
+    np.cumsum(np.array([m * n for m, n in shapes], dtype=np.int64),
+              out=moff[1:])
+    flat = np.full(int(moff[-1]), np.uint32(NO_EDGE), dtype=np.uint32)
+    mats = [flat[o:o + m * n].reshape(m, n) for o, (m, n) in zip(moff, shapes)]
 
     # ---- stage 1: classify pairs per boundary, gather flat pair arrays
     b_id_c, i_c, j_c, dir_c = [], [], [], []
@@ -134,9 +146,9 @@ def weigh_boundaries(graph, cache, boundaries: list[tuple[dict, dict]],
     ty = np.concatenate(ty_c)
     P = len(b_id)
 
-    # ---- stage 2: parent walks — ALL (root, leaf) lanes of the trip walk
+    # ---- stage 2: parent walks — ALL (root, leaf) lanes of the call walk
     # ONE concatenated parent forest (per-root ParentMaps re-based onto a
-    # shared index space), so the gather loop runs once per trip instead of
+    # shared index space), so the gather loop runs once per call instead of
     # once per unique root (the per-root overhead dominated wide urban
     # boundaries: widths 40+ have ~width x layers unique roots per trip)
     roots = graph.edge_dst[e_s].astype(np.int64)
@@ -380,10 +392,8 @@ def weigh_boundaries(graph, cache, boundaries: list[tuple[dict, dict]],
     cost = np.minimum(((COST_PRECISION * zeta) * inv).astype(np.int64),
                       MAX_WEIGHT).astype(np.uint32)
 
-    # ---- scatter into the per-boundary matrices
-    for k in range(len(mats)):
-        at = b_id == k
-        if at.any():
-            mats[k][all_i[at], all_j[at]] = cost[at]
+    # ---- scatter: row-major offset of every pair in its boundary's matrix
+    ncols = np.array([n for _, n in shapes], dtype=np.int64)
+    flat[moff[b_id] + all_i * ncols[b_id] + all_j] = cost
     return mats
 

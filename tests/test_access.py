@@ -9,9 +9,11 @@ import numpy as np
 
 from routers_spark.fixtures.roads import RoadBuilder
 from routers_spark.graph.access import TripProfile, accessible
-from routers_spark.graph.dijkstra import PredicateCache, bounded_dijkstra_parents
+from routers_spark.graph.dijkstra import PredicateCache
 from routers_spark.graph.packed import build_packed_graph
 from routers_spark.matching.matcher import MatchOptions, candidates_for_points, solve_trip
+
+from dijkstra_oracle import bounded_dijkstra_parents
 
 CAR = TripProfile("motorcar")
 TRUCK = TripProfile("hgv")

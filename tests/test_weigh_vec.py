@@ -20,7 +20,7 @@ from routers_spark.config import (
     MIN_HEADING_DIST_M,
     NO_EDGE,
 )
-from routers_spark.fixtures.roads import grid_network, t_junction
+from routers_spark.fixtures.roads import grid_network, t_junction, walk_trips
 from routers_spark.functions.geo import bearing_deg_np, haversine_m_np
 from routers_spark.graph.dijkstra import PredicateCache
 from routers_spark.graph.packed import build_packed_graph
@@ -227,6 +227,28 @@ def test_vectorized_equals_scalar_random_boundaries(grid_graph):
     for k, got in enumerate(mats):
         want = scalar_matrix(g, cache, layers[k], layers[k + 1])
         np.testing.assert_array_equal(got, want)
+
+
+def test_multi_trip_call_equals_per_trip_calls(grid_graph):
+    """One call over many trips' boundaries (as _solve_trips weighs a
+    chunk) returns, bit for bit, the matrices of one call per trip."""
+    nodes, edges = grid_network(12)
+    trips = walk_trips(nodes, edges, n_trips=12, points_per_trip=9, seed=4)
+    per_trip = []
+    for _, t in trips.groupby("trip_id", sort=True):
+        layers = candidates_for_points(grid_graph, t["lon"].values,
+                                       t["lat"].values, 50.0, 25.0)
+        per_trip.append([b for b in zip(layers, layers[1:])
+                         if len(b[0]["edge_row"]) and len(b[1]["edge_row"])])
+    want = [m for bs in per_trip
+            for m in weigh_boundaries(grid_graph, PredicateCache(), bs)]
+    got = weigh_boundaries(grid_graph, PredicateCache(),
+                           [b for bs in per_trip for b in bs])
+    assert len(got) == len(want) > 60
+    for a, b in zip(got, want):
+        assert a.dtype == b.dtype == np.uint32
+        np.testing.assert_array_equal(a, b)
+    assert any((m != np.uint32(NO_EDGE)).any() for m in got)
 
 
 def test_vectorized_equals_scalar_selective_fanout(grid_graph):

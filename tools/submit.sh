@@ -15,7 +15,8 @@ trap 'rm -f "$ZIP"' EXIT
 python - "$ZIP" <<'EOF'
 import sys, zipfile, pathlib
 zf = zipfile.ZipFile(sys.argv[1], "w", zipfile.ZIP_DEFLATED)
-for p in sorted(pathlib.Path("routers_spark").rglob("*.py")):
+src = pathlib.Path("routers_spark")
+for p in sorted([*src.rglob("*.py"), *src.rglob("*.c")]):
     zf.write(p, p.as_posix())
 zf.close()
 EOF

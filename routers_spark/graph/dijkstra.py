@@ -24,11 +24,14 @@ cache.rs:19) — per executor process, shared across Arrow batches.
 
 from __future__ import annotations
 
+import atexit
 import ctypes
 import hashlib
 import heapq
 import os
 import platform
+import shutil
+import stat
 import subprocess
 import tempfile
 from collections import OrderedDict
@@ -55,37 +58,64 @@ def build_kernel(out_dir: str, cc: str = CC, source: bytes | None = None) -> str
     path = os.path.join(out_dir, f"bounded_dijkstra-{tag}.so")
     if os.path.exists(path):
         return path
-    os.makedirs(out_dir, exist_ok=True)
-    with tempfile.TemporaryDirectory(dir=out_dir) as tmp:
-        src = os.path.join(tmp, _SOURCE)
-        with open(src, "wb") as f:
-            f.write(source)
-        cmd = [cc, *CFLAGS, "-o", os.path.join(tmp, "k.so"), src]
-        try:
-            subprocess.run(cmd, check=True, capture_output=True)
-        except FileNotFoundError as e:
-            raise ImportError(
-                f"the compiled bounded Dijkstra needs a C compiler: "
-                f"running {cc!r} failed ({e})") from None
-        except subprocess.CalledProcessError as e:
-            raise ImportError(
-                f"compiling {_SOURCE} failed: {' '.join(cmd)}\n"
-                f"{e.stderr.decode(errors='replace')}") from None
-        os.replace(os.path.join(tmp, "k.so"), path)
+    cmd = [cc, *CFLAGS, "-o", "k.so", _SOURCE]
+    try:
+        os.makedirs(out_dir, exist_ok=True)
+        with tempfile.TemporaryDirectory(dir=out_dir) as tmp:
+            with open(os.path.join(tmp, _SOURCE), "wb") as f:
+                f.write(source)
+            subprocess.run(cmd, check=True, capture_output=True, cwd=tmp)
+            os.replace(os.path.join(tmp, "k.so"), path)
+    except subprocess.CalledProcessError as e:
+        raise ImportError(
+            f"compiling {_SOURCE} failed: {' '.join(cmd)}\n"
+            f"{e.stderr.decode(errors='replace')}") from None
+    except OSError as e:  # no compiler, one that cannot run, or no room
+        raise ImportError(
+            f"building the compiled bounded Dijkstra in {out_dir} failed "
+            f"(it needs a working C compiler): "
+            f"running {cc!r} as {' '.join(cmd)} ({e})") from None
     return path
 
 
-def _build_dir() -> str:
-    """The package's ``__pycache__``, or a per-user directory under the temp
-    dir when the package is not writable (a zip on ``--py-files``)."""
-    here = os.path.join(os.path.dirname(__file__), "__pycache__")
+def _private(path: str) -> bool:
+    """True when ``path`` is a real directory (not a symlink) owned by this
+    user and writable by no one else, so no other local user can have put
+    a library in it."""
+    try:
+        st = os.lstat(path)
+    except OSError:
+        return False
+    return (stat.S_ISDIR(st.st_mode) and st.st_uid == os.getuid()
+            and st.st_mode & 0o022 == 0)
+
+
+def _build_dir(pkg_dir: str = os.path.dirname(__file__),
+               tmp_root: str | None = None) -> str:
+    """The package's ``__pycache__``; when the package is not writable (a
+    zip on ``--py-files``), a per-user directory under the temp dir, made
+    with mode 0700 and used only if it passes ``_private``. A shared temp
+    dir lets any local user create that name first, so when the check
+    fails the kernel goes to a fresh private directory of this process,
+    removed at exit."""
+    here = os.path.join(pkg_dir, "__pycache__")
     try:
         os.makedirs(here, exist_ok=True)
         if os.access(here, os.W_OK):
             return here
     except OSError:
         pass
-    return os.path.join(tempfile.gettempdir(), f"routers_spark-{os.getuid()}")
+    tmp_root = tmp_root or tempfile.gettempdir()
+    shared = os.path.join(tmp_root, f"routers_spark-{os.getuid()}")
+    try:
+        os.mkdir(shared, 0o700)
+    except OSError:
+        pass
+    if _private(shared):
+        return shared
+    own = tempfile.mkdtemp(prefix="routers_spark-", dir=tmp_root)
+    atexit.register(shutil.rmtree, own, True)
+    return own
 
 
 class _Graph(ctypes.Structure):
@@ -96,7 +126,13 @@ class _Graph(ctypes.Structure):
 
 
 def _load(path: str) -> ctypes.CDLL:
-    lib = ctypes.CDLL(path)
+    try:
+        lib = ctypes.CDLL(path)
+    except OSError as e:
+        raise ImportError(
+            f"loading the compiled bounded Dijkstra {path} failed ({e}); "
+            f"{os.path.dirname(path)} must allow mapping executable code "
+            f"(it must not be on a noexec mount)") from None
     lib.bd_settle.argtypes = [ctypes.POINTER(_Graph), ctypes.c_int64,
                               ctypes.c_double, ctypes.c_void_p]
     lib.bd_settle.restype = ctypes.c_int64

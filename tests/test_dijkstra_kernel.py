@@ -1,10 +1,12 @@
 """The compiled bounded Dijkstra against the Python oracle in
 ``dijkstra_oracle.py`` (same pop order, parents and depths), and the
-kernel's build: compiler errors, concurrent builds, source-keyed rebuilds."""
+kernel's build: compiler and loader errors, concurrent builds, source-keyed
+rebuilds and the private fallback build directory."""
 
 from __future__ import annotations
 
 import os
+import stat
 import subprocess
 import sys
 import time
@@ -14,7 +16,8 @@ import pandas as pd
 import pytest
 
 from routers_spark.fixtures.roads import grid_network
-from routers_spark.graph.dijkstra import _SOURCE, build_kernel, settle
+from routers_spark.graph.dijkstra import (
+    _SOURCE, _build_dir, _load, build_kernel, settle)
 from routers_spark.graph.packed import build_packed_graph
 
 from dijkstra_oracle import bounded_dijkstra_parents, pop_order
@@ -101,6 +104,65 @@ def test_empty_bound_and_bad_inputs(grid40):
 def test_missing_compiler_names_the_command(tmp_path):
     with pytest.raises(ImportError, match="no-such-cc-4f1d"):
         build_kernel(str(tmp_path), cc="no-such-cc-4f1d")
+
+
+def test_compiler_that_cannot_run_raises_import_error(tmp_path):
+    cc = tmp_path / "cc"
+    cc.write_text("not a program\n")
+    cc.chmod(0o644)
+    with pytest.raises(ImportError, match=str(cc)):
+        build_kernel(str(tmp_path / "out"), cc=str(cc))
+
+
+def test_unloadable_library_raises_import_error(tmp_path):
+    bad = tmp_path / "bounded_dijkstra-0.so"
+    bad.write_bytes(b"not a shared object")
+    with pytest.raises(ImportError, match=str(bad)):
+        _load(str(bad))
+
+
+def _zipped_package(tmp_path):
+    """A package directory inside a zip, as ``--py-files`` ships it: its
+    ``__pycache__`` cannot be made."""
+    z = tmp_path / "deps.zip"
+    z.write_bytes(b"PK")
+    return str(z / "routers_spark" / "graph")
+
+
+def test_fallback_dir_is_made_private_and_reused(tmp_path):
+    root = tmp_path / "tmp"
+    root.mkdir()
+    d = _build_dir(_zipped_package(tmp_path), str(root))
+    assert d == str(root / f"routers_spark-{os.getuid()}")
+    st = os.lstat(d)
+    assert stat.S_ISDIR(st.st_mode) and stat.S_IMODE(st.st_mode) == 0o700
+    assert _build_dir(_zipped_package(tmp_path), str(root)) == d
+
+
+@pytest.mark.parametrize("plant", ["other_owner", "group_writable",
+                                   "world_writable", "symlink"])
+def test_fallback_refuses_a_planted_dir(tmp_path, monkeypatch, plant):
+    root = tmp_path / "tmp"
+    root.mkdir()
+    me = os.getuid()
+    if plant == "other_owner":  # the shared name of a uid that is not ours
+        monkeypatch.setattr(os, "getuid", lambda: me + 1)
+    shared = root / f"routers_spark-{os.getuid()}"
+    if plant == "symlink":
+        target = tmp_path / "theirs"
+        target.mkdir(0o700)
+        shared.symlink_to(target)
+    else:
+        shared.mkdir(0o700)
+        shared.chmod({"other_owner": 0o700, "group_writable": 0o770,
+                      "world_writable": 0o777}[plant])
+    (shared / "bounded_dijkstra-0123456789abcdef.so").write_bytes(b"planted")
+    d = _build_dir(_zipped_package(tmp_path), str(root))
+    assert d != str(shared) and os.path.dirname(d) == str(root)
+    st = os.lstat(d)
+    assert stat.S_ISDIR(st.st_mode) and st.st_uid == me
+    assert stat.S_IMODE(st.st_mode) == 0o700
+    assert os.listdir(d) == []
 
 
 def test_source_change_rebuilds(tmp_path):

@@ -308,10 +308,3 @@ def route_nodes(graph, a_idx: int, b_idx: int) -> tuple[list[int], int] | None:
                 seq += 1
                 heapq.heappush(heap, (ncost, seq, nxt))
     return None
-
-
-def nearest_node(graph, lon: float, lat: float) -> int:
-    """X7 snap: planar-squared nearest node (composite/network.rs:155-165
-    min-by d2 semantics)."""
-    d2 = (graph.node_lon - lon) ** 2 + (graph.node_lat - lat) ** 2
-    return int(np.argmin(d2))

@@ -60,6 +60,27 @@ def _read_varint(buf, i: int) -> tuple[int, int]:
                      f"{_MAX_VARINT_BYTES} bytes")
 
 
+def _int64(v: int) -> int:
+    """A 64-bit varint value read as two's-complement int64 (proto
+    ``int64``: Way.id, PrimitiveBlock.lat_offset/lon_offset)."""
+    return v - (1 << 64) if v >> 63 else v
+
+
+def _enc_varint(v: int) -> bytes:
+    """One varint, ``v`` wrapped to 64 bits first (a negative int64 is
+    ten bytes, as protobuf encodes it)."""
+    out = bytearray()
+    v = int(v) & 0xFFFF_FFFF_FFFF_FFFF
+    while True:
+        b = v & 0x7F
+        v >>= 7
+        if v:
+            out.append(b | 0x80)
+        else:
+            out.append(b)
+            return bytes(out)
+
+
 def _fields(buf: bytes):
     """Iterate (field_no, wire_type, value) over one protobuf message.
     wt 0 → int value; wt 2 → memoryview of the sub-buffer; wt 1/5 → raw.
@@ -201,9 +222,9 @@ def _parse_block(data: bytes):
         elif fno == 17:
             gran = v
         elif fno == 19:
-            lat_off = v
+            lat_off = _int64(v)
         elif fno == 20:
-            lon_off = v
+            lon_off = _int64(v)
     return strings, groups, gran, lat_off, lon_off
 
 
@@ -283,7 +304,7 @@ def _decode_ways_block(data: bytes) -> pd.DataFrame:
                     refs = v2
             if wid is None:
                 continue
-            wid_c.append(int(wid))
+            wid_c.append(_int64(wid))
             keys_bufs.append(keys)
             vals_bufs.append(vals)
             refs_bufs.append(refs)
@@ -387,19 +408,6 @@ def osm_pbf_to_graph(spark: SparkSession, path: str):
 
 
 # ------------------------------------------------------------------ writer
-
-
-def _enc_varint(v: int) -> bytes:
-    out = bytearray()
-    v = int(v)
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
 
 
 def encode_varints_sized(vals: np.ndarray) -> tuple[bytes, np.ndarray]:

@@ -5,6 +5,9 @@ bit-compatible with the reference defaults.
                 (costing/util.rs:29-39)
   - emission:   calculate = exp(-sqrt(distance / 25 m))
                 (costing/default.rs:62-65)
+  - candidate:  projection of a point onto an edge segment, priced by the
+                emission (:func:`project_candidates`, X6 + M2; the one
+                kernel of both candidate paths)
 
 The transition heuristic (default.rs:137-163: sqrt(deviance * turn_cost *
 class_continuity), each factor clamped to [1e-6, 1], with the angular
@@ -21,6 +24,11 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from routers_spark.config import COST_PRECISION, DEFAULT_EMISSION_ERROR_M
+from routers_spark.functions.geo import (
+    haversine_m_np,
+    line_locate_point_np,
+    point_at_ratio_np,
+)
 
 _EPS = 1e-6
 
@@ -48,7 +56,6 @@ class CostingStrategies:
 
     emission: Strategy = field(default_factory=Strategy)
     transition: Strategy = field(default_factory=Strategy)
-
 
 
 def decay_u32(values: np.ndarray, zeta: float = 1.0,
@@ -80,3 +87,19 @@ def emission_cost_u32(distance_m: np.ndarray,
     else:
         value = np.exp(-np.sqrt(d / emission_error))
     return decay_u32(value, strategy.zeta, strategy.beta)
+
+
+def project_candidates(ax, ay, bx, by, lon, lat, emission_error: float,
+                       strategy: Strategy | None):
+    """(frac, px, py, dist_m, emission) of every (point, edge) pair, one
+    vectorized pass (X6 + M2): the point (lon, lat) is located on the
+    segment a→b (planar, scan.rs:22-44), the projection interpolated at
+    that fraction (a degenerate segment projects onto its start), and the
+    haversine distance to it priced by :func:`emission_cost_u32` under the
+    emission ``strategy``. ``frac`` keeps the NaN of a degenerate segment."""
+    frac = line_locate_point_np(ax, ay, bx, by, lon, lat)
+    px, py = point_at_ratio_np(ax, ay, bx, by,
+                               np.where(np.isnan(frac), 0.0, frac))
+    dist = haversine_m_np(px, py, lon, lat)
+    return frac, px, py, dist, emission_cost_u32(dist, emission_error,
+                                                 strategy)

@@ -37,12 +37,7 @@ from routers_spark.config import (
     DEFAULT_SEARCH_DISTANCE_M,
     NO_EDGE,
 )
-from routers_spark.functions.geo import (
-    haversine_m_np,
-    line_locate_point_np,
-    point_at_ratio_np,
-    square_box_np,
-)
+from routers_spark.functions.geo import square_box_np
 from routers_spark.graph.dijkstra import (
     GLOBAL_PREDICATE_CACHE,
     parent_path_pm,
@@ -94,17 +89,11 @@ def candidates_for_points(graph, lons, lats, search_distance: float,
         }
         return [dict(empty) for _ in per_point]
     rows = np.concatenate([r for r in per_point if len(r)])
-    p_lon = np.repeat(lons, counts)
-    p_lat = np.repeat(lats, counts)
-    ax, ay = graph.ax[rows], graph.ay[rows]
-    bx, by = graph.bx[rows], graph.by[rows]
-    frac = line_locate_point_np(ax, ay, bx, by, p_lon, p_lat)
-    frac_f = np.where(np.isnan(frac), 0.0, frac)
-    px, py = point_at_ratio_np(ax, ay, bx, by, frac_f)
-    dist = haversine_m_np(px, py, p_lon, p_lat)
-    estrat = (costing_strategies.emission
-              if costing_strategies is not None else None)
-    emission = costing.emission_cost_u32(dist, emission_error, estrat)
+    frac, px, py, dist, emission = costing.project_candidates(
+        graph.ax[rows], graph.ay[rows], graph.bx[rows], graph.by[rows],
+        np.repeat(lons, counts), np.repeat(lats, counts), emission_error,
+        costing_strategies.emission if costing_strategies is not None
+        else None)
     out = []
     off = 0
     for c in counts:
@@ -621,14 +610,13 @@ def match_trips(points_df, nodes_df, edges_df, opts: MatchOptions | None = None,
     # no driver collect (the no-driver-jobs guard stays green); the
     # checkpoint holds only the trips' region, KB-to-MB scale.
     pruned = bounded_persist(
-        admitted_edge_coords(
-            edges_df.select("edge_id", "src", "dst", "weight"), nodes_df,
-            points_df, pad_m=pad_m, cell_deg=0.02),
+        admitted_edge_coords(edges_df, nodes_df, points_df, pad_m=pad_m,
+                             cell_deg=0.02),
         "celljoin_edge_coords")
     cand = candidates_cell_join(
         points_df, nodes_df, edges_df,
         search_m=opts.search_distance, emission_error=opts.emission_error,
-        salt=salt, edge_coords=pruned,
+        salt=salt, edge_coords=pruned, costing_strategies=opts.costing,
     )
     # ONE signature aggregation per call, shared by the subgraph builder
     # (which derives (sig, cx, cy) from the carried cell arrays) and the

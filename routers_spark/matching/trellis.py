@@ -126,24 +126,3 @@ class Trellis:
             edge = int(self.trans[k][a, b]) if self.trans[k] is not None else INF_W
             cost = min(cost + edge + int(self.nodes[k + 1][b]), 0xFFFFFFFF)
         return cost
-
-
-def brute_solve(t: Trellis) -> tuple[list[int], int]:
-    """Exhaustive oracle (libs/routers_trellis/src/solver/brute.rs:31-96):
-    enumerate every full path, total = path_cost, pick min by
-    ``(cost, reversed path)`` — Viterbi breaks ties walking BACKWARD from the
-    lowest final node (viterbi.rs:105-120, 130-136), which is lexicographic
-    order over the reversed node sequence."""
-    import itertools
-
-    best_path, best_cost, best_key = None, None, None
-    for combo in itertools.product(*[range(w) for w in t.widths]):
-        cost = t.path_cost(list(combo))
-        if cost >= INF_W:
-            continue
-        key = (cost, tuple(reversed(combo)))
-        if best_key is None or key < best_key:
-            best_path, best_cost, best_key = list(combo), cost, key
-    if best_path is None:
-        raise Unreachable("brute: no path")
-    return best_path, best_cost

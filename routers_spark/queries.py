@@ -2246,7 +2246,7 @@ def _mvt_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from routers_spark.tiling.mvt import decode_layer, unzig
+    from routers_spark.io.osm_pbf import _fields, decode_packed_varints, unzigzag
     from routers_spark.tiling.pipeline import mvt_point_tiles
 
     register_views(spark, sf_dir)
@@ -2273,15 +2273,24 @@ def _mvt_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             rows = {k: [] for k in ("z", "x", "y", "n_points", "px", "py")}
             for r in pdf.itertuples(index=False):
-                layer = decode_layer(bytes(r.mvt))
-                assert layer["extent"] == 4096
-                for f in layer["features"]:
+                # Layer: extent = field 5, Feature = field 2; a feature's
+                # packed geometry (field 4) is [MoveTo, zig(px), zig(py)]
+                extent, geoms = None, []
+                for fno, _, v in _fields(bytes(r.mvt)):
+                    if fno == 5:
+                        extent = v
+                    elif fno == 2:
+                        geoms += [decode_packed_varints(g)
+                                  for f2, _, g in _fields(v) if f2 == 4]
+                assert extent == 4096
+                for g in geoms:
+                    px, py = unzigzag(g[1:3])
                     rows["z"].append(r.z)
                     rows["x"].append(r.x)
                     rows["y"].append(r.y)
                     rows["n_points"].append(r.n_points)
-                    rows["px"].append(unzig(f["geometry"][1]))
-                    rows["py"].append(unzig(f["geometry"][2]))
+                    rows["px"].append(int(px))
+                    rows["py"].append(int(py))
             yield pd.DataFrame(rows)
 
     out = tiles.mapInPandas(
@@ -3050,13 +3059,18 @@ def _knn_spark_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
         return f"WITH {ctes}\n{final}"
 
     # ev_g (events + guarantee bands) feeds the ring join AND the fallback
-    # anti-join: materialize it ONCE as the temp view ev_g, which the ring
-    # and fallback bodies then read. localCheckpoint, not persist — a
-    # persisted view referenced from two branches of one query trips a
-    # Spark analyzer internal error (DeduplicateRelations under InlineCTE
-    # on the cached subtree); a checkpointed LogicalRDD dedups cleanly.
-    evg = spark.sql(with_ctes(["ev", "ev_g"], "SELECT * FROM ev_g")) \
-        .localCheckpoint(eager=True)
+    # anti-join, ring_best the union AND the fallback anti-join:
+    # materialize each ONCE as a temp view the later bodies read.
+    # bounded_persist (a local checkpoint), not persist — a persisted view
+    # referenced from two branches of one query trips a Spark analyzer
+    # internal error (DeduplicateRelations under InlineCTE on the cached
+    # subtree), and a persisted frame stays in the CacheManager until
+    # someone unpersists it; a checkpointed LogicalRDD dedups cleanly and
+    # is reclaimed once its last consumer is gone.
+    from routers_spark.functions.cache import bounded_persist
+
+    evg = bounded_persist(
+        spark.sql(with_ctes(["ev", "ev_g"], "SELECT * FROM ev_g")), "knn_ev_g")
     evg.createOrReplaceTempView("ev_g")
 
     ring_best_agg = """
@@ -3066,8 +3080,8 @@ def _knn_spark_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
                min(g_m) AS g_m
         FROM ring GROUP BY event_id) r
   WHERE mn.d <= g_m"""
-    rb = spark.sql(with_ctes(
-        ["st", "nbr", "ring"], ring_best_agg)).persist()
+    rb = bounded_persist(spark.sql(with_ctes(
+        ["st", "nbr", "ring"], ring_best_agg)), "knn_ring_best")
     rb.createOrReplaceTempView("ring_best")
     # the fallback still needs the cheap st CTE; ev_g / ring_best inside
     # resolve to the materialized temp views

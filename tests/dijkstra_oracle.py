@@ -32,6 +32,14 @@ def _adj_for(graph):
     return a
 
 
+def nearest_node(graph, lon: float, lat: float) -> int:
+    """X7 snap oracle: planar-squared nearest node (composite/network.rs:
+    155-165 min-by d2 semantics), the brute ``argmin`` that
+    ``PackedGraph.nearest_nodes`` must equal."""
+    d2 = (graph.node_lon - lon) ** 2 + (graph.node_lat - lat) ** 2
+    return int(np.argmin(d2))
+
+
 def bounded_dijkstra_parents(
     graph, root_idx: int, threshold_cm: float = DIJKSTRA_BOUND_CM,
     access_mask: np.ndarray | None = None,

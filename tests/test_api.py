@@ -51,7 +51,7 @@ def test_nearest_points_is_min_node(spark, road_dfs):
     out = nearest_points(spark.createDataFrame(pts), nodes_df, edges_df) \
         .toPandas().sort_values("pid")
     g = build_packed_graph(nodes, edges)
-    from routers_spark.graph.dijkstra import nearest_node
+    from dijkstra_oracle import nearest_node
 
     for _, r in out.iterrows():
         ni = nearest_node(g, r.lon, r.lat)
@@ -126,7 +126,7 @@ def test_ring_nearest_matches_brute_everywhere(spark):
     grid, and far-outside query points (including exact-node hits), on a
     dense network — the scale path must be a pure drop-in."""
     from routers_spark.fixtures.roads import grid_network
-    from routers_spark.graph.dijkstra import nearest_node
+    from dijkstra_oracle import nearest_node
 
     nodes, edges = grid_network(25)
     g = build_packed_graph(nodes, edges)

@@ -1,6 +1,5 @@
-"""Network-build ops (S1-S3), the shard file sink (S5) and the
-hilbert-range tile scan (S8) — the remaining scan/source/sink operators as
-DataFrame algebra."""
+"""Network-build ops (S1-S3) and the hilbert-range tile scan (S8) — the
+remaining scan/source operators as DataFrame algebra."""
 
 from __future__ import annotations
 
@@ -66,27 +65,6 @@ def test_built_edges_route(spark, ways):
     b = int(np.searchsorted(g.node_ids, 13))
     path, cost = route_nodes(g, a, b)
     assert [int(g.node_ids[i]) for i in path] == [10, 11, 12, 13]
-
-
-def test_shard_sink_roundtrip(spark, tmp_path):
-    from routers_spark.fixtures.roads import grid_network
-    from routers_spark.graph.packed import build_packed_graph
-    from routers_spark.shard.partition import read_shard, write_shards
-
-    nodes, edges = grid_network(10)
-    path = str(tmp_path / "shards")
-    write_shards(spark.createDataFrame(edges), spark.createDataFrame(nodes),
-                 path, cell_deg=0.02, pad_m=500.0)
-    import os
-
-    parts = [d for d in os.listdir(path) if d.startswith("cx=")]
-    assert len(parts) >= 1  # partitioned layout on disk
-    # hydrate one shard and check it's a routable padded subgraph
-    sn, se = read_shard(spark, path, cx=int(parts[0][3:]),
-                        cy=int(os.listdir(f"{path}/{parts[0]}")[0][3:]))
-    assert len(se) > 0 and len(sn) > 0
-    g = build_packed_graph(sn, se[["edge_id", "src", "dst", "weight"]])
-    assert g.csr_indptr[-1] == len(se)
 
 
 def test_hilbert_range_scan_equals_membership(spark):

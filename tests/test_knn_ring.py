@@ -47,3 +47,16 @@ def test_knn_fallback_still_exercised(spark, sf_dir):
               FROM ring GROUP BY event_id)
         WHERE d <= g""").collect()[0]
     assert 0 < counts.resolved < counts.total
+
+
+def test_knn_materialized_leaves_no_cached_frame(spark, sf_dir):
+    """Repeated calls in one session leave nothing in the CacheManager:
+    ring_best is a local checkpoint like ev_g, not a persist() that no one
+    unpersists."""
+    from routers_spark.queries import _knn_spark_materialized
+
+    spark.catalog.clearCache()
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    for _ in range(2):
+        assert _knn_spark_materialized(spark, sf_dir).count() > 0
+        assert cache_manager.isEmpty()

@@ -16,7 +16,6 @@ from routers_spark.fixtures.roads import (
 )
 from routers_spark.graph.packed import build_packed_graph
 from routers_spark.graph.dijkstra import (
-    nearest_node,
     parent_path_pm,
     route_nodes,
 )
@@ -26,7 +25,11 @@ from routers_spark.matching.matcher import (
     solve_trip,
 )
 
-from dijkstra_oracle import bounded_dijkstra_parents, parent_map_from_dict
+from dijkstra_oracle import (
+    bounded_dijkstra_parents,
+    nearest_node,
+    parent_map_from_dict,
+)
 
 STRAIGHT_TRACK = [(-118.151, 34.1503), (-118.155, 34.1503),
                   (-118.160, 34.1503), (-118.165, 34.1503)]

@@ -341,3 +341,69 @@ def test_ways_block_batched_decode_parity(pbf_fixture):
                     assert list(got["tags"]) == list(ref["tags"])
                     n_ways += len(got)
             assert n_ways == expect_n
+
+
+# proto int64 -5 and -1,000,000,000 as varints: two's complement, 10 bytes
+_NEG5 = b"\xfb" + b"\xff" * 8 + b"\x01"
+_NEG1E9 = b"\x80\xec\x94\xa3\xfc" + b"\xff" * 4 + b"\x01"
+
+
+def _len_field(fno: int, payload: bytes) -> bytes:
+    """A hand-made length-delimited field (payload under 128 bytes)."""
+    assert len(payload) < 128
+    return bytes([fno << 3 | 2, len(payload)]) + payload
+
+
+def test_negative_way_id_decodes_as_int64():
+    """Way.id is int64: an editor-export id of -5 is -5, not 2**64 - 5
+    (which overflowed the int64 column and failed the whole blob)."""
+    from routers_spark.io.osm_pbf import _decode_ways_block
+
+    way = b"\x08" + _NEG5 + _len_field(8, b"\x02\x02")  # refs 1, 2
+    block = (_len_field(1, _len_field(1, b""))          # stringtable [""]
+             + _len_field(2, _len_field(3, way)))       # group of one way
+    out = _decode_ways_block(block)
+    assert out["way_id"].tolist() == [-5]
+    assert out["refs"].tolist() == [[1, 2]]
+
+
+def test_negative_lat_offset_decodes_as_int64():
+    """PrimitiveBlock.lat_offset is int64 (nanodegrees): -1e9 shifts every
+    latitude by -1°, it does not decode to 1.84e10°."""
+    from routers_spark.io.osm_pbf import _decode_nodes_block
+
+    dense = (_len_field(1, b"\x02")     # id 1
+             + _len_field(8, b"\x00")   # lat delta 0
+             + _len_field(9, b"\x00"))  # lon delta 0
+    block = (_len_field(2, _len_field(2, dense))
+             + b"\x98\x01" + _NEG1E9     # field 19 (lat_offset), varint
+             + b"\xa0\x01" + _NEG1E9)    # field 20 (lon_offset), varint
+    out = _decode_nodes_block(block)
+    assert out["node_id"].tolist() == [1]
+    np.testing.assert_allclose(out["lat"], [-1.0])
+    np.testing.assert_allclose(out["lon"], [-1.0])
+
+
+def test_negative_way_id_roundtrip(tmp_path):
+    """The writer encodes a negative id as the 10-byte int64 varint (it
+    used to loop forever on Python's negative right shift) and the reader
+    gets it back."""
+    from routers_spark.io.osm_pbf import _blob_payload, _decode_ways_block
+
+    assert _enc_varint(-5) == _NEG5
+    nodes = pd.DataFrame({"node_id": [1, 2], "lon": [-118.5, -118.49],
+                          "lat": [33.7, 33.7]})
+    ways = pd.DataFrame({"way_id": [-5, 7], "refs": [[1, 2], [2, 1]],
+                         "tags": [{"highway": "residential"}, {}]})
+    path = str(tmp_path / "neg.osm.pbf")
+    write_osm_pbf(path, nodes, ways)
+    desc = scan_blobs(path)
+    with open(path, "rb") as f:
+        raw = f.read()
+    got = pd.concat([
+        _decode_ways_block(_blob_payload(raw[o:o + s]))
+        for o, s in zip(desc["offset"], desc["size"])
+    ])
+    assert got["way_id"].tolist() == [-5, 7]
+    assert got["refs"].tolist() == [[1, 2], [2, 1]]
+    assert got["tags"].tolist() == [{"highway": "residential"}, {}]

@@ -11,14 +11,42 @@ from routers_spark.functions.cells import (
     slippy_offsets_np,
     slippy_xy_np,
 )
+from routers_spark.io.osm_pbf import _fields, decode_packed_varints, unzigzag
 from routers_spark.tiling.cluster import convex_hull, dbscan_numpy
-from routers_spark.tiling.mvt import (
-    MOVE_TO_1,
-    decode_layer,
-    encode_point_layer,
-    unzig,
-    zig,
-)
+from routers_spark.tiling.mvt import MOVE_TO_1, encode_point_layer, zig
+
+
+def decode_layer(blob: bytes) -> dict:
+    """An MVT layer as a dict, read with the package's protobuf reader
+    (``osm_pbf._fields``): Layer fields 15 version, 1 name, 2 feature,
+    3 key, 4 value, 5 extent; Feature fields 1 id, 2 packed tags, 3 type,
+    4 packed geometry."""
+    layer = {"features": [], "keys": [], "values": []}
+    for fno, _, v in _fields(blob):
+        if fno == 15:
+            layer["version"] = v
+        elif fno == 5:
+            layer["extent"] = v
+        elif fno == 1:
+            layer["name"] = bytes(v).decode()
+        elif fno == 3:
+            layer["keys"].append(bytes(v).decode())
+        elif fno == 4:
+            layer["values"].append(bytes(v))
+        elif fno == 2:
+            f = {"tags": []}
+            for f2, _, v2 in _fields(v):
+                if f2 in (1, 3):
+                    f["id" if f2 == 1 else "type"] = v2
+                elif f2 in (2, 4):
+                    f["tags" if f2 == 2 else "geometry"] = \
+                        decode_packed_varints(v2).tolist()
+            layer["features"].append(f)
+    return layer
+
+
+def unzig(v: int) -> int:
+    return int(unzigzag(np.array([v], dtype=np.uint64))[0])
 
 
 def test_zigzag_u32():

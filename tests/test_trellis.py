@@ -2,11 +2,32 @@
 libs/routers_trellis/tests/trellis.rs (random_trellis at :15-44, node-weight
 steering :196-229) with solver/brute.rs as the oracle."""
 
+import itertools
+
 import numpy as np
 import pytest
 
 from routers_spark.config import INF_W, NO_EDGE
-from routers_spark.matching.trellis import Trellis, Unreachable, brute_solve
+from routers_spark.matching.trellis import Trellis, Unreachable
+
+
+def brute_solve(t: Trellis) -> tuple[list[int], int]:
+    """Exhaustive oracle (libs/routers_trellis/src/solver/brute.rs:31-96):
+    enumerate every full path, total = path_cost, pick min by
+    ``(cost, reversed path)`` — Viterbi breaks ties walking BACKWARD from the
+    lowest final node (viterbi.rs:105-120, 130-136), which is lexicographic
+    order over the reversed node sequence."""
+    best_path, best_cost, best_key = None, None, None
+    for combo in itertools.product(*[range(w) for w in t.widths]):
+        cost = t.path_cost(list(combo))
+        if cost >= INF_W:
+            continue
+        key = (cost, tuple(reversed(combo)))
+        if best_key is None or key < best_key:
+            best_path, best_cost, best_key = list(combo), cost, key
+    if best_path is None:
+        raise Unreachable("brute: no path")
+    return best_path, best_cost
 
 
 def random_trellis(rng, layers, max_width, max_weight=1000, p_absent=0.0,

@@ -16,10 +16,14 @@ built with the system C compiler (``cc``) on first import, cached by a hash
 of its source and flags, and loaded through ``ctypes``. There is no Python
 fallback; without a compiler the import raises ``ImportError``. The pure
 Python version it must equal node for node lives in
-``tests/dijkstra_oracle.py``.
+``tests/dijkstra_oracle.py``. The same library holds the matcher's batched
+Viterbi (:func:`viterbi`), one call for every trip of a batch.
 
-Parent maps are memoised per root in a bounded LRU (8192 entries,
-cache.rs:19) — per executor process, shared across Arrow batches.
+Parent maps are kept in the predicate cache, one flat arena per graph and
+profile (:class:`PredicateCache`): every (root, leaf) lane of a weigh call
+is located with one searchsorted, and its misses are settled in one
+compiled call (:func:`settle_many`). It holds at most 8192 roots (cache.rs:19) per executor process,
+shared across Arrow batches, and empties wholesale when full.
 """
 
 from __future__ import annotations
@@ -34,7 +38,6 @@ import shutil
 import stat
 import subprocess
 import tempfile
-from collections import OrderedDict
 from importlib import resources
 
 import numpy as np
@@ -133,9 +136,13 @@ def _load(path: str) -> ctypes.CDLL:
             f"loading the compiled bounded Dijkstra {path} failed ({e}); "
             f"{os.path.dirname(path)} must allow mapping executable code "
             f"(it must not be on a noexec mount)") from None
-    lib.bd_settle.argtypes = [ctypes.POINTER(_Graph), ctypes.c_int64,
-                              ctypes.c_double, ctypes.c_void_p]
-    lib.bd_settle.restype = ctypes.c_int64
+    lib.bd_settle_many.argtypes = [
+        ctypes.POINTER(_Graph), ctypes.c_void_p, ctypes.c_int64,
+        ctypes.c_double] + [ctypes.c_void_p] * 4 + [ctypes.c_int64,
+                                                    ctypes.c_void_p]
+    lib.bd_settle_many.restype = ctypes.c_int64
+    lib.bd_viterbi.argtypes = [ctypes.c_int64] + [ctypes.c_void_p] * 10
+    lib.bd_viterbi.restype = None
     return lib
 
 
@@ -171,18 +178,24 @@ class _Kernel:
         return k
 
 
-def settle(graph, root_idx: int, threshold_cm: float = DIJKSTRA_BOUND_CM,
-           access_mask: np.ndarray | None = None):
-    """(nodes, parents, depths) of every node popped before the distance
-    cutoff, in pop order (PredicateCache::calculate, cache.rs:291-326).
-    Dense node indices; the root is its own parent at depth 0 (the
-    reference uses ``parent.unwrap_or_default()`` for the root).
+def settle_many(graph, roots, threshold_cm: float = DIJKSTRA_BOUND_CM,
+                access_mask: np.ndarray | None = None):
+    """Bounded Dijkstra from every root in ``roots``, in one compiled call:
+    ``(counts, nodes, parents, depths)``, root i's output being the
+    ``counts[i]`` entries after those of roots 0..i-1. Each root yields
+    every node popped before the distance cutoff, in pop order
+    (PredicateCache::calculate, cache.rs:291-326), as dense node indices;
+    the root is its own parent at depth 0 (the reference uses
+    ``parent.unwrap_or_default()`` for the root).
 
     ``access_mask`` (bool per edge row) gates every expansion on runtime
     accessibility, the successor filter of cache.rs:297-315."""
     kern = _Kernel.of(graph)
-    if not 0 <= root_idx < kern.struct.n_nodes:
-        raise IndexError(f"root {root_idx} outside 0..{kern.struct.n_nodes - 1}")
+    n = kern.struct.n_nodes
+    roots = np.ascontiguousarray(roots, dtype=np.int64)
+    bad = roots[(roots < 0) | (roots >= n)]
+    if len(bad):
+        raise IndexError(f"root {bad[0]} outside 0..{n - 1}")
     mask = None
     if access_mask is not None:
         access_mask = np.ascontiguousarray(access_mask, dtype=bool)
@@ -190,90 +203,199 @@ def settle(graph, root_idx: int, threshold_cm: float = DIJKSTRA_BOUND_CM,
             raise ValueError(f"access mask has {len(access_mask)} entries "
                              f"for {len(graph.edge_id)} edge rows")
         mask = access_mask.ctypes.data
-    k = _LIB.bd_settle(ctypes.byref(kern.struct), root_idx,
-                       float(threshold_cm), mask)
-    if k < 0:
-        raise MemoryError("bounded Dijkstra heap allocation failed")
-    out = kern.arrays[-3:]
-    return out[0][:k].copy(), out[1][:k].copy(), out[2][:k].copy()
+    counts = np.zeros(len(roots), dtype=np.int64)
+    out = [np.empty(64 * len(roots), dtype=np.int64) for _ in range(3)]
+    done = used = 0
+    while done < len(roots):
+        got = _LIB.bd_settle_many(
+            ctypes.byref(kern.struct), roots[done:].ctypes.data,
+            len(roots) - done, float(threshold_cm), mask,
+            *(a[used:].ctypes.data for a in out), len(out[0]) - used,
+            counts[done:].ctypes.data)
+        if got < 0:
+            raise MemoryError("bounded Dijkstra heap allocation failed")
+        used += int(counts[done:done + got].sum())
+        done += got
+        if done < len(roots):  # the next root's output did not fit
+            grown = [np.empty(2 * len(out[0]) + n, dtype=np.int64)
+                     for _ in range(3)]
+            for g, a in zip(grown, out):
+                g[:used] = a[:used]
+            out = grown
+    return (counts, *(a[:used] for a in out))
 
 
-class ParentMap:
-    """A root's parent map in vectorizable form: sorted node-id keys, parent
-    ids, LOCAL parent indices (gather-walkable without searchsorted) and
-    per-node depth (path length known up front). Built once per cache fill
-    from the kernel's pop-order arrays; the batched weigher walks thousands
-    of leaves against it with pure integer gathers."""
+class _Arena:
+    """The parent maps of one graph and profile, flat. Each root's settled
+    nodes occupy one slot: a run of entries sorted by node, keyed
+    ``slot * n_nodes + node`` so that the keys of all slots together are
+    one sorted array (slots are appended in order). ``loc`` is the entry
+    index of each node's parent (the root points at itself) and ``depth``
+    its edge count from the root, so a leaf's path is known up front and
+    walkable by integer gathers. Buffers grow by doubling."""
 
-    __slots__ = ("keys", "vals", "loc", "depth")
+    __slots__ = ("n_nodes", "slot_of", "n_slots", "size", "key", "node",
+                 "loc", "depth")
 
-    def __init__(self, nodes: np.ndarray, parents: np.ndarray,
-                 depth: np.ndarray):
-        order = np.argsort(nodes)
-        self.keys = nodes[order]
-        self.vals = parents[order]
-        self.depth = depth[order]
-        self.loc = np.searchsorted(self.keys, self.vals)
+    def __init__(self, n_nodes: int):
+        self.n_nodes = n_nodes
+        self.slot_of = np.full(n_nodes, -1, dtype=np.int64)
+        self.n_slots = 0
+        self.size = 0
+        self.key, self.node, self.loc, self.depth = (
+            np.empty(0, dtype=np.int64) for _ in range(4))
 
-    def locate(self, nodes: np.ndarray):
-        """(local_idx, member_mask) for an array of node ids."""
-        nk = len(self.keys)
-        pos = np.searchsorted(self.keys, nodes)
-        if nk == 0:
-            return pos, np.zeros(len(nodes), dtype=bool)
-        member = (pos < nk) & (self.keys[np.minimum(pos, nk - 1)] == nodes)
-        return pos, member
+    def append(self, roots: np.ndarray, counts: np.ndarray, node: np.ndarray,
+               parent: np.ndarray, depth: np.ndarray) -> None:
+        """Add one slot per root from :func:`settle_many`'s output."""
+        slots = np.arange(self.n_slots, self.n_slots + len(roots),
+                          dtype=np.int64)
+        base = np.repeat(slots * self.n_nodes, counts)
+        order = np.argsort(base + node)
+        node, base = node[order], base[order]
+        parent, depth = parent[order], depth[order]
+        size, add = self.size, len(node)
+        if size + add > len(self.key):
+            cap = max(2 * len(self.key), size + add)
+            for name in ("key", "node", "loc", "depth"):
+                grown = np.empty(cap, dtype=np.int64)
+                grown[:size] = getattr(self, name)[:size]
+                setattr(self, name, grown)
+        key = self.key[size:size + add]
+        key[:] = base + node
+        self.node[size:size + add] = node
+        self.loc[size:size + add] = np.searchsorted(key, base + parent) + size
+        self.depth[size:size + add] = depth
+        self.size += add
+        self.slot_of[roots] = slots
+        self.n_slots += len(roots)
 
-
-def parent_path_pm(pm: ParentMap, root: int, leaf: int) -> list[int] | None:
-    """Nodes root→leaf inclusive via the parent pointers
-    (expansion.rs:26-39), or None when leaf is outside the bound."""
-    nk = len(pm.keys)
-    i = int(np.searchsorted(pm.keys, leaf))
-    if i >= nk or pm.keys[i] != leaf:
-        return None
-    nodes = []
-    cur = i
-    while True:
-        nodes.append(int(pm.keys[cur]))
-        if pm.keys[cur] == root:
-            break
-        cur = int(pm.loc[cur])
-    nodes.reverse()
-    return nodes
+    def locate(self, roots: np.ndarray, leaves: np.ndarray):
+        """(entry, member) per (root, leaf) lane, every root present: the
+        leaf's entry in its root's slot, and whether the leaf settled
+        within the bound (``entry`` is 0 where it did not)."""
+        key = self.key[:self.size]
+        q = self.slot_of[roots] * self.n_nodes + leaves
+        pos = np.searchsorted(key, q)
+        member = pos < len(key)
+        member[member] = key[pos[member]] == q[member]
+        return np.where(member, pos, 0), member
 
 
 class PredicateCache:
-    """Bounded read-through LRU of parent maps keyed by root index
-    (cache.rs:19,113-122). One per executor process via module singleton.
+    """Read-through store of bounded-Dijkstra parent maps (cache.rs:19,
+    113-122), one flat :class:`_Arena` per (graph, profile); one per
+    executor process via the module singleton. ``profile`` is part of the
+    key when runtime accessibility gating is active (the reference's own
+    TODO at cache.rs:308-313 notes its profile-less key taints queries —
+    we fix it).
 
-    Entries are stored as sorted (keys, vals) index arrays so the batched
-    boundary weigher can walk many leaves per root with vectorized
-    searchsorted lookups. ``profile`` extends the key when runtime
-    accessibility gating is active (the reference's own TODO at
-    cache.rs:308-313 notes its profile-less key taints queries — we fix it)."""
+    :meth:`locate` answers every (root, leaf) lane of a call at once;
+    the roots it misses are settled in one :func:`settle_many` call, with
+    no Python per root. Eviction is wholesale: when a call's misses would
+    take the roots held across all arenas past ``capacity`` (8192,
+    cache.rs:19), every arena is dropped and the call's roots are settled
+    afresh. A call may hold more roots than
+    ``capacity`` on its own until the next call's misses arrive."""
 
     def __init__(self, capacity: int = PREDICATE_CACHE_CAPACITY,
                  threshold_cm: float = DIJKSTRA_BOUND_CM):
         self.capacity = capacity
         self.threshold_cm = threshold_cm
-        self._map: OrderedDict[tuple, ParentMap] = OrderedDict()
+        self._arenas: dict[tuple, _Arena] = {}
+        self._roots = 0
 
-    def query(self, graph, root_idx: int, profile=None) -> ParentMap:
-        key = (graph.uid, root_idx, profile)
-        hit = self._map.get(key)
-        if hit is not None:
-            self._map.move_to_end(key)
-            return hit
-        mask = graph.access_mask(profile) if profile is not None else None
-        entry = ParentMap(*settle(graph, root_idx, self.threshold_cm, mask))
-        self._map[key] = entry
-        if len(self._map) > self.capacity:
-            self._map.popitem(last=False)
-        return entry
+    def locate(self, graph, roots, leaves, profile=None):
+        """(arena, entry, member) for every (root, leaf) lane: see
+        :meth:`_Arena.locate`. Walk a lane with ``arena.loc`` from its
+        entry; ``arena.depth[entry] + 1`` nodes lead back to the root."""
+        roots = np.asarray(roots, dtype=np.int64)
+        key = (graph.uid, profile)
+        arena = self._arenas.get(key)
+        if arena is None:
+            arena = self._arenas[key] = _Arena(len(graph.node_ids))
+        miss = np.unique(roots[arena.slot_of[roots] < 0])
+        if len(miss):
+            if self._roots + len(miss) > self.capacity and self._roots:
+                self._arenas = {key: _Arena(len(graph.node_ids))}
+                self._roots = 0
+                arena = self._arenas[key]
+                miss = np.unique(roots)
+            mask = graph.access_mask(profile) if profile is not None else None
+            arena.append(miss, *settle_many(graph, miss, self.threshold_cm,
+                                            mask))
+            self._roots += len(miss)
+        leaves = np.asarray(leaves, dtype=np.int64)
+        return (arena, *arena.locate(roots, leaves))
+
+    def path(self, graph, root: int, leaf: int,
+             profile=None) -> list[int] | None:
+        """Nodes root→leaf inclusive via the parent pointers
+        (expansion.rs:26-39), or None when leaf is outside the bound."""
+        arena, entry, member = self.locate(graph, [root], [leaf], profile)
+        if not member[0]:
+            return None
+        cur = int(entry[0])
+        nodes = [int(arena.node[cur])]
+        for _ in range(int(arena.depth[cur])):
+            cur = int(arena.loc[cur])
+            nodes.append(int(arena.node[cur]))
+        nodes.reverse()
+        return nodes
 
 
 GLOBAL_PREDICATE_CACHE = PredicateCache()
+
+
+def viterbi(trip_off, layer_off, mat_off, weight, mats, solve):
+    """Viterbi and backtrack of many trips in one compiled call, with the
+    exact semantics of ``matching.trellis.Trellis`` (the pure-numpy solve
+    it must equal lives in ``tests/test_trellis.py``).
+
+    Trip t spans layers ``trip_off[t]:trip_off[t + 1]``; layer l spans
+    candidates ``layer_off[l]:layer_off[l + 1]`` with u32 node weights
+    ``weight``; the u32 matrix (NO_EDGE where absent) of the boundary from
+    layer l to l + 1 is row-major at ``mats[mat_off[l]:]``. Only the trips
+    where the bool array ``solve`` is set are solved. Returns
+    ``(status, path, cost, broken)``: per trip an int8 status — 0 matched,
+    1 disconnected (some boundary matrix is all NO_EDGE), 2 unreachable
+    (best final cost >= INF_W), -1 not solved; per layer the chosen
+    candidate's index within the layer; per trip the path cost; and per
+    layer whether the boundary it starts is all NO_EDGE (set for the
+    trips solved)."""
+    trip_off, layer_off, mat_off = (
+        np.ascontiguousarray(a, dtype=np.int64)
+        for a in (trip_off, layer_off, mat_off))
+    weight, mats = (np.ascontiguousarray(a, dtype=np.uint32)
+                    for a in (weight, mats))
+    n_trips, n_layers = len(trip_off) - 1, len(layer_off) - 1
+    solve = np.asarray(solve, dtype=bool)
+    # the kernel trusts its offsets: every layer and matrix a solved trip
+    # reads must lie inside the arrays
+    width = np.diff(layer_off)
+    ok = (len(solve) == n_trips and len(mat_off) >= n_layers
+          and trip_off[0] == 0 == layer_off[0] and trip_off[-1] == n_layers
+          and (np.diff(trip_off) >= 0).all() and (width >= 0).all()
+          and layer_off[-1] <= len(weight))
+    if ok:
+        lt = np.repeat(np.arange(n_trips), np.diff(trip_off))
+        read = solve[lt]
+        bl = np.flatnonzero(read[:-1] & (lt[:-1] == lt[1:]))
+        ok = not ((solve & (trip_off[1:] == trip_off[:-1])).any()
+                  or (width[read] == 0).any() or (mat_off[bl] < 0).any()
+                  or (mat_off[bl] + width[bl] * width[bl + 1]
+                      > len(mats)).any())
+    if not ok:
+        raise ValueError("viterbi: offsets disagree with the arrays")
+    status = np.where(solve, 0, -1).astype(np.int8)
+    path = np.zeros(n_layers, dtype=np.int64)
+    cost = np.zeros(n_trips, dtype=np.int64)
+    broken = np.zeros(n_layers, dtype=np.uint8)
+    dist = np.empty(int(layer_off[-1]), dtype=np.uint64)
+    _LIB.bd_viterbi(n_trips, *(a.ctypes.data for a in (
+        trip_off, layer_off, mat_off, weight, mats, dist, path, cost, status,
+        broken)))
+    return status, path, cost, broken.view(bool)
 
 
 def route_nodes(graph, a_idx: int, b_idx: int) -> tuple[list[int], int] | None:

@@ -28,6 +28,15 @@ from routers_spark.functions.geo import haversine_m_np
 _GRAPH_UID = itertools.count(1)
 
 
+def ragged_within(counts: np.ndarray) -> np.ndarray:
+    """0..count-1 per group, flattened (the repeat/cumsum offset trick)."""
+    total = int(counts.sum())
+    if total == 0:
+        return np.empty(0, dtype=np.int64)
+    starts = np.cumsum(counts) - counts
+    return np.arange(total, dtype=np.int64) - np.repeat(starts, counts)
+
+
 class PackedGraph:
     def __init__(
         self,
@@ -173,41 +182,60 @@ class PackedGraph:
             "uniq": uniq, "starts": starts,
             "ends": np.append(starts[1:], len(cell_sorted)),
             "edges": edge_sorted,
+            "min_x": min_x, "max_x": max_x, "min_y": min_y, "max_y": max_y,
         }
         return self
 
-    def box_query(self, min_lon, min_lat, max_lon, max_lat) -> np.ndarray:
-        """Edge rows whose bbox intersects the box (X2 search, index.rs:73-79),
-        in edge-row order (our canonical candidate order)."""
+    def box_query_many(self, min_lon, min_lat, max_lon, max_lat):
+        """Edge rows whose bbox intersects each of a batch of boxes (X2
+        search, index.rs:73-79), answered in one vectorized pass: every
+        box's covered cells, their buckets and the exact bbox refine.
+        Returns CSR ``(offsets, rows)``: box i's rows are
+        ``rows[offsets[i]:offsets[i + 1]]``, in ascending edge-row order
+        (our canonical candidate order). A box with a NaN or infinite
+        coordinate matches nothing."""
         ci = self._cell_index
-        cd = ci["cell_deg"]
-        cx0 = max(int(np.floor((min_lon - ci["x0"]) / cd)), 0)
-        cx1 = min(int(np.floor((max_lon - ci["x0"]) / cd)), ci["nx"] - 1)
-        cy0 = max(int(np.floor((min_lat - ci["y0"]) / cd)), 0)
-        cy1 = min(int(np.floor((max_lat - ci["y0"]) / cd)), ci["ny"] - 1)
-        if cx1 < cx0 or cy1 < cy0:
-            return np.empty(0, dtype=np.int64)
-        cells = [
-            cy * ci["nx"] + cx
-            for cy in range(cy0, cy1 + 1)
-            for cx in range(cx0, cx1 + 1)
-        ]
-        pos = np.searchsorted(ci["uniq"], cells)
-        chunks = []
-        for p, c in zip(pos, cells):
-            if p < len(ci["uniq"]) and ci["uniq"][p] == c:
-                chunks.append(ci["edges"][ci["starts"][p]:ci["ends"][p]])
-        if not chunks:
-            return np.empty(0, dtype=np.int64)
-        cand = np.unique(np.concatenate(chunks))
-        # exact bbox intersection refine
-        keep = (
-            (np.minimum(self.ax[cand], self.bx[cand]) <= max_lon)
-            & (np.maximum(self.ax[cand], self.bx[cand]) >= min_lon)
-            & (np.minimum(self.ay[cand], self.by[cand]) <= max_lat)
-            & (np.maximum(self.ay[cand], self.by[cand]) >= min_lat)
-        )
-        return cand[keep]
+        cd, nx, ny = ci["cell_deg"], ci["nx"], ci["ny"]
+        lo_x, lo_y, hi_x, hi_y = (np.asarray(v, dtype=np.float64)
+                                  for v in (min_lon, min_lat, max_lon, max_lat))
+        n = len(lo_x)
+        ok = (np.isfinite(lo_x) & np.isfinite(lo_y)
+              & np.isfinite(hi_x) & np.isfinite(hi_y))
+        # clip in float, so a far-off or non-finite box never reaches an
+        # integer cast (NaN would become cell 0 and invent candidates)
+        with np.errstate(invalid="ignore"):
+            fx0 = np.maximum(np.floor((lo_x - ci["x0"]) / cd), 0.0)
+            fx1 = np.minimum(np.floor((hi_x - ci["x0"]) / cd), nx - 1.0)
+            fy0 = np.maximum(np.floor((lo_y - ci["y0"]) / cd), 0.0)
+            fy1 = np.minimum(np.floor((hi_y - ci["y0"]) / cd), ny - 1.0)
+            ok &= (fx1 >= fx0) & (fy1 >= fy0)
+        cx0, cx1, cy0, cy1 = (np.where(ok, f, 0.0).astype(np.int64)
+                              for f in (fx0, fx1, fy0, fy1))
+        wx = cx1 - cx0 + 1
+        ncell = np.where(ok, wx * (cy1 - cy0 + 1), 0)
+        box = np.repeat(np.arange(n, dtype=np.int64), ncell)
+        k = ragged_within(ncell)
+        cell = (cy0[box] + k // wx[box]) * nx + cx0[box] + k % wx[box]
+        uniq = ci["uniq"]
+        pos = np.searchsorted(uniq, cell)
+        found = pos < len(uniq)
+        found[found] = uniq[pos[found]] == cell[found]
+        box, pos = box[found], pos[found]
+        nedge = ci["ends"][pos] - ci["starts"][pos]
+        box = np.repeat(box, nedge)
+        rows = ci["edges"][np.repeat(ci["starts"][pos], nedge)
+                           + ragged_within(nedge)]
+        # exact bbox intersection refine, then one sort dedups the edges a
+        # box meets in several cells and orders each box's rows
+        keep = ((ci["min_x"][rows] <= hi_x[box])
+                & (ci["max_x"][rows] >= lo_x[box])
+                & (ci["min_y"][rows] <= hi_y[box])
+                & (ci["max_y"][rows] >= lo_y[box]))
+        ne = np.int64(len(self.edge_id))
+        key = np.unique(box[keep] * ne + rows[keep])
+        offsets = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(np.bincount(key // ne, minlength=n), out=offsets[1:])
+        return offsets, key % ne
 
     # ------------------------------------------------------ nearest node 1-NN
 

@@ -8,11 +8,17 @@ Spark shape (SURVEY.md §3.1), two candidate paths:
   - celljoin: candidates come from a distributed cell-cover equi-join and
     a ``cogroup.applyInPandas`` per cover signature solves that group's
     trips against its shared padded subgraph
-Both feed one solve path (``_solve_trips``): boundary weighing (M4-M9)
-batched across consecutive trips, then per trip Viterbi (M11) and collapse
-(M15/16), with a process-wide predicate LRU (O4), emitting column arrays
-that become ONE frame per Arrow batch or cogroup group. No per-row Python
-at the DataFrame level.
+Both feed one solve path (``_solve_trips``) over a batch's trips in flat
+form (one candidate table with layer and trip offsets): one batched box
+query for the broadcast path's candidates, boundary weighing (M4-M9) in
+one ``weigh_flat`` call per chunk of consecutive trips, then ONE compiled
+Viterbi call (M11) for every trip of the batch, with a process-wide
+predicate cache (O4: one flat arena of parent maps per graph and profile,
+emptied wholesale past 8192 roots; a call's misses are settled in one
+compiled call). The discretized output is one gather per batch; collapse
+(M15/16) re-derives hops per matched trip only for the interpolated and
+gate_union outputs, which read them. ONE frame per Arrow batch or
+cogroup group, no per-row Python at the DataFrame level.
 
 Semantics are the reference batch facade
 (libs/routers_transition/src/match/implementation.rs:20-41 →
@@ -35,16 +41,11 @@ import pandas as pd
 from routers_spark.config import (
     DEFAULT_EMISSION_ERROR_M,
     DEFAULT_SEARCH_DISTANCE_M,
-    NO_EDGE,
 )
 from routers_spark.functions.geo import square_box_np
-from routers_spark.graph.dijkstra import (
-    GLOBAL_PREDICATE_CACHE,
-    parent_path_pm,
-)
+from routers_spark.graph.dijkstra import GLOBAL_PREDICATE_CACHE, viterbi
 from routers_spark.matching import costing
-from routers_spark.matching.trellis import Trellis, Unreachable
-from routers_spark.matching.weigh import weigh_boundaries
+from routers_spark.matching.weigh import weigh_boundaries, weigh_flat
 
 
 @dataclass
@@ -64,46 +65,41 @@ class MatchOptions:
 # -------------------------------------------------------- candidate search
 
 
-def candidates_for_points(graph, lons, lats, search_distance: float,
-                          emission_error: float,
-                          costing_strategies=None) -> list[dict]:
-    """M1/X6 candidate layers, one per point (the rayon par-iter analog,
-    generation/mod.rs:33-37): box queries per point, then ONE vectorized
-    projection/emission pass over every (point, candidate-edge) pair. A
-    layer holds one candidate per edge intersecting the point's square
-    box — projected position, distance, emission cost — in ascending edge
-    row order (stable; the trellis tie-breaks depend on it)."""
+def _candidate_table(graph, lons, lats, search_distance: float,
+                     emission_error: float, costing_strategies=None):
+    """M1/X6 candidates of every point in flat form: ``(offsets, cand)``,
+    point i's candidates at ``offsets[i]:offsets[i + 1]`` of each column
+    of ``cand`` (edge_row, frac, px, py, dist_m, emission). One batched
+    box query over all points' square boxes, then ONE vectorized
+    projection/emission pass over every (point, candidate-edge) pair (the
+    rayon par-iter analog, generation/mod.rs:33-37). A point has one
+    candidate per edge intersecting its square box, in ascending edge row
+    order (stable; the trellis tie-breaks depend on it); a point with a
+    NaN or infinite coordinate has none."""
     lons = np.asarray(lons, dtype=np.float64)
     lats = np.asarray(lats, dtype=np.float64)
-    min_lon, min_lat, max_lon, max_lat = square_box_np(lons, lats, search_distance)
-    per_point = [
-        graph.box_query(min_lon[i], min_lat[i], max_lon[i], max_lat[i])
-        for i in range(len(lons))
-    ]
-    counts = np.array([len(r) for r in per_point])
-    if counts.sum() == 0:
-        empty = {
-            "edge_row": np.empty(0, dtype=np.int64), "frac": np.empty(0),
-            "px": np.empty(0), "py": np.empty(0), "dist_m": np.empty(0),
-            "emission": np.empty(0, dtype=np.uint32),
-        }
-        return [dict(empty) for _ in per_point]
-    rows = np.concatenate([r for r in per_point if len(r)])
+    with np.errstate(invalid="ignore"):
+        boxes = square_box_np(lons, lats, search_distance)
+    off, rows = graph.box_query_many(*boxes)
+    counts = np.diff(off)
     frac, px, py, dist, emission = costing.project_candidates(
         graph.ax[rows], graph.ay[rows], graph.bx[rows], graph.by[rows],
         np.repeat(lons, counts), np.repeat(lats, counts), emission_error,
         costing_strategies.emission if costing_strategies is not None
         else None)
-    out = []
-    off = 0
-    for c in counts:
-        sl = slice(off, off + c)
-        out.append({
-            "edge_row": rows[sl], "frac": frac[sl], "px": px[sl],
-            "py": py[sl], "dist_m": dist[sl], "emission": emission[sl],
-        })
-        off += c
-    return out
+    return off, {"edge_row": rows, "frac": frac, "px": px, "py": py,
+                 "dist_m": dist, "emission": emission}
+
+
+def candidates_for_points(graph, lons, lats, search_distance: float,
+                          emission_error: float,
+                          costing_strategies=None) -> list[dict]:
+    """M1/X6 candidate layers, one per point: :func:`_candidate_table`
+    cut into one dict of columns per point (views of the flat table)."""
+    off, cand = _candidate_table(graph, lons, lats, search_distance,
+                                 emission_error, costing_strategies)
+    return [{k: v[a:b] for k, v in cand.items()}
+            for a, b in zip(off[:-1].tolist(), off[1:].tolist())]
 
 
 # ------------------------------------------------------------ transitions
@@ -123,10 +119,8 @@ def reach(graph, cache, src: dict, tgt: dict,
         if src["frac"] <= tgt["frac"]:
             return ("direct", [])
         # same-edge backtrack falls through to routing
-    root = int(graph.edge_dst[src["edge_row"]])
-    leaf = int(graph.edge_src[tgt["edge_row"]])
-    pm = cache.query(graph, root, profile)
-    nodes = parent_path_pm(pm, root, leaf)
+    nodes = cache.path(graph, int(graph.edge_dst[src["edge_row"]]),
+                       int(graph.edge_src[tgt["edge_row"]]), profile)
     if nodes is None:
         return None
     path_rows = []
@@ -153,10 +147,12 @@ def solve_trip(graph, layers: list[dict], opts: MatchOptions,
                boundary_keys: list | None = None,
                boundary_cache: dict | None = None) -> dict:
     """Weigh + solve + collapse one trip. Returns
-    {status, breaks, path, cost, hops, trellis} where path[i] is the chosen
+    {status, breaks, path, cost, hops, mats} where path[i] is the chosen
     candidate index per layer, hops[i] the (resolution, path_rows) of
-    boundary i, and trellis the solved Trellis (reused for convergence
-    queries by the streaming matcher — one weigh per micro-batch, not two).
+    boundary i, and mats the weighed boundary matrices (the streaming
+    matcher builds its convergence trellis from them — one weigh per
+    micro-batch, not two). The solve is the batched compiled Viterbi of
+    ``_solve_trips``, called with one trip.
 
     R2 incremental weighing (weigh/mod.rs:30-34, 160-168: only PENDING
     boundaries recomputed): with ``boundary_keys`` + ``boundary_cache``,
@@ -175,44 +171,34 @@ def solve_trip(graph, layers: list[dict], opts: MatchOptions,
                              fanout=opts.selective_fanout,
                              profile=opts.profile, costing=opts.costing)
     boundary_cache.update(zip([boundary_keys[k] for k in todo], fresh))
-    return _viterbi_collapse(
-        graph, layers, [boundary_cache[boundary_keys[k]] for k in range(nb)],
-        opts)
+    mats = [boundary_cache[boundary_keys[k]] for k in range(nb)]
 
-
-def _unsolved(status: str, breaks: list, trellis=None) -> dict:
-    return {"status": status, "breaks": breaks, "path": None, "cost": None,
-            "hops": None, "trellis": trellis}
-
-
-def _viterbi_collapse(graph, layers: list[dict], mats: list[np.ndarray],
-                      opts: MatchOptions) -> dict:
-    """Viterbi over a trip's weighed boundary matrices, then collapse: the
-    second half of ``solve_trip``, shared with the batched ``_solve_trips``."""
-    t = Trellis([len(layers[0]["edge_row"])])
-    t.fill_nodes(0, layers[0]["emission"])
-    for layer in layers[1:]:
-        t.add_layer(len(layer["edge_row"]), layer["emission"])
-    for k, mat in enumerate(mats):
-        if not np.all(mat == np.uint32(NO_EDGE)):
-            t.fill_transition(k, mat)
-
-    breaks = t.disconnections()
-    if breaks:
-        return _unsolved("disconnected", breaks, t)
-    try:
-        path, cost = t.solve()
-    except Unreachable:
-        return _unsolved("unreachable", [], t)
-
+    layer_off = np.zeros(nb + 2, dtype=np.int64)
+    np.cumsum([len(l["edge_row"]) for l in layers], out=layer_off[1:])
+    mat_off = np.zeros(nb + 1, dtype=np.int64)
+    np.cumsum([m.size for m in mats], out=mat_off[1:])
+    status, path, cost, broken = viterbi(
+        [0, nb + 1], layer_off, mat_off,
+        np.concatenate([l["emission"] for l in layers]),
+        np.concatenate([m.ravel() for m in mats] + [np.empty(0, np.uint32)]),
+        [True])
+    if status[0] == 1:
+        return _unsolved("disconnected", np.flatnonzero(broken[:nb]).tolist(),
+                         mats)
+    if status[0] == 2:
+        return _unsolved("unreachable", [], mats)
+    path = path.tolist()
     # collapse: re-derive chosen hops from the warm cache (entity.rs:337-358)
-    hops = []
-    for k in range(len(path) - 1):
-        hops.append(reach(graph, GLOBAL_PREDICATE_CACHE,
-                          _cand(layers[k], path[k]),
-                          _cand(layers[k + 1], path[k + 1]), opts.profile))
-    return {"status": "matched", "breaks": [], "path": path, "cost": cost,
-            "hops": hops, "trellis": t}
+    hops = [reach(graph, GLOBAL_PREDICATE_CACHE, _cand(layers[k], path[k]),
+                  _cand(layers[k + 1], path[k + 1]), opts.profile)
+            for k in range(nb)]
+    return {"status": "matched", "breaks": [], "path": path,
+            "cost": int(cost[0]), "hops": hops, "mats": mats}
+
+
+def _unsolved(status: str, breaks: list, mats=None) -> dict:
+    return {"status": status, "breaks": breaks, "path": None, "cost": None,
+            "hops": None, "mats": mats}
 
 
 # --------------------------------------------------------------- Spark API
@@ -244,180 +230,233 @@ GATE_UNION_SCHEMA = (
 
 
 # candidate pairs (the sum of m x n over boundaries) past which _solve_trips
-# cuts a weigh_boundaries call at the next trip edge: ~90 boundaries of the
+# cuts a weigh_flat call at the next trip edge: ~90 boundaries of the
 # grid benchmark's trips. One call per whole Arrow batch measured ~10% less
 # kernel time but more than doubled each worker's peak RSS.
 WEIGH_PAIR_BUDGET = 6_000
 
 
+@dataclass
+class _Trips:
+    """A batch of trips in flat form. Trip t spans layers
+    ``trip_off[t]:trip_off[t + 1]``; layer l is one observation (``seq[l]``,
+    seq order within the trip) and spans candidates
+    ``layer_off[l]:layer_off[l + 1]`` of the columns in ``cand`` (as
+    :func:`_candidate_table` makes them), in ascending edge-row order."""
+
+    trip_id: np.ndarray
+    trip_off: np.ndarray
+    seq: np.ndarray
+    layer_off: np.ndarray
+    cand: dict
+
+
 def _trip_bounds(tid) -> np.ndarray:
-    """Start offsets of each trip's contiguous rows, plus the end."""
+    """Start offsets of each run of equal values, plus the end."""
     cuts = np.nonzero(tid[1:] != tid[:-1])[0] + 1
     return np.concatenate([[0], cuts, [len(tid)]]).astype(np.int64)
 
 
-def _broadcast_trips(tid, seq, lon, lat, graph, opts: MatchOptions):
-    """Broadcast path: (trip_id, seqs, layers) per trip of trip-contiguous
-    raw point rows, with ONE candidate search over the whole batch against
-    the executor-resident graph. Rows are seq-sorted within each trip
-    first (a stable sort, so equal seqs keep their arrival order)."""
-    if not len(tid):
-        return []
-    bounds = _trip_bounds(tid)
+def _broadcast_trips(tid, seq, lon, lat, graph, opts: MatchOptions) -> _Trips:
+    """Broadcast path: the trips of trip-contiguous raw point rows, with
+    ONE candidate search over the whole batch against the
+    executor-resident graph; one layer per point. Rows are seq-sorted
+    within each trip first (a stable sort, so equal seqs keep their
+    arrival order)."""
+    bounds = _trip_bounds(tid) if len(tid) else np.zeros(1, dtype=np.int64)
     trip_of = np.repeat(np.arange(len(bounds) - 1), np.diff(bounds))
     o = np.lexsort((seq, trip_of))
     seq, lon, lat = seq[o], lon[o], lat[o]
-    layers = candidates_for_points(graph, lon, lat, opts.search_distance,
-                                   opts.emission_error, opts.costing)
-    return [(tid[s], seq[s:e], layers[s:e])
-            for s, e in zip(bounds[:-1], bounds[1:])]
+    layer_off, cand = _candidate_table(graph, lon, lat, opts.search_distance,
+                                       opts.emission_error, opts.costing)
+    return _Trips(tid[bounds[:-1]], bounds, seq, layer_off, cand)
 
 
-def _candidate_trips(tid, seq, er, frac, px, py, dist, emis):
-    """Celljoin path: (trip_id, seqs, layers) per trip of pre-joined
-    candidate column arrays sorted by (trip_id, seq, edge_row).
-    edge_row == -1 marks an unanchored point (empty layer)."""
-    if not len(tid):
-        return
-    bounds = _trip_bounds(tid)
-    for s, e in zip(bounds[:-1], bounds[1:]):
-        sb = s + _trip_bounds(seq[s:e])
-        layers = []
-        for a, b in zip(sb[:-1], sb[1:]):
-            m = er[a:b] >= 0
-            layers.append({
-                "edge_row": er[a:b][m],
-                "frac": frac[a:b][m],
-                "px": px[a:b][m], "py": py[a:b][m],
-                "dist_m": dist[a:b][m],
-                "emission": emis[a:b][m].astype(np.uint32),
-            })
-        yield tid[s], seq[sb[:-1]], layers
+def _candidate_trips(tid, seq, er, frac, px, py, dist, emis) -> _Trips:
+    """Celljoin path: the trips of pre-joined candidate column arrays
+    sorted by (trip_id, seq, edge_row), one layer per (trip_id, seq) run.
+    edge_row == -1 marks an unanchored point: its run becomes an empty
+    layer (markers beside real candidates are dropped)."""
+    new_layer = np.ones(len(tid), dtype=bool)
+    new_layer[1:] = (tid[1:] != tid[:-1]) | (seq[1:] != seq[:-1])
+    layer_start = np.flatnonzero(new_layer)
+    layer_of = np.cumsum(new_layer) - 1
+    real = er >= 0
+    layer_off = np.zeros(len(layer_start) + 1, dtype=np.int64)
+    np.cumsum(np.bincount(layer_of[real], minlength=len(layer_start)),
+              out=layer_off[1:])
+    ltid = tid[layer_start]
+    trip_off = (_trip_bounds(ltid) if len(ltid)
+                else np.zeros(1, dtype=np.int64))
+    cand = {"edge_row": er[real], "frac": frac[real], "px": px[real],
+            "py": py[real], "dist_m": dist[real],
+            "emission": emis[real].astype(np.uint32)}
+    return _Trips(ltid[trip_off[:-1]], trip_off, seq[layer_start], layer_off,
+                  cand)
 
 
-def _solve_trips(graph, trips, opts: MatchOptions,
+def _drop_unanchored(t: _Trips) -> _Trips:
+    """Streaming semantics (bin/matcher.rs:143-157): a point with no
+    candidate is dropped from its trip instead of failing it."""
+    keep = np.diff(t.layer_off) > 0
+    layer_trip = np.repeat(np.arange(len(t.trip_id)), np.diff(t.trip_off))
+    trip_off = np.zeros(len(t.trip_off), dtype=np.int64)
+    np.cumsum(np.bincount(layer_trip[keep], minlength=len(t.trip_id)),
+              out=trip_off[1:])
+    return _Trips(t.trip_id, trip_off, t.seq[keep],
+                  np.append(0, t.layer_off[1:][keep]), t.cand)
+
+
+def _solve_trips(graph, trips: _Trips, opts: MatchOptions,
                  output: str) -> pd.DataFrame:
-    """The one solve path of both candidate paths and every output mode.
-    ``trips`` yields (trip_id, seqs, layers). Unanchored layers are dropped
-    first under streaming semantics. The boundaries of consecutive
-    anchored trips are weighed together, one ``weigh_boundaries`` call per
-    ~``WEIGH_PAIR_BUDGET`` candidate pairs, then every trip runs Viterbi
-    and collapse and becomes column arrays: its output rows, or a status
-    row when it does not match. ONE frame is built from all of them, in
-    trip order (per-trip frames + concat measured ~25% of warm broadcast
-    solver wall); it is seeded with the output's typed empty columns, so
-    no trips still yields a schema-typed frame."""
+    """The one solve path of both candidate paths and every output mode,
+    over a batch of trips in flat form. A trip with no layer, or an empty
+    layer, is unanchored (empty layers are dropped first under streaming
+    semantics). The boundaries of consecutive anchored trips are weighed
+    together, one ``weigh_flat`` call per ~``WEIGH_PAIR_BUDGET``
+    candidate pairs over the batch's candidate table; then ONE compiled
+    Viterbi call solves every anchored trip of the batch over the
+    concatenated matrices, and the output is built for the whole batch
+    at once, in trip order: a matched trip's rows, or a status row."""
+    t = _drop_unanchored(trips) if opts.drop_unanchored else trips
+    n_trips = len(t.trip_id)
+    n_layers = np.diff(t.trip_off)
+    width = np.diff(t.layer_off)
+    layer_trip = np.repeat(np.arange(n_trips), n_layers)
+    anchored = (n_layers > 0) & (np.bincount(
+        layer_trip[width == 0], minlength=n_trips) == 0)
+
+    # boundaries: every layer but the last of an anchored trip starts one
+    last = np.zeros(len(width), dtype=bool)
+    last[t.trip_off[1:][n_layers > 0] - 1] = True
+    bl = np.flatnonzero(~last & anchored[layer_trip])
+    trip_pairs = np.bincount(layer_trip[bl], weights=width[bl] * width[bl + 1],
+                             minlength=n_trips)
+    csum = np.cumsum(trip_pairs)
+    mat_off = np.zeros(len(width), dtype=np.int64)
+    parts = []
+    total = 0
+    t0 = b0 = 0
+    while t0 < n_trips:
+        base = csum[t0 - 1] if t0 else 0.0
+        t1 = min(int(np.searchsorted(csum, base + WEIGH_PAIR_BUDGET)) + 1,
+                 n_trips)
+        b1 = int(np.searchsorted(bl, t.trip_off[t1]))
+        if b1 > b0:
+            lo = t.layer_off[bl[b0:b1]]
+            flat, moff = weigh_flat(
+                graph, GLOBAL_PREDICATE_CACHE, t.cand["edge_row"],
+                t.cand["frac"], t.cand["px"], t.cand["py"], lo,
+                t.layer_off[bl[b0:b1] + 1], t.layer_off[bl[b0:b1] + 2],
+                fanout=opts.selective_fanout, profile=opts.profile,
+                costing=opts.costing)
+            mat_off[bl[b0:b1]] = moff[:-1] + total
+            total += int(moff[-1])
+            parts.append(flat)
+        t0, b0 = t1, b1
+    status, path, cost, _ = viterbi(
+        t.trip_off, t.layer_off, mat_off, t.cand["emission"],
+        np.concatenate(parts + [np.empty(0, dtype=np.uint32)]), anchored)
+    # viterbi's codes: 0 matched, 1 disconnected, 2 unreachable, -1 not
+    # solved (unanchored)
+    status = np.array(["matched", "disconnected", "unreachable",
+                       "unanchored"], dtype=object)[status]
+    # the chosen candidate of every layer, as a row of the candidate table
+    sel = t.layer_off[:-1] + path
+    if output == "discretized":
+        return pd.DataFrame(_discretized_cols(t, graph, status, sel, cost))
+
     acc = {k: [v[:0]] for k, v in _status_cols("", "", output).items()}
-    chunk: list[tuple] = []  # (trip_id, seqs, layers, status or None)
-
-    def flush():
-        boundaries = [b for _, _, layers, st in chunk if st is None
-                      for b in zip(layers, layers[1:])]
-        mats = weigh_boundaries(
-            graph, GLOBAL_PREDICATE_CACHE, boundaries,
-            fanout=opts.selective_fanout, profile=opts.profile,
-            costing=opts.costing) if boundaries else []
-        off = 0
-        for trip_id, seqs, layers, status in chunk:
-            if status is None:
-                nb = len(layers) - 1
-                result = _viterbi_collapse(graph, layers, mats[off:off + nb],
-                                           opts)
-                off += nb
-                status = result["status"]
-            cols = (_emit_cols(trip_id, seqs, layers, result, graph, output)
-                    if status == "matched"
-                    else _status_cols(trip_id, status, output))
-            for k, v in cols.items():
-                acc[k].append(v)
-        chunk.clear()
-
-    pairs = 0
-    for trip_id, seqs, layers in trips:
-        if opts.drop_unanchored:
-            keep = [i for i, l in enumerate(layers) if len(l["edge_row"]) > 0]
-            layers = [layers[i] for i in keep]
-            seqs = seqs[keep]
-        widths = [len(l["edge_row"]) for l in layers]
-        if not layers or 0 in widths:
-            chunk.append((trip_id, seqs, layers, "unanchored"))
-            continue
-        chunk.append((trip_id, seqs, layers, None))
-        pairs += sum(a * b for a, b in zip(widths, widths[1:]))
-        if pairs >= WEIGH_PAIR_BUDGET:
-            flush()
-            pairs = 0
-    flush()
+    for k in range(n_trips):
+        if status[k] == "matched":
+            ls = slice(t.trip_off[k], t.trip_off[k + 1])
+            cols = _emit_cols(t.trip_id[k], t.seq[ls], t.cand, sel[ls],
+                              int(cost[k]), graph, opts, output)
+        else:
+            cols = _status_cols(t.trip_id[k], status[k], output)
+        for name, v in cols.items():
+            acc[name].append(v)
     return pd.DataFrame({k: np.concatenate(v) for k, v in acc.items()})
 
 
-def _routed_elems(layers, path, hops, graph) -> list[tuple]:
+def _discretized_cols(t: _Trips, graph, status, sel, cost) -> dict:
+    """The discretized output of a whole batch with one gather: a matched
+    trip's layers become its rows, any other trip one status row."""
+    matched = status == "matched"
+    n_layers = np.diff(t.trip_off)
+    rows = np.where(matched, n_layers, 1)
+    on = np.repeat(matched, rows)  # output rows that are matched layers
+    ml = np.flatnonzero(np.repeat(matched, n_layers))  # their layers
+    c = sel[ml]
+
+    def col(values, fill, dtype):
+        out = np.full(len(on), fill, dtype=dtype)
+        out[on] = values
+        return out
+
+    return {
+        "trip_id": np.repeat(t.trip_id, rows).astype(object),
+        "seq": col(t.seq[ml], -1, np.int32),
+        # no graph at all when nothing matched in a cogroup without edges
+        "edge_id": col(graph.edge_id[t.cand["edge_row"][c]], -1, np.int64)
+        if len(c) else np.full(len(on), -1, dtype=np.int64),
+        "matched_lon": col(t.cand["px"][c], np.nan, np.float64),
+        "matched_lat": col(t.cand["py"][c], np.nan, np.float64),
+        "frac": col(t.cand["frac"][c], np.nan, np.float64),
+        "dist_m": col(t.cand["dist_m"][c], np.nan, np.float64),
+        "emission": col(t.cand["emission"][c], -1, np.int64),
+        "trip_cost": np.repeat(np.where(matched, cost, -1), rows),
+        "status": np.repeat(status, rows),
+    }
+
+
+def _routed_elems(graph, cand: dict, sel, hops) -> list[tuple]:
     """The interpolated RoutedPath element list (candidate/route.rs:46-141)
     with consecutive-duplicate dedup (route.rs:131) — shared by the
-    'interpolated' and 'gate_union' emitters. Returns
+    'interpolated' and 'gate_union' emitters. ``sel`` holds the chosen
+    candidate's row of ``cand`` per layer. Returns
     [(lon, lat, edge_id, kind), ...]."""
     elems: list[tuple[float, float, int, str]] = []
 
     def add(lon, lat, edge_id, kind):
         elems.append((float(lon), float(lat), int(edge_id), kind))
 
-    first_row = layers[0]["edge_row"][path[0]]
+    er, px, py = cand["edge_row"], cand["px"], cand["py"]
+    first_row = er[sel[0]]
     add(graph.ax[first_row], graph.ay[first_row], graph.edge_id[first_row],
         "edge_source")
-    for k in range(len(path) - 1):
-        cur_row = layers[k]["edge_row"][path[k]]
-        add(layers[k]["px"][path[k]], layers[k]["py"][path[k]],
-            graph.edge_id[cur_row], "candidate")
+    for k in range(len(sel) - 1):
+        cur_row = er[sel[k]]
+        add(px[sel[k]], py[sel[k]], graph.edge_id[cur_row], "candidate")
         resolution, path_rows = hops[k]
         if resolution == "standard":
             add(graph.bx[cur_row], graph.by[cur_row], graph.edge_id[cur_row],
                 "edge_target")
             for e in path_rows:
                 add(graph.ax[e], graph.ay[e], graph.edge_id[e], "bridge")
-            nxt_row = layers[k + 1]["edge_row"][path[k + 1]]
+            nxt_row = er[sel[k + 1]]
             add(graph.ax[nxt_row], graph.ay[nxt_row], graph.edge_id[nxt_row],
                 "edge_source")
-    last_row = layers[-1]["edge_row"][path[-1]]
-    add(layers[-1]["px"][path[-1]], layers[-1]["py"][path[-1]],
-        graph.edge_id[last_row], "candidate")
+    last_row = er[sel[-1]]
+    add(px[sel[-1]], py[sel[-1]], graph.edge_id[last_row], "candidate")
 
     # dedup consecutive identical points (route.rs:131)
     return [e for i, e in enumerate(elems)
             if i == 0 or (e[0], e[1]) != (elems[i - 1][0], elems[i - 1][1])]
 
 
-def _emit_cols(trip_id: str, seqs, layers, result, graph,
-               output: str) -> dict:
-    path, cost, hops = result["path"], result["cost"], result["hops"]
-    if output == "discretized":
-        n = len(path)
-        rows_sel = np.array([layers[k]["edge_row"][path[k]] for k in range(n)],
-                            dtype=np.int64)
-        return {
-            "trip_id": np.full(n, trip_id, dtype=object),
-            "seq": np.asarray(seqs, dtype=np.int32),
-            "edge_id": graph.edge_id[rows_sel].astype(np.int64),
-            "matched_lon": np.array(
-                [layers[k]["px"][path[k]] for k in range(n)]),
-            "matched_lat": np.array(
-                [layers[k]["py"][path[k]] for k in range(n)]),
-            "frac": np.array(
-                [layers[k]["frac"][path[k]] for k in range(n)]),
-            "dist_m": np.array(
-                [layers[k]["dist_m"][path[k]] for k in range(n)]),
-            "emission": np.array(
-                [layers[k]["emission"][path[k]] for k in range(n)],
-                dtype=np.int64),
-            "trip_cost": np.full(n, cost, dtype=np.int64),
-            "status": np.full(n, "matched", dtype=object),
-        }
-
+def _emit_cols(trip_id: str, seqs, cand: dict, sel, cost: int, graph,
+               opts: MatchOptions, output: str) -> dict:
+    """A matched trip's 'interpolated' or 'gate_union' rows. Collapse
+    re-derives the chosen hops from the warm cache (entity.rs:337-358);
+    only these outputs read them."""
+    hops = [reach(graph, GLOBAL_PREDICATE_CACHE, _cand(cand, sel[k]),
+                  _cand(cand, sel[k + 1]), opts.profile)
+            for k in range(len(sel) - 1)]
+    dedup = _routed_elems(graph, cand, sel, hops)
+    m = len(dedup)
     if output == "gate_union":
-        n = len(path)
-        rows_sel = np.array([layers[k]["edge_row"][path[k]] for k in range(n)],
-                            dtype=np.int64)
-        dedup = _routed_elems(layers, path, hops, graph)
-        m = len(dedup)
+        n = len(sel)
         return {
             "trip_id": np.full(n + m, trip_id, dtype=object),
             "idx": np.concatenate([np.asarray(seqs, dtype=np.int32),
@@ -426,11 +465,9 @@ def _emit_cols(trip_id: str, seqs, layers, result, graph,
                                     np.array([e[3] for e in dedup],
                                              dtype=object)]),
             "edge_id": np.concatenate([
-                graph.edge_id[rows_sel].astype(np.int64),
+                graph.edge_id[cand["edge_row"][sel]].astype(np.int64),
                 np.array([e[2] for e in dedup], dtype=np.int64)]),
-            "frac": np.concatenate([
-                np.array([layers[k]["frac"][path[k]] for k in range(n)]),
-                np.full(m, np.nan)]),
+            "frac": np.concatenate([cand["frac"][sel], np.full(m, np.nan)]),
             "plon": np.concatenate([np.full(n, np.nan),
                                     np.array([e[0] for e in dedup])]),
             "plat": np.concatenate([np.full(n, np.nan),
@@ -438,8 +475,6 @@ def _emit_cols(trip_id: str, seqs, layers, result, graph,
         }
 
     # interpolated (RoutedPath::new, candidate/route.rs:46-141)
-    dedup = _routed_elems(layers, path, hops, graph)
-    m = len(dedup)
     return {
         "trip_id": np.full(m, trip_id, dtype=object),
         "elem": np.arange(m, dtype=np.int32),
@@ -683,9 +718,13 @@ def _solve_cogroup_pdf(cand_pdf: pd.DataFrame, edges_pdf: pd.DataFrame,
     markers alongside surviving candidates are inert (layers are built
     from edge_row >= 0 rows only)."""
     if len(cand_pdf) == 0 or len(edges_pdf) == 0:
+        # no subgraph: one marker point per trip, so every trip reports
+        # unanchored
+        tids = cand_pdf["trip_id"].unique()
+        mark = np.full(len(tids), -1, dtype=np.int64)
+        nan = np.full(len(tids), np.nan)
         return _solve_trips(
-            None, [(t, np.empty(0, dtype=np.int64), [])
-                   for t in cand_pdf["trip_id"].unique()],
+            None, _candidate_trips(tids, mark, mark, nan, nan, nan, nan, mark),
             opts, output)
 
     from routers_spark.graph.packed import build_packed_graph

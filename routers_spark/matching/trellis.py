@@ -1,6 +1,10 @@
-"""Trellis + Viterbi solver (numpy), bit-compatible with the reference.
+"""Trellis with the reference's forward pass and convergence (numpy).
 
-Semantics reproduced from libs/routers_trellis/src/:
+The matcher solves trips with the batched compiled Viterbi
+(``graph.dijkstra.viterbi``), which follows these same semantics; this
+class serves the streaming matcher's convergence query, and the tests'
+pure-numpy solve (``tests/test_trellis.py``) is the compiled solver's
+oracle. Semantics reproduced from libs/routers_trellis/src/:
   - integer cost domain: NO_EDGE stored as INF_W = 2^30 so ``a + b`` never
     overflows u32 (trellis.rs:11-19, fill_transition at 252-289)
   - forward DP: ``next = min(cur + edge)`` over cur < INF_W, then the entered
@@ -8,6 +12,7 @@ Semantics reproduced from libs/routers_trellis/src/:
   - predecessor: argmin over ``dist[cur] saturating+ edge``, ties to the
     LOWEST node index (viterbi.rs:100-120) — backtrack and convergence agree
   - backtrack: best final node by (cost, index) min; >= INF_W → unreachable
+    (the solve; see tests/test_trellis.py)
   - convergence: backward frontier narrowing via the same predecessor
     (viterbi.rs:170-202)
 """
@@ -33,6 +38,20 @@ class Trellis:
         self.widths = list(widths)
         self.nodes = [np.zeros(w, dtype=np.uint32) for w in widths]
         self.trans: list[np.ndarray | None] = [None] * (len(widths) - 1)
+
+    @classmethod
+    def of(cls, node_weights: list, mats: list[np.ndarray]) -> "Trellis":
+        """A trellis of per-layer node weights and the weighed boundary
+        matrices between them; an all-NO_EDGE matrix is left pending (a
+        recorded gap, weigh/mod.rs:170-175)."""
+        t = cls([len(node_weights[0])])
+        t.fill_nodes(0, node_weights[0])
+        for w in node_weights[1:]:
+            t.add_layer(len(w), w)
+        for k, mat in enumerate(mats):
+            if not np.all(mat == np.uint32(NO_EDGE)):
+                t.fill_transition(k, mat)
+        return t
 
     def add_layer(self, width: int, node_weights=None):
         assert width > 0
@@ -89,20 +108,6 @@ class Trellis:
         tot = np.minimum(cur_cost + col, np.uint64(0xFFFFFFFF))
         return int(np.argmin(tot))  # argmin takes first (lowest index) on ties
 
-    def solve(self) -> tuple[list[int], int]:
-        """Minimum-cost node path + cost (viterbi solve, viterbi.rs:256-264)."""
-        dist = self._forward()
-        final = dist[-1]
-        best = int(np.argmin(final))
-        best_cost = int(final[best])
-        if best_cost >= INF_W:
-            raise Unreachable("no path")
-        path = [best]
-        for b in range(len(self.trans) - 1, -1, -1):
-            path.append(self._predecessor(b, dist[b], path[-1]))
-        path.reverse()
-        return path, best_cost
-
     def convergence(self) -> int | None:
         """Latest layer where all live final paths fuse (viterbi.rs:221-247).
         Returns a layer id or None (live paths never fuse)."""
@@ -118,11 +123,3 @@ class Trellis:
             if len(frontier) == 1:
                 return b
         return None
-
-    def path_cost(self, path: list[int]) -> int:
-        """Audit: recompute a named path's cost, saturating (trellis.rs:339-356)."""
-        cost = int(self.nodes[0][path[0]])
-        for k, (a, b) in enumerate(zip(path, path[1:])):
-            edge = int(self.trans[k][a, b]) if self.trans[k] is not None else INF_W
-            cost = min(cost + edge + int(self.nodes[k + 1][b]), 0xFFFFFFFF)
-        return cost

@@ -3,23 +3,27 @@ kernel.
 
 numpy over ALL (src, tgt) pairs of every boundary handed in at once (the
 analog of the reference's rayon boundary × row sweep, weigh/mod.rs:89-141,
-but data-parallel over the whole call). The matcher's ``_solve_trips``
-hands in a chunk of consecutive trips per call (``WEIGH_PAIR_BUDGET``
-candidate pairs); ``solve_trip`` one trip, or only the streaming cache's
-misses. A boundary's matrix does not depend on what else is in the call:
-``tests/test_weigh_vec.py`` checks that one multi-trip call equals the
-per-trip calls bit for bit.
+but data-parallel over the whole call), with a fixed number of numpy calls
+per call, not per boundary or root. The matcher's ``_solve_trips`` hands
+in a chunk of consecutive trips per call (``WEIGH_PAIR_BUDGET`` candidate
+pairs) straight from its candidate table; ``solve_trip`` one trip, or only
+the streaming cache's misses. A boundary's matrix does not depend on what
+else is in the call: ``tests/test_weigh_vec.py`` checks that one
+multi-trip call equals the per-trip calls bit for bit.
 
-  1. direct / same-edge masks per boundary (candidate/entry.rs:92-106)
-  2. parent-map walks batched per unique root ACROSS the call: every leaf
-     walks the root's ParentMap (filled by the compiled bounded Dijkstra)
-     simultaneously via pure integer gathers (expansion.rs:63-97);
-     consecutive boundaries share roots, so each (root, leaf-set) is
-     walked once per call, not once per boundary
+  1. one ragged cross product enumerates every boundary's pairs and
+     classifies them direct / same-edge / standard (candidate/entry.rs:
+     92-106)
+  2. every unique (root, leaf) lane of the call is located in the
+     predicate cache's flat arena with one searchsorted (the compiled
+     bounded Dijkstra settles only the roots the arena misses), then all
+     lanes walk their parent pointers together via integer gathers
+     (expansion.rs:63-97)
   3. path edge rows via one searchsorted over the (src,dst) pair keys (G2)
   4. route lengths, headings, angular complexity and the cost decay as flat
-     ragged-array passes; np.add.at keeps the reference's sequential
-     left-to-right float accumulation
+     ragged-array passes (the lengths and bearings of a path's own
+     segments once per path, not per pair); np.add.at keeps the
+     reference's sequential left-to-right float accumulation
   5. one scatter of every cost into one flat buffer the matrices view
 
 Formulas follow costing/default.rs:137-163, map_path/entity.rs:229-297 and
@@ -45,112 +49,74 @@ from routers_spark.functions.geo import (
     haversine_m_np,
     wrap_angle_np,
 )
+from routers_spark.graph.packed import ragged_within
 
 _EPS = 1e-6
-
-
-# ------------------------------------------------------- batched walks
-
-
-def _ragged_within(counts: np.ndarray) -> np.ndarray:
-    """0..count-1 per group, flattened (the repeat/cumsum offset trick)."""
-    total = int(counts.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.int64)
-    starts = np.cumsum(counts) - counts
-    return np.arange(total, dtype=np.int64) - np.repeat(starts, counts)
-
-
-def _boundary_pairs(er_a, fa, sx, sy, er_b, fb, tx, ty, fanout):
-    """Per-boundary pair classification: (std_i, std_j, dir_i, dir_j)."""
-    m, n = len(er_a), len(er_b)
-    # M9 selective fan-out: membership-only k-nearest per source
-    # (selective.rs:69-88; np.argpartition = select_nth_unstable)
-    if fanout is not None and n > fanout:
-        d = haversine_m_np(sx[:, None], sy[:, None], tx[None, :], ty[None, :])
-        part = np.argpartition(d, fanout - 1, axis=1)[:, :fanout]
-        sel = np.zeros((m, n), dtype=bool)
-        np.put_along_axis(sel, part, True, axis=1)
-    else:
-        sel = np.ones((m, n), dtype=bool)
-    # same-edge resolution (entry.rs:92-106): ahead → direct; degenerate
-    # frac → unreachable; behind → falls through to routing
-    same = er_a[:, None] == er_b[None, :]
-    nan_f = np.isnan(fa)[:, None] | np.isnan(fb)[None, :]
-    direct = sel & same & ~nan_f & (fa[:, None] <= fb[None, :])
-    standard = sel & ~direct & ~(same & nan_f)
-    si, sj = np.nonzero(standard)
-    di, dj = np.nonzero(direct)
-    return si, sj, di, dj
 
 
 def weigh_boundaries(graph, cache, boundaries: list[tuple[dict, dict]],
                      fanout: int | None = None,
                      profile=None, costing=None) -> list[np.ndarray]:
     """Dense (m, n) uint32 transition matrix for each (A, B) candidate-layer
-    pair in ``boundaries``, NO_EDGE where unreachable. A trip passes
-    ``zip(layers, layers[1:])``; the streaming matcher passes only the
-    boundaries its cache misses (collapse re-derives the chosen hops from
-    the warm cache, entity.rs:337-358)."""
-    # every matrix is a view into ONE flat buffer, so the final scatter is
-    # one fancy-index write for the whole call
-    shapes = [(len(A["edge_row"]), len(B["edge_row"])) for A, B in boundaries]
-    moff = np.zeros(len(shapes) + 1, dtype=np.int64)
-    np.cumsum(np.array([m * n for m, n in shapes], dtype=np.int64),
-              out=moff[1:])
+    pair in ``boundaries``, NO_EDGE where unreachable: the layers are
+    stacked into one candidate table (A then B per boundary) for
+    :func:`weigh_flat`, and every matrix is a view of its flat buffer."""
+    sides = [side for b in boundaries for side in b]
+    width = np.array([len(s["edge_row"]) for s in sides], dtype=np.int64)
+    off = np.concatenate([[0], np.cumsum(width)])
+    cols = [np.concatenate([np.asarray(s[c], dtype=dt) for s in sides]
+                           + [np.empty(0, dtype=dt)])
+            for c, dt in (("edge_row", np.int64), ("frac", np.float64),
+                          ("px", np.float64), ("py", np.float64))]
+    flat, moff = weigh_flat(graph, cache, *cols, off[0:-1:2], off[1::2],
+                            off[2::2], fanout=fanout, profile=profile,
+                            costing=costing)
+    return [flat[moff[k]:moff[k + 1]].reshape(width[2 * k], width[2 * k + 1])
+            for k in range(len(boundaries))]
+
+
+def weigh_flat(graph, cache, edge_row, frac, px, py, lo, mid, hi,
+               fanout: int | None = None, profile=None,
+               costing=None) -> tuple[np.ndarray, np.ndarray]:
+    """Transition matrices of many boundaries over one candidate table
+    (per candidate: ``edge_row``, ``frac``, ``px``, ``py``). Boundary k
+    pairs the candidates ``lo[k]:mid[k]`` (its A layer) with
+    ``mid[k]:hi[k]`` (its B layer). Returns ``(flat, moff)``: boundary k's
+    row-major u32 matrix is ``flat[moff[k]:moff[k + 1]]``, NO_EDGE where
+    unreachable."""
+    lo, mid, hi = (np.asarray(a, dtype=np.int64) for a in (lo, mid, hi))
+    m, n = mid - lo, hi - mid
+    moff = np.zeros(len(lo) + 1, dtype=np.int64)
+    np.cumsum(m * n, out=moff[1:])
     flat = np.full(int(moff[-1]), np.uint32(NO_EDGE), dtype=np.uint32)
-    mats = [flat[o:o + m * n].reshape(m, n) for o, (m, n) in zip(moff, shapes)]
 
-    # ---- stage 1: classify pairs per boundary, gather flat pair arrays
-    b_id_c, i_c, j_c, dir_c = [], [], [], []
-    ers_c, ert_c = [], []
-    sx_c, sy_c, tx_c, ty_c = [], [], [], []
-    for k, (A, B) in enumerate(boundaries):
-        er_a = np.asarray(A["edge_row"], dtype=np.int64)
-        er_b = np.asarray(B["edge_row"], dtype=np.int64)
-        if len(er_a) == 0 or len(er_b) == 0:
-            continue
-        ax = np.asarray(A["px"], dtype=np.float64)
-        ay = np.asarray(A["py"], dtype=np.float64)
-        bx = np.asarray(B["px"], dtype=np.float64)
-        by = np.asarray(B["py"], dtype=np.float64)
-        si, sj, di, dj = _boundary_pairs(
-            er_a, np.asarray(A["frac"], dtype=np.float64), ax, ay,
-            er_b, np.asarray(B["frac"], dtype=np.float64), bx, by, fanout)
-        ii = np.concatenate([si, di])
-        jj = np.concatenate([sj, dj])
-        if len(ii) == 0:
-            continue
-        b_id_c.append(np.full(len(ii), k, dtype=np.int64))
-        i_c.append(ii)
-        j_c.append(jj)
-        dir_c.append(np.concatenate([np.zeros(len(si), dtype=bool),
-                                     np.ones(len(di), dtype=bool)]))
-        ers_c.append(er_a[ii])
-        ert_c.append(er_b[jj])
-        sx_c.append(ax[ii])
-        sy_c.append(ay[ii])
-        tx_c.append(bx[jj])
-        ty_c.append(by[jj])
-    if not b_id_c:
-        return mats
-    b_id = np.concatenate(b_id_c)
-    all_i = np.concatenate(i_c)
-    all_j = np.concatenate(j_c)
-    is_dir = np.concatenate(dir_c)
-    e_s = np.concatenate(ers_c)
-    e_t = np.concatenate(ert_c)
-    sx = np.concatenate(sx_c)
-    sy = np.concatenate(sy_c)
-    tx = np.concatenate(tx_c)
-    ty = np.concatenate(ty_c)
-    P = len(b_id)
+    # ---- stage 1: one ragged cross product over every boundary. Pair p
+    # is cell p of the flat buffer: boundary b_id, row i, column j.
+    b_id = np.repeat(np.arange(len(lo), dtype=np.int64), m * n)
+    cell = ragged_within(m * n)
+    nb = n[b_id]
+    src = lo[b_id] + cell // nb
+    tgt = mid[b_id] + cell % nb
+    er_s, er_t = edge_row[src], edge_row[tgt]
+    fa, fb = frac[src], frac[tgt]
+    # same-edge resolution (entry.rs:92-106): ahead → direct; degenerate
+    # frac → unreachable; behind → falls through to routing
+    same = er_s == er_t
+    nan_f = np.isnan(fa) | np.isnan(fb)
+    is_dir = same & ~nan_f & (fa <= fb)
+    keep = ~(same & nan_f)
+    if fanout is not None:
+        keep &= _fanout_mask(px, py, lo, mid, hi, moff, fanout)
+    pair = np.nonzero(keep)[0]
+    is_dir = is_dir[pair]
+    e_s, e_t = er_s[pair], er_t[pair]
+    sx, sy = px[src[pair]], py[src[pair]]
+    tx, ty = px[tgt[pair]], py[tgt[pair]]
+    P = len(pair)
 
-    # ---- stage 2: parent walks — ALL (root, leaf) lanes of the call walk
-    # ONE concatenated parent forest (per-root ParentMaps re-based onto a
-    # shared index space), so the gather loop runs once per call instead of
-    # once per unique root (the per-root overhead dominated wide urban
-    # boundaries: widths 40+ have ~width x layers unique roots per trip)
+    # ---- stage 2: parent walks. Every unique (root, leaf) lane of the
+    # call is located in the cache's arena at once; then all lanes walk
+    # their parent pointers together, one gather per path step.
     roots = graph.edge_dst[e_s].astype(np.int64)
     leaves = graph.edge_src[e_t].astype(np.int64)
     path_of = np.full(P, -1, dtype=np.int64)
@@ -159,14 +125,7 @@ def weigh_boundaries(graph, cache, boundaries: list[tuple[dict, dict]],
     pflat = np.empty(0, dtype=np.int64)
     std_idx = np.nonzero(~is_dir)[0]
     if len(std_idx):
-        # ONE lexsort over (root, leaf) replaces the per-root
-        # np.unique/append loop (r6: 458k tiny np.unique calls were ~9%
-        # of the 200k-point solve CPU): lanes = unique (root, leaf) pairs
-        # in sorted order — identical lane set, order and ids as the old
-        # form (np.unique returned sorted leaves within each sorted
-        # root), so the walk below and every downstream gather are
-        # unchanged. The python loop shrinks to one cache.query + locate
-        # per unique root (the Dijkstra/cache boundary).
+        # lanes = unique (root, leaf) pairs, in sorted order
         r_std = roots[std_idx]
         l_std = leaves[std_idx]
         order = np.lexsort((l_std, r_std))
@@ -174,37 +133,12 @@ def weigh_boundaries(graph, cache, boundaries: list[tuple[dict, dict]],
         ls = l_std[order]
         new_lane = np.empty(len(rs), dtype=bool)
         new_lane[0] = True
-        new_root_tail = rs[1:] != rs[:-1]
-        new_lane[1:] = new_root_tail | (ls[1:] != ls[:-1])
+        new_lane[1:] = (rs[1:] != rs[:-1]) | (ls[1:] != ls[:-1])
         lane_of_sorted = np.cumsum(new_lane) - 1
         n_paths = int(lane_of_sorted[-1]) + 1
-        lane_root = rs[new_lane]
-        lane_leaf = ls[new_lane]
-        lane_new_root = np.empty(n_paths, dtype=bool)
-        lane_new_root[0] = True
-        lane_new_root[1:] = lane_root[1:] != lane_root[:-1]
-        rstarts = np.nonzero(lane_new_root)[0]
-        rstops = np.append(rstarts[1:], n_paths)
-        uniq_roots = lane_root[rstarts]
-        lanes = np.zeros(n_paths, dtype=np.int64)
-        plens = np.zeros(n_paths, dtype=np.int64)
-        ok_all = np.zeros(n_paths, dtype=bool)
-        pms, bases = [], []
-        fbase = 0
-        for t in range(len(uniq_roots)):
-            pm = cache.query(graph, int(uniq_roots[t]), profile)
-            sl = slice(rstarts[t], rstops[t])
-            lidx, member = pm.locate(lane_leaf[sl])
-            ll = np.zeros(rstops[t] - rstarts[t], dtype=np.int64)
-            ll[member] = pm.depth[lidx[member]] + 1
-            lanes[sl] = np.where(member, lidx + fbase, 0)
-            plens[sl] = ll
-            ok_all[sl] = member
-            pms.append(pm)
-            bases.append(fbase)
-            fbase += len(pm.keys)
-        big_keys = np.concatenate([pm.keys for pm in pms])
-        big_loc = np.concatenate([pm.loc + b for pm, b in zip(pms, bases)])
+        arena, lanes, member = cache.locate(graph, rs[new_lane],
+                                            ls[new_lane], profile)
+        plens = np.where(member, arena.depth[lanes] + 1, 0)
         # one walk over every lane (expansion.rs:26-39 semantics: leaf
         # outside its root's bound → len 0, unreachable)
         poffs0 = np.zeros(n_paths + 1, dtype=np.int64)
@@ -216,24 +150,24 @@ def weigh_boundaries(graph, cache, boundaries: list[tuple[dict, dict]],
         rem = plens[act]
         k = 0
         while len(cur):
-            pflat[base_o + rem - 1 - k] = big_keys[cur]
+            pflat[base_o + rem - 1 - k] = arena.node[cur]
             k += 1
             alive = rem > k
             if not alive.all():
                 cur, base_o, rem = cur[alive], base_o[alive], rem[alive]
-            cur = big_loc[cur]
+            cur = arena.loc[cur]
         path_of[std_idx[order]] = np.where(
-            ok_all[lane_of_sorted], lane_of_sorted, -1)
+            member[lane_of_sorted], lane_of_sorted, -1)
 
     # drop unreachable standard pairs (their matrix cells stay NO_EDGE)
     keep = is_dir | (path_of >= 0)
     if not keep.all():
-        b_id, all_i, all_j, is_dir = (a[keep] for a in (b_id, all_i, all_j, is_dir))
+        pair, is_dir = pair[keep], is_dir[keep]
         e_s, e_t, sx, sy, tx, ty = (a[keep] for a in (e_s, e_t, sx, sy, tx, ty))
         path_of = path_of[keep]
-        P = len(b_id)
+        P = len(pair)
     if P == 0:
-        return mats
+        return flat, moff
 
     poffs = np.zeros(n_paths + 1, dtype=np.int64)
     np.cumsum(plens, out=poffs[1:])
@@ -242,7 +176,7 @@ def weigh_boundaries(graph, cache, boundaries: list[tuple[dict, dict]],
     # filter_map semantics: missing edges silently dropped)
     seg = np.maximum(plens - 1, 0)
     srep = np.repeat(np.arange(n_paths), seg)
-    swithin = _ragged_within(seg)
+    swithin = ragged_within(seg)
     a_nodes = pflat[poffs[srep] + swithin]
     b_nodes = pflat[poffs[srep] + swithin + 1]
     pkey = a_nodes * graph._n_nodes + b_nodes
@@ -272,52 +206,32 @@ def weigh_boundaries(graph, cache, boundaries: list[tuple[dict, dict]],
     mlon = graph.node_lon[mp_nodes]
     mlat = graph.node_lat[mp_nodes]
 
-    # mp_len per path: sequential left-to-right accumulation (np.add.at)
+    # per-path segments between consecutive mp nodes: lengths (summed
+    # left to right into mp_len by np.add.at, the reference's sequential
+    # accumulation) and bearings, computed once per path and shared by
+    # every pair routed along it
     mseg = np.maximum(mp_cnt - 1, 0)
+    mseg_off = np.zeros(n_paths + 1, dtype=np.int64)
+    np.cumsum(mseg, out=mseg_off[1:])
     mrep = np.repeat(np.arange(n_paths), mseg)
-    mwit = _ragged_within(mseg)
-    ia = mp_off[mrep] + mwit
+    ia = mp_off[mrep] + ragged_within(mseg)
+    seg_len = haversine_m_np(mlon[ia], mlat[ia], mlon[ia + 1], mlat[ia + 1])
+    seg_bear = bearing_deg_np(mlon[ia], mlat[ia], mlon[ia + 1], mlat[ia + 1])
     mp_len = np.zeros(n_paths, dtype=np.float64)
     if len(ia):
-        np.add.at(mp_len, mrep, haversine_m_np(mlon[ia], mlat[ia],
-                                               mlon[ia + 1], mlat[ia + 1]))
+        np.add.at(mp_len, mrep, seg_len)
 
-    # ---- stage 4: per-pair position sequences [src_p, mp nodes..., tgt_p]
+    # ---- stage 4: per pair, the positions [src_p, mp nodes..., tgt_p]
+    # and their consecutive bearings with the <1 m skip
+    # (map_path/entity.rs:149-168), laid out as the heads
+    # [h_src?, bearings..., h_tgt?] with validity
     if n_paths == 0:
         pair_mp = np.zeros(P, dtype=np.int64)
     else:
         pair_mp = np.where(is_dir, 0, mp_cnt[np.maximum(path_of, 0)])
-    pcnt = pair_mp + 2
-    pofs = np.zeros(P + 1, dtype=np.int64)
-    np.cumsum(pcnt, out=pofs[1:])
-    tot = int(pofs[-1])
-    qlon = np.empty(tot, dtype=np.float64)
-    qlat = np.empty(tot, dtype=np.float64)
-    qlon[pofs[:-1]] = sx
-    qlat[pofs[:-1]] = sy
-    qlon[pofs[1:] - 1] = tx
-    qlat[pofs[1:] - 1] = ty
-    irep = np.repeat(np.arange(P), pair_mp)
-    iwit = _ragged_within(pair_mp)
-    if len(irep):
-        gsrc = mp_off[path_of[irep]] + iwit
-        gdst = pofs[irep] + 1 + iwit
-        qlon[gdst] = mlon[gsrc]
-        qlat[gdst] = mlat[gsrc]
-
-    # ---- consecutive bearings with the <1 m skip (map_path/entity.rs:149-168)
-    bcnt = pcnt - 1
-    brep = np.repeat(np.arange(P), bcnt)
-    bwit = _ragged_within(bcnt)
-    ba = pofs[brep] + bwit
-    dseg = haversine_m_np(qlon[ba], qlat[ba], qlon[ba + 1], qlat[ba + 1])
-    keepb = dseg >= MIN_HEADING_DIST_M
-    bear = bearing_deg_np(qlon[ba], qlat[ba], qlon[ba + 1], qlat[ba + 1])
-
-    # ---- heads per pair: [h_src?, bearings..., h_tgt?] with validity
     h_src = graph.edge_heading[e_s]
     h_tgt = graph.edge_heading[e_t]
-    hcnt = bcnt + 2
+    hcnt = pair_mp + 3
     hofs = np.zeros(P + 1, dtype=np.int64)
     np.cumsum(hcnt, out=hofs[1:])
     H = np.empty(int(hofs[-1]), dtype=np.float64)
@@ -326,9 +240,26 @@ def weigh_boundaries(graph, cache, boundaries: list[tuple[dict, dict]],
     V[hofs[:-1]] = ~np.isnan(h_src)
     H[hofs[1:] - 1] = h_tgt
     V[hofs[1:] - 1] = ~np.isnan(h_tgt)
-    hb = hofs[brep] + 1 + bwit
-    H[hb] = bear
-    V[hb] = keepb
+    # the first segment leaves src_p for the first mp node (tgt_p when
+    # the pair has none); the last reaches tgt_p from the last mp node
+    via = np.flatnonzero(pair_mp > 0)
+    first = mp_off[path_of[via]]
+    last = first + pair_mp[via] - 1
+    fx, fy = tx.copy(), ty.copy()
+    fx[via], fy[via] = mlon[first], mlat[first]
+    H[hofs[:-1] + 1] = bearing_deg_np(sx, sy, fx, fy)
+    V[hofs[:-1] + 1] = haversine_m_np(sx, sy, fx, fy) >= MIN_HEADING_DIST_M
+    at = hofs[1:][via] - 2
+    H[at] = bearing_deg_np(mlon[last], mlat[last], tx[via], ty[via])
+    V[at] = haversine_m_np(mlon[last], mlat[last], tx[via],
+                           ty[via]) >= MIN_HEADING_DIST_M
+    # the segments in between are the path's own
+    inner = np.maximum(pair_mp - 1, 0)
+    irep = np.repeat(np.arange(P), inner)
+    iwit = ragged_within(inner)
+    src_seg = mseg_off[path_of[irep]] + iwit
+    H[hofs[irep] + 2 + iwit] = seg_bear[src_seg]
+    V[hofs[irep] + 2 + iwit] = seg_len[src_seg] >= MIN_HEADING_DIST_M
 
     # ---- angular complexity (map_path/entity.rs:229-297: wrap, damped
     # cos, zero cut, harmonic mean)
@@ -392,8 +323,23 @@ def weigh_boundaries(graph, cache, boundaries: list[tuple[dict, dict]],
     cost = np.minimum(((COST_PRECISION * zeta) * inv).astype(np.int64),
                       MAX_WEIGHT).astype(np.uint32)
 
-    # ---- scatter: row-major offset of every pair in its boundary's matrix
-    ncols = np.array([n for _, n in shapes], dtype=np.int64)
-    flat[moff[b_id] + all_i * ncols[b_id] + all_j] = cost
-    return mats
+    # ---- scatter: every pair's cost into its cell of the flat buffer
+    flat[pair] = cost
+    return flat, moff
+
+
+def _fanout_mask(px, py, lo, mid, hi, moff, fanout: int) -> np.ndarray:
+    """M9 selective fan-out over the flat pairs: per source, only its
+    ``fanout`` nearest targets (selective.rs:69-88; np.argpartition =
+    select_nth_unstable), for each boundary wider than ``fanout``."""
+    sel = np.ones(int(moff[-1]), dtype=bool)
+    for k in np.nonzero(hi - mid > fanout)[0]:
+        a, b = slice(lo[k], mid[k]), slice(mid[k], hi[k])
+        d = haversine_m_np(px[a][:, None], py[a][:, None],
+                           px[b][None, :], py[b][None, :])
+        part = np.argpartition(d, fanout - 1, axis=1)[:, :fanout]
+        s = np.zeros(d.shape, dtype=bool)
+        np.put_along_axis(s, part, True, axis=1)
+        sel[moff[k]:moff[k + 1]] = s.ravel()
+    return sel
 

@@ -3089,11 +3089,16 @@ def _knn_spark_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
   SELECT event_id, mn.s AS s_suppkey, mn.d AS dist_m FROM (
     SELECT event_id, min(named_struct('d', dist_m, 's', s_suppkey)) AS mn
     FROM fallback GROUP BY event_id) f"""
-    return spark.sql(with_ctes(
+    out = spark.sql(with_ctes(
         ["st", "fallback"],
         "SELECT event_id, s_suppkey AS nearest_station, "
         "round(dist_m, 3) AS dist_m FROM "
         f"(SELECT * FROM ring_best UNION ALL {fallback_best_agg}) best"))
+    # the query is analysed, so it holds the views' plans itself: drop the
+    # views, so they neither outlive the call nor pin its checkpoints
+    spark.catalog.dropTempView("ev_g")
+    spark.catalog.dropTempView("ring_best")
+    return out
 
 
 def _s2_spark(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -32,7 +32,7 @@ from routers_spark.matching.matcher import (
     candidates_for_points,
     solve_trip,
 )
-from routers_spark.matching.trellis import Unreachable
+from routers_spark.matching.trellis import Trellis, Unreachable
 
 
 # process-wide LRU of weighed boundary matrices, keyed by (graph epoch,
@@ -179,10 +179,11 @@ class VehicleMatcherState:
             return []
         self.revision += 1
 
-        # R4 convergence cut on the trellis solve_trip just weighed —
+        # R4 convergence cut on the matrices solve_trip just weighed —
         # no second boundary-weigh pass (weigh once per micro-batch)
         try:
-            conv = result["trellis"].convergence()
+            conv = Trellis.of([l["emission"] for l in layers],
+                              result["mats"]).convergence()
         except Unreachable:
             conv = None
         out = []

@@ -11,7 +11,6 @@ import weakref
 import numpy as np
 
 from routers_spark.config import DIJKSTRA_BOUND_CM
-from routers_spark.graph.dijkstra import ParentMap
 
 # CSR adjacency as plain Python lists, one per graph: numpy scalar indexing
 # in the heap loop costs ~2.5x over list indexing
@@ -103,5 +102,12 @@ def pop_order(parents: dict[int, int]):
             np.fromiter(depth_by.values(), dtype=np.int64, count=k))
 
 
-def parent_map_from_dict(parents: dict[int, int]) -> ParentMap:
-    return ParentMap(*pop_order(parents))
+def parent_path(parents: dict[int, int], root: int, leaf: int):
+    """Nodes root→leaf inclusive by walking the parent dict
+    (expansion.rs:26-39), or None when leaf is outside the bound."""
+    if leaf not in parents:
+        return None
+    nodes = [leaf]
+    while nodes[-1] != root:
+        nodes.append(parents[nodes[-1]])
+    return nodes[::-1]

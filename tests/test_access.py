@@ -142,10 +142,8 @@ def test_profile_keyed_cache_no_taint():
     g = build_packed_graph(nodes, edges).build_cell_index()
     cache = PredicateCache()
     idx = {n: int(np.searchsorted(g.node_ids, n)) for n in (1, 2, 3, 5)}
-    gated = cache.query(g, idx[1], CAR)
-    free = cache.query(g, idx[1], None)
     n3 = int(np.searchsorted(g.node_ids, 3))
-    i_g = int(np.searchsorted(gated.keys, n3))
-    i_f = int(np.searchsorted(free.keys, n3))
-    assert gated.vals[i_g] == idx[5]
-    assert free.vals[i_f] == idx[2]
+    gated = cache.path(g, idx[1], n3, CAR)
+    free = cache.path(g, idx[1], n3, None)
+    assert gated[-2] == idx[5]
+    assert free[-2] == idx[2]

@@ -17,12 +17,17 @@ import pytest
 
 from routers_spark.fixtures.roads import grid_network
 from routers_spark.graph.dijkstra import (
-    _SOURCE, _build_dir, _load, build_kernel, settle)
+    _SOURCE, _build_dir, _load, build_kernel, settle_many)
 from routers_spark.graph.packed import build_packed_graph
 
 from dijkstra_oracle import bounded_dijkstra_parents, pop_order
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def settle(g, root, threshold_cm=200_000, access_mask=None):
+    """One root's (nodes, parents, depths) from the batched kernel."""
+    return settle_many(g, [root], threshold_cm, access_mask)[1:]
 
 
 def assert_same(g, roots, threshold_cm=200_000, access_mask=None):
@@ -43,6 +48,19 @@ def grid40():
 
 def test_every_root_of_grid(grid40):
     assert_same(grid40, range(len(grid40.node_ids)))
+
+
+def test_many_roots_in_one_call(grid40):
+    """All roots in one call (their output outgrows the first buffer, so
+    the call resumes after the root that did not fit) equal the roots one
+    by one."""
+    roots = np.arange(len(grid40.node_ids))[::-1]
+    counts, nodes, parents, depths = settle_many(grid40, roots)
+    assert counts.sum() == len(nodes) > 64 * len(roots)
+    at = np.concatenate([[0], np.cumsum(counts)])
+    for i, r in enumerate(roots):
+        for a, b in zip((nodes, parents, depths), settle(grid40, r)):
+            np.testing.assert_array_equal(a[at[i]:at[i + 1]], b)
 
 
 def test_every_root_of_grid_with_access_mask(grid40):

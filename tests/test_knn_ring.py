@@ -50,13 +50,18 @@ def test_knn_fallback_still_exercised(spark, sf_dir):
 
 
 def test_knn_materialized_leaves_no_cached_frame(spark, sf_dir):
-    """Repeated calls in one session leave nothing in the CacheManager:
-    ring_best is a local checkpoint like ev_g, not a persist() that no one
-    unpersists."""
-    from routers_spark.queries import _knn_spark_materialized
+    """Repeated calls in one session leave nothing in the CacheManager
+    (ring_best is a local checkpoint like ev_g, not a persist() that no one
+    unpersists) and no temp view of their own in the catalog; the frame a
+    call returns still runs after its views are gone."""
+    from routers_spark.queries import _knn_spark_materialized, register_views
 
     spark.catalog.clearCache()
+    register_views(spark, sf_dir)
+    tables = sorted(t.name for t in spark.catalog.listTables())
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
     for _ in range(2):
-        assert _knn_spark_materialized(spark, sf_dir).count() > 0
+        df = _knn_spark_materialized(spark, sf_dir)
+        assert sorted(t.name for t in spark.catalog.listTables()) == tables
+        assert df.count() > 0
         assert cache_manager.isEmpty()

@@ -4,6 +4,7 @@ intermediate edge, straight-vs-turn preference, Selective ≡ AllCompute when
 unpruned, single point, duplicate determinism, disconnected, unanchored)."""
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from routers_spark.fixtures.roads import (
@@ -15,10 +16,7 @@ from routers_spark.fixtures.roads import (
     walk_trips,
 )
 from routers_spark.graph.packed import build_packed_graph
-from routers_spark.graph.dijkstra import (
-    parent_path_pm,
-    route_nodes,
-)
+from routers_spark.graph.dijkstra import PredicateCache, route_nodes
 from routers_spark.matching.matcher import (
     MatchOptions,
     candidates_for_points,
@@ -28,7 +26,7 @@ from routers_spark.matching.matcher import (
 from dijkstra_oracle import (
     bounded_dijkstra_parents,
     nearest_node,
-    parent_map_from_dict,
+    parent_path,
 )
 
 STRAIGHT_TRACK = [(-118.151, 34.1503), (-118.155, 34.1503),
@@ -163,11 +161,13 @@ def test_bounded_dijkstra_cutoff():
     # 2 km bound / ~222 m edges → nodes within ~9 manhattan steps; the grid
     # corner reaches ~9+9: must be bounded well below the full 400 nodes
     assert 10 < len(parents) < 400
-    # every parent chain terminates at the root
-    pm = parent_map_from_dict(parents)
+    # every parent chain terminates at the root, and the predicate
+    # cache's arena walks the same chain
+    cache = PredicateCache(threshold_cm=200_000)
     for leaf in list(parents)[:50]:
-        path = parent_path_pm(pm, 0, leaf)
+        path = parent_path(parents, 0, leaf)
         assert path is not None and path[0] == 0 and path[-1] == leaf
+        assert cache.path(g, 0, leaf) == path
 
 
 def test_parent_path_outside_bound_is_none():
@@ -175,7 +175,8 @@ def test_parent_path_outside_bound_is_none():
     g = build_packed_graph(nodes, edges)
     parents = bounded_dijkstra_parents(g, 0, threshold_cm=100_000)  # 1 km
     far = 30 * 30 - 1  # opposite corner ~8 km away
-    assert parent_path_pm(parent_map_from_dict(parents), 0, far) is None
+    assert parent_path(parents, 0, far) is None
+    assert PredicateCache(threshold_cm=100_000).path(g, 0, far) is None
 
 
 def test_route_nodes_grid():
@@ -195,19 +196,186 @@ def test_nearest_node_snap():
     assert int(g.node_ids[idx]) == 2
 
 
+def box_query(g, min_lon, min_lat, max_lon, max_lat) -> np.ndarray:
+    """The scalar cell-index box query, one box at a time: the oracle of
+    ``PackedGraph.box_query_many``."""
+    ci = g._cell_index
+    cd = ci["cell_deg"]
+    cx0 = max(int(np.floor((min_lon - ci["x0"]) / cd)), 0)
+    cx1 = min(int(np.floor((max_lon - ci["x0"]) / cd)), ci["nx"] - 1)
+    cy0 = max(int(np.floor((min_lat - ci["y0"]) / cd)), 0)
+    cy1 = min(int(np.floor((max_lat - ci["y0"]) / cd)), ci["ny"] - 1)
+    if cx1 < cx0 or cy1 < cy0:
+        return np.empty(0, dtype=np.int64)
+    cells = [cy * ci["nx"] + cx
+             for cy in range(cy0, cy1 + 1) for cx in range(cx0, cx1 + 1)]
+    pos = np.searchsorted(ci["uniq"], cells)
+    chunks = [ci["edges"][ci["starts"][p]:ci["ends"][p]]
+              for p, c in zip(pos, cells)
+              if p < len(ci["uniq"]) and ci["uniq"][p] == c]
+    if not chunks:
+        return np.empty(0, dtype=np.int64)
+    cand = np.unique(np.concatenate(chunks))
+    keep = ((np.minimum(g.ax[cand], g.bx[cand]) <= max_lon)
+            & (np.maximum(g.ax[cand], g.bx[cand]) >= min_lon)
+            & (np.minimum(g.ay[cand], g.by[cand]) <= max_lat)
+            & (np.maximum(g.ay[cand], g.by[cand]) >= min_lat))
+    return cand[keep]
+
+
 def test_box_query_matches_brute_force():
     # index.rs:101-203 search_matches_brute_force analog
     nodes, edges = grid_network(15, spacing_deg=0.003)
     g = build_packed_graph(nodes, edges).build_cell_index()
     rng = np.random.default_rng(5)
-    for _ in range(50):
-        cx = rng.uniform(-118.5, -118.46)
-        cy = rng.uniform(33.7, 33.74)
-        r = rng.uniform(0.001, 0.01)
-        got = set(g.box_query(cx - r, cy - r, cx + r, cy + r).tolist())
-        min_x = np.minimum(g.ax, g.bx); max_x = np.maximum(g.ax, g.bx)
-        min_y = np.minimum(g.ay, g.by); max_y = np.maximum(g.ay, g.by)
-        exp = set(np.flatnonzero(
-            (min_x <= cx + r) & (max_x >= cx - r)
-            & (min_y <= cy + r) & (max_y >= cy - r)).tolist())
-        assert got == exp
+    cx = rng.uniform(-118.5, -118.46, 50)
+    cy = rng.uniform(33.7, 33.74, 50)
+    r = rng.uniform(0.001, 0.01, 50)
+    off, rows = g.box_query_many(cx - r, cy - r, cx + r, cy + r)
+    min_x = np.minimum(g.ax, g.bx); max_x = np.maximum(g.ax, g.bx)
+    min_y = np.minimum(g.ay, g.by); max_y = np.maximum(g.ay, g.by)
+    for i in range(50):
+        exp = np.flatnonzero(
+            (min_x <= cx[i] + r[i]) & (max_x >= cx[i] - r[i])
+            & (min_y <= cy[i] + r[i]) & (max_y >= cy[i] - r[i]))
+        np.testing.assert_array_equal(rows[off[i]:off[i + 1]], exp)
+
+
+def _graph_with_zero_length_edges():
+    """The 12x12 grid plus two nodes sitting on grid nodes, each joined to
+    its twin by zero-length edges both ways."""
+    nodes, edges = grid_network(12, spacing_deg=0.002)
+    n = int(nodes["node_id"].max())
+    extra = nodes[nodes["node_id"].isin([0, 77])].copy()
+    extra["node_id"] = [n + 1, n + 2]
+    e = int(edges["edge_id"].max())
+    zero = pd.DataFrame({"edge_id": [e + 1, e + 1, e + 2, e + 2],
+                         "src": [0, n + 1, 77, n + 2],
+                         "dst": [n + 1, 0, n + 2, 77],
+                         "weight": [1, 1, 1, 1]})
+    return build_packed_graph(
+        pd.concat([nodes, extra], ignore_index=True),
+        pd.concat([edges[["edge_id", "src", "dst", "weight"]], zero],
+                  ignore_index=True)).build_cell_index()
+
+
+def test_box_query_many_equals_scalar_oracle():
+    g = _graph_with_zero_length_edges()
+    zero = np.flatnonzero(g.edge_len_cm == 0)
+    assert len(zero) == 4
+    ci = g._cell_index
+    rng = np.random.default_rng(17)
+    x0, y0, cd = ci["x0"], ci["y0"], ci["cell_deg"]
+    n = 400
+    # random boxes over and around the grid, some far outside its extent
+    cx = x0 + rng.uniform(-0.5, 1.5, n) * ci["nx"] * cd
+    cy = y0 + rng.uniform(-0.5, 1.5, n) * ci["ny"] * cd
+    sizes = [0.0, 1e-5, 3e-4, 0.001, 0.004, 0.03]
+    hw, hh = rng.choice(sizes, n), rng.choice(sizes, n)
+    # boxes starting exactly on a cell border, and straddling one
+    k = np.arange(40)
+    bx = x0 + (k % ci["nx"]) * cd
+    by = y0 + (k % ci["ny"]) * cd
+    # boxes on the zero-length edges' points, and an inverted box
+    zx, zy = g.ax[zero], g.ay[zero]
+    boxes = [np.concatenate(parts) for parts in (
+        (cx - hw, bx, bx - 1e-4, zx, [zx[0] + 1e-4]),
+        (cy - hh, by, by - 1e-4, zy, [zy[0]]),
+        (cx + hw, bx + 5e-4, bx + 1e-4, zx, [zx[0] - 1e-4]),
+        (cy + hh, by + 5e-4, by + 1e-4, zy, [zy[0]]))]
+    off, rows = g.box_query_many(*boxes)
+    assert len(off) == len(boxes[0]) + 1
+    empty = 0
+    for i in range(len(boxes[0])):
+        want = box_query(g, *(b[i] for b in boxes))
+        got = rows[off[i]:off[i + 1]]
+        assert got.dtype == np.int64
+        np.testing.assert_array_equal(got, want, err_msg=f"box {i}")
+        empty += len(want) == 0
+    assert 50 < empty < len(boxes[0]) - 100
+    assert set(zero.tolist()) <= set(rows.tolist())
+
+
+def test_box_query_many_non_finite_boxes_match_nothing():
+    g = build(straight_road)
+    nan, inf = np.nan, np.inf
+    good = (-118.1606, 34.1495, -118.1604, 34.1505)
+    boxes = np.array([good, (nan, 34.15, -118.16, 34.16),
+                      (-inf, 34.15, -118.16, 34.16),
+                      (-118.17, 34.15, inf, 34.16),
+                      (-inf, -inf, inf, inf), (nan, nan, nan, nan), good])
+    off, rows = g.box_query_many(*boxes.T)
+    counts = np.diff(off)
+    assert counts[0] > 0 and counts[-1] == counts[0]
+    assert (counts[1:-1] == 0).all()
+    # so a NaN or infinite point gets an empty candidate layer
+    layers = candidates_for_points(g, [-118.1605, nan, inf, -118.1605],
+                                   [34.1503, 34.1503, 34.1503, nan],
+                                   50.0, 25.0)
+    assert [len(l["edge_row"]) for l in layers][1:] == [0, 0, 0]
+    assert len(layers[0]["edge_row"]) > 0
+
+
+def test_batched_solve_calls_no_per_item_kernel(monkeypatch):
+    """The batch solve of the broadcast path (discretized output) runs no
+    per-point, per-boundary or per-trip Python kernel: the scalar box
+    query, per-boundary pair classifier, per-root ParentMap and numpy
+    Trellis solve are gone from the package, collapse (``reach``) and the
+    Trellis are never touched, and the bounded Dijkstra settles each root
+    once, on its cache miss only. Its rows equal ``solve_trip`` trip by
+    trip."""
+    from routers_spark.graph import dijkstra
+    from routers_spark.graph.packed import PackedGraph
+    from routers_spark.matching import matcher, trellis, weigh
+
+    assert not hasattr(PackedGraph, "box_query")
+    assert not hasattr(weigh, "_boundary_pairs")
+    assert not hasattr(dijkstra, "ParentMap")
+    assert not hasattr(trellis.Trellis, "solve")
+
+    def boom(*a, **k):
+        raise AssertionError("called on the discretized batch path")
+
+    monkeypatch.setattr(matcher, "reach", boom)
+    monkeypatch.setattr(trellis.Trellis, "__init__", boom)
+    settled = []
+    real_settle = dijkstra.settle_many
+
+    def counting_settle(graph, roots, *a, **k):
+        settled.extend(np.asarray(roots).tolist())
+        return real_settle(graph, roots, *a, **k)
+
+    monkeypatch.setattr(dijkstra, "settle_many", counting_settle)
+
+    nodes, edges = grid_network(12)
+    g = build_packed_graph(nodes, edges).build_cell_index()
+    trips = walk_trips(nodes, edges, n_trips=40, points_per_trip=8, seed=9)
+    opts = MatchOptions()
+
+    def run():
+        return matcher._solve_trips(g, matcher._broadcast_trips(
+            trips.trip_id.values, trips.seq.values, trips.lon.values,
+            trips.lat.values, g, opts), opts, "discretized")
+
+    out = run()
+    assert len(settled) == len(set(settled)) > 0
+    n_settled = len(settled)
+    again = run()
+    assert len(settled) == n_settled  # warm: every root hits the arena
+    pd.testing.assert_frame_equal(out, again)
+
+    monkeypatch.setattr(matcher, "reach", lambda *a, **k: None)
+    matched = out[out.status == "matched"]
+    assert matched.trip_id.nunique() > 30
+    for tid, t in trips.groupby("trip_id", sort=False):
+        layers = candidates_for_points(g, t.lon.values, t.lat.values,
+                                       opts.search_distance,
+                                       opts.emission_error)
+        r = solve_trip(g, layers, opts)
+        rows = out[out.trip_id == tid]
+        assert set(rows.status) == {r["status"]}
+        if r["status"] == "matched":
+            assert rows.edge_id.tolist() == [
+                int(g.edge_id[layers[k]["edge_row"][p]])
+                for k, p in enumerate(r["path"])]
+            assert set(rows.trip_cost) == {r["cost"]}

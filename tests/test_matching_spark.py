@@ -237,3 +237,28 @@ def test_engine_gates_run_the_engine():
     ]
     missing = [n for n in engine_gates if n not in Q._SPARK_OVERRIDES]
     assert not missing, missing
+
+
+@pytest.mark.parametrize("candidate_path", ["broadcast", "celljoin"])
+def test_nan_point_fails_only_its_own_trip(spark, candidate_path):
+    """A NaN coordinate gives its point no candidate: its own trip reports
+    unanchored, and a good trip solved in the same task (one shuffle
+    partition) still matches."""
+    nodes, edges = grid_network(12)
+    trips = walk_trips(nodes, edges, n_trips=2, points_per_trip=6, seed=3)
+    tids = sorted(trips.trip_id.unique())
+    bad = (trips.trip_id == tids[0]) & (trips.seq == 2)
+    trips.loc[bad, "lat"] = float("nan")
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        out = match_trips(
+            spark.createDataFrame(trips), spark.createDataFrame(nodes),
+            spark.createDataFrame(edges),
+            candidate_path=candidate_path).toPandas()
+    finally:
+        spark.conf.set(key, prev)
+    by_trip = {t: set(g.status) for t, g in out.groupby("trip_id")}
+    assert by_trip == {tids[0]: {"unanchored"}, tids[1]: {"matched"}}
+    assert len(out[out.trip_id == tids[1]]) == 6

@@ -313,3 +313,24 @@ def test_scalar_vector_geo_twins_bit_equal():
     for i in range(500):
         assert hv[i] == haversine_s(lon1[i], lat1[i], lon2[i], lat2[i])
         assert bv[i] == bearing_s(lon1[i], lat1[i], lon2[i], lat2[i])
+
+
+def test_small_predicate_cache_empties_and_gives_same_matrices(grid_graph):
+    """A cache far smaller than the roots in play empties itself wholesale
+    whenever a call's misses would overfill it, yet every matrix equals
+    the one a roomy cache gives; between calls it never holds more than
+    one call's roots past its capacity."""
+    g = grid_graph
+    rng = np.random.default_rng(23)
+    layers = [l for l in _random_layers(g, rng, 30, -118.4995, 33.7005, 0.016)
+              if len(l["edge_row"])]
+    bs = list(zip(layers, layers[1:]))
+    want = weigh_boundaries(g, PredicateCache(), bs)
+    small = PredicateCache(capacity=6)
+    for k, b in enumerate(bs):
+        got = weigh_boundaries(g, small, [b])[0]
+        np.testing.assert_array_equal(got, want[k])
+        roots = len(np.unique(g.edge_dst[b[0]["edge_row"]]))
+        assert small._roots <= max(small.capacity, roots)
+    for a, b in zip(weigh_boundaries(g, small, bs), want):
+        np.testing.assert_array_equal(a, b)

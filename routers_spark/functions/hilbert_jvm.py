@@ -1,65 +1,48 @@
-"""Loop-free JVM-side Hilbert keys: chunked state-machine lookups.
+"""JVM-side Hilbert keys as one Column: chunked state-machine lookups.
 
 The classic xy2d rotation loop (functions/cells.py hilbert_xy2h_np; twin of
 fast_hilbert::xy2h, fragment.rs:69-71) carries a (swap, complement) rotation
-state bit-by-bit — expressed naively as SQL that is a projection chain whose
-expression tree doubles per level, which is exactly why the CTE program
-needs materialization fences and why it measured ~6.4 s for the hilbert
-levels alone at 8M rows (the per-level chain defeats whole-stage codegen).
+state bit by bit. The state is a 4-element group, so three levels collapse
+into one lookup over (state, x_chunk, y_chunk) -> (digits, next_state): a
+256-entry table, packed as ``(digits << 2) | next_state`` and held in one
+array literal. ``hilbert_col`` is one ``element_at`` per 3-bit chunk, MSB
+first, so a key needs no join, no Python and no per-call DataFrame.
 
-This module removes the per-level chain entirely: the rotation state is a
-4-element group, so K levels collapse into ONE transition-table lookup over
-(state, x_chunk, y_chunk) → (digits, next_state). Chunks are at most 6 bits
-wide, so every table has at most 4·64·64 = 16 Ki rows: a z12 tile key is two
-broadcast hash joins, a z15/z16 key three, and the 30-level S2 position
-(functions/s2_jvm.py) five — fully inside whole-stage codegen, no Python, no
-Arrow transfer, no deep expression tree. Wider chunks save a probe but the
-driver builds each table in pandas and broadcasts it per call: a 6-bit
-chunk's table is L2-resident, an 8-bit one (256 Ki rows) costs seconds to
-build and ship (BENCH.md, OPTIMIZATION_r06.md).
+Each lookup is read twice, for its digits and for the next chunk's state,
+so the expression tree grows with the square of the chunk count (10 chunks
+at order 30), not exponentially; whole-stage codegen's subexpression
+elimination evaluates each lookup once.
 
 Bit-parity with hilbert_xy2h_np is pinned by tests/test_tiling.py.
 """
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-_MAX_CHUNK = 6  # 4·64·64 = 16 Ki-row table worst case
+_K = 3  # bits per axis per lookup: 4 states x 8 x 8 = 256 entries
 
 
-def chunk_plan(order: int) -> list[int]:
-    """MSB-first chunk widths covering ``order`` bits, each ≤ _MAX_CHUNK."""
-    out: list[int] = []
-    left = order
-    while left > 0:
-        k = min(_MAX_CHUNK, left)
-        out.append(k)
-        left -= k
-    return out
+def chunk_table() -> np.ndarray:
+    """Packed transition table for one 3-bit chunk, all rows vectorized.
 
-
-def chunk_table(k: int, first: bool) -> pd.DataFrame:
-    """Transition table for one k-bit chunk, all rows vectorized.
-
-    Columns: key = (state << 2k) | (xc << k) | yc  (state omitted when
-    ``first`` — the walk always starts in state 0), d = the chunk's 2k
-    Hilbert digits, st = the state handed to the next chunk.
+    Entry ``(state << 6) | (xc << 3) | yc`` holds ``(d << 2) | st``: d =
+    the chunk's 6 Hilbert digits, st = the state handed to the next chunk.
     State encoding: bit0 = axis swap, bit1 = complement — the rotation
     carried by the classic loop, applied to raw bits as swap-then-flip.
     """
-    n = 1 << k
-    n_states = 1 if first else 4
-    st0 = np.repeat(np.arange(n_states, dtype=np.int64), n * n)
-    xc = np.tile(np.repeat(np.arange(n, dtype=np.int64), n), n_states)
-    yc = np.tile(np.arange(n, dtype=np.int64), n_states * n)
+    n = 1 << _K
+    st0 = np.repeat(np.arange(4, dtype=np.int64), n * n)
+    xc = np.tile(np.repeat(np.arange(n, dtype=np.int64), n), 4)
+    yc = np.tile(np.arange(n, dtype=np.int64), 4 * n)
     sw = st0 & 1
     c = (st0 >> 1) & 1
     d = np.zeros_like(st0)
-    for i in range(k - 1, -1, -1):
+    for i in range(_K - 1, -1, -1):
         xb = (xc >> i) & 1
         yb = (yc >> i) & 1
         xe = np.where(sw == 1, yb, xb) ^ c
@@ -68,47 +51,42 @@ def chunk_table(k: int, first: bool) -> pd.DataFrame:
         upd = ye == 0
         c = np.where(upd & (xe == 1), c ^ 1, c)
         sw = np.where(upd, sw ^ 1, sw)
-    key = (st0 << (2 * k)) | (xc << k) | yc
-    return pd.DataFrame({"key": key, "d": d, "st": (c << 1) | sw})
+    return ((d << 2) | (c << 1) | sw).astype(np.int32)
 
 
-def with_hilbert_jvm(df: DataFrame, xcol: str, ycol: str, order: int,
-                     out: str = "hilbert") -> DataFrame:
-    """``df`` + Hilbert index of (xcol, ycol) at ``order`` bits — pure JVM.
+@functools.cache
+def _table_lit() -> Column:
+    # one array literal per process: a numpy array becomes a single
+    # Literal node (a Python list would be 256 child expressions)
+    return F.lit(chunk_table())
 
-    One broadcast hash join per chunk (2 joins up to order 12, 5 at order
-    30); the final index is reassembled from the per-chunk digits with
-    shifts."""
-    spark = df.sparkSession
-    chunks = chunk_plan(order)
-    cur = df
+
+def hilbert_col(x: Column | str, y: Column | str, order: int) -> Column:
+    """Hilbert index of (x, y) at ``order`` bits per axis, as a BIGINT Column.
+
+    Reads only the low ``order`` bits of each coordinate, as the classic
+    loop does. A NULL coordinate gives a NULL key (``element_at`` of a NULL
+    index is NULL). When ``order`` is not a multiple of 3, the top chunk is
+    narrower: it reads as a full chunk whose missing high bits are zero,
+    and each zero level toggles only the swap bit, so the walk starts in
+    state ``pad & 1`` to arrive in state 0 at the first real level."""
+    tbl = _table_lit()
+    k = order - _K * ((order - 1) // _K)  # top chunk width, 1.._K
+    off = 1 + (((_K - k) & 1) << (2 * _K))  # 1-based, plus the start state
     lo = order
-    digit_cols: list[tuple[str, int]] = []
-    for ci, k in enumerate(chunks):
+    key = state = None
+    while lo > 0:
         lo -= k
-        mask = (1 << k) - 1
-        xc = F.shiftright(F.col(xcol), lo).bitwiseAND(F.lit(mask))
-        yc = F.shiftright(F.col(ycol), lo).bitwiseAND(F.lit(mask))
-        key: Column = F.shiftleft(xc, k).bitwiseOR(yc)
-        if ci > 0:
-            key = F.shiftleft(F.col(f"_hst{ci - 1}"), 2 * k).bitwiseOR(key)
-        tbl = spark.createDataFrame(chunk_table(k, first=(ci == 0))).select(
-            F.col("key").alias(f"_hk{ci}"),
-            F.col("d").alias(f"_hd{ci}"),
-            F.col("st").alias(f"_hst{ci}"),
-        )
-        # LEFT join: a NULL x/y produces a NULL key, which must yield a
-        # NULL hilbert — an inner join would silently DROP the row (the
-        # old expression-chain form kept it with a NULL sort key)
-        cur = (cur.withColumn(f"_hk{ci}", key.cast("long"))
-               .join(F.broadcast(tbl), f"_hk{ci}", "left"))
-        digit_cols.append((f"_hd{ci}", k))
-    expr = None
-    bits_below = 2 * order
-    for name, k in digit_cols:
-        bits_below -= 2 * k
-        piece = F.shiftleft(F.col(name), bits_below) if bits_below else F.col(name)
-        expr = piece if expr is None else expr.bitwiseOR(piece)
-    drop = [c for ci in range(len(chunks))
-            for c in (f"_hk{ci}", f"_hd{ci}", f"_hst{ci}")]
-    return cur.withColumn(out, expr.cast("long")).drop(*drop)
+        m = (1 << k) - 1
+        idx = (F.shiftleft(F.shiftright(x, lo).bitwiseAND(m), _K)
+               .bitwiseOR(F.shiftright(y, lo).bitwiseAND(m)))
+        if state is not None:
+            idx = F.shiftleft(state, 2 * _K).bitwiseOR(idx)
+        hit = F.element_at(tbl, (idx + off).cast("int"))
+        digits = F.shiftright(hit, 2).cast("long")
+        if lo:
+            digits = F.shiftleft(digits, 2 * lo)
+        key = digits if key is None else key.bitwiseOR(digits)
+        state = hit.bitwiseAND(3)
+        k, off = _K, 1
+    return key

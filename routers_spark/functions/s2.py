@@ -19,7 +19,7 @@ Twin of sqlgen.s2_cellid_cte_sql — the numpy kernel here is the
 reference for pytest; the generated SQL is the DuckDB oracle of the gated
 query, and functions/s2_jvm.py is its Spark side. Both product forms run
 the Hilbert fold through the tile kernels (cells.hilbert_xy2h_np,
-hilbert_jvm.with_hilbert_jvm); the orientation tables below drive only
+hilbert_jvm.hilbert_col); the orientation tables below drive only
 the oracle CTE, so the oracle and the kernels are independent Hilbert
 implementations.
 """

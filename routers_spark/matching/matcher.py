@@ -146,13 +146,13 @@ def _cand(layer: dict, i: int) -> dict:
 def solve_trip(graph, layers: list[dict], opts: MatchOptions,
                boundary_keys: list | None = None,
                boundary_cache: dict | None = None) -> dict:
-    """Weigh + solve + collapse one trip. Returns
-    {status, breaks, path, cost, hops, mats} where path[i] is the chosen
-    candidate index per layer, hops[i] the (resolution, path_rows) of
-    boundary i, and mats the weighed boundary matrices (the streaming
-    matcher builds its convergence trellis from them — one weigh per
-    micro-batch, not two). The solve is the batched compiled Viterbi of
-    ``_solve_trips``, called with one trip.
+    """Weigh + solve one trip. Returns {status, breaks, path, cost, mats}
+    where path[i] is the chosen candidate index per layer and mats the
+    weighed boundary matrices (the streaming matcher builds its
+    convergence trellis from them — one weigh per micro-batch, not two).
+    The solve is the batched compiled Viterbi of ``_solve_trips``, called
+    with one trip. A caller that needs boundary k's hop geometry asks
+    ``reach`` for it on the two chosen candidates.
 
     R2 incremental weighing (weigh/mod.rs:30-34, 160-168: only PENDING
     boundaries recomputed): with ``boundary_keys`` + ``boundary_cache``,
@@ -187,18 +187,13 @@ def solve_trip(graph, layers: list[dict], opts: MatchOptions,
                          mats)
     if status[0] == 2:
         return _unsolved("unreachable", [], mats)
-    path = path.tolist()
-    # collapse: re-derive chosen hops from the warm cache (entity.rs:337-358)
-    hops = [reach(graph, GLOBAL_PREDICATE_CACHE, _cand(layers[k], path[k]),
-                  _cand(layers[k + 1], path[k + 1]), opts.profile)
-            for k in range(nb)]
-    return {"status": "matched", "breaks": [], "path": path,
-            "cost": int(cost[0]), "hops": hops, "mats": mats}
+    return {"status": "matched", "breaks": [], "path": path.tolist(),
+            "cost": int(cost[0]), "mats": mats}
 
 
 def _unsolved(status: str, breaks: list, mats=None) -> dict:
     return {"status": status, "breaks": breaks, "path": None, "cost": None,
-            "hops": None, "mats": mats}
+            "mats": mats}
 
 
 # --------------------------------------------------------------- Spark API

@@ -194,7 +194,7 @@ def _q_s2(dialect: str) -> str:
     shard/tile layer would key on. The oracle side is the generated
     integer/CASE CTE (sqlgen.s2_cellid_cte_sql); the Spark side runs the
     JVM form (functions/s2_jvm.py, _s2_spark override), whose Hilbert fold
-    is the tile key's chunked lookup (functions/hilbert_jvm.py).
+    is the tile key's Column of chunk lookups (functions/hilbert_jvm.py).
     tests/test_s2.py pins the numpy kernel, the Hilbert-curve properties,
     and the fixture's floor-boundary margins that make the float prefix
     of the pipeline cross-engine exact."""
@@ -1511,10 +1511,10 @@ def _pbf_way_edges_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_tile_range(dialect: str) -> str:
     """S8 range-pruned tile scan: hilbert keys of the z9 fragment (87,204)'s
     z12 descendants are one contiguous range [h<<6, (h+1)<<6) — the
-    BigTable RowRange analog (bigtable.rs:311-320, range.rs:207-237). The
-    Spark side is the engine's assign_tile_cells + scan_tile_range (BETWEEN
-    pushed into the scan); this oracle restates the filter over the same
-    hilbert CTE program."""
+    BigTable RowRange analog (bigtable.rs:311-320, range.rs:207-237). This
+    oracle filters that key range over the hilbert CTE program; the Spark
+    side (_tile_range_spark) keys with assign_tile_cells and selects the
+    same rows by tile prefix."""
     from routers_spark.tiling.pipeline import fragment_hilbert_range
 
     d = _d(dialect)
@@ -1543,13 +1543,18 @@ def _q_tile_range(dialect: str) -> str:
 
 
 def _tile_range_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Engine side of tile_range_scan: hilbert keys via assign_tile_cells'
-    chunked lookup joins, then scan_tile_range's BETWEEN (at scale the tile
-    table STORES this column and the BETWEEN prunes parquet files —
-    tests/test_build_shard_scan.py shows the PushedFilters; the lookup
-    joins fence the filter, so Catalyst cannot inline a per-level program
-    into the pushed predicate)."""
-    from routers_spark.tiling.pipeline import assign_tile_cells, scan_tile_range
+    """Engine side of tile_range_scan: hilbert keys from assign_tile_cells,
+    and the z9 fragment (87, 204) selected by its z12 descendants' tile
+    prefix, (tile_x >> 3, tile_y >> 3) = (87, 204) — the same rows as the
+    key range, because a fragment's descendants fill one contiguous key
+    range. A stored tile table filters that range itself (scan_tile_range,
+    whose BETWEEN on the stored column prunes parquet files). On a key
+    computed in this plan, Catalyst would push the BETWEEN through the
+    projection and inline the chunk lookups and the slippy math into the
+    scan filter; the tile-prefix test does not repeat them."""
+    from pyspark.sql import functions as F
+
+    from routers_spark.tiling.pipeline import assign_tile_cells
 
     register_views(spark, sf_dir)
     pts = spark.sql(
@@ -1557,7 +1562,9 @@ def _tile_range_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" {EVENT_LAT} AS lat FROM events")
     tiles = assign_tile_cells(pts, zoom=12, gh_precision=None,
                               keep=["event_id"])
-    return scan_tile_range(tiles, 9, 87, 204, storage_zoom=12) \
+    k = 12 - 9
+    return tiles.filter((F.shiftright("tile_x", k) == 87)
+                        & (F.shiftright("tile_y", k) == 204)) \
         .select("event_id", "hilbert")
 
 
@@ -3102,11 +3109,11 @@ def _knn_spark_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _s2_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark override for cell_encode_s2: the chunked state-machine
-    lookup form (functions/s2_jvm.py over functions/hilbert_jvm.py) — five
-    broadcast hash joins inside whole-stage codegen instead of the
-    60-projection CTE chain (which Spark executes correctly but kicks out
-    of codegen on method size).
+    """Spark override for cell_encode_s2: functions/s2_jvm.py, a few
+    projections whose Hilbert fold is one Column of in-expression chunk
+    lookups (functions/hilbert_jvm.hilbert_col) — no join, inside
+    whole-stage codegen, instead of the 60-projection CTE chain (which
+    Spark executes correctly but drops out of codegen on method size).
     Bit-parity with the numpy kernel and the DuckDB oracle CTE is pinned
     by tests/test_s2.py."""
     from .functions.s2_jvm import with_s2_jvm

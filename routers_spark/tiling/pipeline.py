@@ -25,7 +25,7 @@ from routers_spark.functions.cells import (
     slippy_offsets_np,
     slippy_xy_np,
 )
-from routers_spark.functions.hilbert_jvm import with_hilbert_jvm
+from routers_spark.functions.hilbert_jvm import hilbert_col
 from routers_spark.functions.raster import decode_image, png_encode, pyramid
 
 
@@ -38,15 +38,11 @@ def assign_tile_cells(df: DataFrame, zoom: int, gh_precision: int | None = 6,
     lon/lat). The hilbert key is the cluster/sort column enabling
     range-pruned tile scans (S8).
 
-    The whole pass stays JVM-side — geohash + slippy as one rendered
-    sqlgen projection chain, hilbert as the chunked broadcast-lookup joins
-    (functions/hilbert_jvm.py). A NULL or NaN lon/lat keeps its row with
-    NULL gh/tile_x/tile_y/hilbert. Measured (BENCH.md): ANY Python round trip
-    over this input costs a flat ~7.5 s at 32M rows regardless of core
-    count — the Arrow transfer pipe, not the kernel, is the binding
-    resource and it does not scale with threads. The JVM form both beats
-    it absolutely at local[32] and actually scales 8→32, which is the
-    property the north rule grades."""
+    The whole pass is JVM projections with no join and no Python stage:
+    geohash + slippy as one rendered sqlgen projection, and hilbert as one
+    Column of in-expression chunk lookups over tile_x/tile_y
+    (functions/hilbert_jvm.hilbert_col). A NULL or NaN lon/lat keeps its
+    row with NULL gh/tile_x/tile_y/hilbert."""
     import uuid
 
     keep = keep if keep is not None else [
@@ -70,7 +66,7 @@ def assign_tile_cells(df: DataFrame, zoom: int, gh_precision: int | None = 6,
     # the analyzed plan no longer needs the catalog entry — drop it so
     # repeated calls don't grow the session catalog without bound
     df.sparkSession.catalog.dropTempView(name)
-    return with_hilbert_jvm(base, "tile_x", "tile_y", zoom)
+    return base.withColumn("hilbert", hilbert_col("tile_x", "tile_y", zoom))
 
 
 def fragment_hilbert_range(z: int, x: int, y: int,
@@ -175,6 +171,7 @@ def mvt_point_tiles(points_df: DataFrame, zoom: int, layer_name: str = "points",
             "n_points": [len(pdf)], "mvt": [blob],
         })
 
-    return with_tiles.groupBy("z", "tile_x", "tile_y").applyInPandas(
-        build, schema=MVT_SCHEMA
-    )
+    # the UDF reads only these, so column pruning drops the hilbert key
+    return with_tiles.select("z", "tile_x", "tile_y", "lon", "lat", id_col) \
+        .groupBy("z", "tile_x", "tile_y") \
+        .applyInPandas(build, schema=MVT_SCHEMA)

@@ -9,9 +9,15 @@ import numpy as np
 
 from routers_spark.fixtures.roads import RoadBuilder
 from routers_spark.graph.access import TripProfile, accessible
-from routers_spark.graph.dijkstra import PredicateCache
+from routers_spark.graph.dijkstra import GLOBAL_PREDICATE_CACHE, PredicateCache
 from routers_spark.graph.packed import build_packed_graph
-from routers_spark.matching.matcher import MatchOptions, candidates_for_points, solve_trip
+from routers_spark.matching.matcher import (
+    MatchOptions,
+    _cand,
+    candidates_for_points,
+    reach,
+    solve_trip,
+)
 
 from dijkstra_oracle import bounded_dijkstra_parents
 
@@ -123,15 +129,17 @@ def test_match_path_flips_under_profile():
     assert free["status"] == "matched"
     assert gated["status"] == "matched"
 
-    def hop_nodes(result):
-        res, rows = result["hops"][0]
+    def hop_nodes(result, profile=None):
+        path = result["path"]
+        res, rows = reach(g, GLOBAL_PREDICATE_CACHE, _cand(layers[0], path[0]),
+                          _cand(layers[1], path[1]), profile)
         return [(int(g.edge_src[e]), int(g.edge_dst[e])) for e in rows]
 
     # ungated: bridge over the direct edge 2->3; gated: around via node 5
     assert (idx[2], idx[3]) in hop_nodes(free)
-    assert (idx[2], idx[3]) not in hop_nodes(gated)
-    assert (idx[2], idx[5]) in hop_nodes(gated)
-    assert (idx[5], idx[3]) in hop_nodes(gated)
+    assert (idx[2], idx[3]) not in hop_nodes(gated, CAR)
+    assert (idx[2], idx[5]) in hop_nodes(gated, CAR)
+    assert (idx[5], idx[3]) in hop_nodes(gated, CAR)
 
 
 def test_profile_keyed_cache_no_taint():

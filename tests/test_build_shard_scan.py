@@ -67,6 +67,20 @@ def test_built_edges_route(spark, ways):
     assert [int(g.node_ids[i]) for i in path] == [10, 11, 12, 13]
 
 
+def _fragment_grid(sz):
+    n = 1 << sz
+    xs, ys = np.meshgrid(np.arange(n), np.arange(n), indexing="ij")
+    return xs.ravel(), ys.ravel()
+
+
+def _descendants(z, x, y, sz):
+    """Membership oracle: the tiles of (z, x, y) at zoom ``sz``
+    (Fragment::detail)."""
+    k = sz - z
+    return {(x * (1 << k) + dx, y * (1 << k) + dy)
+            for dx in range(1 << k) for dy in range(1 << k)}
+
+
 def test_hilbert_range_scan_equals_membership(spark):
     """Range scan (one BETWEEN on the hilbert sort key) selects exactly the
     fragment's descendant tiles (Fragment::detail membership)."""
@@ -74,20 +88,28 @@ def test_hilbert_range_scan_equals_membership(spark):
     from routers_spark.tiling.pipeline import fragment_hilbert_range, scan_tile_range
 
     z, sz = 4, 7
-    n = 1 << sz
-    xs, ys = np.meshgrid(np.arange(n), np.arange(n), indexing="ij")
-    xs, ys = xs.ravel(), ys.ravel()
+    xs, ys = _fragment_grid(sz)
     hk = hilbert_xy2h_np(xs, ys, sz)
     tiles = spark.createDataFrame(
         pd.DataFrame({"x": xs, "y": ys, "hilbert": hk}))
     got = scan_tile_range(tiles, z, 5, 9, sz).toPandas()
-    # membership oracle: descendants of (z=4, 5, 9) at z=7
-    k = sz - z
-    want = {(5 * (1 << k) + dx, 9 * (1 << k) + dy)
-            for dx in range(1 << k) for dy in range(1 << k)}
-    assert set(zip(got.x, got.y)) == want
+    assert set(zip(got.x, got.y)) == _descendants(z, 5, 9, sz)
     lo, hi = fragment_hilbert_range(z, 5, 9, sz)
     assert got.hilbert.min() == lo and got.hilbert.max() == hi
+
+
+def test_hilbert_range_scan_over_computed_key(spark):
+    """The same range scan over a key computed in the plan (hilbert_col,
+    which the BETWEEN is pushed through) selects the same tiles."""
+    from routers_spark.functions.hilbert_jvm import hilbert_col
+    from routers_spark.tiling.pipeline import scan_tile_range
+
+    z, sz = 4, 7
+    xs, ys = _fragment_grid(sz)
+    tiles = spark.createDataFrame(pd.DataFrame({"x": xs, "y": ys})) \
+        .withColumn("hilbert", hilbert_col("x", "y", sz))
+    got = scan_tile_range(tiles, z, 5, 9, sz).toPandas()
+    assert set(zip(got.x, got.y)) == _descendants(z, 5, 9, sz)
 
 
 def test_bucketed_cell_join_is_shuffle_free(spark, tmp_path):

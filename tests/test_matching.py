@@ -16,10 +16,16 @@ from routers_spark.fixtures.roads import (
     walk_trips,
 )
 from routers_spark.graph.packed import build_packed_graph
-from routers_spark.graph.dijkstra import PredicateCache, route_nodes
+from routers_spark.graph.dijkstra import (
+    GLOBAL_PREDICATE_CACHE,
+    PredicateCache,
+    route_nodes,
+)
 from routers_spark.matching.matcher import (
     MatchOptions,
+    _cand,
     candidates_for_points,
+    reach,
     solve_trip,
 )
 
@@ -46,6 +52,13 @@ def match(g, pts, **kw):
     return layers, solve_trip(g, layers, opts)
 
 
+def chosen_hop(g, layers, result, k, profile=None):
+    """(resolution, path_rows) of boundary k between the chosen candidates."""
+    path = result["path"]
+    return reach(g, GLOBAL_PREDICATE_CACHE, _cand(layers[k], path[k]),
+                 _cand(layers[k + 1], path[k + 1]), profile)
+
+
 def matched_edges(g, layers, result):
     return [int(g.edge_id[layers[k]["edge_row"][result["path"][k]]])
             for k in range(len(result["path"]))]
@@ -65,7 +78,7 @@ def test_intermediate_edge_crossed():
     assert r["status"] == "matched"
     assert matched_edges(g, layers, r) == [0, 2]
     # the hop bridges via edge 1 (standard resolution with a routed path)
-    resolution, path_rows = r["hops"][0]
+    resolution, path_rows = chosen_hop(g, layers, r, 0)
     assert resolution == "standard"
     assert [int(g.edge_id[e]) for e in path_rows] == [1]
 

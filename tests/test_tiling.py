@@ -277,31 +277,80 @@ def test_assign_zones_spark(spark):
     assert z == {"a": "west", "b": "east", "c": None}
 
 
-def test_hilbert_jvm_matches_numpy(spark):
-    """Chunked state-machine lookup joins == the classic rotation loop,
-    bit for bit, across orders that exercise 1- to 5-chunk plans (full and
-    partial last chunks); order 30 is the S2 leaf position."""
-    from routers_spark.functions.hilbert_jvm import with_hilbert_jvm
+def check_hilbert_parity(spark):
+    """hilbert_col == the classic rotation loop (hilbert_xy2h_np), bit for
+    bit: every (x, y) at orders 1-8, 4,000 random points at each order
+    9-30, and negative and out-of-range coordinates at every order (both
+    read only the low ``order`` bits)."""
+    from pyspark.sql import functions as F
+
+    from routers_spark.functions.hilbert_jvm import hilbert_col
 
     rng = np.random.default_rng(3)
-    for order in (3, 6, 7, 12, 13, 16, 30):
-        n = 4000
-        pdf = pd.DataFrame({
-            "i": np.arange(n),
-            "x": rng.integers(0, 1 << order, n),
-            "y": rng.integers(0, 1 << order, n),
-        })
-        got = (with_hilbert_jvm(spark.createDataFrame(pdf), "x", "y", order)
-               .toPandas().sort_values("i"))
-        want = hilbert_xy2h_np(got["x"].values, got["y"].values, order)
-        np.testing.assert_array_equal(got["hilbert"].values, want), order
+    edge = np.array([-1, -(1 << 40), 1 << 31, (1 << 62) + 5,
+                     -(1 << 63), (1 << 63) - 1], dtype=np.int64)
+    for order in range(1, 31):
+        if order <= 8:
+            g = np.arange(1 << order)
+            x, y = (a.ravel() for a in np.meshgrid(g, g, indexing="ij"))
+        else:
+            x, y = rng.integers(0, 1 << order, (2, 4000))
+        wx, wy = rng.integers(-(1 << 62), 1 << 62, (2, 250))
+        x = np.concatenate([x, wx, edge, edge[::-1]])
+        y = np.concatenate([y, wy, edge[::-1], edge])
+        pts = spark.createDataFrame(pd.DataFrame(
+            {"x": x, "y": y, "want": hilbert_xy2h_np(x, y, order)}))
+        bad = pts.select("want", hilbert_col("x", "y", order).alias("got")) \
+            .filter(~F.col("got").eqNullSafe(F.col("want"))).count()
+        assert bad == 0, (order, bad)
+
+
+def test_hilbert_jvm_matches_numpy(spark):
+    check_hilbert_parity(spark)
+
+
+def test_parity_under_vanilla_ansi_session():
+    """The Hilbert and S2 parity checks once more under a plain session:
+    Spark 4 defaults, ANSI on, where element_at raises on an out-of-range
+    index. A child process, since one JVM holds one SparkContext."""
+    import os
+    import subprocess
+    import sys
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    root = os.path.dirname(here)
+    code = (
+        f"import sys; sys.path[:0] = [{here!r}, {root!r}]\n"
+        "from pyspark.sql import SparkSession\n"
+        "import test_s2, test_tiling\n"
+        "spark = SparkSession.builder.master('local[2]').getOrCreate()\n"
+        "assert spark.conf.get('spark.sql.ansi.enabled') == 'true'\n"
+        "test_tiling.check_hilbert_parity(spark)\n"
+        "test_s2.check_s2_parity(spark)\n"
+        "spark.stop()\n")
+    r = subprocess.run([sys.executable, "-c", code], cwd=root,
+                       capture_output=True, text=True, timeout=900)
+    assert r.returncode == 0, r.stderr[-4000:]
+
+
+def test_hilbert_col_expression_stays_small(spark):
+    """Each chunk lookup is read twice (digits, next state), so the tree
+    grows with the square of the chunk count: about 1,500 analyzed nodes
+    at order 30. A form that nests the whole walk per level doubles per
+    chunk and breaks this bound long before 10 chunks."""
+    from routers_spark.functions.hilbert_jvm import hilbert_col
+
+    df = spark.createDataFrame([(1, 2)], "x long, y long")
+    expr = df.select(hilbert_col("x", "y", 30).alias("h"))._jdf \
+        .queryExecution().analyzed().expressions().apply(0)
+    assert expr.treeString().count("\n") < 2000
 
 
 def test_assign_tile_cells_jvm_plan_has_no_python(spark):
-    """Scale guard for the r4 fast path: the default assign_tile_cells plan
-    must stay entirely JVM-side — broadcast lookup joins for hilbert, no
-    Arrow/Python eval node anywhere (the Arrow pipe was the measured
-    non-scaling resource, BENCH.md round-4 breakdown)."""
+    """Scale guard for the JVM fast path: the assign_tile_cells plan is
+    projections only — no join, no exchange and no Arrow/Python eval node
+    (the Arrow pipe was the measured non-scaling resource, BENCH.md
+    round-4 breakdown)."""
     import pandas as pd
 
     from routers_spark.tiling.pipeline import assign_tile_cells
@@ -313,23 +362,23 @@ def test_assign_tile_cells_jvm_plan_has_no_python(spark):
     }))
     plan = assign_tile_cells(df, zoom=15, gh_precision=6) \
         ._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    for bad in ("ArrowEvalPython", "FlatMapInPandas", "MapInPandas",
-                "BatchEvalPython"):
+    for bad in ("Join", "Exchange", "ArrowEvalPython", "FlatMapInPandas",
+                "MapInPandas", "BatchEvalPython", "PythonUDF"):
         assert bad not in plan, bad
 
 
 def test_hilbert_jvm_preserves_null_rows(spark):
     """A NULL x/y must yield a NULL hilbert key, not a silently dropped
-    row (the lookup joins are LEFT joins for exactly this reason)."""
+    row (element_at of a NULL index is NULL)."""
     import pandas as pd
 
-    from routers_spark.functions.hilbert_jvm import with_hilbert_jvm
+    from routers_spark.functions.hilbert_jvm import hilbert_col
 
     pdf = pd.DataFrame({"i": [0, 1, 2],
                         "x": pd.array([3, None, 7], dtype="Int64"),
                         "y": pd.array([5, 2, None], dtype="Int64")})
-    out = with_hilbert_jvm(spark.createDataFrame(pdf), "x", "y", 15) \
+    out = spark.createDataFrame(pdf) \
+        .withColumn("hilbert", hilbert_col("x", "y", 15)) \
         .toPandas().sort_values("i")
     assert len(out) == 3
     assert out["hilbert"].notna().tolist() == [True, False, False]

@@ -16,14 +16,17 @@ built with the system C compiler (``cc``) on first import, cached by a hash
 of its source and flags, and loaded through ``ctypes``. There is no Python
 fallback; without a compiler the import raises ``ImportError``. The pure
 Python version it must equal node for node lives in
-``tests/dijkstra_oracle.py``. The same library holds the matcher's batched
-Viterbi (:func:`viterbi`), one call for every trip of a batch.
+``tests/dijkstra_oracle.py``. The same library holds the matcher's
+boundary weigher (:class:`WeighCall`, behind ``matching.weigh``) and its
+batched Viterbi (:func:`viterbi`), one call for every trip of a batch;
+this module is where their arguments are checked.
 
 Parent maps are kept in the predicate cache, one flat arena per graph and
-profile (:class:`PredicateCache`): every (root, leaf) lane of a weigh call
-is located with one searchsorted, and its misses are settled in one
-compiled call (:func:`settle_many`). It holds at most 8192 roots (cache.rs:19) per executor process,
-shared across Arrow batches, and empties wholesale when full.
+profile (:class:`PredicateCache`): a call's missing roots are settled in
+one compiled call (:func:`settle_many`) and sorted into the arena in C;
+its (root, leaf) lanes are located and walked in C. It holds at most 8192
+roots (cache.rs:19) per executor process, shared across Arrow batches,
+and empties wholesale when full.
 """
 
 from __future__ import annotations
@@ -42,7 +45,16 @@ from importlib import resources
 
 import numpy as np
 
-from routers_spark.config import DIJKSTRA_BOUND_CM, PREDICATE_CACHE_CAPACITY
+from routers_spark.config import (
+    COST_CLAMP_LO,
+    COST_DAMPING,
+    COST_PRECISION,
+    DIJKSTRA_BOUND_CM,
+    EARTH_RADIUS_M,
+    MAX_WEIGHT,
+    MIN_HEADING_DIST_M,
+    PREDICATE_CACHE_CAPACITY,
+)
 
 CC = "cc"
 CFLAGS = ("-O2", "-std=c99", "-shared", "-fPIC")
@@ -125,7 +137,21 @@ class _Graph(ctypes.Structure):
     _fields_ = [("n_nodes", ctypes.c_int64)] + [
         (name, ctypes.c_void_p) for name in (
             "indptr", "dst", "weight", "len_cm", "erow", "state", "touched",
-            "out_node", "out_parent", "out_depth")]
+            "out_node", "out_parent", "out_depth", "node_lon", "node_lat",
+            "edge_src", "edge_dst", "edge_weight", "edge_len_m",
+            "edge_heading")]
+
+
+class _ArenaView(ctypes.Structure):
+    _fields_ = [("n_nodes", ctypes.c_int64), ("size", ctypes.c_int64)] + [
+        (name, ctypes.c_void_p)
+        for name in ("slot_of", "key", "node", "loc", "depth")]
+
+
+class _Costs(ctypes.Structure):
+    _fields_ = [(name, ctypes.c_double) for name in (
+        "earth_radius_m", "min_heading_dist_m", "damping", "eps",
+        "precision_zeta")] + [("max_weight", ctypes.c_int64)]
 
 
 def _load(path: str) -> ctypes.CDLL:
@@ -143,6 +169,34 @@ def _load(path: str) -> ctypes.CDLL:
     lib.bd_settle_many.restype = ctypes.c_int64
     lib.bd_viterbi.argtypes = [ctypes.c_int64] + [ctypes.c_void_p] * 10
     lib.bd_viterbi.restype = None
+    lib.bd_arena_append.argtypes = [ctypes.POINTER(_Graph), ctypes.c_int64,
+                                    ctypes.c_int64] + [ctypes.c_void_p] * 8 \
+        + [ctypes.c_int64]
+    lib.bd_arena_append.restype = ctypes.c_int64
+    lib.bd_arena_locate.argtypes = [ctypes.POINTER(_ArenaView),
+                                    ctypes.c_int64] + [ctypes.c_void_p] * 4
+    lib.bd_arena_locate.restype = None
+    lib.bd_path_rows.argtypes = [ctypes.POINTER(_Graph),
+                                 ctypes.POINTER(_ArenaView), ctypes.c_int64,
+                                 ctypes.c_void_p, ctypes.c_void_p,
+                                 ctypes.c_void_p]
+    lib.bd_path_rows.restype = ctypes.c_int64
+    lib.bd_weigh_begin.argtypes = [ctypes.POINTER(_Graph), ctypes.c_int64] \
+        + [ctypes.c_void_p] * 11
+    lib.bd_weigh_begin.restype = ctypes.c_void_p
+    lib.bd_weigh_geometry.argtypes = [ctypes.c_void_p, ctypes.POINTER(_Graph),
+                                      ctypes.POINTER(_ArenaView)] \
+        + [ctypes.c_void_p] * 4
+    lib.bd_weigh_geometry.restype = ctypes.c_int64
+    lib.bd_weigh_finish.argtypes = [ctypes.c_void_p, ctypes.POINTER(_Graph),
+                                    ctypes.POINTER(_Costs)] \
+        + [ctypes.c_void_p] * 5
+    lib.bd_weigh_finish.restype = None
+    lib.bd_weigh_free.argtypes = [ctypes.c_void_p]
+    lib.bd_weigh_free.restype = None
+    lib.bd_libm.argtypes = [ctypes.c_int64, ctypes.c_int64] \
+        + [ctypes.c_void_p] * 3
+    lib.bd_libm.restype = None
     return lib
 
 
@@ -151,8 +205,9 @@ _LIB = _load(build_kernel(_build_dir()))
 
 class _Kernel:
     """One graph's CSR arrays in the kernel's dtypes plus its scratch
-    (per-node state, touched list and the pop-order outputs), built on
-    first use and kept on the graph."""
+    (per-node state, touched list and the pop-order outputs) and the
+    per-node and per-edge arrays the weigher reads, built on first use and
+    kept on the graph."""
 
     __slots__ = ("arrays", "struct")
 
@@ -167,6 +222,12 @@ class _Kernel:
             erows,
             np.full(n, -1, dtype=np.int64),
             *(np.empty(n, dtype=np.int64) for _ in range(4)),
+            *(np.ascontiguousarray(a, dtype=dt) for a, dt in (
+                (graph.node_lon, np.float64), (graph.node_lat, np.float64),
+                (graph.edge_src, np.int32), (graph.edge_dst, np.int32),
+                (graph.edge_weight, np.uint32),
+                (graph.edge_len_m, np.float64),
+                (graph.edge_heading, np.float64))),
         ]
         self.struct = _Graph(n, *(a.ctypes.data for a in self.arrays))
 
@@ -232,7 +293,8 @@ class _Arena:
     one sorted array (slots are appended in order). ``loc`` is the entry
     index of each node's parent (the root points at itself) and ``depth``
     its edge count from the root, so a leaf's path is known up front and
-    walkable by integer gathers. Buffers grow by doubling."""
+    walkable by integer gathers. Buffers grow by doubling; the sort, the
+    parent lookup and :meth:`locate` are compiled."""
 
     __slots__ = ("n_nodes", "slot_of", "n_slots", "size", "key", "node",
                  "loc", "depth")
@@ -245,15 +307,13 @@ class _Arena:
         self.key, self.node, self.loc, self.depth = (
             np.empty(0, dtype=np.int64) for _ in range(4))
 
-    def append(self, roots: np.ndarray, counts: np.ndarray, node: np.ndarray,
-               parent: np.ndarray, depth: np.ndarray) -> None:
+    def view(self) -> _ArenaView:
+        return _ArenaView(self.n_nodes, self.size, *(a.ctypes.data for a in (
+            self.slot_of, self.key, self.node, self.loc, self.depth)))
+
+    def append(self, graph, roots: np.ndarray, counts: np.ndarray,
+               node: np.ndarray, parent: np.ndarray, depth: np.ndarray) -> None:
         """Add one slot per root from :func:`settle_many`'s output."""
-        slots = np.arange(self.n_slots, self.n_slots + len(roots),
-                          dtype=np.int64)
-        base = np.repeat(slots * self.n_nodes, counts)
-        order = np.argsort(base + node)
-        node, base = node[order], base[order]
-        parent, depth = parent[order], depth[order]
         size, add = self.size, len(node)
         if size + add > len(self.key):
             cap = max(2 * len(self.key), size + add)
@@ -261,25 +321,40 @@ class _Arena:
                 grown = np.empty(cap, dtype=np.int64)
                 grown[:size] = getattr(self, name)[:size]
                 setattr(self, name, grown)
-        key = self.key[size:size + add]
-        key[:] = base + node
-        self.node[size:size + add] = node
-        self.loc[size:size + add] = np.searchsorted(key, base + parent) + size
-        self.depth[size:size + add] = depth
+        counts, node, parent, depth = (np.ascontiguousarray(a, dtype=np.int64)
+                                       for a in (counts, node, parent, depth))
+        if _LIB.bd_arena_append(
+                ctypes.byref(_Kernel.of(graph).struct), self.n_slots,
+                len(roots), *(a.ctypes.data for a in (
+                    counts, node, parent, depth, self.key, self.node,
+                    self.loc, self.depth)), size) < 0:
+            raise MemoryError("arena append allocation failed")
         self.size += add
-        self.slot_of[roots] = slots
+        self.slot_of[roots] = np.arange(self.n_slots, self.n_slots + len(roots),
+                                        dtype=np.int64)
         self.n_slots += len(roots)
 
     def locate(self, roots: np.ndarray, leaves: np.ndarray):
-        """(entry, member) per (root, leaf) lane, every root present: the
-        leaf's entry in its root's slot, and whether the leaf settled
-        within the bound (``entry`` is 0 where it did not)."""
-        key = self.key[:self.size]
-        q = self.slot_of[roots] * self.n_nodes + leaves
-        pos = np.searchsorted(key, q)
-        member = pos < len(key)
-        member[member] = key[pos[member]] == q[member]
-        return np.where(member, pos, 0), member
+        """(entry, member) per (root, leaf) lane: the leaf's entry in its
+        root's slot, and whether the leaf settled within the bound
+        (``entry`` is 0 where it did not, or where the root has no slot)."""
+        roots, leaves = (np.ascontiguousarray(a, dtype=np.int64)
+                         for a in (roots, leaves))
+        _check_lanes(self.n_nodes, roots, leaves)
+        entry = np.empty(len(roots), dtype=np.int64)
+        member = np.empty(len(roots), dtype=np.uint8)
+        _LIB.bd_arena_locate(ctypes.byref(self.view()), len(roots),
+                             roots.ctypes.data, leaves.ctypes.data,
+                             entry.ctypes.data, member.ctypes.data)
+        return entry, member.view(bool)
+
+
+def _check_lanes(n_nodes: int, roots: np.ndarray, leaves: np.ndarray) -> None:
+    if len(roots) != len(leaves) or not (
+            ((roots >= 0) & (roots < n_nodes)).all()
+            and ((leaves >= 0) & (leaves < n_nodes)).all()):
+        raise ValueError(f"lanes: {len(roots)} roots and {len(leaves)} leaves "
+                         f"must pair up as node indices in 0..{n_nodes - 1}")
 
 
 class PredicateCache:
@@ -290,13 +365,13 @@ class PredicateCache:
     TODO at cache.rs:308-313 notes its profile-less key taints queries —
     we fix it).
 
-    :meth:`locate` answers every (root, leaf) lane of a call at once;
-    the roots it misses are settled in one :func:`settle_many` call, with
-    no Python per root. Eviction is wholesale: when a call's misses would
-    take the roots held across all arenas past ``capacity`` (8192,
-    cache.rs:19), every arena is dropped and the call's roots are settled
-    afresh. A call may hold more roots than
-    ``capacity`` on its own until the next call's misses arrive."""
+    :meth:`settle` makes every root of a call present at once: the roots
+    it misses are settled in one :func:`settle_many` call, with no Python
+    per root. Eviction is wholesale: when a call's misses would take the
+    roots held across all arenas past ``capacity`` (8192, cache.rs:19),
+    every arena is dropped and the call's roots are settled afresh. A call
+    may hold more roots than ``capacity`` on its own until the next call's
+    misses arrive."""
 
     def __init__(self, capacity: int = PREDICATE_CACHE_CAPACITY,
                  threshold_cm: float = DIJKSTRA_BOUND_CM):
@@ -305,28 +380,56 @@ class PredicateCache:
         self._arenas: dict[tuple, _Arena] = {}
         self._roots = 0
 
-    def locate(self, graph, roots, leaves, profile=None):
-        """(arena, entry, member) for every (root, leaf) lane: see
-        :meth:`_Arena.locate`. Walk a lane with ``arena.loc`` from its
-        entry; ``arena.depth[entry] + 1`` nodes lead back to the root."""
+    def settle(self, graph, roots, profile=None) -> _Arena:
+        """The (graph, profile) arena, holding every root in ``roots``."""
         roots = np.asarray(roots, dtype=np.int64)
+        n = len(graph.node_ids)
+        _check_lanes(n, roots, roots)
         key = (graph.uid, profile)
         arena = self._arenas.get(key)
         if arena is None:
-            arena = self._arenas[key] = _Arena(len(graph.node_ids))
+            arena = self._arenas[key] = _Arena(n)
         miss = np.unique(roots[arena.slot_of[roots] < 0])
         if len(miss):
             if self._roots + len(miss) > self.capacity and self._roots:
-                self._arenas = {key: _Arena(len(graph.node_ids))}
+                self._arenas = {key: _Arena(n)}
                 self._roots = 0
                 arena = self._arenas[key]
                 miss = np.unique(roots)
             mask = graph.access_mask(profile) if profile is not None else None
-            arena.append(miss, *settle_many(graph, miss, self.threshold_cm,
-                                            mask))
+            arena.append(graph, miss, *settle_many(
+                graph, miss, self.threshold_cm, mask))
             self._roots += len(miss)
-        leaves = np.asarray(leaves, dtype=np.int64)
+        return arena
+
+    def locate(self, graph, roots, leaves, profile=None):
+        """(arena, entry, member) for every (root, leaf) lane: see
+        :meth:`_Arena.locate`. Walk a lane with ``arena.loc`` from its
+        entry; ``arena.depth[entry] + 1`` nodes lead back to the root."""
+        arena = self.settle(graph, roots, profile)
         return (arena, *arena.locate(roots, leaves))
+
+    def path_rows(self, graph, roots, leaves, profile=None):
+        """The edge rows of every (root, leaf) lane's path, in one compiled
+        walk (expansion.rs:26-39, then the lowest edge row of each node
+        pair, G2): ``(member, off, rows)``, lane i's rows being
+        ``rows[off[i]:off[i + 1]]``, none where the leaf is outside the
+        root's bound."""
+        arena, entry, member = self.locate(graph, roots, leaves, profile)
+        off = np.zeros(len(entry) + 1, dtype=np.int64)
+        np.cumsum(np.where(member, arena.depth[entry], 0), out=off[1:])
+        rows = np.empty(int(off[-1]), dtype=np.int64)
+        if _LIB.bd_path_rows(ctypes.byref(_Kernel.of(graph).struct),
+                             ctypes.byref(arena.view()), len(entry),
+                             entry.ctypes.data, member.ctypes.data,
+                             rows.ctypes.data) < 0:
+            raise RuntimeError("a parent pointer names no edge")
+        return member, off, rows
+
+    def drop(self, uid: int) -> None:
+        """Forget every arena of the graph with this ``uid``."""
+        for key in [k for k in self._arenas if k[0] == uid]:
+            self._roots -= self._arenas.pop(key).n_slots
 
     def path(self, graph, root: int, leaf: int,
              profile=None) -> list[int] | None:
@@ -345,6 +448,119 @@ class PredicateCache:
 
 
 GLOBAL_PREDICATE_CACHE = PredicateCache()
+
+
+class WeighCall:
+    """One call of the compiled boundary weigher (``bd_weigh_*``;
+    ``matching.weigh.weigh_flat`` has the contract), stopped between its
+    passes. On construction every pair is enumerated and classified, the
+    standard pairs' roots are settled in ``cache``, each (root, leaf) lane
+    is walked once, and ``asin`` gets the argument of every arcsin the
+    costs need, ``atan_y`` / ``atan_x`` those of every arctan2. The caller
+    applies ``np.arcsin(asin, out=asin)`` and ``np.arctan2(atan_y, atan_x,
+    out=atan_y)``, then :meth:`finish` writes the u32 costs, or
+    :meth:`values` returns each pair's transition inputs. Use it as a
+    context manager: leaving it frees the compiled state.
+
+    The arguments are checked here (``ValueError``), because the kernel
+    trusts its offsets and indices."""
+
+    def __init__(self, graph, cache, edge_row, frac, px, py, lo, mid, hi,
+                 moff, keep=None, profile=None):
+        self._kern = _Kernel.of(graph)
+        self._cols = (np.ascontiguousarray(edge_row, dtype=np.int64),
+                      *(np.ascontiguousarray(a, dtype=np.float64)
+                        for a in (frac, px, py)))
+        lo, mid, hi, moff = (np.ascontiguousarray(a, dtype=np.int64)
+                             for a in (lo, mid, hi, moff))
+        er = self._cols[0]
+        n_cand = len(er)
+        ok = (lo.ndim == 1 and len(lo) == len(mid) == len(hi) == len(moff) - 1
+              and all(len(c) == n_cand for c in self._cols)
+              and (lo >= 0).all() and (lo <= mid).all() and (mid <= hi).all()
+              and (hi <= n_cand).all() and moff[0] == 0
+              and (np.diff(moff) == (mid - lo) * (hi - mid)).all())
+        if not ok:
+            raise ValueError("weigh: lo/mid/hi disagree with the candidate "
+                             "table or the matrix offsets")
+        c0 = int(lo.min()) if len(lo) else 0
+        c1 = int(hi.max()) if len(lo) else 0
+        span = er[c0:c1]
+        if not ((span >= 0) & (span < len(graph.edge_id))).all():
+            raise ValueError(f"weigh: edge rows outside "
+                             f"0..{len(graph.edge_id) - 1}")
+        if keep is not None:
+            keep = np.ascontiguousarray(keep, dtype=bool)
+            if keep.shape != (int(moff[-1]),):
+                raise ValueError(f"weigh: keep mask of {keep.shape} for "
+                                 f"{int(moff[-1])} cells")
+        roots = np.empty(int((mid - lo).sum()), dtype=np.int64)
+        n_roots = ctypes.c_int64()
+        self._ctx = _LIB.bd_weigh_begin(
+            ctypes.byref(self._kern.struct), len(lo),
+            *(a.ctypes.data for a in (lo, mid, hi, moff, *self._cols)),
+            None if keep is None else keep.ctypes.data, roots.ctypes.data,
+            ctypes.byref(n_roots))
+        if not self._ctx:
+            raise MemoryError("weigh allocation failed")
+        try:
+            arena = cache.settle(graph, roots[:n_roots.value], profile)
+            nc = c1 - c0
+            room = 2 * nc + int(moff[-1])
+            bufs = [np.empty(room) for _ in range(3)]
+            counts = np.zeros(2, dtype=np.int64)
+            status = _LIB.bd_weigh_geometry(
+                self._ctx, ctypes.byref(self._kern.struct),
+                ctypes.byref(arena.view()),
+                *(a.ctypes.data for a in (*bufs, counts)))
+            if status == -1:
+                raise MemoryError("weigh allocation failed")
+            if status < 0:
+                raise RuntimeError("a parent pointer names no edge")
+        except BaseException:
+            self.close()
+            raise
+        self.n_pairs = int(counts[0])
+        self.asin = bufs[0][:2 * nc + self.n_pairs]
+        self.atan_y, self.atan_x = (b[:2 * nc + int(counts[1])]
+                                    for b in bufs[1:])
+
+    def _finish(self, zeta: float, flat, out, cells) -> None:
+        costs = _Costs(EARTH_RADIUS_M, MIN_HEADING_DIST_M, COST_DAMPING,
+                       COST_CLAMP_LO, COST_PRECISION * zeta, MAX_WEIGHT)
+        _LIB.bd_weigh_finish(
+            self._ctx, ctypes.byref(self._kern.struct), ctypes.byref(costs),
+            self.asin.ctypes.data, self.atan_y.ctypes.data,
+            None if flat is None else flat.ctypes.data,
+            None if out is None else out.ctypes.data,
+            None if cells is None else cells.ctypes.data)
+
+    def finish(self, flat: np.ndarray, zeta: float = 1.0) -> None:
+        """Write every reachable pair's u32 cost (ζ-scaled, ``beta`` 1) to
+        its cell of the flat matrix buffer ``flat`` (uint32)."""
+        if flat.dtype != np.uint32 or not flat.flags.c_contiguous:
+            raise ValueError("weigh: flat must be a contiguous uint32 array")
+        self._finish(zeta, flat, None, None)
+
+    def values(self):
+        """``(cells, straight, route_len, angular, w_src, w_tgt, value)``
+        per reachable pair in cell order, ``value`` being the default
+        transition value (default.rs:137-163)."""
+        out = np.empty((6, self.n_pairs))
+        cells = np.empty(self.n_pairs, dtype=np.int64)
+        self._finish(1.0, None, out, cells)
+        return (cells, *out)
+
+    def close(self) -> None:
+        if self._ctx:
+            _LIB.bd_weigh_free(self._ctx)
+            self._ctx = None
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
 
 
 def viterbi(trip_off, layer_off, mat_off, weight, mats, solve):

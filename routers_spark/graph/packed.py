@@ -20,10 +20,12 @@ lifecycle of graph.rs:145-178.
 from __future__ import annotations
 
 import itertools
+import sys
 
 import numpy as np
 
-from routers_spark.functions.geo import haversine_m_np
+from routers_spark.config import MIN_HEADING_DIST_M
+from routers_spark.functions.geo import bearing_deg_np, haversine_m_np
 
 _GRAPH_UID = itertools.count(1)
 
@@ -75,13 +77,13 @@ class PackedGraph:
         self.ay = node_lat[edge_src]
         self.bx = node_lon[edge_dst]
         self.by = node_lat[edge_dst]
-        len_m = haversine_m_np(self.ax, self.ay, self.bx, self.by)
-        self.edge_len_cm = (len_m * 100.0).astype(np.uint64).astype(np.uint32)
-        # edge bearing; NaN for degenerate <1 m edges (entry.rs:109-126)
-        from routers_spark.functions.geo import bearing_deg_np
-
+        self.edge_len_m = haversine_m_np(self.ax, self.ay, self.bx, self.by)
+        self.edge_len_cm = (self.edge_len_m * 100.0).astype(
+            np.uint64).astype(np.uint32)
+        # edge bearing; NaN for degenerate <1 m edges (entry.rs:109-126),
+        # the weigher's heading skip too (map_path/entity.rs:149-168)
         self.edge_heading = np.where(
-            len_m < 1.0, np.nan,
+            self.edge_len_m < MIN_HEADING_DIST_M, np.nan,
             bearing_deg_np(self.ax, self.ay, self.bx, self.by),
         )
 
@@ -384,20 +386,34 @@ class PackedGraph:
         return g
 
 
-# per-executor-process memo: broadcast payloads hydrate once per worker
-# (the analog of the reference's rebuild-indices-on-load, graph.rs:145-178)
+# per-executor-process memo of the last HYDRATED_KEEP broadcast graphs
+# (the analog of the reference's rebuild-indices-on-load,
+# graph.rs:145-178), most recently used last
+HYDRATED_KEEP = 2
 _HYDRATED: dict[str, PackedGraph] = {}
 
 
 def hydrate(bc, key: str) -> PackedGraph:
     """Hydrate (and memoise) a broadcast graph in this worker process.
     ``key`` is a caller-supplied stable token (pyspark's Broadcast exposes no
-    id on executors)."""
-    g = _HYDRATED.get(key)
+    id on executors). Past ``HYDRATED_KEEP`` graphs the least recently used
+    one is evicted with its predicate-cache arenas and compiled-kernel
+    arrays."""
+    g = _HYDRATED.pop(key, None)
     if g is None:
         g = PackedGraph.from_broadcastable(bc.value).build_cell_index()
-        _HYDRATED[key] = g
+        while len(_HYDRATED) >= HYDRATED_KEEP:
+            _evict(next(iter(_HYDRATED)))
+    _HYDRATED[key] = g
     return g
+
+
+def _evict(key: str) -> None:
+    g = _HYDRATED.pop(key)
+    g.dijkstra_kernel = None
+    dijkstra = sys.modules.get("routers_spark.graph.dijkstra")
+    if dijkstra is not None:
+        dijkstra.GLOBAL_PREDICATE_CACHE.drop(g.uid)
 
 
 def _normalize_access(col) -> list | None:

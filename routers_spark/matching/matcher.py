@@ -11,14 +11,16 @@ Spark shape (SURVEY.md §3.1), two candidate paths:
 Both feed one solve path (``_solve_trips``) over a batch's trips in flat
 form (one candidate table with layer and trip offsets): one batched box
 query for the broadcast path's candidates, boundary weighing (M4-M9) in
-one ``weigh_flat`` call per chunk of consecutive trips, then ONE compiled
-Viterbi call (M11) for every trip of the batch, with a process-wide
-predicate cache (O4: one flat arena of parent maps per graph and profile,
-emptied wholesale past 8192 roots; a call's misses are settled in one
-compiled call). The discretized output is one gather per batch; collapse
-(M15/16) re-derives hops per matched trip only for the interpolated and
-gate_union outputs, which read them. ONE frame per Arrow batch or
-cogroup group, no per-row Python at the DataFrame level.
+one compiled ``weigh_flat`` call per chunk of consecutive trips, then ONE
+compiled Viterbi call (M11) for every trip of the batch, with a
+process-wide predicate cache (O4: one flat arena of parent maps per graph
+and profile, emptied wholesale past 8192 roots; a call's misses are
+settled in one compiled call). The discretized output is one gather per
+batch; collapse (M15/16) re-derives the chosen hops of every matched trip
+of the batch in one lane lookup and one compiled walk, only for the
+interpolated and gate_union outputs, which read them, and builds their
+rows with array operations. ONE frame per Arrow batch or cogroup group,
+no per-row or per-trip Python.
 
 Semantics are the reference batch facade
 (libs/routers_transition/src/match/implementation.rs:20-41 →
@@ -44,6 +46,7 @@ from routers_spark.config import (
 )
 from routers_spark.functions.geo import square_box_np
 from routers_spark.graph.dijkstra import GLOBAL_PREDICATE_CACHE, viterbi
+from routers_spark.graph.packed import ragged_within
 from routers_spark.matching import costing
 from routers_spark.matching.weigh import weigh_boundaries, weigh_flat
 
@@ -107,7 +110,10 @@ def candidates_for_points(graph, lons, lats, search_distance: float,
 
 def reach(graph, cache, src: dict, tgt: dict,
           profile=None) -> tuple[str, list[int]] | None:
-    """How tgt is reached from src (Expansion::reach, expansion.rs:63-97).
+    """How tgt is reached from src (Expansion::reach, expansion.rs:63-97),
+    one candidate pair at a time: the hop of a single pair for callers
+    that want one (the batch paths resolve theirs in the compiled weigher
+    and ``PredicateCache.path_rows``; the test oracles use this).
 
     Returns (resolution, path_edge_rows) or None when unreachable.
     resolution: 'direct' (same-edge DistanceOnly) or 'standard'.
@@ -226,8 +232,11 @@ GATE_UNION_SCHEMA = (
 
 # candidate pairs (the sum of m x n over boundaries) past which _solve_trips
 # cuts a weigh_flat call at the next trip edge: ~90 boundaries of the
-# grid benchmark's trips. One call per whole Arrow batch measured ~10% less
-# kernel time but more than doubled each worker's peak RSS.
+# grid benchmark's trips. It bounds the weigher's scratch per call (a
+# celljoin group is not bounded by the Arrow batch size). On the grid
+# benchmark's task chunks (~52k pairs each), one call per chunk measured
+# 8-10% less solve time than 6k-pair calls and 16 MB more peak RSS per
+# process (+33 against +17 MB).
 WEIGH_PAIR_BUDGET = 6_000
 
 
@@ -358,20 +367,11 @@ def _solve_trips(graph, trips: _Trips, opts: MatchOptions,
                        "unanchored"], dtype=object)[status]
     # the chosen candidate of every layer, as a row of the candidate table
     sel = t.layer_off[:-1] + path
-    if output == "discretized":
-        return pd.DataFrame(_discretized_cols(t, graph, status, sel, cost))
-
-    acc = {k: [v[:0]] for k, v in _status_cols("", "", output).items()}
-    for k in range(n_trips):
-        if status[k] == "matched":
-            ls = slice(t.trip_off[k], t.trip_off[k + 1])
-            cols = _emit_cols(t.trip_id[k], t.seq[ls], t.cand, sel[ls],
-                              int(cost[k]), graph, opts, output)
-        else:
-            cols = _status_cols(t.trip_id[k], status[k], output)
-        for name, v in cols.items():
-            acc[name].append(v)
-    return pd.DataFrame({k: np.concatenate(v) for k, v in acc.items()})
+    cols = (_discretized_cols(t, graph, status, sel, cost)
+            if output == "discretized"
+            else _routed_cols(t, graph, status, sel, cost, opts.profile,
+                              output))
+    return pd.DataFrame(cols)
 
 
 def _discretized_cols(t: _Trips, graph, status, sel, cost) -> dict:
@@ -383,136 +383,137 @@ def _discretized_cols(t: _Trips, graph, status, sel, cost) -> dict:
     on = np.repeat(matched, rows)  # output rows that are matched layers
     ml = np.flatnonzero(np.repeat(matched, n_layers))  # their layers
     c = sel[ml]
-
-    def col(values, fill, dtype):
-        out = np.full(len(on), fill, dtype=dtype)
-        out[on] = values
-        return out
-
     return {
         "trip_id": np.repeat(t.trip_id, rows).astype(object),
-        "seq": col(t.seq[ml], -1, np.int32),
+        "seq": _merge(on, t.seq[ml], -1, np.int32),
         # no graph at all when nothing matched in a cogroup without edges
-        "edge_id": col(graph.edge_id[t.cand["edge_row"][c]], -1, np.int64)
+        "edge_id": _merge(on, graph.edge_id[t.cand["edge_row"][c]], -1,
+                          np.int64)
         if len(c) else np.full(len(on), -1, dtype=np.int64),
-        "matched_lon": col(t.cand["px"][c], np.nan, np.float64),
-        "matched_lat": col(t.cand["py"][c], np.nan, np.float64),
-        "frac": col(t.cand["frac"][c], np.nan, np.float64),
-        "dist_m": col(t.cand["dist_m"][c], np.nan, np.float64),
-        "emission": col(t.cand["emission"][c], -1, np.int64),
+        "matched_lon": _merge(on, t.cand["px"][c], np.nan, np.float64),
+        "matched_lat": _merge(on, t.cand["py"][c], np.nan, np.float64),
+        "frac": _merge(on, t.cand["frac"][c], np.nan, np.float64),
+        "dist_m": _merge(on, t.cand["dist_m"][c], np.nan, np.float64),
+        "emission": _merge(on, t.cand["emission"][c], -1, np.int64),
         "trip_cost": np.repeat(np.where(matched, cost, -1), rows),
         "status": np.repeat(status, rows),
     }
 
 
-def _routed_elems(graph, cand: dict, sel, hops) -> list[tuple]:
-    """The interpolated RoutedPath element list (candidate/route.rs:46-141)
-    with consecutive-duplicate dedup (route.rs:131) — shared by the
-    'interpolated' and 'gate_union' emitters. ``sel`` holds the chosen
-    candidate's row of ``cand`` per layer. Returns
-    [(lon, lat, edge_id, kind), ...]."""
-    elems: list[tuple[float, float, int, str]] = []
-
-    def add(lon, lat, edge_id, kind):
-        elems.append((float(lon), float(lat), int(edge_id), kind))
-
-    er, px, py = cand["edge_row"], cand["px"], cand["py"]
-    first_row = er[sel[0]]
-    add(graph.ax[first_row], graph.ay[first_row], graph.edge_id[first_row],
-        "edge_source")
-    for k in range(len(sel) - 1):
-        cur_row = er[sel[k]]
-        add(px[sel[k]], py[sel[k]], graph.edge_id[cur_row], "candidate")
-        resolution, path_rows = hops[k]
-        if resolution == "standard":
-            add(graph.bx[cur_row], graph.by[cur_row], graph.edge_id[cur_row],
-                "edge_target")
-            for e in path_rows:
-                add(graph.ax[e], graph.ay[e], graph.edge_id[e], "bridge")
-            nxt_row = er[sel[k + 1]]
-            add(graph.ax[nxt_row], graph.ay[nxt_row], graph.edge_id[nxt_row],
-                "edge_source")
-    last_row = er[sel[-1]]
-    add(px[sel[-1]], py[sel[-1]], graph.edge_id[last_row], "candidate")
-
-    # dedup consecutive identical points (route.rs:131)
-    return [e for i, e in enumerate(elems)
-            if i == 0 or (e[0], e[1]) != (elems[i - 1][0], elems[i - 1][1])]
+def _merge(mask, on, off, dtype) -> np.ndarray:
+    """One ``dtype`` array: ``on`` where ``mask`` is set, ``off``
+    elsewhere (each one value, or one value per such position)."""
+    out = np.empty(len(mask), dtype=dtype)
+    out[mask] = on
+    out[~mask] = off
+    return out
 
 
-def _emit_cols(trip_id: str, seqs, cand: dict, sel, cost: int, graph,
-               opts: MatchOptions, output: str) -> dict:
-    """A matched trip's 'interpolated' or 'gate_union' rows. Collapse
-    re-derives the chosen hops from the warm cache (entity.rs:337-358);
-    only these outputs read them."""
-    hops = [reach(graph, GLOBAL_PREDICATE_CACHE, _cand(cand, sel[k]),
-                  _cand(cand, sel[k + 1]), opts.profile)
-            for k in range(len(sel) - 1)]
-    dedup = _routed_elems(graph, cand, sel, hops)
-    m = len(dedup)
-    if output == "gate_union":
-        n = len(sel)
+_KINDS = np.array(["edge_source", "candidate", "edge_target", "bridge"],
+                  dtype=object)
+
+
+def _routed_cols(t: _Trips, graph, status, sel, cost, profile,
+                 output: str) -> dict:
+    """The 'interpolated' or 'gate_union' output of a whole batch, in trip
+    order. Each matched trip's RoutedPath (candidate/route.rs:46-141):
+    the first edge's source, then per layer its candidate and, after a
+    standard hop, the edge's target, one bridge per path edge's source and
+    the next edge's source; consecutive identical points dropped
+    (route.rs:131). Collapse re-derives every chosen standard hop of the
+    batch from the warm cache (entity.rs:337-358) in one lane lookup and
+    one compiled walk. 'interpolated' gives a non-matched trip one status
+    row; 'gate_union' gives a matched trip its discretized rows
+    (kind='matched') before the routed ones, and any other trip none."""
+    matched = status == "matched"
+    n_layers = np.diff(t.trip_off)
+    ml = np.flatnonzero(np.repeat(matched, n_layers))  # matched layers
+    c = sel[ml]
+    last = np.isin(ml + 1, t.trip_off)  # the last layer of its trip
+    first = np.ones(len(ml), dtype=bool)
+    first[1:] = last[:-1]
+    er = t.cand["edge_row"][c]
+    frac = t.cand["frac"][c]
+    # a hop is direct on one edge with ordered fracs (entry.rs:92-106);
+    # a matched trip's chosen hop is never unreachable
+    hop = np.flatnonzero(~last)
+    direct = ((er[hop] == er[hop + 1]) & (frac[hop] <= frac[hop + 1]))
+    std = hop[~direct]
+    n_rows = np.zeros(len(ml), dtype=np.int64)
+    rows = np.empty(0, dtype=np.int64)
+    if len(std):
+        member, roff, rows = GLOBAL_PREDICATE_CACHE.path_rows(
+            graph, graph.edge_dst[er[std]], graph.edge_src[er[std + 1]],
+            profile)
+        if not member.all():
+            raise RuntimeError("a matched hop left its root's bound")
+        n_rows[std] = np.diff(roff)
+    # elements per layer: [edge_source of the trip's first edge], the
+    # candidate, and after a standard hop [edge_target, bridges...,
+    # edge_source]
+    is_std = np.zeros(len(ml), dtype=bool)
+    is_std[std] = True
+    cand_at = np.zeros(len(ml) + 1, dtype=np.int64)
+    np.cumsum(first + 1 + is_std * (2 + n_rows), out=cand_at[1:])
+    n_el = int(cand_at[-1])
+    cand_at = cand_at[:-1] + first
+    kind = np.empty(n_el, dtype=np.int8)
+    lon, lat = np.empty(n_el), np.empty(n_el)
+    erow = np.empty(n_el, dtype=np.int64)
+
+    def put(at, code, x, y, r):
+        kind[at], lon[at], lat[at], erow[at] = code, x, y, r
+
+    if len(ml):
+        put(cand_at[first] - 1, 0, graph.ax[er[first]], graph.ay[er[first]],
+            er[first])
+        put(cand_at, 1, t.cand["px"][c], t.cand["py"][c], er)
+        put(cand_at[std] + 1, 2, graph.bx[er[std]], graph.by[er[std]],
+            er[std])
+        br = np.repeat(cand_at[std] + 2, n_rows[std]) + ragged_within(
+            n_rows[std])
+        put(br, 3, graph.ax[rows], graph.ay[rows], rows)
+        nxt = er[std + 1]
+        put(cand_at[std] + 2 + n_rows[std], 0, graph.ax[nxt], graph.ay[nxt],
+            nxt)
+    # dedup consecutive identical points within a trip (route.rs:131)
+    start = np.zeros(n_el, dtype=bool)
+    start[cand_at[first] - 1] = True
+    keep = start.copy()
+    keep[1:] |= (lon[1:] != lon[:-1]) | (lat[1:] != lat[:-1])
+    kept_start = start[keep]
+    m = np.diff(np.append(np.flatnonzero(kept_start), kept_start.size))
+    elem = ragged_within(m)
+    kind, lon, lat, erow = kind[keep], lon[keep], lat[keep], erow[keep]
+    eid = graph.edge_id[erow].astype(np.int64) if n_el else erow
+    per_trip = np.zeros(len(matched), dtype=np.int64)
+    per_trip[matched] = m
+    if output == "interpolated":
+        n = np.where(matched, per_trip, 1)
+        on = np.repeat(matched, n)  # output rows that are elements
         return {
-            "trip_id": np.full(n + m, trip_id, dtype=object),
-            "idx": np.concatenate([np.asarray(seqs, dtype=np.int32),
-                                   np.arange(m, dtype=np.int32)]),
-            "kind": np.concatenate([np.full(n, "matched", dtype=object),
-                                    np.array([e[3] for e in dedup],
-                                             dtype=object)]),
-            "edge_id": np.concatenate([
-                graph.edge_id[cand["edge_row"][sel]].astype(np.int64),
-                np.array([e[2] for e in dedup], dtype=np.int64)]),
-            "frac": np.concatenate([cand["frac"][sel], np.full(m, np.nan)]),
-            "plon": np.concatenate([np.full(n, np.nan),
-                                    np.array([e[0] for e in dedup])]),
-            "plat": np.concatenate([np.full(n, np.nan),
-                                    np.array([e[1] for e in dedup])]),
+            "trip_id": np.repeat(t.trip_id, n).astype(object),
+            "elem": _merge(on, elem, -1, np.int32),
+            "lon": _merge(on, lon, np.nan, np.float64),
+            "lat": _merge(on, lat, np.nan, np.float64),
+            "edge_id": _merge(on, eid, -1, np.int64),
+            "kind": _merge(on, _KINDS[kind], "none", object),
+            "trip_cost": np.repeat(np.where(matched, cost, -1), n),
+            "status": np.repeat(status, n),
         }
-
-    # interpolated (RoutedPath::new, candidate/route.rs:46-141)
+    # gate_union: per matched trip its layers, then its elements
+    n = np.where(matched, n_layers + per_trip, 0)
+    is_layer = ragged_within(n) < np.repeat(n_layers, n)
+    layer_eid = (graph.edge_id[er].astype(np.int64) if len(ml)
+                 else np.empty(0, dtype=np.int64))
     return {
-        "trip_id": np.full(m, trip_id, dtype=object),
-        "elem": np.arange(m, dtype=np.int32),
-        "lon": np.array([e[0] for e in dedup]),
-        "lat": np.array([e[1] for e in dedup]),
-        "edge_id": np.array([e[2] for e in dedup], dtype=np.int64),
-        "kind": np.array([e[3] for e in dedup], dtype=object),
-        "trip_cost": np.full(m, cost, dtype=np.int64),
-        "status": np.full(m, "matched", dtype=object),
-    }
-
-
-def _status_cols(trip_id: str, status: str, output: str) -> dict:
-    if output == "gate_union":
-        # non-matched trips emit NO rows: the gate consumers filter
-        # status='matched' anyway, so this is the same row multiset
-        return {
-            "trip_id": np.empty(0, dtype=object),
-            "idx": np.empty(0, dtype=np.int32),
-            "kind": np.empty(0, dtype=object),
-            "edge_id": np.empty(0, dtype=np.int64),
-            "frac": np.empty(0), "plon": np.empty(0), "plat": np.empty(0),
-        }
-    if output == "discretized":
-        return {
-            "trip_id": np.array([trip_id], dtype=object),
-            "seq": np.array([-1], dtype=np.int32),
-            "edge_id": np.array([-1], dtype=np.int64),
-            "matched_lon": np.array([np.nan]),
-            "matched_lat": np.array([np.nan]),
-            "frac": np.array([np.nan]), "dist_m": np.array([np.nan]),
-            "emission": np.array([-1], dtype=np.int64),
-            "trip_cost": np.array([-1], dtype=np.int64),
-            "status": np.array([status], dtype=object),
-        }
-    return {
-        "trip_id": np.array([trip_id], dtype=object),
-        "elem": np.array([-1], dtype=np.int32),
-        "lon": np.array([np.nan]), "lat": np.array([np.nan]),
-        "edge_id": np.array([-1], dtype=np.int64),
-        "kind": np.array(["none"], dtype=object),
-        "trip_cost": np.array([-1], dtype=np.int64),
-        "status": np.array([status], dtype=object),
+        "trip_id": np.repeat(t.trip_id, n).astype(object),
+        "idx": _merge(is_layer, t.seq[ml], elem, np.int32),
+        "kind": _merge(is_layer, "matched", _KINDS[kind], object),
+        "edge_id": _merge(is_layer, layer_eid, eid, np.int64),
+        "frac": _merge(is_layer, frac, np.nan, np.float64),
+        "plon": _merge(is_layer, np.nan, lon, np.float64),
+        "plat": _merge(is_layer, np.nan, lat, np.float64),
     }
 
 
@@ -703,7 +704,7 @@ def _solve_cogroup_pdf(cand_pdf: pd.DataFrame, edges_pdf: pd.DataFrame,
     local row i = position i in the triple-sorted subgraph) and solve per
     trip. Sharing the graph also shares the predicate cache across the
     group's trips — the per-shard-matcher economics of the reference
-    (bin/matcher.rs:48-55).
+    (bin/matcher.rs:48-55); the group's arenas are dropped with its graph.
     R6 analog: a candidate edge missing from the subgraph (impossible when
     the padding covers the bound; defensive for skew in the equirectangular
     pad) is DOWNGRADED to an edge_row=-1 marker, never silently removed —
@@ -754,7 +755,10 @@ def _solve_cogroup_pdf(cand_pdf: pd.DataFrame, edges_pdf: pd.DataFrame,
     py = cand_pdf["py"].values.astype(np.float64)
     dist = cand_pdf["dist_m"].values.astype(np.float64)
     emis = cand_pdf["emission"].values
-    return _solve_trips(
-        g, _candidate_trips(cand_pdf["trip_id"].values, seq, er, frac, px,
-                            py, dist, emis),
-        opts, output)
+    try:
+        return _solve_trips(
+            g, _candidate_trips(cand_pdf["trip_id"].values, seq, er, frac,
+                                px, py, dist, emis),
+            opts, output)
+    finally:  # the group's graph dies here: so do its parent maps
+        GLOBAL_PREDICATE_CACHE.drop(g.uid)

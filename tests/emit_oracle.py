@@ -1,0 +1,125 @@
+"""The per-trip emitters of the 'interpolated' and 'gate_union' outputs:
+the oracle of ``matching.matcher._routed_cols``, which builds the same
+rows for a whole batch with array operations and must equal these frames
+bit for bit. Each matched trip re-derives its hops one ``reach`` call at a
+time and builds its RoutedPath element list in Python."""
+
+from __future__ import annotations
+
+import numpy as np
+
+from routers_spark.graph.dijkstra import GLOBAL_PREDICATE_CACHE
+from routers_spark.matching import matcher
+
+
+def routed_cols(t, graph, status, sel, cost, profile, output: str) -> dict:
+    """Drop-in for ``matcher._routed_cols``: one trip at a time."""
+    acc = {k: [v[:0]] for k, v in _status_cols("", "", output).items()}
+    for k in range(len(t.trip_id)):
+        if status[k] == "matched":
+            ls = slice(t.trip_off[k], t.trip_off[k + 1])
+            cols = _emit_cols(t.trip_id[k], t.seq[ls], t.cand, sel[ls],
+                              int(cost[k]), graph, profile, output)
+        else:
+            cols = _status_cols(t.trip_id[k], status[k], output)
+        for name, v in cols.items():
+            acc[name].append(v)
+    return {k: np.concatenate(v) for k, v in acc.items()}
+
+
+def _routed_elems(graph, cand: dict, sel, hops) -> list[tuple]:
+    """The interpolated RoutedPath element list (candidate/route.rs:46-141)
+    with consecutive-duplicate dedup (route.rs:131). ``sel`` holds the
+    chosen candidate's row of ``cand`` per layer. Returns
+    [(lon, lat, edge_id, kind), ...]."""
+    elems: list[tuple[float, float, int, str]] = []
+
+    def add(lon, lat, edge_id, kind):
+        elems.append((float(lon), float(lat), int(edge_id), kind))
+
+    er, px, py = cand["edge_row"], cand["px"], cand["py"]
+    first_row = er[sel[0]]
+    add(graph.ax[first_row], graph.ay[first_row], graph.edge_id[first_row],
+        "edge_source")
+    for k in range(len(sel) - 1):
+        cur_row = er[sel[k]]
+        add(px[sel[k]], py[sel[k]], graph.edge_id[cur_row], "candidate")
+        resolution, path_rows = hops[k]
+        if resolution == "standard":
+            add(graph.bx[cur_row], graph.by[cur_row], graph.edge_id[cur_row],
+                "edge_target")
+            for e in path_rows:
+                add(graph.ax[e], graph.ay[e], graph.edge_id[e], "bridge")
+            nxt_row = er[sel[k + 1]]
+            add(graph.ax[nxt_row], graph.ay[nxt_row], graph.edge_id[nxt_row],
+                "edge_source")
+    last_row = er[sel[-1]]
+    add(px[sel[-1]], py[sel[-1]], graph.edge_id[last_row], "candidate")
+
+    # dedup consecutive identical points (route.rs:131)
+    return [e for i, e in enumerate(elems)
+            if i == 0 or (e[0], e[1]) != (elems[i - 1][0], elems[i - 1][1])]
+
+
+def _emit_cols(trip_id: str, seqs, cand: dict, sel, cost: int, graph,
+               profile, output: str) -> dict:
+    """A matched trip's 'interpolated' or 'gate_union' rows. Collapse
+    re-derives the chosen hops from the warm cache (entity.rs:337-358)."""
+    hops = [matcher.reach(graph, GLOBAL_PREDICATE_CACHE,
+                          matcher._cand(cand, sel[k]),
+                          matcher._cand(cand, sel[k + 1]), profile)
+            for k in range(len(sel) - 1)]
+    dedup = _routed_elems(graph, cand, sel, hops)
+    m = len(dedup)
+    if output == "gate_union":
+        n = len(sel)
+        return {
+            "trip_id": np.full(n + m, trip_id, dtype=object),
+            "idx": np.concatenate([np.asarray(seqs, dtype=np.int32),
+                                   np.arange(m, dtype=np.int32)]),
+            "kind": np.concatenate([np.full(n, "matched", dtype=object),
+                                    np.array([e[3] for e in dedup],
+                                             dtype=object)]),
+            "edge_id": np.concatenate([
+                graph.edge_id[cand["edge_row"][sel]].astype(np.int64),
+                np.array([e[2] for e in dedup], dtype=np.int64)]),
+            "frac": np.concatenate([cand["frac"][sel], np.full(m, np.nan)]),
+            "plon": np.concatenate([np.full(n, np.nan),
+                                    np.array([e[0] for e in dedup])]),
+            "plat": np.concatenate([np.full(n, np.nan),
+                                    np.array([e[1] for e in dedup])]),
+        }
+
+    # interpolated (RoutedPath::new, candidate/route.rs:46-141)
+    return {
+        "trip_id": np.full(m, trip_id, dtype=object),
+        "elem": np.arange(m, dtype=np.int32),
+        "lon": np.array([e[0] for e in dedup]),
+        "lat": np.array([e[1] for e in dedup]),
+        "edge_id": np.array([e[2] for e in dedup], dtype=np.int64),
+        "kind": np.array([e[3] for e in dedup], dtype=object),
+        "trip_cost": np.full(m, cost, dtype=np.int64),
+        "status": np.full(m, "matched", dtype=object),
+    }
+
+
+def _status_cols(trip_id: str, status: str, output: str) -> dict:
+    if output == "gate_union":
+        # non-matched trips emit NO rows: the gate consumers filter
+        # status='matched' anyway, so this is the same row multiset
+        return {
+            "trip_id": np.empty(0, dtype=object),
+            "idx": np.empty(0, dtype=np.int32),
+            "kind": np.empty(0, dtype=object),
+            "edge_id": np.empty(0, dtype=np.int64),
+            "frac": np.empty(0), "plon": np.empty(0), "plat": np.empty(0),
+        }
+    return {
+        "trip_id": np.array([trip_id], dtype=object),
+        "elem": np.array([-1], dtype=np.int32),
+        "lon": np.array([np.nan]), "lat": np.array([np.nan]),
+        "edge_id": np.array([-1], dtype=np.int64),
+        "kind": np.array(["none"], dtype=object),
+        "trip_cost": np.array([-1], dtype=np.int64),
+        "status": np.array([status], dtype=object),
+    }

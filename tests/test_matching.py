@@ -330,19 +330,26 @@ def test_box_query_many_non_finite_boxes_match_nothing():
 
 
 def test_batched_solve_calls_no_per_item_kernel(monkeypatch):
-    """The batch solve of the broadcast path (discretized output) runs no
-    per-point, per-boundary or per-trip Python kernel: the scalar box
-    query, per-boundary pair classifier, per-root ParentMap and numpy
-    Trellis solve are gone from the package, collapse (``reach``) and the
-    Trellis are never touched, and the bounded Dijkstra settles each root
-    once, on its cache miss only. Its rows equal ``solve_trip`` trip by
-    trip."""
+    """The batch solve of the broadcast path runs no per-point,
+    per-boundary or per-trip Python kernel in any output mode: the scalar
+    box query, per-boundary pair classifier, per-root ParentMap, numpy
+    weigher, per-trip emitters and numpy Trellis solve are gone from the
+    package, per-hop collapse (``reach``) and the Trellis are never
+    touched, and the bounded Dijkstra settles each root once, on its cache
+    miss only. Its discretized rows equal ``solve_trip`` trip by trip; its
+    interpolated and gate_union rows equal the per-trip emitters of
+    ``tests/emit_oracle.py``."""
     from routers_spark.graph import dijkstra
     from routers_spark.graph.packed import PackedGraph
     from routers_spark.matching import matcher, trellis, weigh
 
+    import emit_oracle
+
     assert not hasattr(PackedGraph, "box_query")
     assert not hasattr(weigh, "_boundary_pairs")
+    assert not hasattr(weigh, "bearing_deg_np")
+    assert not hasattr(matcher, "_emit_cols")
+    assert not hasattr(matcher, "_routed_elems")
     assert not hasattr(dijkstra, "ParentMap")
     assert not hasattr(trellis.Trellis, "solve")
 
@@ -365,10 +372,10 @@ def test_batched_solve_calls_no_per_item_kernel(monkeypatch):
     trips = walk_trips(nodes, edges, n_trips=40, points_per_trip=8, seed=9)
     opts = MatchOptions()
 
-    def run():
+    def run(output="discretized"):
         return matcher._solve_trips(g, matcher._broadcast_trips(
             trips.trip_id.values, trips.seq.values, trips.lon.values,
-            trips.lat.values, g, opts), opts, "discretized")
+            trips.lat.values, g, opts), opts, output)
 
     out = run()
     assert len(settled) == len(set(settled)) > 0
@@ -376,6 +383,18 @@ def test_batched_solve_calls_no_per_item_kernel(monkeypatch):
     again = run()
     assert len(settled) == n_settled  # warm: every root hits the arena
     pd.testing.assert_frame_equal(out, again)
+
+    real_reach, real_routed = reach, matcher._routed_cols
+    for output in ("interpolated", "gate_union"):
+        got = run(output)
+        assert len(settled) == n_settled
+        monkeypatch.setattr(matcher, "reach", real_reach)
+        monkeypatch.setattr(matcher, "_routed_cols", emit_oracle.routed_cols)
+        want = run(output)
+        monkeypatch.setattr(matcher, "reach", boom)
+        monkeypatch.setattr(matcher, "_routed_cols", real_routed)
+        assert (want.kind == "bridge").any()
+        pd.testing.assert_frame_equal(got, want)
 
     monkeypatch.setattr(matcher, "reach", lambda *a, **k: None)
     matched = out[out.status == "matched"]
@@ -392,3 +411,83 @@ def test_batched_solve_calls_no_per_item_kernel(monkeypatch):
                 int(g.edge_id[layers[k]["edge_row"][p]])
                 for k, p in enumerate(r["path"])]
             assert set(rows.trip_cost) == {r["cost"]}
+
+
+@pytest.mark.parametrize("output", ["interpolated", "gate_union"])
+@pytest.mark.parametrize("kw", [{}, {"selective_fanout": 2},
+                                {"drop_unanchored": True}],
+                         ids=["default", "fanout", "drop_unanchored"])
+def test_routed_output_equals_per_trip_emitters(monkeypatch, output, kw):
+    """The batched interpolated / gate_union emit equals the per-trip
+    emitters of ``tests/emit_oracle.py`` bit for bit, over a batch that
+    mixes matched, unanchored and disconnected trips; so do an empty batch
+    and a celljoin group with no subgraph (no graph at all)."""
+    from routers_spark.matching import matcher
+
+    import emit_oracle
+
+    nodes, edges = grid_network(12)
+    g = build_packed_graph(nodes, edges).build_cell_index()
+    trips = walk_trips(nodes, edges, n_trips=30, points_per_trip=8, seed=5)
+    trips.loc[trips.trip_id == "trip000003", "lon"] += 1.0
+    trips.loc[(trips.trip_id == "trip000005") & (trips.seq == 4), "lon"] += 1.0
+    far = trips.trip_id == "trip000007"
+    trips.loc[far, "lon"] = np.where(trips.seq[far] % 2, -118.478, -118.5)
+    trips.loc[far, "lat"] = np.where(trips.seq[far] % 2, 33.722, 33.7)
+    opts = MatchOptions(**kw)
+
+    def both(graph, t):
+        got = matcher._solve_trips(graph, t, opts, output)
+        with monkeypatch.context() as mp:
+            mp.setattr(matcher, "_routed_cols", emit_oracle.routed_cols)
+            want = matcher._solve_trips(graph, t, opts, output)
+        pd.testing.assert_frame_equal(got, want)
+        return got
+
+    out = both(g, matcher._broadcast_trips(
+        trips.trip_id.values, trips.seq.values, trips.lon.values,
+        trips.lat.values, g, opts))
+    if output == "interpolated":
+        assert set(out.status) == {"matched", "unanchored", "disconnected"}
+        assert out.trip_id.nunique() == 30
+    else:
+        assert not {"trip000003", "trip000007"} & set(out.trip_id)
+    none = np.empty(0)
+    both(g, matcher._broadcast_trips(none.astype(object), none, none, none,
+                                     g, opts))
+    mark = np.full(2, -1, dtype=np.int64)
+    nan = np.full(2, np.nan)
+    both(None, matcher._candidate_trips(np.array(["a", "b"], dtype=object),
+                                        mark, mark, nan, nan, nan, nan, mark))
+
+
+def test_hydrate_memo_keeps_two_graphs():
+    """The worker memo keeps the last two broadcast graphs; an evicted one
+    takes its predicate-cache arenas and compiled-kernel arrays with it,
+    and the cache's root count stays the roots its arenas hold."""
+    import types
+
+    from routers_spark.graph import packed
+
+    nodes, edges = grid_network(6)
+    payload = build_packed_graph(nodes, edges).to_broadcastable()
+    cache = GLOBAL_PREDICATE_CACHE
+    cache.__init__()
+    packed._HYDRATED.clear()
+    graphs = []
+    for k in range(4):
+        g = packed.hydrate(types.SimpleNamespace(value=payload), f"k{k}")
+        assert packed.hydrate(None, f"k{k}") is g  # memoised
+        cache.locate(g, [0, 1, 2], [3, 4, 5])
+        graphs.append(g)
+        assert len(packed._HYDRATED) <= 2
+        assert {key[0] for key in cache._arenas} <= {
+            h.uid for h in packed._HYDRATED.values()}
+        assert cache._roots == sum(a.n_slots for a in cache._arenas.values())
+    assert list(packed._HYDRATED) == ["k2", "k3"]
+    assert graphs[0].dijkstra_kernel is None
+    assert graphs[3].dijkstra_kernel is not None
+    packed.hydrate(None, "k2")  # a hit makes k2 the most recent
+    packed.hydrate(types.SimpleNamespace(value=payload), "k4")
+    assert list(packed._HYDRATED) == ["k2", "k4"]
+    packed._HYDRATED.clear()

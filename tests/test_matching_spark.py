@@ -262,3 +262,33 @@ def test_nan_point_fails_only_its_own_trip(spark, candidate_path):
     by_trip = {t: set(g.status) for t, g in out.groupby("trip_id")}
     assert by_trip == {tids[0]: {"unanchored"}, tids[1]: {"matched"}}
     assert len(out[out.trip_id == tids[1]]) == 6
+
+
+def test_workers_keep_two_hydrated_graphs(spark, grid):
+    """Ten match_trips calls broadcast ten graphs; every Python worker
+    then holds at most the last two hydrated graphs and at most two
+    predicate-cache arenas, its root count equal to the roots they hold."""
+    points_df, nodes_df, edges_df, _ = grid
+    for _ in range(10):
+        assert len(match_trips(points_df, nodes_df, edges_df).toPandas())
+
+    def probe(batches):
+        import os
+
+        from routers_spark.graph import dijkstra, packed
+
+        for _ in batches:
+            pass
+        cache = dijkstra.GLOBAL_PREDICATE_CACHE
+        yield pd.DataFrame({
+            "pid": [os.getpid()], "graphs": [len(packed._HYDRATED)],
+            "arenas": [len(cache._arenas)], "roots": [cache._roots],
+            "held": [sum(a.n_slots for a in cache._arenas.values())]})
+
+    seen = spark.range(0, 64, numPartitions=16).mapInPandas(
+        probe, "pid long, graphs long, arenas long, roots long, held long"
+    ).toPandas()
+    assert seen.graphs.max() >= 1  # the probe reached matching workers
+    assert (seen.graphs <= 2).all()
+    assert (seen.arenas <= 2).all()
+    assert (seen.roots == seen.held).all()

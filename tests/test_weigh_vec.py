@@ -1,15 +1,18 @@
-"""Bit-parity of the batched boundary weigher (matching/weigh.py) against
+"""Bit-parity of the compiled boundary weigher (matching/weigh.py) against
 the per-pair scalar oracle kept here (``transition_cost`` and its libm
-helpers): the vectorized path must reproduce the reference-semantics scalar
-path EXACTLY (same IEEE-754 results, same u32 truncations), across random
-candidate layers on the grid fixture, same-edge direct/backtrack cases, and
-the selective fan-out."""
+helpers) and the numpy weigher of ``tests/weigh_oracle.py``: the product
+path must reproduce both EXACTLY (same IEEE-754 results, same u32
+truncations), across random candidate layers on the grid fixture, seeded
+corpora with degenerate edges, unreachable leaves, empty layers, profile
+gating, injected costing and the selective fan-out; the libm functions
+the kernel calls must equal numpy's."""
 
 from __future__ import annotations
 
 import math
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from routers_spark.config import (
@@ -22,10 +25,15 @@ from routers_spark.config import (
 )
 from routers_spark.fixtures.roads import grid_network, t_junction, walk_trips
 from routers_spark.functions.geo import bearing_deg_np, haversine_m_np
+from routers_spark.graph import dijkstra
+from routers_spark.graph.access import TripProfile
 from routers_spark.graph.dijkstra import PredicateCache
 from routers_spark.graph.packed import build_packed_graph
+from routers_spark.matching import matcher
+from routers_spark.matching.costing import CostingStrategies, Strategy
 from routers_spark.matching.matcher import _cand, candidates_for_points, reach
-from routers_spark.matching.weigh import weigh_boundaries
+from routers_spark.matching.weigh import weigh_boundaries, weigh_flat
+from tests import weigh_oracle
 
 _EPS = 1e-6
 
@@ -334,3 +342,278 @@ def test_small_predicate_cache_empties_and_gives_same_matrices(grid_graph):
         assert small._roots <= max(small.capacity, roots)
     for a, b in zip(weigh_boundaries(g, small, bs), want):
         np.testing.assert_array_equal(a, b)
+
+
+# ------------------------------------ compiled weigher == numpy oracle
+
+
+def _corpus_graph(seed: int):
+    """A 10 x 10 grid with random class weights, a random tenth of its
+    edges closed to motorcars, and degenerate edges hung off random nodes:
+    zero-length pairs (NaN headings, NaN candidate fracs) and 0.5 m pairs
+    (headings skipped)."""
+    rng = np.random.default_rng(seed)
+    nodes, edges = grid_network(10)
+    extra_n, extra_e = [], []
+    nid, eid = int(nodes.node_id.max()) + 1, int(edges.edge_id.max()) + 1
+    for k, off in zip(rng.choice(len(nodes), 12, replace=False),
+                      [0.0] * 6 + [4.5e-6] * 6):
+        lon, lat = nodes.lon.iloc[k], nodes.lat.iloc[k]
+        extra_n.append((nid, lon + off, lat))
+        for a, b in ((int(nodes.node_id.iloc[k]), nid),
+                     (nid, int(nodes.node_id.iloc[k]))):
+            extra_e.append((eid, a, b, 1))
+        nid, eid = nid + 1, eid + 1
+    nodes = pd.concat([nodes, pd.DataFrame(
+        extra_n, columns=["node_id", "lon", "lat"])], ignore_index=True)
+    edges = pd.concat([edges, pd.DataFrame(
+        extra_e, columns=["edge_id", "src", "dst", "weight"])],
+        ignore_index=True)
+    edges["weight"] = rng.integers(1, 6, len(edges))
+    closed = rng.random(len(edges)) < 0.1
+    edges["access"] = [[("motor_vehicle", "both", "no")] if c else []
+                       for c in closed]
+    return build_packed_graph(nodes, edges).build_cell_index()
+
+
+def _corpus(g, rng, n_points: int = 40):
+    """Candidate layers of random points over the grid (a few far outside
+    it: empty layers; a few beside the degenerate edges), paired as
+    consecutive boundaries, random pairs and layers with themselves
+    (same-edge ahead and backtrack)."""
+    lons = -118.5 + rng.random(n_points) * 0.019
+    lats = 33.7 + rng.random(n_points) * 0.019
+    lons[rng.random(n_points) < 0.1] += 1.0
+    deg = rng.choice(np.flatnonzero(np.isnan(g.edge_heading)), 8)
+    lons[:8] = g.ax[deg] + rng.normal(0.0, 2e-4, 8)
+    lats[:8] = g.ay[deg] + rng.normal(0.0, 2e-4, 8)
+    layers = candidates_for_points(g, lons, lats, 80.0, 25.0)
+    pick = rng.integers(0, len(layers), (n_points, 2))
+    return (list(zip(layers, layers[1:])) + [(layers[a], layers[b])
+                                            for a, b in pick]
+            + [(l, l) for l in layers[:8]])
+
+
+def _stack(boundaries):
+    sides = [side for b in boundaries for side in b]
+    off = np.concatenate([[0], np.cumsum([len(s["edge_row"])
+                                          for s in sides])])
+    cols = [np.concatenate([np.asarray(s[c], dtype=dt) for s in sides])
+            for c, dt in (("edge_row", np.int64), ("frac", np.float64),
+                          ("px", np.float64), ("py", np.float64))]
+    return cols, off[0:-1:2], off[1::2], off[2::2]
+
+
+def _assert_oracle_equal(g, boundaries, threshold_cm=None, **kw):
+    cols, lo, mid, hi = _stack(boundaries)
+    caches = [PredicateCache() if threshold_cm is None
+              else PredicateCache(threshold_cm=threshold_cm) for _ in "ab"]
+    got, moff = weigh_flat(g, caches[0], *cols, lo, mid, hi, **kw)
+    want, want_off = weigh_oracle.weigh_flat(g, caches[1], *cols, lo, mid,
+                                             hi, **kw)
+    np.testing.assert_array_equal(moff, want_off)
+    assert got.dtype == want.dtype == np.uint32
+    np.testing.assert_array_equal(got, want)
+    return got
+
+
+def _dev_only(straight, route_len, angular, w_s, w_t):
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return np.where(route_len > 0.0, straight / route_len, np.nan)
+
+
+_ORACLE_CASES = {
+    "default": {},
+    "fanout": {"fanout": 2},
+    "bound_300m": {"threshold_cm": 30_000},
+    "profile": {"profile": TripProfile("motorcar")},
+    "injected": {"costing": CostingStrategies(transition=Strategy(
+        calculate=_dev_only))},
+    "zeta_beta": {"costing": CostingStrategies(transition=Strategy(
+        zeta=1.7, beta=1.3))},
+    "zeta_only": {"costing": CostingStrategies(transition=Strategy(
+        zeta=0.6))},
+}
+
+
+@pytest.mark.parametrize("case", sorted(_ORACLE_CASES))
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_compiled_equals_numpy_oracle(seed, case):
+    """Seeded corpora cover NaN fracs and zero-length edges (NaN
+    headings), sub-metre edges, same-edge ahead and backtrack, root ==
+    leaf, leaves outside a short bound, empty layers, profile gating, the
+    selective fan-out, an injected ``calculate``, and ζ / β."""
+    g = _corpus_graph(seed)
+    boundaries = _corpus(g, np.random.default_rng(100 + seed))
+    got = _assert_oracle_equal(g, boundaries, **_ORACLE_CASES[case])
+    assert (got != np.uint32(NO_EDGE)).any()
+
+
+@pytest.mark.parametrize("case", ["default", "bound_300m", "profile"])
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_compiled_transition_inputs_equal_oracle(seed, case):
+    """The u32 truncation hides most one-ulp differences, so the doubles
+    themselves are compared too: an injected ``calculate`` records what
+    each weigher hands it (straight line, route length, angular
+    complexity, class weights, per pair in cell order), and the compiled
+    weigher's must equal the numpy oracle's bit for bit."""
+    seen = {}
+
+    def recorder(name):
+        def calculate(*cols):
+            seen[name] = [np.array(c, copy=True) for c in cols]
+            return np.full(len(cols[0]), 0.5)
+        return CostingStrategies(transition=Strategy(calculate=calculate))
+
+    g = _corpus_graph(seed)
+    cols, lo, mid, hi = _stack(_corpus(g, np.random.default_rng(100 + seed)))
+    kw = {k: v for k, v in _ORACLE_CASES[case].items()
+          if k != "threshold_cm"}
+    bound = _ORACLE_CASES[case].get("threshold_cm")
+    for name, fn in (("compiled", weigh_flat),
+                     ("oracle", weigh_oracle.weigh_flat)):
+        cache = PredicateCache() if bound is None else PredicateCache(
+            threshold_cm=bound)
+        fn(g, cache, *cols, lo, mid, hi, costing=recorder(name), **kw)
+    assert len(seen["compiled"][0]) > 300
+    for got, want in zip(seen["compiled"], seen["oracle"]):
+        np.testing.assert_array_equal(got.view(np.int64), want.view(np.int64))
+
+
+def test_corpus_reaches_every_case():
+    """The corpora above contain what their test names: NaN fracs, NaN
+    headings, empty layers, direct and backtracking same-edge pairs,
+    root == leaf pairs and leaves outside the 300 m bound."""
+    g = _corpus_graph(0)
+    boundaries = _corpus(g, np.random.default_rng(100))
+    assert np.isnan(g.edge_heading).any()
+    cols, lo, mid, hi = _stack(boundaries)
+    er, frac = cols[0], cols[1]
+    assert np.isnan(frac).any()
+    assert ((mid == lo) | (hi == mid)).any()
+    pairs = [(i, j) for a, b, c in zip(lo, mid, hi)
+             for i in range(a, b) for j in range(b, c)]
+    src, tgt = np.array(pairs).T
+    same = er[src] == er[tgt]
+    assert (same & (frac[src] <= frac[tgt])).any()
+    assert (same & (frac[src] > frac[tgt])).any()
+    assert (g.edge_dst[er[src]] == g.edge_src[er[tgt]]).any()
+    cache = PredicateCache(threshold_cm=30_000)
+    _, _, member = cache.locate(g, g.edge_dst[er[src]], g.edge_src[er[tgt]])
+    assert not member.all()
+
+
+def test_compiled_equals_numpy_oracle_on_benchmark_chunks():
+    """The perfbench grid's walks (seed 1's first 120 trips) through
+    ``_solve_trips`` with the pair budget cut small: every weigh_flat call
+    equals the oracle's, and the chunked solve equals one call per
+    batch."""
+    import importlib.util
+    import sys
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parent.parent / "perfbench" / "inputs.py"
+    spec = importlib.util.spec_from_file_location("perfbench_inputs", path)
+    I = sys.modules[spec.name] = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(I)
+
+    nodes, edges = I.grid_network()
+    g = build_packed_graph(nodes, edges).build_cell_index()
+    trips = I.walk_trips(nodes, edges, 120, 1)
+    opts = matcher.MatchOptions()
+    t = matcher._broadcast_trips(trips.trip_id.values, trips.seq.values,
+                                 trips.lon.values, trips.lat.values, g, opts)
+    calls = []
+
+    def checked(graph, cache, *a, **k):
+        want = weigh_oracle.weigh_flat(graph, PredicateCache(), *a, **k)
+        got = weigh_flat(graph, cache, *a, **k)
+        for x, y in zip(got, want):
+            np.testing.assert_array_equal(x, y)
+        calls.append(len(got[0]))
+        return got
+
+    out = {}
+    for budget in (500, 10 ** 9):
+        matcher.GLOBAL_PREDICATE_CACHE.__init__()
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(matcher, "WEIGH_PAIR_BUDGET", budget)
+            mp.setattr(matcher, "weigh_flat", checked)
+            out[budget] = matcher._solve_trips(g, t, opts, "discretized")
+    assert len(calls) > 10
+    pd.testing.assert_frame_equal(out[500], out[10 ** 9])
+
+
+def test_weigh_rejects_bad_offsets_and_rows():
+    """The kernel trusts its offsets: bad lo/mid/hi, edge rows, matrix
+    offsets, keep masks and lanes raise ValueError before the C call."""
+    g = build_packed_graph(*grid_network(4)).build_cell_index()
+    er = np.array([0, 1, 2, 3], dtype=np.int64)
+    f = np.array([0.1, 0.2, 0.3, 0.4])
+    cache = PredicateCache()
+    ok = weigh_flat(g, cache, er, f, f, f, [0], [2], [4])[0]
+    assert len(ok) == 4
+    for lo, mid, hi in (([0], [3], [2]), ([-1], [1], [2]), ([0], [2], [5]),
+                        ([0, 1], [2], [4]), ([2], [1], [4])):
+        with pytest.raises(ValueError):
+            weigh_flat(g, cache, er, f, f, f, lo, mid, hi)
+    for bad in (np.array([0, 1, 2, len(g.edge_id)]), np.array([0, -1, 2, 3])):
+        with pytest.raises(ValueError):
+            weigh_flat(g, cache, bad, f, f, f, [0], [2], [4])
+    with pytest.raises(ValueError):
+        weigh_flat(g, cache, er, f[:3], f, f, [0], [2], [4])
+    moff = np.array([0, 4], dtype=np.int64)
+    for kw in ({"moff": np.array([0, 5])}, {"keep": np.ones(3, bool)}):
+        args = {"moff": moff, "keep": None, **kw}
+        with pytest.raises(ValueError):
+            dijkstra.WeighCall(g, cache, er, f, f, f, np.array([0]),
+                               np.array([2]), np.array([4]), args["moff"],
+                               args["keep"])
+    n = len(g.node_ids)
+    for roots, leaves in (([0, n], [1, 1]), ([-1], [0]), ([0], [n]),
+                          ([0, 1], [0])):
+        with pytest.raises(ValueError):
+            cache.locate(g, roots, leaves)
+
+
+_LIBM = {"sin": (0, np.sin), "cos": (1, np.cos), "sqrt": (2, np.sqrt),
+         "fmod": (3, np.fmod), "radians": (4, np.radians),
+         "degrees": (5, np.degrees), "remainder": (6, np.remainder)}
+
+
+def _libm_inputs(name: str, rng) -> tuple[np.ndarray, np.ndarray]:
+    n = 1 << 20
+    if name in ("sin", "cos"):
+        x = np.concatenate([
+            np.radians(-118.6 + 0.2 * rng.random(n // 4)),    # grid lon
+            np.radians(33.6 + 0.2 * rng.random(n // 4)),      # grid lat
+            rng.normal(0.0, 1e-4, n // 4),                    # half deltas
+            rng.uniform(-2 * np.pi, 2 * np.pi, n // 4)])      # bearings
+    elif name == "sqrt":
+        x = np.concatenate([rng.random(n // 2) * 1e-8, rng.random(n // 2)])
+    elif name in ("radians", "degrees"):
+        x = np.concatenate([-118.6 + 0.2 * rng.random(n // 4),
+                            33.6 + 0.2 * rng.random(n // 4),
+                            rng.uniform(-np.pi, np.pi, n // 4),
+                            rng.uniform(-360.0, 360.0, n // 4)])
+    else:
+        x = np.concatenate([rng.uniform(-720.0, 720.0, n // 2),
+                            rng.uniform(-180.0, 180.0, n // 2)])
+    return x, np.full(len(x), 360.0)
+
+
+@pytest.mark.parametrize("name", sorted(_LIBM))
+def test_kernel_libm_equals_numpy(name):
+    """The functions the compiled weigher takes from libm (and its degree /
+    radian multiplies and Python-style remainder) equal numpy's on 1M seeded
+    inputs that include the grid's coordinate range. A host whose numpy
+    sends one of them to a SIMD loop that differs fails here, loudly,
+    instead of changing matches."""
+    op, ref = _LIBM[name]
+    x, y = _libm_inputs(name, np.random.default_rng(17))
+    got = np.empty_like(x)
+    dijkstra._LIB.bd_libm(op, len(x), x.ctypes.data, y.ctypes.data,
+                          got.ctypes.data)
+    want = ref(x, y) if name in ("fmod", "remainder") else ref(x)
+    diff = np.flatnonzero(got.view(np.int64) != want.view(np.int64))
+    assert len(diff) == 0, (name, len(diff), x[diff[:3]])

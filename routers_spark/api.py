@@ -18,13 +18,14 @@ Each connectrpc service method becomes a plain function over DataFrames
     basic backend's contains semantics and the rtree/s2cell center
     resolution
 
-The graph broadcasts once (the north-rule shape); points stream through
-Arrow batches with no shuffle.
+The graph goes to the workers through ``graph.packed.broadcast_graph``
+(the north-rule shape): one broadcast per distinct graph per session,
+shared with ``match_trips``, hydrated once per worker. Points stream
+through Arrow batches with no shuffle.
 """
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 
 import numpy as np
@@ -32,15 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from routers_spark.config import DEFAULT_SEARCH_DISTANCE_M
-
-
-def _broadcast_graph(nodes_df: DataFrame, edges_df: DataFrame):
-    from routers_spark.graph.packed import build_packed_graph
-
-    spark = nodes_df.sparkSession
-    g = build_packed_graph(nodes_df.toPandas(), edges_df.toPandas())
-    bc = spark.sparkContext.broadcast(g.to_broadcastable())
-    return bc, uuid.uuid4().hex
+from routers_spark.graph.packed import broadcast_graph
 
 
 def snap_points(points_df: DataFrame, nodes_df: DataFrame, edges_df: DataFrame,
@@ -50,18 +43,17 @@ def snap_points(points_df: DataFrame, nodes_df: DataFrame, edges_df: DataFrame,
     """PointSnapped: per point the nearest projected on-edge position
     within the square-box scan; NULLs when nothing anchors
     (proximity.rs:50-93)."""
-    from routers_spark.graph.packed import hydrate
     from routers_spark.matching.matcher import candidates_for_points
 
     keep = keep or [c for c in points_df.columns if c not in (lon, lat)]
-    bc, key = _broadcast_graph(nodes_df, edges_df)
+    handle = broadcast_graph(nodes_df, edges_df)
     out_fields = [f for f in points_df.schema.fields if f.name in keep + [lon, lat]]
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in out_fields)
     schema += (", edge_id long, snap_lon double, snap_lat double, "
                "frac double, dist_m double")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        g = hydrate(bc, key)
+        g = handle.graph()
         for pdf in batches:
             cands = candidates_for_points(
                 g, pdf[lon].values, pdf[lat].values, search_m, 25.0)
@@ -97,16 +89,15 @@ def nearest_points(points_df: DataFrame, nodes_df: DataFrame,
     """Point: nearest node by planar squared distance (X7 snap;
     composite/network.rs:155-165 min-by semantics; ties → lowest dense
     index = lowest node id)."""
-    from routers_spark.graph.packed import hydrate
 
     keep = keep or [c for c in points_df.columns if c not in (lon, lat)]
-    bc, key = _broadcast_graph(nodes_df, edges_df)
+    handle = broadcast_graph(nodes_df, edges_df)
     out_fields = [f for f in points_df.schema.fields if f.name in keep + [lon, lat]]
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in out_fields)
     schema += ", node_id long, node_lon double, node_lat double"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        g = hydrate(bc, key)
+        g = handle.graph()
         for pdf in batches:
             # ring-expansion 1-NN over the node cell buckets: per-point cost
             # tracks local density, not node count (vs the former dense
@@ -134,12 +125,11 @@ def route_points(pairs_df: DataFrame, nodes_df: DataFrame,
     pairs_df: (req_id, lon_a, lat_a, lon_b, lat_b). Unroutable pairs emit
     one status='unreachable' row."""
     from routers_spark.graph.dijkstra import route_nodes
-    from routers_spark.graph.packed import hydrate
 
-    bc, key = _broadcast_graph(nodes_df, edges_df)
+    handle = broadcast_graph(nodes_df, edges_df)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        g = hydrate(bc, key)
+        g = handle.graph()
         for pdf in batches:
             # snap BOTH endpoints for the whole batch in one ring-1-NN pass
             snap_a = g.nearest_nodes(pdf["lon_a"].values, pdf["lat_a"].values)

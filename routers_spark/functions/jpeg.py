@@ -29,6 +29,8 @@ import struct
 
 import numpy as np
 
+from routers_spark.functions.ragged import ragged_within
+
 # ------------------------------------------------------------- constants
 
 # Annex K.1/K.2 quantization tables (natural row-major order)
@@ -198,13 +200,6 @@ def _code_tables(spec) -> tuple[np.ndarray, np.ndarray]:
     return codes, lens
 
 
-def _ragged_offsets(counts: np.ndarray) -> np.ndarray:
-    """0..count-1 per group, flattened."""
-    total = int(counts.sum())
-    starts = np.cumsum(counts) - counts
-    return np.arange(total, dtype=np.int64) - np.repeat(starts, counts)
-
-
 def _pack_bits(codes: np.ndarray, lens: np.ndarray) -> bytes:
     """Bit-pack (code, length) pairs MSB-first, pad with 1s, byte-stuff —
     all vector ops (one pass per bit position of the longest code)."""
@@ -296,7 +291,7 @@ def jpeg_encode(arr: np.ndarray, quality: int = 90) -> bytes:
         if len(zr):
             rep = n16[zr].astype(np.int64)
             zkey = np.repeat(base[rows[zr]] + ks[zr] * 17, rep) + \
-                _ragged_offsets(rep)
+                ragged_within(rep)
             emit(zkey, np.full(len(zkey), ac_t),
                  np.full(len(zkey), 0xF0), np.zeros(len(zkey)),
                  np.zeros(len(zkey)))

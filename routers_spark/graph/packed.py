@@ -1,4 +1,5 @@
-"""Packed road graph: the executor-resident broadcast structure.
+"""Packed road graph: the executor-resident broadcast structure, and the
+one way a graph reaches the workers.
 
 The analog of the reference's pointer-free network (petgraph DiGraphMap +
 FxHashMaps + two Hilbert-packed R-trees,
@@ -9,34 +10,39 @@ flat numpy arrays:
   - CSR adjacency (indptr/indices/edge-row) for successor scans
   - per-edge: src/dst index, class weight, haversine length in cm (u32,
     truncated exactly like the successor cache, cache.rs:204-213)
-  - a uniform cell-bucket spatial index over edge bounding boxes (the
-    packed-R-tree substitute: same query API — box -> candidate edge rows)
+  - uniform cell-bucket spatial indexes over edge bounding boxes and over
+    nodes (the packed-R-tree substitute: same query API — box -> candidate
+    edge rows, point -> nearest node), each built on its first query
 
-One instance is built on the driver, broadcast once, and memoised per
-executor process (module-level cache) — the "rebuild indices on load"
-lifecycle of graph.rs:145-178.
+Distribution is the "rebuild indices on load" lifecycle of
+graph.rs:145-178. ``broadcast_graph`` collects and packs the graph on the
+driver and keys it by a content digest of the packed payload. An equal
+digest reuses the SparkContext's existing ``Broadcast``, so repeated calls
+on one graph ship it once. On a worker, ``GraphHandle.graph()`` hydrates
+the payload at most once per digest. The worker memo keeps the last
+``HYDRATED_KEEP`` graphs, and with them their predicate-cache arenas.
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import itertools
 import sys
+from collections import OrderedDict
+from typing import NamedTuple
 
 import numpy as np
 
 from routers_spark.config import MIN_HEADING_DIST_M
 from routers_spark.functions.geo import bearing_deg_np, haversine_m_np
+from routers_spark.functions.ragged import ragged_within
 
 _GRAPH_UID = itertools.count(1)
 
-
-def ragged_within(counts: np.ndarray) -> np.ndarray:
-    """0..count-1 per group, flattened (the repeat/cumsum offset trick)."""
-    total = int(counts.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.int64)
-    starts = np.cumsum(counts) - counts
-    return np.arange(total, dtype=np.int64) - np.repeat(starts, counts)
+# cell side of both spatial indexes: ~0.002 deg ≈ 200 m, sized so a 50 m
+# search box touches at most 4 cells
+CELL_DEG = 0.002
 
 
 class PackedGraph:
@@ -63,12 +69,8 @@ class PackedGraph:
                          if edge_fwd is None else np.asarray(edge_fwd, dtype=bool))
         self.edge_access = edge_access  # None = no access metadata anywhere
         self._access_masks: dict[tuple, np.ndarray] = {}
-        # process-unique identity for cross-module caches (predicate LRU
-        # keys). NEVER key such caches by id(graph): celljoin creates and
-        # frees one small graph per trip, and CPython reuses freed ids —
-        # a stale cache entry for a dead graph would serve another graph's
-        # indices (caught as an IndexError at sf0.1; silent wrong answers
-        # were possible when sizes lined up).
+        # process-unique identity for cross-module caches; never key them by
+        # id(graph), which CPython reuses once a graph is freed
         self.uid = next(_GRAPH_UID)
         self.dijkstra_kernel = None  # dijkstra._Kernel.of attaches here
 
@@ -103,13 +105,7 @@ class PackedGraph:
         self._pair_rows = korder.astype(np.int64)
         self._n_nodes = n
 
-        self._cell_index = None
-
     # ------------------------------------------------------------- lookups
-
-    def node_index(self, ids) -> np.ndarray:
-        idx = np.searchsorted(self.node_ids, ids)
-        return idx
 
     def edge_row(self, src_idx: int, dst_idx: int) -> int:
         """Edge row for (src, dst) dense indices, or -1 (G2)."""
@@ -118,11 +114,6 @@ class PackedGraph:
         if i < len(self._pair_keys) and self._pair_keys[i] == key:
             return int(self._pair_rows[i])
         return -1
-
-    def successors(self, node_idx: int):
-        """Outgoing edge rows of a node (G1 edges_outof)."""
-        lo, hi = self.csr_indptr[node_idx], self.csr_indptr[node_idx + 1]
-        return self.csr_edge_row[lo:hi]
 
     def access_mask(self, profile) -> np.ndarray | None:
         """Per-edge accessibility under a TripProfile, memoised per profile
@@ -141,52 +132,35 @@ class PackedGraph:
 
     # -------------------------------------------------------- spatial index
 
-    def build_cell_index(self, cell_deg: float = 0.002):
+    @functools.cached_property
+    def _edge_cells(self) -> dict:
         """Uniform-grid bucket index over edge bounding boxes — the packed
-        R-tree substitute (X1, index.rs:42-57). Each edge is registered in
-        every cell its bbox touches (the padding-duplication idea of
-        selection.rs:52-96 applied at index granularity); queries dedup by
-        construction of the candidate mask.
-
-        cell_deg ~0.002 deg ≈ 200 m: sized so a 50 m search box touches at
-        most 4 cells.
-        """
+        R-tree substitute (X1, index.rs:42-57), built on first use. Each
+        edge is registered in every cell its bbox touches (the
+        padding-duplication idea of selection.rs:52-96 applied at index
+        granularity); queries dedup by construction of the candidate
+        mask."""
         min_x = np.minimum(self.ax, self.bx)
         max_x = np.maximum(self.ax, self.bx)
         min_y = np.minimum(self.ay, self.by)
         max_y = np.maximum(self.ay, self.by)
         x0 = float(min_x.min())
         y0 = float(min_y.min())
-        cx0 = np.floor((min_x - x0) / cell_deg).astype(np.int64)
-        cx1 = np.floor((max_x - x0) / cell_deg).astype(np.int64)
-        cy0 = np.floor((min_y - y0) / cell_deg).astype(np.int64)
-        cy1 = np.floor((max_y - y0) / cell_deg).astype(np.int64)
+        cx0 = np.floor((min_x - x0) / CELL_DEG).astype(np.int64)
+        cx1 = np.floor((max_x - x0) / CELL_DEG).astype(np.int64)
+        cy0 = np.floor((min_y - y0) / CELL_DEG).astype(np.int64)
+        cy1 = np.floor((max_y - y0) / CELL_DEG).astype(np.int64)
         nx = int(cx1.max()) + 1
-        ny = int(cy1.max()) + 1
-
         # explode edge -> covered cells (bounded: grid edges span few cells)
         counts = (cx1 - cx0 + 1) * (cy1 - cy0 + 1)
-        total = int(counts.sum())
-        edge_of = np.repeat(np.arange(len(self.edge_id)), counts)
-        # per-edge local cell offsets
-        offs = np.arange(total) - np.repeat(np.cumsum(counts) - counts, counts)
+        offs = ragged_within(counts)
         w = np.repeat(cx1 - cx0 + 1, counts)
-        dx = offs % w
-        dy = offs // w
-        cell = (np.repeat(cy0, counts) + dy) * nx + (np.repeat(cx0, counts) + dx)
-
-        order = np.argsort(cell, kind="stable")
-        cell_sorted = cell[order]
-        edge_sorted = edge_of[order]
-        uniq, starts = np.unique(cell_sorted, return_index=True)
-        self._cell_index = {
-            "x0": x0, "y0": y0, "cell_deg": cell_deg, "nx": nx, "ny": ny,
-            "uniq": uniq, "starts": starts,
-            "ends": np.append(starts[1:], len(cell_sorted)),
-            "edges": edge_sorted,
-            "min_x": min_x, "max_x": max_x, "min_y": min_y, "max_y": max_y,
-        }
-        return self
+        cell = ((np.repeat(cy0, counts) + offs // w) * nx
+                + np.repeat(cx0, counts) + offs % w)
+        return _buckets(
+            cell, np.repeat(np.arange(len(self.edge_id)), counts), x0=x0,
+            y0=y0, nx=nx, ny=int(cy1.max()) + 1,
+            min_x=min_x, max_x=max_x, min_y=min_y, max_y=max_y)
 
     def box_query_many(self, min_lon, min_lat, max_lon, max_lat):
         """Edge rows whose bbox intersects each of a batch of boxes (X2
@@ -196,8 +170,8 @@ class PackedGraph:
         ``rows[offsets[i]:offsets[i + 1]]``, in ascending edge-row order
         (our canonical candidate order). A box with a NaN or infinite
         coordinate matches nothing."""
-        ci = self._cell_index
-        cd, nx, ny = ci["cell_deg"], ci["nx"], ci["ny"]
+        ci = self._edge_cells
+        cd, nx, ny = CELL_DEG, ci["nx"], ci["ny"]
         lo_x, lo_y, hi_x, hi_y = (np.asarray(v, dtype=np.float64)
                                   for v in (min_lon, min_lat, max_lon, max_lat))
         n = len(lo_x)
@@ -225,7 +199,7 @@ class PackedGraph:
         box, pos = box[found], pos[found]
         nedge = ci["ends"][pos] - ci["starts"][pos]
         box = np.repeat(box, nedge)
-        rows = ci["edges"][np.repeat(ci["starts"][pos], nedge)
+        rows = ci["items"][np.repeat(ci["starts"][pos], nedge)
                            + ragged_within(nedge)]
         # exact bbox intersection refine, then one sort dedups the edges a
         # box meets in several cells and orders each box's rows
@@ -241,42 +215,32 @@ class PackedGraph:
 
     # ------------------------------------------------------ nearest node 1-NN
 
-    def build_node_cell_index(self, cell_deg: float = 0.002):
+    @functools.cached_property
+    def _node_cells(self) -> dict:
         """Uniform-grid bucket index over NODES (companion to the edge-bbox
-        index): cell -> contiguous slice of node dense indices. Backs the
-        ring-expansion 1-NN (X1/X3 applied to the Point snap)."""
+        index), built on first use: cell -> contiguous slice of node dense
+        indices. Backs the ring-expansion 1-NN (X1/X3 applied to the Point
+        snap)."""
         x0 = float(self.node_lon.min())
         y0 = float(self.node_lat.min())
-        cx = np.floor((self.node_lon - x0) / cell_deg).astype(np.int64)
-        cy = np.floor((self.node_lat - y0) / cell_deg).astype(np.int64)
+        cx = np.floor((self.node_lon - x0) / CELL_DEG).astype(np.int64)
+        cy = np.floor((self.node_lat - y0) / CELL_DEG).astype(np.int64)
         nx = int(cx.max()) + 1
-        ny = int(cy.max()) + 1
-        cell = cy * nx + cx
-        order = np.argsort(cell, kind="stable")
-        cell_sorted = cell[order]
-        uniq, starts = np.unique(cell_sorted, return_index=True)
-        self._node_cell_index = {
-            "x0": x0, "y0": y0, "cell_deg": cell_deg, "nx": nx, "ny": ny,
-            "uniq": uniq, "starts": starts,
-            "ends": np.append(starts[1:], len(cell_sorted)),
-            "nodes": order.astype(np.int64),
-        }
-        return self
+        return _buckets(cy * nx + cx, np.arange(len(cx), dtype=np.int64),
+                        x0=x0, y0=y0, nx=nx, ny=int(cy.max()) + 1)
 
     def nearest_nodes(self, lons, lats) -> np.ndarray:
         """Batched ring-expansion 1-NN: per point, grow Chebyshev cell
         shells around the center cell until the best planar-d² candidate is
         provably closer than any unseen shell (nodes in shells ≥ r+1 lie at
-        ≥ r·cell_deg from anywhere in the center cell). Per-point cost
+        ≥ r·CELL_DEG from anywhere in the center cell). Per-point cost
         scales with LOCAL density (cells visited), not node count — the
         round-2 verdict's fix for the all-nodes distance matrix. Ties break
         to the lowest dense index (= lowest node id), matching the brute
         ``argmin`` oracle (``nearest_node`` in tests/dijkstra_oracle.py).
         Returns dense indices."""
-        if getattr(self, "_node_cell_index", None) is None:
-            self.build_node_cell_index()
-        ci = self._node_cell_index
-        cd, nx, ny = ci["cell_deg"], ci["nx"], ci["ny"]
+        ci = self._node_cells
+        cd, nx, ny = CELL_DEG, ci["nx"], ci["ny"]
         lons = np.asarray(lons, dtype=np.float64)
         lats = np.asarray(lats, dtype=np.float64)
         n = len(lons)
@@ -298,11 +262,7 @@ class PackedGraph:
 
         def _ragged(starts, stops):
             cnt = np.maximum(stops - starts, 0)
-            tot = int(cnt.sum())
-            if tot == 0:
-                return np.empty(0, dtype=np.int64), cnt
-            offs = np.arange(tot) - np.repeat(np.cumsum(cnt) - cnt, cnt)
-            return np.repeat(starts, cnt) + offs, cnt
+            return np.repeat(starts, cnt) + ragged_within(cnt), cnt
 
         while len(active):
             s = shell[active]
@@ -343,7 +303,7 @@ class PackedGraph:
                 pt, pos = pt[found], pos[found]
                 bs, be = ci["starts"][pos], ci["ends"][pos]
                 flat, cnt = _ragged(bs, be)
-                cand = ci["nodes"][flat]
+                cand = ci["items"][flat]
                 cpt = np.repeat(pt, cnt)
                 if len(cand):
                     d2 = ((self.node_lon[cand] - lons[active][cpt]) ** 2
@@ -380,40 +340,109 @@ class PackedGraph:
 
     @classmethod
     def from_broadcastable(cls, d: dict) -> "PackedGraph":
-        g = cls(d["node_ids"], d["node_lon"], d["node_lat"], d["edge_id"],
-                d["edge_src"], d["edge_dst"], d["edge_weight"],
-                d.get("edge_fwd"), d.get("edge_access"))
-        return g
+        return cls(d["node_ids"], d["node_lon"], d["node_lat"], d["edge_id"],
+                   d["edge_src"], d["edge_dst"], d["edge_weight"],
+                   d.get("edge_fwd"), d.get("edge_access"))
 
 
-# per-executor-process memo of the last HYDRATED_KEEP broadcast graphs
-# (the analog of the reference's rebuild-indices-on-load,
-# graph.rs:145-178), most recently used last
+def _buckets(cell: np.ndarray, items: np.ndarray, **grid) -> dict:
+    """Cell bucket index: the items sorted by cell, and per occupied cell
+    (``uniq``) its slice ``starts:ends`` of ``items``; plus ``grid``."""
+    order = np.argsort(cell, kind="stable")
+    uniq, starts = np.unique(cell[order], return_index=True)
+    return dict(grid, uniq=uniq, starts=starts, items=items[order],
+                ends=np.append(starts[1:], len(cell)))
+
+
+# per-worker-process memo of the last HYDRATED_KEEP graphs, most recently
+# used last: broadcast graphs by content digest, registry epochs by
+# (path, epoch)
 HYDRATED_KEEP = 2
-_HYDRATED: dict[str, PackedGraph] = {}
+_HYDRATED: dict[object, PackedGraph] = {}
 
 
 def hydrate(bc, key: str) -> PackedGraph:
-    """Hydrate (and memoise) a broadcast graph in this worker process.
-    ``key`` is a caller-supplied stable token (pyspark's Broadcast exposes no
-    id on executors). Past ``HYDRATED_KEEP`` graphs the least recently used
-    one is evicted with its predicate-cache arenas and compiled-kernel
-    arrays."""
+    """The worker's graph of the broadcast payload ``bc.value``, memoised
+    under ``key`` (pyspark's Broadcast exposes no id on executors)."""
+    return worker_graph(key, lambda: PackedGraph.from_broadcastable(bc.value))
+
+
+def worker_graph(key, build) -> PackedGraph:
+    """The memoised graph under ``key``, else ``build()``'s. Past
+    ``HYDRATED_KEEP`` graphs the least recently used one is evicted with
+    its predicate-cache arenas and compiled-kernel arrays."""
     g = _HYDRATED.pop(key, None)
     if g is None:
-        g = PackedGraph.from_broadcastable(bc.value).build_cell_index()
         while len(_HYDRATED) >= HYDRATED_KEEP:
-            _evict(next(iter(_HYDRATED)))
+            old = _HYDRATED.pop(next(iter(_HYDRATED)))
+            old.dijkstra_kernel = None
+            dijkstra = sys.modules.get("routers_spark.graph.dijkstra")
+            if dijkstra is not None:
+                dijkstra.GLOBAL_PREDICATE_CACHE.drop(old.uid)
+        g = build()
     _HYDRATED[key] = g
     return g
 
 
-def _evict(key: str) -> None:
-    g = _HYDRATED.pop(key)
-    g.dijkstra_kernel = None
-    dijkstra = sys.modules.get("routers_spark.graph.dijkstra")
-    if dijkstra is not None:
-        dijkstra.GLOBAL_PREDICATE_CACHE.drop(g.uid)
+def graph_digest(payload: dict) -> str:
+    """sha256 of a ``to_broadcastable`` payload: every array with its dtype
+    and shape, and the access tags. Equal graphs get equal digests."""
+    h = hashlib.sha256()
+    for name, v in payload.items():
+        if isinstance(v, np.ndarray):
+            h.update(f"{name}:{v.dtype.str}{v.shape}".encode())
+            h.update(np.ascontiguousarray(v).data)
+        else:
+            h.update(f"{name}:{v!r}".encode())
+    return h.hexdigest()
+
+
+class GraphHandle(NamedTuple):
+    """What a task closure captures of a broadcast graph. ``graph()`` is
+    the worker's hydrated graph."""
+
+    bc: object
+    key: str
+
+    def graph(self) -> PackedGraph:
+        return hydrate(self.bc, self.key)
+
+
+def broadcast_graph(nodes_df, edges_df,
+                    limit_rows: int | None = None) -> GraphHandle:
+    """Collect, pack and broadcast nodes(node_id, lon, lat) /
+    edges(edge_id, src, dst, weight[, fwd, access]).
+
+    Past ``limit_rows`` rows on either side the collect stops with a
+    ``ValueError``; ``limit(N + 1).toPandas()`` is the probe and the
+    collect in one job. An equal digest reuses its ``Broadcast``. The
+    registry lives on the SparkContext object, so a stopped context's
+    broadcasts are never handed out; past ``HYDRATED_KEEP`` graphs the
+    oldest is unpersisted, never destroyed: a frame returned earlier may
+    still run against it."""
+    pdfs = []
+    for side, df in (("nodes", nodes_df), ("edges", edges_df)):
+        if limit_rows is not None:
+            df = df.limit(limit_rows + 1)
+        pdfs.append(df.toPandas())
+        if limit_rows is not None and len(pdfs[-1]) > limit_rows:
+            raise ValueError(
+                f"{side} table exceeds the broadcast limit of {limit_rows} "
+                f"rows; use candidate_path='celljoin' (the no-broadcast "
+                f"scale path) or raise the limit.")
+    payload = build_packed_graph(*pdfs).to_broadcastable()
+    key = graph_digest(payload)
+    sc = nodes_df.sparkSession.sparkContext
+    if not hasattr(sc, "_routers_spark_graphs"):
+        sc._routers_spark_graphs = OrderedDict()
+    registry = sc._routers_spark_graphs
+    bc = registry.pop(key, None)
+    if bc is None:
+        while len(registry) >= HYDRATED_KEEP:
+            registry.popitem(last=False)[1].unpersist()
+        bc = sc.broadcast(payload)
+    registry[key] = bc
+    return GraphHandle(bc, key)
 
 
 def _normalize_access(col) -> list | None:

@@ -45,8 +45,9 @@ from routers_spark.config import (
     DEFAULT_SEARCH_DISTANCE_M,
 )
 from routers_spark.functions.geo import square_box_np
+from routers_spark.functions.ragged import ragged_within
 from routers_spark.graph.dijkstra import GLOBAL_PREDICATE_CACHE, viterbi
-from routers_spark.graph.packed import ragged_within
+from routers_spark.graph.packed import broadcast_graph
 from routers_spark.matching import costing
 from routers_spark.matching.weigh import weigh_boundaries, weigh_flat
 
@@ -526,7 +527,9 @@ def match_trips(points_df, nodes_df, edges_df, opts: MatchOptions | None = None,
     edges(edge_id, src, dst, weight) DataFrames.
 
     candidate_path:
-      - "broadcast": the graph is collected once, packed, broadcast; trips
+      - "broadcast": the graph is collected, packed and broadcast
+        (``graph.packed.broadcast_graph``: one broadcast per distinct
+        graph per session, hydrated once per worker); trips
         shuffle once on trip_id (the only wide dependency) and candidate
         generation + solving happen per group against the executor-resident
         index. Right when the graph fits a broadcast (the north-rule shape).
@@ -546,35 +549,13 @@ def match_trips(points_df, nodes_df, edges_df, opts: MatchOptions | None = None,
               "gate_union": GATE_UNION_SCHEMA}[output]
 
     if candidate_path == "broadcast":
-        import uuid
         from collections.abc import Iterator
 
-        from routers_spark.graph.packed import build_packed_graph, hydrate
-
         spark = points_df.sparkSession
-        # Guard the driver collect: a graph past the broadcast envelope must
-        # go through the distributed celljoin path, not OOM the driver. The
-        # probe and the collect are ONE job per side — limit(N+1).toPandas()
-        # early-terminates past the envelope and doubles as the collect
-        # under it, so expensive upstream lineage executes once, not three
-        # times (probe-count ×2 + toPandas). Covers BOTH tables (a sparse
-        # network can have few edges but an enormous nodes table).
-        def _collect_bounded(df_side, side):
-            if broadcast_limit_rows is None:
-                return df_side.toPandas()
-            pdf = df_side.limit(broadcast_limit_rows + 1).toPandas()
-            if len(pdf) > broadcast_limit_rows:
-                raise ValueError(
-                    f"match_trips: {side} table exceeds "
-                    f"broadcast_limit_rows={broadcast_limit_rows}; use "
-                    f"candidate_path='celljoin' (the no-broadcast scale "
-                    f"path) or raise the limit.")
-            return pdf
-
-        g = build_packed_graph(_collect_bounded(nodes_df, "nodes"),
-                               _collect_bounded(edges_df, "edges"))
-        bc = spark.sparkContext.broadcast(g.to_broadcastable())
-        bc_key = uuid.uuid4().hex
+        # a graph past the broadcast envelope (either table) must take the
+        # celljoin path, not OOM the driver
+        handle = broadcast_graph(nodes_df, edges_df,
+                                 limit_rows=broadcast_limit_rows)
         n_part = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 1)
 
         # ONE shuffle on trip_id, then mapInPandas over trip-sorted
@@ -584,7 +565,7 @@ def match_trips(points_df, nodes_df, edges_df, opts: MatchOptions | None = None,
         # Trips split across batch boundaries are carried forward — rows of
         # a trip are contiguous (and seq-sorted) after sortWithinPartitions.
         def run_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            graph = hydrate(bc, bc_key)
+            graph = handle.graph()
 
             def solve_batch(tid, seq, lon, lat):
                 return _solve_trips(

@@ -164,27 +164,38 @@ def simhash_dedup_pairs(docs_df: DataFrame, text_col: str = "text",
     everything after the signature pass is JVM column algebra.
 
     Output: (doc_a, doc_b, hamming) with doc_a < doc_b."""
+    sigs = simhash_signatures(docs_df, text_col, k).filter(
+        F.col("n_shingles") > 0)
+    return hamming_ball_pairs(sigs, "doc_id", "simhash", max_hamming, bands,
+                              ("doc_a", "doc_b"))
+
+
+def hamming_ball_pairs(df: DataFrame, id_col: str, hash_col: str,
+                       max_hamming: int, bands: int,
+                       out: tuple[str, str]) -> DataFrame:
+    """Every pair of ``df`` rows whose 64-bit ``hash_col`` values differ in
+    at most ``max_hamming`` bits, as (out[0], out[1], hamming) with
+    out[0] < out[1]: a posexplode of the hash's ``bands`` slices, an
+    equi-join on (band, slice), the exact ``bit_count(a XOR b)`` verify and
+    a distinct over pairs that share several slices."""
     assert max_hamming < bands, "pigeonhole guarantee needs max_hamming < bands"
     width = 64 // bands
     mask = (1 << width) - 1
-    sigs = simhash_signatures(docs_df, text_col, k).filter(
-        F.col("n_shingles") > 0)
-    banded = sigs.select(
-        "doc_id", "simhash",
+    banded = df.select(
+        F.col(id_col).alias("id"), F.col(hash_col).alias("h"),
         F.posexplode(F.array(*[
-            F.shiftrightunsigned("simhash", b * width).bitwiseAND(F.lit(mask))
+            F.shiftrightunsigned(hash_col, b * width).bitwiseAND(F.lit(mask))
             for b in range(bands)
         ])).alias("band", "slice"),
     )
     a = banded.alias("a")
     b = banded.alias("b")
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+    ham = F.bit_count(F.col("a.h").bitwiseXOR(F.col("b.h")))
     return (
         a.join(b, (F.col("a.band") == F.col("b.band"))
                & (F.col("a.slice") == F.col("b.slice"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
+               & (F.col("a.id") < F.col("b.id")))
+        .select(F.col("a.id").alias(out[0]), F.col("b.id").alias(out[1]),
                 ham.cast("long").alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .distinct()

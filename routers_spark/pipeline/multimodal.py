@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from routers_spark.functions.raster import decode_image, png_encode
+from routers_spark.pipeline.dedup import hamming_ball_pairs
 
 
 _N_HIST_BINS = 8
@@ -232,30 +233,10 @@ def phash_dedup_pairs(images_df: DataFrame, max_hamming: int = 3,
                       bands: int = 4,
                       id_col: str = "image_id",
                       hash_col: str = "phash") -> DataFrame:
-    """Image near-dup candidates from the perceptual-hash column: the same
-    banded Hamming-ball pigeonhole join as the SimHash text dedup —
-    max_hamming < bands guarantees every pair within the ball shares an
-    exact 16-bit slice; exact bit_count(XOR) prunes. All JVM column
-    algebra. Output: (id_a, id_b, hamming)."""
-    assert max_hamming < bands
-    width = 64 // bands
-    mask = (1 << width) - 1
-    banded = images_df.select(
-        F.col(id_col).alias("iid"), F.col(hash_col).alias("h"),
-        F.posexplode(F.array(*[
-            F.shiftrightunsigned(hash_col, b * width).bitwiseAND(F.lit(mask))
-            for b in range(bands)
-        ])).alias("band", "slice"),
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    ham = F.bit_count(F.col("a.h").bitwiseXOR(F.col("b.h")))
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.slice") == F.col("b.slice"))
-               & (F.col("a.iid") < F.col("b.iid")))
-        .select(F.col("a.iid").alias("id_a"), F.col("b.iid").alias("id_b"),
-                ham.cast("long").alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    """Image near-dup candidates from the perceptual-hash column: the
+    banded Hamming-ball pigeonhole join the SimHash text dedup uses
+    (``dedup.hamming_ball_pairs``) — max_hamming < bands guarantees every
+    pair within the ball shares an exact slice; exact bit_count(XOR)
+    prunes. All JVM column algebra. Output: (id_a, id_b, hamming)."""
+    return hamming_ball_pairs(images_df, id_col, hash_col, max_hamming,
+                              bands, ("id_a", "id_b"))

@@ -12,9 +12,11 @@ atomic pointer, re-read per task:
     as io/checkpoint.py) — readers see the old epoch or the new one, never
     a half-written graph;
   - executors resolve the pointer AT MOST ONCE PER TASK ATTEMPT (one tiny
-    read per partition per micro-batch — object-store friendly) and
-    memoise hydrated graphs per epoch, so a swap costs one re-hydrate per
-    worker and steady-state batches pay dictionary lookups only.
+    read per partition per micro-batch — object-store friendly) and keep
+    each epoch's graph in ``graph.packed``'s worker memo under
+    ``(path, epoch)``, so a swap costs one re-hydrate per worker,
+    steady-state batches pay dictionary lookups only, and an evicted
+    epoch leaves with its predicate-cache arenas.
 
 A broadcast variable cannot do this: it is captured at plan time and
 immutable for the life of the query. The registry keeps the long-running
@@ -27,6 +29,8 @@ import os
 import tempfile
 
 import pandas as pd
+
+from routers_spark.graph.packed import build_packed_graph, worker_graph
 
 
 class GraphRegistry:
@@ -54,19 +58,15 @@ class GraphRegistry:
             return f.read().strip()
 
     def load(self, epoch: str):
-        from routers_spark.graph.packed import build_packed_graph
-
         d = os.path.join(self.path, f"epoch={epoch}")
         nodes = pd.read_parquet(os.path.join(d, "nodes.parquet"))
         edges = pd.read_parquet(os.path.join(d, "edges.parquet"))
-        return build_packed_graph(nodes, edges).build_cell_index()
+        return build_packed_graph(nodes, edges)
 
 
-# per-worker-process memos: hydrated graphs by (path, epoch); the resolved
-# epoch by task attempt (so the pointer is read once per task, not per group)
-_EPOCH_GRAPHS: dict[tuple[str, str], object] = {}
+# per-worker-process memo of the resolved epoch by task attempt (so the
+# pointer is read once per task, not per group)
 _TASK_EPOCH: dict[tuple[str, int], str] = {}
-_MAX_EPOCHS = 2  # current + draining
 
 
 def task_graph(registry: GraphRegistry):
@@ -91,11 +91,5 @@ def task_graph(registry: GraphRegistry):
             for dead in [k for k in _TASK_EPOCH if k[1] != tid]:
                 _TASK_EPOCH.pop(dead)
             _TASK_EPOCH[tkey] = epoch
-    gkey = (registry.path, epoch)
-    g = _EPOCH_GRAPHS.get(gkey)
-    if g is None:
-        g = registry.load(epoch)
-        while len(_EPOCH_GRAPHS) >= _MAX_EPOCHS:
-            _EPOCH_GRAPHS.pop(next(iter(_EPOCH_GRAPHS)))
-        _EPOCH_GRAPHS[gkey] = g
-    return epoch, g
+    return epoch, worker_graph((registry.path, epoch),
+                               lambda: registry.load(epoch))

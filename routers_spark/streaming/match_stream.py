@@ -27,6 +27,7 @@ from dataclasses import dataclass, field
 import pandas as pd
 
 from routers_spark.config import CONTEXT_WINDOW, GAP_SECONDS
+from routers_spark.graph.packed import broadcast_graph
 from routers_spark.matching.matcher import (
     MatchOptions,
     candidates_for_points,
@@ -35,11 +36,12 @@ from routers_spark.matching.matcher import (
 from routers_spark.matching.trellis import Trellis, Unreachable
 
 
-# process-wide LRU of weighed boundary matrices, keyed by (graph epoch,
-# src observation position, tgt observation position) — candidates (and so
-# the matrix) are a pure function of graph + positions, letting vehicles
-# even share entries. Bounded; survives micro-batches in the long-lived
-# python worker (no state-store serialization needed).
+# process-wide LRU of weighed boundary matrices, keyed by ((graph key,
+# options), src observation position, tgt observation position) —
+# candidates (and so the matrix) are a pure function of graph, options and
+# positions, letting vehicles even share entries. Bounded; survives
+# micro-batches in the long-lived python worker (no state-store
+# serialization needed).
 _BOUNDARY_LRU: OrderedDict = OrderedDict()
 _BOUNDARY_LRU_CAP = 65536
 
@@ -169,7 +171,10 @@ class VehicleMatcherState:
         # re-weighs only the boundaries its fresh points introduced
         # (weigh/mod.rs:160-168 pending-only recompute; the retained
         # interior boundaries hit the cache)
-        gtok = self.graph_key or f"uid:{graph.uid}"  # never id(): ids recycle
+        # the options shape the matrices too: two queries on one graph
+        # share entries only under equal options
+        gtok = (self.graph_key or f"uid:{graph.uid}",  # never id(): ids recycle
+                repr(opts))
         keys = [(gtok, pos_kept[k], pos_kept[k + 1])
                 for k in range(len(layers) - 1)]
         result = solve_trip(graph, layers, opts, boundary_keys=keys,
@@ -225,9 +230,12 @@ def match_stream(events_df, nodes_df=None, edges_df=None,
     layers with revision + finality. Partitioning uses the stable splitmix
     contract, not Spark's default hash (O13).
 
-    Graph distribution, two modes:
-      - ``nodes_df``/``edges_df``: packed once, broadcast — fixed for the
+    Graph distribution, two modes, both through ``graph.packed``'s one
+    worker memo:
+      - ``nodes_df``/``edges_df``: ``broadcast_graph`` — fixed for the
         life of the query (a Spark broadcast is captured at plan time).
+        States carry the graph's content digest, so a restart on the same
+        graph does not downgrade them.
       - ``registry`` (:class:`routers_spark.streaming.epoch.GraphRegistry`):
         the R6-complete LIVE mode — each task resolves the registry's
         CURRENT epoch and hydrates that graph, so a mid-stream ``publish``
@@ -239,14 +247,9 @@ def match_stream(events_df, nodes_df=None, edges_df=None,
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from routers_spark.functions.hashing import partition_of_np
-    from routers_spark.graph.packed import build_packed_graph, hydrate
-    import uuid
 
-    spark = events_df.sparkSession
     if registry is None:
-        g = build_packed_graph(nodes_df.toPandas(), edges_df.toPandas())
-        bc = spark.sparkContext.broadcast(g.to_broadcastable())
-        bc_key = uuid.uuid4().hex
+        handle = broadcast_graph(nodes_df, edges_df)
     opts = opts or MatchOptions(drop_unanchored=True)
 
     def update(key, pdfs, state):
@@ -256,8 +259,8 @@ def match_stream(events_df, nodes_df=None, edges_df=None,
             epoch, graph = task_graph(registry)
             gkey = f"epoch:{epoch}"
         else:
-            graph = hydrate(bc, bc_key)
-            gkey = bc_key
+            graph = handle.graph()
+            gkey = handle.key
         vehicle = key[0]
         if state.exists:
             st = VehicleMatcherState.from_tuple(state.get)

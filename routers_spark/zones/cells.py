@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 
 from routers_spark.functions.cells import quadkey_np
 from routers_spark.functions.geo import edges_hit_rects, point_in_polygon_np
+from routers_spark.functions.ragged import ragged_within
 
 # mirror the tz build constants (build/impl/s2cell.rs:13-14)
 ZONE_MIN_LEVEL = 1
@@ -176,9 +177,7 @@ def assign_zones_cells(points_df: DataFrame, zones: list[dict],
                 if not cnt.any():
                     continue
                 rep = np.repeat(np.arange(n), cnt)
-                pos = (np.arange(int(cnt.sum()), dtype=np.int64)
-                       - np.repeat(np.cumsum(cnt) - cnt, cnt)
-                       + np.repeat(lo, cnt))
+                pos = ragged_within(cnt) + np.repeat(lo, cnt)
                 cand[rep, zidx_[pos]] = True
                 cand_int[rep, zidx_[pos]] |= intr_[pos]
             zone = resolve_zone_candidates(px, py, cand, cand_int, rings_)

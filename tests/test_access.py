@@ -95,7 +95,7 @@ def _square_with_shortcut(restrict_shortcut_for=None):
 
 def test_dijkstra_gate_blocks_restricted_edge():
     nodes, edges = _square_with_shortcut(restrict_shortcut_for="motor_vehicle")
-    g = build_packed_graph(nodes, edges).build_cell_index()
+    g = build_packed_graph(nodes, edges)
     idx = {n: int(np.searchsorted(g.node_ids, n)) for n in (1, 2, 3, 4, 5)}
     # ungated: node 3 reached over the direct bridge from node 2
     free = bounded_dijkstra_parents(g, idx[1])
@@ -115,7 +115,7 @@ def test_match_path_flips_under_profile():
     profile and around it with one — the reference's runtime-gated
     PredicateCache behavior observed end-to-end through solve_trip."""
     nodes, edges = _square_with_shortcut(restrict_shortcut_for="motor_vehicle")
-    g = build_packed_graph(nodes, edges).build_cell_index()
+    g = build_packed_graph(nodes, edges)
     idx = {n: int(np.searchsorted(g.node_ids, n)) for n in (1, 2, 3, 4, 5)}
     # two observations: on edge (1->2) and on edge (3->4) — the transition
     # must bridge node 2 to node 3
@@ -147,7 +147,7 @@ def test_profile_keyed_cache_no_taint():
     cache key, tainting later queries. Ours keys by profile — the same cache
     serves both gated and ungated queries correctly."""
     nodes, edges = _square_with_shortcut(restrict_shortcut_for="motor_vehicle")
-    g = build_packed_graph(nodes, edges).build_cell_index()
+    g = build_packed_graph(nodes, edges)
     cache = PredicateCache()
     idx = {n: int(np.searchsorted(g.node_ids, n)) for n in (1, 2, 3, 5)}
     n3 = int(np.searchsorted(g.node_ids, 3))

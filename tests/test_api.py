@@ -28,7 +28,7 @@ def test_snap_points_matches_min_candidate(spark, road_dfs):
     })
     out = snap_points(spark.createDataFrame(pts), nodes_df, edges_df,
                       search_m=60.0).toPandas().sort_values("pid")
-    g = build_packed_graph(nodes, edges).build_cell_index()
+    g = build_packed_graph(nodes, edges)
     from routers_spark.matching.matcher import candidates_for_points
 
     layers = candidates_for_points(g, out.lon.values, out.lat.values,

@@ -52,7 +52,6 @@ def test_celljoin_candidate_sets_match_boxquery(spark, inputs):
     points_df, nodes_df, edges_df = inputs
     cand = candidates_cell_join(points_df, nodes_df, edges_df).toPandas()
     g = build_packed_graph(nodes_df.toPandas(), edges_df.toPandas())
-    g.build_cell_index()
     opts = MatchOptions()
     pts = points_df.toPandas()
     layers = candidates_for_points(g, pts.lon.values, pts.lat.values,

@@ -26,7 +26,7 @@ from tests.test_weigh_vec import decay_u32_scalar, scalar_matrix
 
 def _graph_and_layers(costing=None):
     nodes, edges = grid_network(8)
-    g = build_packed_graph(nodes, edges).build_cell_index()
+    g = build_packed_graph(nodes, edges)
     rng = np.random.default_rng(9)
     lons = -118.4995 + rng.random(6) * 0.012
     lats = 33.7005 + rng.random(6) * 0.012

@@ -37,7 +37,7 @@ def run_match(g, pts):
 
 def test_grid_trip_goldens():
     nodes, edges = grid_network(20)
-    g = build_packed_graph(nodes, edges).build_cell_index()
+    g = build_packed_graph(nodes, edges)
     trips = walk_trips(nodes, edges, n_trips=10, points_per_trip=12, seed=123)
     for tid, grp in trips.groupby("trip_id"):
         got = run_match(g, list(zip(grp.lon, grp.lat)))
@@ -46,7 +46,7 @@ def test_grid_trip_goldens():
 
 def test_t_junction_golden():
     nodes, edges = t_junction()
-    g = build_packed_graph(nodes, edges).build_cell_index()
+    g = build_packed_graph(nodes, edges)
     track = [(-118.101, 34.1503), (-118.111, 34.1503), (-118.121, 34.1503),
              (-118.131, 34.1503), (-118.141, 34.1503), (-118.151, 34.1503),
              (-118.158, 34.1503)]

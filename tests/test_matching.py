@@ -15,6 +15,7 @@ from routers_spark.fixtures.roads import (
     t_junction,
     walk_trips,
 )
+from routers_spark.graph import packed
 from routers_spark.graph.packed import build_packed_graph
 from routers_spark.graph.dijkstra import (
     GLOBAL_PREDICATE_CACHE,
@@ -41,7 +42,7 @@ STRAIGHT_TRACK = [(-118.151, 34.1503), (-118.155, 34.1503),
 
 def build(netfn):
     nodes, edges = netfn()
-    return build_packed_graph(nodes, edges).build_cell_index()
+    return build_packed_graph(nodes, edges)
 
 
 def match(g, pts, **kw):
@@ -153,7 +154,7 @@ def test_selective_equals_allcompute_when_unpruned():
 
 def test_repeat_match_determinism_on_grid():
     nodes, edges = grid_network(10)
-    g = build_packed_graph(nodes, edges).build_cell_index()
+    g = build_packed_graph(nodes, edges)
     trips = walk_trips(nodes, edges, n_trips=5, points_per_trip=8, seed=7)
     for tid, grp in trips.groupby("trip_id"):
         pts = list(zip(grp["lon"], grp["lat"]))
@@ -212,8 +213,8 @@ def test_nearest_node_snap():
 def box_query(g, min_lon, min_lat, max_lon, max_lat) -> np.ndarray:
     """The scalar cell-index box query, one box at a time: the oracle of
     ``PackedGraph.box_query_many``."""
-    ci = g._cell_index
-    cd = ci["cell_deg"]
+    ci = g._edge_cells
+    cd = packed.CELL_DEG
     cx0 = max(int(np.floor((min_lon - ci["x0"]) / cd)), 0)
     cx1 = min(int(np.floor((max_lon - ci["x0"]) / cd)), ci["nx"] - 1)
     cy0 = max(int(np.floor((min_lat - ci["y0"]) / cd)), 0)
@@ -223,7 +224,7 @@ def box_query(g, min_lon, min_lat, max_lon, max_lat) -> np.ndarray:
     cells = [cy * ci["nx"] + cx
              for cy in range(cy0, cy1 + 1) for cx in range(cx0, cx1 + 1)]
     pos = np.searchsorted(ci["uniq"], cells)
-    chunks = [ci["edges"][ci["starts"][p]:ci["ends"][p]]
+    chunks = [ci["items"][ci["starts"][p]:ci["ends"][p]]
               for p, c in zip(pos, cells)
               if p < len(ci["uniq"]) and ci["uniq"][p] == c]
     if not chunks:
@@ -239,7 +240,7 @@ def box_query(g, min_lon, min_lat, max_lon, max_lat) -> np.ndarray:
 def test_box_query_matches_brute_force():
     # index.rs:101-203 search_matches_brute_force analog
     nodes, edges = grid_network(15, spacing_deg=0.003)
-    g = build_packed_graph(nodes, edges).build_cell_index()
+    g = build_packed_graph(nodes, edges)
     rng = np.random.default_rng(5)
     cx = rng.uniform(-118.5, -118.46, 50)
     cy = rng.uniform(33.7, 33.74, 50)
@@ -269,16 +270,16 @@ def _graph_with_zero_length_edges():
     return build_packed_graph(
         pd.concat([nodes, extra], ignore_index=True),
         pd.concat([edges[["edge_id", "src", "dst", "weight"]], zero],
-                  ignore_index=True)).build_cell_index()
+                  ignore_index=True))
 
 
 def test_box_query_many_equals_scalar_oracle():
     g = _graph_with_zero_length_edges()
     zero = np.flatnonzero(g.edge_len_cm == 0)
     assert len(zero) == 4
-    ci = g._cell_index
+    ci = g._edge_cells
     rng = np.random.default_rng(17)
-    x0, y0, cd = ci["x0"], ci["y0"], ci["cell_deg"]
+    x0, y0, cd = ci["x0"], ci["y0"], packed.CELL_DEG
     n = 400
     # random boxes over and around the grid, some far outside its extent
     cx = x0 + rng.uniform(-0.5, 1.5, n) * ci["nx"] * cd
@@ -368,7 +369,7 @@ def test_batched_solve_calls_no_per_item_kernel(monkeypatch):
     monkeypatch.setattr(dijkstra, "settle_many", counting_settle)
 
     nodes, edges = grid_network(12)
-    g = build_packed_graph(nodes, edges).build_cell_index()
+    g = build_packed_graph(nodes, edges)
     trips = walk_trips(nodes, edges, n_trips=40, points_per_trip=8, seed=9)
     opts = MatchOptions()
 
@@ -427,7 +428,7 @@ def test_routed_output_equals_per_trip_emitters(monkeypatch, output, kw):
     import emit_oracle
 
     nodes, edges = grid_network(12)
-    g = build_packed_graph(nodes, edges).build_cell_index()
+    g = build_packed_graph(nodes, edges)
     trips = walk_trips(nodes, edges, n_trips=30, points_per_trip=8, seed=5)
     trips.loc[trips.trip_id == "trip000003", "lon"] += 1.0
     trips.loc[(trips.trip_id == "trip000005") & (trips.seq == 4), "lon"] += 1.0
@@ -466,8 +467,6 @@ def test_hydrate_memo_keeps_two_graphs():
     takes its predicate-cache arenas and compiled-kernel arrays with it,
     and the cache's root count stays the roots its arenas hold."""
     import types
-
-    from routers_spark.graph import packed
 
     nodes, edges = grid_network(6)
     payload = build_packed_graph(nodes, edges).to_broadcastable()

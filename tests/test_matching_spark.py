@@ -178,7 +178,7 @@ def test_map_match_exact_premise_single_candidate(spark):
     })
     edges = pd.DataFrame({"edge_id": r, "src": 2 * r, "dst": 2 * r + 1,
                           "weight": np.full(40, 10)})
-    g = build_packed_graph(nodes, edges).build_cell_index()
+    g = build_packed_graph(nodes, edges)
     opts = MatchOptions()
     cands = candidates_for_points(g, pts["lon"].values, pts["lat"].values,
                                   opts.search_distance, opts.emission_error)
@@ -264,13 +264,10 @@ def test_nan_point_fails_only_its_own_trip(spark, candidate_path):
     assert len(out[out.trip_id == tids[1]]) == 6
 
 
-def test_workers_keep_two_hydrated_graphs(spark, grid):
-    """Ten match_trips calls broadcast ten graphs; every Python worker
-    then holds at most the last two hydrated graphs and at most two
-    predicate-cache arenas, its root count equal to the roots they hold."""
-    points_df, nodes_df, edges_df, _ = grid
-    for _ in range(10):
-        assert len(match_trips(points_df, nodes_df, edges_df).toPandas())
+def _probe_workers(spark) -> pd.DataFrame:
+    """Per Python worker (16 tasks reach every worker of local[4]): the
+    digest and uid of each graph in its memo, and its predicate-cache
+    arena and root counts."""
 
     def probe(batches):
         import os
@@ -280,15 +277,115 @@ def test_workers_keep_two_hydrated_graphs(spark, grid):
         for _ in batches:
             pass
         cache = dijkstra.GLOBAL_PREDICATE_CACHE
+        graphs = list(packed._HYDRATED.values())
         yield pd.DataFrame({
-            "pid": [os.getpid()], "graphs": [len(packed._HYDRATED)],
+            "pid": [os.getpid()],
+            "digests": [[packed.graph_digest(g.to_broadcastable())
+                         for g in graphs]],
+            "uids": [[g.uid for g in graphs]],
             "arenas": [len(cache._arenas)], "roots": [cache._roots],
             "held": [sum(a.n_slots for a in cache._arenas.values())]})
 
-    seen = spark.range(0, 64, numPartitions=16).mapInPandas(
-        probe, "pid long, graphs long, arenas long, roots long, held long"
-    ).toPandas()
-    assert seen.graphs.max() >= 1  # the probe reached matching workers
-    assert (seen.graphs <= 2).all()
+    return spark.range(0, 64, numPartitions=16).mapInPandas(
+        probe, "pid long, digests array<string>, uids array<long>, "
+        "arenas long, roots long, held long").toPandas()
+
+
+def _reset_registry(spark):
+    registry = getattr(spark.sparkContext, "_routers_spark_graphs", {})
+    for bc in registry.values():
+        bc.unpersist()
+    registry.clear()
+
+
+def test_one_graph_is_broadcast_and_hydrated_once(spark, grid):
+    """Ten match_trips calls and a snap_points call on one graph share one
+    broadcast, and every Python worker holds that graph at most once,
+    its predicate-cache root count equal to the roots its arenas hold."""
+    from routers_spark.api import snap_points
+    from routers_spark.graph.packed import broadcast_graph
+
+    points_df, nodes_df, edges_df, _ = grid
+    _reset_registry(spark)
+    for _ in range(10):
+        assert len(match_trips(points_df, nodes_df, edges_df).toPandas())
+    assert len(snap_points(points_df, nodes_df, edges_df).toPandas())
+    registry = spark.sparkContext._routers_spark_graphs
+    key = broadcast_graph(nodes_df, edges_df).key
+    assert list(registry) == [key]
+
+    seen = _probe_workers(spark)
+    copies = seen.digests.map(lambda d: list(d).count(key))
+    assert copies.max() == 1  # the probe reached matching workers
     assert (seen.arenas <= 2).all()
     assert (seen.roots == seen.held).all()
+
+
+def test_alternating_graphs_keep_two_per_worker(spark, grid):
+    """Calls alternating between two graphs reuse both broadcasts, and a
+    worker keeps both graphs hydrated: the graph it holds after the third
+    round is the one it hydrated in the first."""
+    from pyspark.sql import functions as F
+
+    from routers_spark.graph.packed import broadcast_graph
+
+    points_df, nodes_df, edges_df, _ = grid
+    graphs = [edges_df, edges_df.withColumn("weight", F.col("weight") + 1)]
+    _reset_registry(spark)
+    handles = [broadcast_graph(nodes_df, e) for e in graphs]
+    assert handles[0].key != handles[1].key
+
+    def round_trip():
+        for e in graphs:
+            out = match_trips(points_df, nodes_df, e).toPandas()
+            assert (out.status == "matched").any()
+        seen = _probe_workers(spark)
+        assert (seen.digests.map(len) <= 2).all()
+        return {(pid, d): u for pid, ds, us in zip(seen.pid, seen.digests,
+                                                   seen.uids)
+                for d, u in zip(ds, us)}
+
+    first = round_trip()
+    round_trip()
+    last = round_trip()
+    registry = spark.sparkContext._routers_spark_graphs
+    assert [registry[h.key] for h in handles] == [h.bc for h in handles]
+    kept = first.keys() & last.keys()
+    assert kept and {d for _, d in kept} <= {h.key for h in handles}
+    assert all(first[k] == last[k] for k in kept)
+
+
+def test_restarted_session_gets_a_fresh_broadcast():
+    """A stopped SparkContext's broadcast is never handed out: the graph
+    registry lives on the context object, so a new session in the same
+    JVM broadcasts the graph anew and matches against it. A child
+    process, since stopping the suite's session would end it."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "from routers_spark.fixtures.roads import grid_network, walk_trips\n"
+        "from routers_spark.graph.packed import broadcast_graph\n"
+        "from routers_spark.matching import match_trips\n"
+        "from routers_spark.session import get_spark\n"
+        "nodes, edges = grid_network(8)\n"
+        "trips = walk_trips(nodes, edges, n_trips=3, points_per_trip=6)\n"
+        "handles = []\n"
+        "for _ in range(2):\n"
+        "    spark = get_spark('local[2]', shuffle_partitions=2)\n"
+        "    n, e, p = (spark.createDataFrame(x) for x in (nodes, edges, trips))\n"
+        "    h = broadcast_graph(n, e)\n"
+        "    assert broadcast_graph(n, e).bc is h.bc\n"
+        "    out = match_trips(p, n, e).toPandas()\n"
+        "    assert (out.status == 'matched').any(), out\n"
+        "    handles.append(h)\n"
+        "    spark.stop()\n"
+        "assert handles[0].key == handles[1].key\n"
+        "assert handles[0].bc is not handles[1].bc\n"
+        "print('fresh broadcast ok')\n")
+    env = dict(os.environ, PYTHONPATH=root)
+    res = subprocess.run([sys.executable, "-c", code], cwd=root, env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert "fresh broadcast ok" in res.stdout, res.stderr[-3000:]

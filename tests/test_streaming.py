@@ -16,7 +16,7 @@ from routers_spark.streaming.match_stream import VehicleMatcherState
 @pytest.fixture(scope="module")
 def road():
     nodes, edges = straight_road()
-    return build_packed_graph(nodes, edges).build_cell_index()
+    return build_packed_graph(nodes, edges)
 
 
 TRACK = [(0, -118.151, 34.1503), (1_000_000, -118.155, 34.1503),
@@ -89,7 +89,7 @@ def test_revision_monotonic(road):
 
 def test_context_window_bounds_state(road):
     nodes, edges = grid_network(10)
-    g = build_packed_graph(nodes, edges).build_cell_index()
+    g = build_packed_graph(nodes, edges)
     trips = walk_trips(nodes, edges, n_trips=1, points_per_trip=30, seed=3)
     st = VehicleMatcherState()
     for _, row in trips.iterrows():
@@ -225,3 +225,44 @@ def test_incremental_weighing_only_pending(road, monkeypatch):
     merged = merge_by_revision(rows)
     batch = batch_edges(road, [(lon, lat) for _, lon, lat in TRACK])
     assert [r["edge_id"] for r in merged.values()] == batch
+
+
+def test_boundary_cache_keyed_by_options(road):
+    """Two streams on one graph key share boundary matrices only under
+    equal options: a stream with another transition ζ weighs its
+    boundaries afresh instead of reading the first stream's."""
+    from routers_spark.matching.costing import CostingStrategies, Strategy
+    from routers_spark.streaming import match_stream as ms
+
+    ms._BOUNDARY_LRU.clear()
+    zeta3 = CostingStrategies(transition=Strategy(zeta=3.0))
+    for costing in (None, zeta3):
+        opts = MatchOptions(drop_unanchored=True, costing=costing)
+        assert VehicleMatcherState().process(road, TRACK, opts, graph_key="g")
+    assert len(ms._BOUNDARY_LRU) == 2 * (len(TRACK) - 1)
+
+
+def test_epoch_graphs_share_the_worker_memo(tmp_path):
+    """Three published epochs go through graph.packed's one worker memo:
+    at most HYDRATED_KEEP graphs stay, and an evicted epoch takes its
+    predicate-cache arenas with it."""
+    from routers_spark.graph import packed
+    from routers_spark.graph.dijkstra import GLOBAL_PREDICATE_CACHE as cache
+    from routers_spark.streaming.epoch import GraphRegistry, task_graph
+
+    nodes, edges = grid_network(4)
+    reg = GraphRegistry(str(tmp_path))
+    packed._HYDRATED.clear()
+    cache.__init__()
+    uids = []
+    for epoch in "123":
+        reg.publish(nodes, edges, epoch)
+        got, g = task_graph(reg)
+        assert got == epoch and task_graph(reg)[1] is g  # memoised
+        cache.locate(g, [0, 1, 2], [3, 4, 5])
+        uids.append(g.uid)
+        assert len(packed._HYDRATED) <= packed.HYDRATED_KEEP
+    assert list(packed._HYDRATED) == [(reg.path, "2"), (reg.path, "3")]
+    assert {key[0] for key in cache._arenas} == set(uids[1:])
+    assert cache._roots == sum(a.n_slots for a in cache._arenas.values())
+    packed._HYDRATED.clear()

@@ -15,11 +15,13 @@ from routers_spark.streaming.match_stream import match_stream
 EV_SCHEMA = "vehicle_id long, ts_us long, lon double, lat double"
 
 
-def _run_batch(spark, src, ck, out):
+def _run_batch(spark, src, ck, out, edge_offset=0):
     """One availableNow pass writing to a resumable parquet sink (the memory
-    sink cannot recover from a checkpoint)."""
+    sink cannot recover from a checkpoint), on the straight road with its
+    edge ids shifted by ``edge_offset``."""
     events = spark.readStream.schema(EV_SCHEMA).parquet(src)
     nodes, edges = straight_road()
+    edges["edge_id"] = edges["edge_id"] + edge_offset
     q = (
         match_stream(events, spark.createDataFrame(nodes),
                      spark.createDataFrame(edges))
@@ -64,20 +66,16 @@ def test_stream_end_to_end_with_resume(spark, tmp_path):
               if r.vehicle_id == 7 and r.ts_us >= 3_000_000]
     assert {r.ts_us for r in v7_new} == {3_000_000, 4_000_000}
     assert min(r.revision for r in v7_new) >= 2  # state resumed, not restarted
-    # R6 observed through the real surface: run 2 broadcast a NEW graph
-    # epoch, so the restored state restarts from raw origins and flags its
-    # re-solve (revision >= 2, incl. re-emitted retained layers) downgraded
-    # (matcher/entity.rs:253-258); run 1's solves (revision 1) are clean
-    assert all(not r.downgraded for r in rows if r.revision == 1)
-    assert all(r.downgraded for r in rows
-               if r.vehicle_id == 7 and r.revision >= 2)
+    # run 2 broadcast the same graph: its content digest is the states'
+    # graph key, so the restored states are not downgraded
+    assert not any(r.downgraded for r in rows)
 
     # merged (max revision per ts) across both runs == batch match
     from routers_spark.graph.packed import build_packed_graph
     from tests.test_streaming import batch_edges
 
     nodes, edges = straight_road()
-    g = build_packed_graph(nodes, edges).build_cell_index()
+    g = build_packed_graph(nodes, edges)
     track = [(-118.151, 34.1501), (-118.155, 34.1499),
              (-118.161, 34.1501), (-118.168, 34.1499)]
     expect = batch_edges(g, track)
@@ -88,6 +86,16 @@ def test_stream_end_to_end_with_resume(spark, tmp_path):
         if r.ts_us not in merged or r.revision > merged[r.ts_us][0]:
             merged[r.ts_us] = (r.revision, r.edge_id)
     assert [v[1] for _, v in sorted(merged.items())] == expect
+
+    # R6 observed through the real surface: run 3 broadcasts ANOTHER graph
+    # (renumbered edges), so vehicle 7's restored state restarts from raw
+    # origins and flags its re-solve downgraded (matcher/entity.rs:253-258)
+    batch3 = pd.DataFrame({"vehicle_id": [7], "ts_us": [5_000_000],
+                           "lon": [-118.169], "lat": [34.1501]})
+    spark.createDataFrame(batch3).write.mode("append").parquet(src)
+    rows3 = [r for r in _run_batch(spark, src, ck, out, 1000).collect()
+             if r.revision >= 3]
+    assert rows3 and all(r.downgraded and r.edge_id >= 1000 for r in rows3)
 
 
 @pytest.mark.slow

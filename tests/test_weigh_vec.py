@@ -218,7 +218,7 @@ def _random_layers(graph, rng, n_points, lon0, lat0, span):
 @pytest.fixture(scope="module")
 def grid_graph():
     nodes, edges = grid_network(12)
-    g = build_packed_graph(nodes, edges).build_cell_index()
+    g = build_packed_graph(nodes, edges)
     return g
 
 
@@ -277,7 +277,7 @@ def test_vectorized_same_edge_direct_and_backtrack():
     """A layer paired with itself exercises direct (frac <=) and same-edge
     backtrack (frac >) resolutions in one matrix."""
     nodes, edges = t_junction()
-    g = build_packed_graph(nodes, edges).build_cell_index()
+    g = build_packed_graph(nodes, edges)
     cache = PredicateCache()
     rng = np.random.default_rng(3)
     lons = -118.16 + rng.random(6) * 0.02
@@ -295,7 +295,7 @@ def test_vectorized_unreachable_boundary():
     from routers_spark.fixtures.roads import disconnected
 
     nodes, edges = disconnected()
-    g = build_packed_graph(nodes, edges).build_cell_index()
+    g = build_packed_graph(nodes, edges)
     cache = PredicateCache()
     # one point per component
     layers = candidates_for_points(
@@ -373,7 +373,7 @@ def _corpus_graph(seed: int):
     closed = rng.random(len(edges)) < 0.1
     edges["access"] = [[("motor_vehicle", "both", "no")] if c else []
                        for c in closed]
-    return build_packed_graph(nodes, edges).build_cell_index()
+    return build_packed_graph(nodes, edges)
 
 
 def _corpus(g, rng, n_points: int = 40):
@@ -518,7 +518,7 @@ def test_compiled_equals_numpy_oracle_on_benchmark_chunks():
     spec.loader.exec_module(I)
 
     nodes, edges = I.grid_network()
-    g = build_packed_graph(nodes, edges).build_cell_index()
+    g = build_packed_graph(nodes, edges)
     trips = I.walk_trips(nodes, edges, 120, 1)
     opts = matcher.MatchOptions()
     t = matcher._broadcast_trips(trips.trip_id.values, trips.seq.values,
@@ -547,7 +547,7 @@ def test_compiled_equals_numpy_oracle_on_benchmark_chunks():
 def test_weigh_rejects_bad_offsets_and_rows():
     """The kernel trusts its offsets: bad lo/mid/hi, edge rows, matrix
     offsets, keep masks and lanes raise ValueError before the C call."""
-    g = build_packed_graph(*grid_network(4)).build_cell_index()
+    g = build_packed_graph(*grid_network(4))
     er = np.array([0, 1, 2, 3], dtype=np.int64)
     f = np.array([0.1, 0.2, 0.3, 0.4])
     cache = PredicateCache()

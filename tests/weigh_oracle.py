@@ -36,7 +36,7 @@ from routers_spark.functions.geo import (
     haversine_m_np,
     wrap_angle_np,
 )
-from routers_spark.graph.packed import ragged_within
+from routers_spark.functions.ragged import ragged_within
 from routers_spark.matching.weigh import _fanout_mask
 
 _EPS = 1e-6

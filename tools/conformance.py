@@ -47,7 +47,7 @@ def main() -> None:
         sys.exit("usage: conformance.py [iters >= 1] [warmup >= 0]")
 
     nodes, edges = grid_network(40)
-    g = build_packed_graph(nodes, edges).build_cell_index()
+    g = build_packed_graph(nodes, edges)
     opts = MatchOptions()
 
     # three traces echoing the reference's ventura (~139 pts) /

@@ -169,7 +169,7 @@ def main(argv=None) -> int:
     nodes, edges = I.grid_network()
     trips = I.walk_trips(nodes, edges, args.trips, args.seed)
     chunks = task_chunks(trips, args.tasks)
-    g = build_packed_graph(nodes, edges).build_cell_index()
+    g = build_packed_graph(nodes, edges)
     opts = MatchOptions(selective_fanout=args.fanout,
                         drop_unanchored=args.drop_unanchored)
     print(f"seed {args.seed}: {len(trips)} points in {args.tasks} chunks of "

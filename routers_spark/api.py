@@ -33,6 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from routers_spark.config import DEFAULT_SEARCH_DISTANCE_M
+from routers_spark.functions.ragged import ragged_argmin
 from routers_spark.graph.packed import broadcast_graph
 
 
@@ -43,8 +44,6 @@ def snap_points(points_df: DataFrame, nodes_df: DataFrame, edges_df: DataFrame,
     """PointSnapped: per point the nearest projected on-edge position
     within the square-box scan; NULLs when nothing anchors
     (proximity.rs:50-93)."""
-    from routers_spark.matching.matcher import candidates_for_points
-
     keep = keep or [c for c in points_df.columns if c not in (lon, lat)]
     handle = broadcast_graph(nodes_df, edges_df)
     out_fields = [f for f in points_df.schema.fields if f.name in keep + [lon, lat]]
@@ -55,32 +54,30 @@ def snap_points(points_df: DataFrame, nodes_df: DataFrame, edges_df: DataFrame,
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         g = handle.graph()
         for pdf in batches:
-            cands = candidates_for_points(
-                g, pdf[lon].values, pdf[lat].values, search_m, 25.0)
-            n = len(pdf)
-            eid = np.full(n, -1, dtype=np.int64)
-            sx = np.full(n, np.nan)
-            sy = np.full(n, np.nan)
-            fr = np.full(n, np.nan)
-            dm = np.full(n, np.nan)
-            for i, c in enumerate(cands):
-                if len(c["edge_row"]) == 0:
-                    continue
-                j = int(np.argmin(c["dist_m"]))  # first min = stable-sort head
-                eid[i] = g.edge_id[c["edge_row"][j]]
-                sx[i] = c["px"][j]
-                sy[i] = c["py"][j]
-                fr[i] = c["frac"][j]
-                dm[i] = c["dist_m"][j]
-            out = pdf[[f.name for f in out_fields]].copy()
-            out["edge_id"] = eid
-            out["snap_lon"] = sx
-            out["snap_lat"] = sy
-            out["frac"] = fr
-            out["dist_m"] = dm
-            yield out
+            yield pdf[[f.name for f in out_fields]].assign(**nearest_on_edges(
+                g, pdf[lon].values, pdf[lat].values, search_m))
 
     return points_df.mapInPandas(run, schema=schema)
+
+
+def nearest_on_edges(graph, lons, lats, search_m: float) -> dict:
+    """Per point its nearest candidate (edge_id, snap_lon, snap_lat, frac,
+    dist_m): the first minimum of ``dist_m`` over the point's candidates
+    in candidate order, the stable-sort head; edge_id -1 and NaNs for a
+    point without candidates."""
+    from routers_spark.matching.matcher import _candidate_table
+
+    off, cand = _candidate_table(graph, lons, lats, search_m, 25.0)
+    j = ragged_argmin(off, cand["dist_m"])
+    has = j >= 0
+    j = j[has]
+    out = {"edge_id": np.full(len(has), -1, dtype=np.int64)}
+    out["edge_id"][has] = graph.edge_id[cand["edge_row"][j]]
+    for k, c in (("snap_lon", "px"), ("snap_lat", "py"), ("frac", "frac"),
+                 ("dist_m", "dist_m")):
+        out[k] = np.full(len(has), np.nan)
+        out[k][has] = cand[c][j]
+    return out
 
 
 def nearest_points(points_df: DataFrame, nodes_df: DataFrame,

@@ -61,8 +61,12 @@ def _table_lit() -> Column:
     return F.lit(chunk_table())
 
 
-def hilbert_col(x: Column | str, y: Column | str, order: int) -> Column:
-    """Hilbert index of (x, y) at ``order`` bits per axis, as a BIGINT Column.
+@functools.cache
+def hilbert_col(x: str, y: str, order: int) -> Column:
+    """Hilbert index of columns ``x`` and ``y`` at ``order`` bits per axis,
+    as a BIGINT Column. Built once per process for each (x, y, order): the
+    tree costs some 70 Py4J round trips, and a Column of unresolved
+    column names belongs to no session, so it outlives a restarted one.
 
     Reads only the low ``order`` bits of each coordinate, as the classic
     loop does. A NULL coordinate gives a NULL key (``element_at`` of a NULL

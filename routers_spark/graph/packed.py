@@ -15,8 +15,9 @@ flat numpy arrays:
     edge rows, point -> nearest node), each built on its first query
 
 Distribution is the "rebuild indices on load" lifecycle of
-graph.rs:145-178. ``broadcast_graph`` collects and packs the graph on the
-driver and keys it by a content digest of the packed payload. An equal
+graph.rs:145-178. ``broadcast_graph`` collects the graph on the driver,
+canonicalises it into the payload arrays (``graph_payload``; nothing is
+derived there) and keys it by a content digest of that payload. An equal
 digest reuses the SparkContext's existing ``Broadcast``, so repeated calls
 on one graph ship it once. On a worker, ``GraphHandle.graph()`` hydrates
 the payload at most once per digest. The worker memo keeps the last
@@ -385,8 +386,9 @@ def worker_graph(key, build) -> PackedGraph:
 
 
 def graph_digest(payload: dict) -> str:
-    """sha256 of a ``to_broadcastable`` payload: every array with its dtype
-    and shape, and the access tags. Equal graphs get equal digests."""
+    """sha256 of a graph payload (``graph_payload``, ``to_broadcastable``):
+    every array with its dtype and shape, and the access tags. Equal graphs
+    get equal digests."""
     h = hashlib.sha256()
     for name, v in payload.items():
         if isinstance(v, np.ndarray):
@@ -430,7 +432,7 @@ def broadcast_graph(nodes_df, edges_df,
                 f"{side} table exceeds the broadcast limit of {limit_rows} "
                 f"rows; use candidate_path='celljoin' (the no-broadcast "
                 f"scale path) or raise the limit.")
-    payload = build_packed_graph(*pdfs).to_broadcastable()
+    payload = graph_payload(*pdfs)
     key = graph_digest(payload)
     sc = nodes_df.sparkSession.sparkContext
     if not hasattr(sc, "_routers_spark_graphs"):
@@ -469,9 +471,10 @@ def _normalize_access(col) -> list | None:
     return out if any_tags else None
 
 
-def build_packed_graph(nodes_pdf, edges_pdf) -> PackedGraph:
-    """From pandas frames nodes(node_id, lon, lat),
-    edges(edge_id, src, dst, weight[, fwd, access]).
+def graph_payload(nodes_pdf, edges_pdf) -> dict:
+    """The broadcast payload of pandas frames nodes(node_id, lon, lat),
+    edges(edge_id, src, dst, weight[, fwd, access]): the canonical arrays
+    :class:`PackedGraph` is built from, and nothing derived from them.
 
     Edges are canonicalized to (edge_id, src, dst) order so edge_row indices
     agree with the distributed cell-join candidate generator
@@ -484,14 +487,21 @@ def build_packed_graph(nodes_pdf, edges_pdf) -> PackedGraph:
     node_lat = nodes_pdf["lat"].values[order].astype(np.float64)
     src_idx = np.searchsorted(node_ids, edges_pdf["src"].values).astype(np.int32)
     dst_idx = np.searchsorted(node_ids, edges_pdf["dst"].values).astype(np.int32)
+    if len(edges_pdf) and max(src_idx.max(), dst_idx.max()) >= len(node_ids):
+        raise IndexError("an edge endpoint is past the largest node id")
     fwd = (edges_pdf["fwd"].values.astype(bool)
-           if "fwd" in edges_pdf.columns else None)
+           if "fwd" in edges_pdf.columns else np.ones(len(edges_pdf), bool))
     access = (_normalize_access(edges_pdf["access"].tolist())
               if "access" in edges_pdf.columns else None)
-    return PackedGraph(
-        node_ids, node_lon, node_lat,
-        edges_pdf["edge_id"].values.astype(np.int64),
-        src_idx, dst_idx,
-        edges_pdf["weight"].values.astype(np.uint32),
-        fwd, access,
-    )
+    return {
+        "node_ids": node_ids, "node_lon": node_lon, "node_lat": node_lat,
+        "edge_id": edges_pdf["edge_id"].values.astype(np.int64),
+        "edge_src": src_idx, "edge_dst": dst_idx,
+        "edge_weight": edges_pdf["weight"].values.astype(np.uint32),
+        "edge_fwd": fwd, "edge_access": access,
+    }
+
+
+def build_packed_graph(nodes_pdf, edges_pdf) -> PackedGraph:
+    """The :class:`PackedGraph` of :func:`graph_payload`'s frames."""
+    return PackedGraph.from_broadcastable(graph_payload(nodes_pdf, edges_pdf))

@@ -51,22 +51,32 @@ def assign_tile_cells(df: DataFrame, zoom: int, gh_precision: int | None = 6,
     name = f"_atc_{uuid.uuid4().hex[:10]}"
     df.createOrReplaceTempView(name)
     prog = sqlgen.Program(f"SELECT * FROM {name}", list(df.columns))
-    # a NULL/NaN point has no cell: the clamped geohash grid and the
-    # floor-to-BIGINT slippy casts would otherwise file it in a real one
-    bad = (f"{lon} IS NULL OR {lat} IS NULL OR isnan({lon})"
-           f" OR isnan({lat})")
     sel = list(keep)
     if gh_precision is not None:
         gh = sqlgen.p_geohash_str(prog, S, lon, lat, gh_precision)
-        sel.append(f"CASE WHEN {bad} THEN NULL ELSE {gh} END AS gh")
-    sx, sy = sqlgen.slippy_xy_expr(S, lon, lat, zoom)
-    sel += [f"CASE WHEN {bad} THEN NULL ELSE {sx} END AS tile_x",
-            f"CASE WHEN {bad} THEN NULL ELSE {sy} END AS tile_y"]
+        sel.append(f"CASE WHEN {_no_cell(lon, lat)} THEN NULL ELSE {gh} END"
+                   " AS gh")
+    tx, ty = _tile_xy_sql(lon, lat, zoom)
+    sel += [f"{tx} AS tile_x", f"{ty} AS tile_y"]
     base = df.sparkSession.sql(prog.render(sel))
     # the analyzed plan no longer needs the catalog entry — drop it so
     # repeated calls don't grow the session catalog without bound
     df.sparkSession.catalog.dropTempView(name)
     return base.withColumn("hilbert", hilbert_col("tile_x", "tile_y", zoom))
+
+
+def _no_cell(lon: str, lat: str) -> str:
+    # a NULL/NaN point has no cell: the clamped geohash grid and the
+    # floor-to-BIGINT slippy casts would otherwise file it in a real one
+    return f"{lon} IS NULL OR {lat} IS NULL OR isnan({lon}) OR isnan({lat})"
+
+
+def _tile_xy_sql(lon: str, lat: str, zoom: int) -> tuple[str, str]:
+    """Spark SQL for the slippy tile x and y at ``zoom``; NULL for a NULL
+    or NaN point."""
+    bad = _no_cell(lon, lat)
+    return tuple(f"CASE WHEN {bad} THEN NULL ELSE {e} END"
+                 for e in sqlgen.slippy_xy_expr(sqlgen.SPARK, lon, lat, zoom))
 
 
 def fragment_hilbert_range(z: int, x: int, y: int,
@@ -154,24 +164,22 @@ def mvt_point_tiles(points_df: DataFrame, zoom: int, layer_name: str = "points",
     from routers_spark.functions.cells import geohash_int_np
     from routers_spark.tiling.mvt import encode_point_layer
 
-    # a NULL/NaN point has no tile: drop it before grouping
-    with_tiles = assign_tile_cells(points_df, zoom, gh_precision=None,
-                                   keep=list(points_df.columns)) \
-        .filter(F.col("tile_x").isNotNull()) \
-        .withColumn("z", F.lit(zoom).cast("int"))
-
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        z, x, y = key
+    def build(key, pdf):
+        x, y = key
         pdf = pdf.sort_values(id_col, kind="stable")
         px, py = slippy_offsets_np(pdf["lon"].values, pdf["lat"].values, zoom)
         ids = np.uint64(geohash_int_np(pdf["lon"].values, pdf["lat"].values, 12))
         blob = encode_point_layer(layer_name, ids, px, py)
         return pd.DataFrame({
-            "z": [z], "x": [x], "y": [y],
+            "z": [zoom], "x": [x], "y": [y],
             "n_points": [len(pdf)], "mvt": [blob],
         })
 
-    # the UDF reads only these, so column pruning drops the hilbert key
-    return with_tiles.select("z", "tile_x", "tile_y", "lon", "lat", id_col) \
-        .groupBy("z", "tile_x", "tile_y") \
+    # the tile keys are computed in the grouping itself, not selected as
+    # columns too, so the shuffle carries each once; z is the constant
+    # ``zoom`` and does not ride it. A NULL/NaN point has no tile.
+    tx, ty = _tile_xy_sql("lon", "lat", zoom)
+    return points_df.select("lon", "lat", id_col) \
+        .filter(F.expr(tx).isNotNull()) \
+        .groupBy(F.expr(tx).alias("tile_x"), F.expr(ty).alias("tile_y")) \
         .applyInPandas(build, schema=MVT_SCHEMA)

@@ -28,19 +28,90 @@ def test_snap_points_matches_min_candidate(spark, road_dfs):
     })
     out = snap_points(spark.createDataFrame(pts), nodes_df, edges_df,
                       search_m=60.0).toPandas().sort_values("pid")
-    g = build_packed_graph(nodes, edges)
+    want = snap_oracle(build_packed_graph(nodes, edges), out.lon.values,
+                       out.lat.values, 60.0)
+    for k, v in want.items():
+        np.testing.assert_array_equal(out[k].values, v, err_msg=k)
+    assert out.edge_id.iloc[-1] == -1 and np.isnan(out.dist_m.iloc[-1])
+
+
+def snap_oracle(g, lons, lats, search_m):
+    """The per-point selection loop ``snap_points`` used to run: cut the
+    candidate table into per-point dicts and take each one's np.argmin."""
     from routers_spark.matching.matcher import candidates_for_points
 
-    layers = candidates_for_points(g, out.lon.values, out.lat.values,
-                                   60.0, 25.0)
-    for (_, r), c in zip(out.iterrows(), layers):
+    cands = candidates_for_points(g, lons, lats, search_m, 25.0)
+    n = len(cands)
+    eid = np.full(n, -1, dtype=np.int64)
+    sx, sy, fr, dm = (np.full(n, np.nan) for _ in range(4))
+    for i, c in enumerate(cands):
         if len(c["edge_row"]) == 0:
-            assert r.edge_id == -1 and np.isnan(r.dist_m)
-        else:
-            j = int(np.argmin(c["dist_m"]))
-            assert r.edge_id == g.edge_id[c["edge_row"][j]]
-            assert r.dist_m == c["dist_m"][j]
-            assert r.snap_lon == c["px"][j]
+            continue
+        j = int(np.argmin(c["dist_m"]))  # first min = stable-sort head
+        eid[i] = g.edge_id[c["edge_row"][j]]
+        sx[i], sy[i] = c["px"][j], c["py"][j]
+        fr[i], dm[i] = c["frac"][j], c["dist_m"][j]
+    return {"edge_id": eid, "snap_lon": sx, "snap_lat": sy, "frac": fr,
+            "dist_m": dm}
+
+
+def test_ragged_argmin_is_per_group_argmin():
+    """First minimum per group, a NaN being the minimum (np.argmin's
+    rule), -1 for an empty group; ties, NaNs and empties interleaved."""
+    from routers_spark.functions.ragged import ragged_argmin
+
+    rng = np.random.default_rng(7)
+    counts = rng.integers(0, 5, 400)
+    counts[:3] = 0
+    counts[-2:] = 0
+    vals = rng.integers(0, 4, counts.sum()).astype(np.float64)  # ties
+    vals[rng.random(len(vals)) < 0.05] = np.nan
+    vals[rng.random(len(vals)) < 0.05] = -0.0
+    off = np.r_[0, np.cumsum(counts)]
+    want = [a + int(np.argmin(vals[a:b])) if b > a else -1
+            for a, b in zip(off[:-1], off[1:])]
+    assert ragged_argmin(off, vals).tolist() == want
+    ints = np.nan_to_num(vals).astype(np.int64)
+    assert ragged_argmin(off, ints).tolist() == [
+        a + int(np.argmin(ints[a:b])) if b > a else -1
+        for a, b in zip(off[:-1], off[1:])]
+    assert ragged_argmin(np.zeros(4, np.int64), np.empty(0)).tolist() == \
+        [-1, -1, -1]
+
+
+def test_nearest_on_edges_matches_per_point_loop():
+    """The vectorised pick equals the per-point argmin loop: points on
+    grid nodes (equal distances to every edge meeting there), on edge
+    midpoints, random points, points with nothing in range, and NaN and
+    infinite points."""
+    from routers_spark.api import nearest_on_edges
+    from routers_spark.fixtures.roads import grid_network
+
+    nodes, edges = grid_network(8)
+    g = build_packed_graph(nodes, edges)
+    rng = np.random.default_rng(11)
+    mid_lon = (g.ax + g.bx) / 2
+    mid_lat = (g.ay + g.by) / 2
+    lons = np.r_[g.node_lon[:20], mid_lon[:20],
+                 rng.uniform(g.node_lon.min(), g.node_lon.max(), 200),
+                 0.0, np.nan, -118.49, np.inf, np.nan]
+    lats = np.r_[g.node_lat[:20], mid_lat[:20],
+                 rng.uniform(g.node_lat.min(), g.node_lat.max(), 200),
+                 0.0, 33.7, np.nan, 33.7, np.nan]
+    want = snap_oracle(g, lons, lats, 60.0)
+    got = nearest_on_edges(g, lons, lats, 60.0)
+    assert list(got) == list(want)
+    for k in want:
+        np.testing.assert_array_equal(got[k], want[k], err_msg=k)
+    from routers_spark.matching.matcher import candidates_for_points
+
+    tied = sum(int((c["dist_m"] == c["dist_m"].min()).sum() > 1)
+               for c in candidates_for_points(g, lons, lats, 60.0, 25.0)
+               if len(c["dist_m"]))
+    assert tied >= 20  # the fixture does exercise the first-min rule
+    assert (got["edge_id"][-5:] == -1).all()  # out of range, NaN, inf
+    empty = nearest_on_edges(g, np.empty(0), np.empty(0), 60.0)
+    assert all(len(v) == 0 for v in empty.values())
 
 
 def test_nearest_points_is_min_node(spark, road_dfs):

@@ -490,3 +490,37 @@ def test_hydrate_memo_keeps_two_graphs():
     packed.hydrate(types.SimpleNamespace(value=payload), "k4")
     assert list(packed._HYDRATED) == ["k2", "k4"]
     packed._HYDRATED.clear()
+
+
+def test_graph_payload_is_the_packed_graphs_payload():
+    """``broadcast_graph`` ships ``graph_payload`` without building a
+    PackedGraph: array for array (dtype, shape, bytes) and digest for
+    digest it is ``build_packed_graph(...).to_broadcastable()``, on the
+    benchmark's 40x40 grid and on a graph with ``fwd`` and ``access``
+    columns whose rows arrive out of canonical order. The digests are
+    pinned so the payload cannot drift with the packer."""
+    from test_access import _square_with_shortcut
+
+    nodes, edges = _square_with_shortcut(restrict_shortcut_for="hgv")
+    edges = edges.iloc[::-1].reset_index(drop=True)
+    edges.loc[0, "fwd"] = False
+    pinned = {
+        "grid": "11b6887c35b694d08a9dc229561dd2e47b6dbd3084f7058ec1eca68241ff18e4",
+        "access": "60f229e67f20f26928d3cdec14759f6201a56ebac27c56550daebadc854e0e3e",
+    }
+    for name, (n, e) in (("grid", grid_network(40)),
+                         ("access", (nodes, edges))):
+        got = packed.graph_payload(n, e)
+        want = build_packed_graph(n, e).to_broadcastable()
+        assert list(got) == list(want)
+        for k, v in want.items():
+            if isinstance(v, np.ndarray):
+                assert got[k].dtype == v.dtype and got[k].shape == v.shape, k
+                assert got[k].tobytes() == v.tobytes(), k
+            else:
+                assert got[k] == v, k
+        assert packed.graph_digest(got) == packed.graph_digest(want) \
+            == pinned[name], name
+    assert packed.graph_payload(nodes, edges)["edge_access"] is not None
+    with pytest.raises(IndexError):
+        packed.graph_payload(nodes[nodes.node_id < 5], edges)

@@ -162,8 +162,8 @@ def edge_lookup(pairs_df: DataFrame, edges_df: DataFrame,
     pair, or a fwd edge plus another way's reversed twin) collapse to ONE
     row per (src, dst) — min(struct(edge_id, weight)), matching the
     at-most-one Option<Edge> of the reference's GraphMap edge_weight
-    (graph.rs:346-355) and the packed graph's first-match ``edge_row``
-    (lowest edge row wins under the canonical sort)."""
+    (graph.rs:346-355) and the compiled kernel's edge lookup (the lowest
+    edge row from a to b wins under the canonical sort)."""
     from pyspark.sql import functions as F
 
     e = (edges_df.select(

@@ -431,21 +431,6 @@ class PredicateCache:
         for key in [k for k in self._arenas if k[0] == uid]:
             self._roots -= self._arenas.pop(key).n_slots
 
-    def path(self, graph, root: int, leaf: int,
-             profile=None) -> list[int] | None:
-        """Nodes root→leaf inclusive via the parent pointers
-        (expansion.rs:26-39), or None when leaf is outside the bound."""
-        arena, entry, member = self.locate(graph, [root], [leaf], profile)
-        if not member[0]:
-            return None
-        cur = int(entry[0])
-        nodes = [int(arena.node[cur])]
-        for _ in range(int(arena.depth[cur])):
-            cur = int(arena.loc[cur])
-            nodes.append(int(arena.node[cur]))
-        nodes.reverse()
-        return nodes
-
 
 GLOBAL_PREDICATE_CACHE = PredicateCache()
 

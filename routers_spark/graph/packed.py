@@ -98,23 +98,7 @@ class PackedGraph:
         np.add.at(self.csr_indptr, edge_src + 1, 1)
         np.cumsum(self.csr_indptr, out=self.csr_indptr)
 
-        # (src, dst) -> edge row lookup (G2 edge(a,b), graph.rs:346-355);
-        # first matching row wins, mirroring the single-edge graph map.
-        key = edge_src.astype(np.int64) * n + edge_dst.astype(np.int64)
-        korder = np.argsort(key, kind="stable")
-        self._pair_keys = key[korder]
-        self._pair_rows = korder.astype(np.int64)
-        self._n_nodes = n
-
     # ------------------------------------------------------------- lookups
-
-    def edge_row(self, src_idx: int, dst_idx: int) -> int:
-        """Edge row for (src, dst) dense indices, or -1 (G2)."""
-        key = src_idx * self._n_nodes + dst_idx
-        i = np.searchsorted(self._pair_keys, key)
-        if i < len(self._pair_keys) and self._pair_keys[i] == key:
-            return int(self._pair_rows[i])
-        return -1
 
     def access_mask(self, profile) -> np.ndarray | None:
         """Per-edge accessibility under a TripProfile, memoised per profile
@@ -471,6 +455,17 @@ def _normalize_access(col) -> list | None:
     return out if any_tags else None
 
 
+def _node_rows(node_ids: np.ndarray, ids: np.ndarray) -> np.ndarray:
+    """Row of each id in the sorted ``node_ids``; IndexError naming the
+    first id that is not a node."""
+    rows = np.searchsorted(node_ids, ids)
+    miss = rows >= len(node_ids)
+    miss[~miss] = node_ids[rows[~miss]] != ids[~miss]
+    if miss.any():
+        raise IndexError(f"edge endpoint {ids[miss][0]} is not a node id")
+    return rows.astype(np.int32)
+
+
 def graph_payload(nodes_pdf, edges_pdf) -> dict:
     """The broadcast payload of pandas frames nodes(node_id, lon, lat),
     edges(edge_id, src, dst, weight[, fwd, access]): the canonical arrays
@@ -485,10 +480,8 @@ def graph_payload(nodes_pdf, edges_pdf) -> dict:
     node_ids = nodes_pdf["node_id"].values[order].astype(np.int64)
     node_lon = nodes_pdf["lon"].values[order].astype(np.float64)
     node_lat = nodes_pdf["lat"].values[order].astype(np.float64)
-    src_idx = np.searchsorted(node_ids, edges_pdf["src"].values).astype(np.int32)
-    dst_idx = np.searchsorted(node_ids, edges_pdf["dst"].values).astype(np.int32)
-    if len(edges_pdf) and max(src_idx.max(), dst_idx.max()) >= len(node_ids):
-        raise IndexError("an edge endpoint is past the largest node id")
+    src_idx, dst_idx = (_node_rows(node_ids, edges_pdf[c].values)
+                        for c in ("src", "dst"))
     fwd = (edges_pdf["fwd"].values.astype(bool)
            if "fwd" in edges_pdf.columns else np.ones(len(edges_pdf), bool))
     access = (_normalize_access(edges_pdf["access"].tolist())

@@ -106,48 +106,7 @@ def candidates_for_points(graph, lons, lats, search_distance: float,
             for a, b in zip(off[:-1].tolist(), off[1:].tolist())]
 
 
-# ------------------------------------------------------------ transitions
-
-
-def reach(graph, cache, src: dict, tgt: dict,
-          profile=None) -> tuple[str, list[int]] | None:
-    """How tgt is reached from src (Expansion::reach, expansion.rs:63-97),
-    one candidate pair at a time: the hop of a single pair for callers
-    that want one (the batch paths resolve theirs in the compiled weigher
-    and ``PredicateCache.path_rows``; the test oracles use this).
-
-    Returns (resolution, path_edge_rows) or None when unreachable.
-    resolution: 'direct' (same-edge DistanceOnly) or 'standard'.
-    """
-    if src["edge_row"] == tgt["edge_row"]:
-        # same directed edge: ahead → direct; degenerate frac → unreachable
-        if np.isnan(src["frac"]) or np.isnan(tgt["frac"]):
-            return None
-        if src["frac"] <= tgt["frac"]:
-            return ("direct", [])
-        # same-edge backtrack falls through to routing
-    nodes = cache.path(graph, int(graph.edge_dst[src["edge_row"]]),
-                       int(graph.edge_src[tgt["edge_row"]]), profile)
-    if nodes is None:
-        return None
-    path_rows = []
-    for a, b in zip(nodes, nodes[1:]):
-        r = graph.edge_row(a, b)
-        if r >= 0:  # filter_map semantics: silently skip missing (G2)
-            path_rows.append(r)
-    return ("standard", path_rows)
-
-
 # ------------------------------------------------------------- trip solver
-
-
-def _cand(layer: dict, i: int) -> dict:
-    return {
-        "edge_row": int(layer["edge_row"][i]),
-        "frac": float(layer["frac"][i]),
-        "px": float(layer["px"][i]),
-        "py": float(layer["py"][i]),
-    }
 
 
 def solve_trip(graph, layers: list[dict], opts: MatchOptions,
@@ -158,8 +117,7 @@ def solve_trip(graph, layers: list[dict], opts: MatchOptions,
     weighed boundary matrices (the streaming matcher builds its
     convergence trellis from them — one weigh per micro-batch, not two).
     The solve is the batched compiled Viterbi of ``_solve_trips``, called
-    with one trip. A caller that needs boundary k's hop geometry asks
-    ``reach`` for it on the two chosen candidates.
+    with one trip.
 
     R2 incremental weighing (weigh/mod.rs:30-34, 160-168: only PENDING
     boundaries recomputed): with ``boundary_keys`` + ``boundary_cache``,

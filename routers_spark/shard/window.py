@@ -6,11 +6,12 @@ the window recenters and reports the delta — which shards to fetch
 (``scoped``) and which to evict (``unscoped``)
 (libs/routers_shard/src/loader/window.rs:90-113 recenter, 115-128 delta).
 
-Batch Spark does not need this (padding + cell cogroups cover seams,
-shard/partition.py), but the STREAMING matcher does: per-vehicle state
-carries the window center, and the delta drives which broadcast graph
-epoch / cell subgraphs the executor must hold for the next micro-batch —
-the "broadcast refresh per epoch" analog named in SURVEY §2.6.
+No matcher in the package calls these functions. Batch Spark covers
+shard seams with padding and cell cogroups (shard/partition.py), and the
+streaming matcher holds one whole graph per epoch: its per-vehicle state
+carries no window centre, and a graph swap is a published epoch
+(streaming/epoch.py), not a window delta. This module keeps the window
+arithmetic, tested on its own, for a matcher that loads shards by cell.
 
 Pure deterministic functions over geohash cells (the reference's default
 sharding strategy); neighbours use the same 8-probe re-encode trick as

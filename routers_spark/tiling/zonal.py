@@ -7,18 +7,19 @@ geospatial pipeline aggregates imagery over admin/coverage polygons).
 Semantics: vector zones are projected into the RASTER's pixel CRS once
 (standard practice — rasterize the polygon in the raster grid, never
 reproject every pixel), then every pixel CENTER (gx+0.5, gy+0.5) is
-assigned to the FIRST zone whose ring contains it (crossing-number test
-functions.geo.point_in_polygon_np: per edge the same left-associated IEEE
-expression as the _ray_cast_sql gates in queries.py); pixels in no zone
-aggregate under ``'none'``. Output: one row per zone with integer-exact
-count / per-band sum / min / max.
+assigned to the FIRST zone whose ring contains it (``zones.pip.first_zone``
+over the crossing-number test of functions.geo: per edge the same
+left-associated IEEE expression as the _ray_cast_sql gates in queries.py);
+pixels in no zone aggregate under ``'none'``. Output: one row per zone
+with integer-exact count / per-band sum / min / max.
 
 Scale shape (the point of the design):
   - one narrow ``mapInPandas`` pass over the tiles — decode + aggregate
     per tile, NO per-pixel rows ever leave the kernel;
   - tiles that touch no zone bbox, and tiles provably INTERIOR to a zone
-    (no ring edge intersects the tile rect and one pixel center is
-    inside — exact for simple polygons), aggregate whole-tile in numpy
+    (``zones.pip.rects_inside``: no ring edge touches the pixel-center
+    rect and one corner is inside — exact for simple polygons), or
+    provably outside it, aggregate whole-tile in numpy
     with ZERO point-in-polygon tests; only boundary tiles pay the
     vectorized per-pixel ray cast. On real coverage the boundary set is
     O(perimeter), not O(area) — at 100 TB of tiles this is the
@@ -36,8 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from routers_spark.functions.geo import edges_hit_rects, point_in_polygon_np
 from routers_spark.functions.raster import decode_image
+from routers_spark.zones.pip import first_zone, rects_inside, zone_rings
 
 ZONAL_PARTIAL_SCHEMA = (
     "zone_id string, n_px long, sum_r long, sum_g long, sum_b long, "
@@ -61,9 +62,9 @@ def zonal_stats(tiles_df: DataFrame, zones_px: list[tuple[str, list]],
     [(zone_id, [(gx, gy), ...]), ...] rings in GLOBAL PIXEL coordinates
     (tile coord × tile_px); first containing zone wins per pixel.
     """
-    rings = [(zid, np.array([p[0] for p in ring], dtype=np.float64),
-              np.array([p[1] for p in ring], dtype=np.float64))
-             for zid, ring in zones_px]
+    rings = zone_rings([{"zone_id": zid, "ring": ring}
+                        for zid, ring in zones_px])
+    names = np.array([r[0] for r in rings] + ["none"], dtype=object)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yy, xx = np.meshgrid(np.arange(tile_px), np.arange(tile_px),
@@ -80,38 +81,25 @@ def zonal_stats(tiles_df: DataFrame, zones_px: list[tuple[str, list]],
                 # pixel-center bounds of this tile
                 lo_x, hi_x = x0 + 0.5, x0 + tile_px - 0.5
                 lo_y, hi_y = y0 + 0.5, y0 + tile_px - 0.5
-                hits = [k for k, (_, rx, ry) in enumerate(rings)
-                        if (rx.min() <= hi_x and rx.max() >= lo_x
-                            and ry.min() <= hi_y and ry.max() >= lo_y)]
+                hits = [k for k, (*_, (bx0, by0, bx1, by1)) in enumerate(rings)
+                        if bx0 <= hi_x and bx1 >= lo_x
+                        and by0 <= hi_y and by1 >= lo_y]
                 if not hits:
                     rows.append(_band_partial("none", flat))
                     continue
-                # interior fast path: exactly one candidate ring, no ring
-                # edge crosses the tile rect, and one center is inside ->
-                # the whole tile is inside (exact for simple polygons)
+                # interior fast path: one candidate ring that no edge of
+                # crosses the pixel-center rect -> one zone for the tile
                 if len(hits) == 1:
-                    _, rx, ry = rings[hits[0]]
-                    ex1, ey1 = np.roll(rx, -1), np.roll(ry, -1)
-                    crossed = edges_hit_rects(
-                        rx, ry, ex1, ey1,
-                        np.array([lo_x]), np.array([lo_y]),
-                        np.array([hi_x]), np.array([hi_y]))[0]
-                    if not crossed:
-                        inside0 = point_in_polygon_np(
-                            np.array([lo_x]), np.array([lo_y]), rx, ry)[0]
+                    _, rx, ry, _ = rings[hits[0]]
+                    crossed, inside = rects_inside(rx, ry, lo_x, lo_y,
+                                                   hi_x, hi_y)
+                    if not crossed[0]:
                         rows.append(_band_partial(
-                            rings[hits[0]][0] if inside0 else "none", flat))
+                            names[hits[0]] if inside[0] else "none", flat))
                         continue
-                # boundary tile: vectorized first-match ray cast per pixel
-                px = x0 + 0.5 + xxf
-                py = y0 + 0.5 + yyf
-                assigned = np.full(len(px), "none", dtype=object)
-                unset = np.ones(len(px), dtype=bool)
-                for k in hits:
-                    zid, rx, ry = rings[k]
-                    m = unset & point_in_polygon_np(px, py, rx, ry)
-                    assigned[m] = zid
-                    unset &= ~m
+                # boundary tile: first-match ray cast per pixel center
+                assigned = names[first_zone(x0 + 0.5 + xxf, y0 + 0.5 + yyf,
+                                            rings)]
                 for zid in pd.unique(assigned):
                     rows.append(_band_partial(zid, flat[assigned == zid]))
             yield pd.DataFrame(rows, columns=[

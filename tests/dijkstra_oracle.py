@@ -111,3 +111,38 @@ def parent_path(parents: dict[int, int], root: int, leaf: int):
     while nodes[-1] != root:
         nodes.append(parents[nodes[-1]])
     return nodes[::-1]
+
+
+# (src, dst) -> edge row table, one per graph: the G2 edge(a, b) lookup
+# (graph.rs:346-355) the compiled kernel answers as the lowest CSR slot
+_PAIRS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def edge_row(graph, a: int, b: int) -> int:
+    """Edge row for (a, b) dense node indices, or -1; the first matching
+    row wins, mirroring the single-edge graph map (G2)."""
+    t = _PAIRS.get(graph)
+    if t is None:
+        key = (graph.edge_src.astype(np.int64) * len(graph.node_ids)
+               + graph.edge_dst.astype(np.int64))
+        order = np.argsort(key, kind="stable")
+        t = _PAIRS[graph] = (key[order], order)
+    keys, rows = t
+    key = a * len(graph.node_ids) + b
+    i = np.searchsorted(keys, key)
+    return int(rows[i]) if i < len(keys) and keys[i] == key else -1
+
+
+def cache_path(cache, graph, root: int, leaf: int,
+               profile=None) -> list[int] | None:
+    """Nodes root→leaf inclusive via ``cache``'s arena parent pointers
+    (expansion.rs:26-39), or None when leaf is outside the bound."""
+    arena, entry, member = cache.locate(graph, [root], [leaf], profile)
+    if not member[0]:
+        return None
+    cur = int(entry[0])
+    nodes = [int(arena.node[cur])]
+    for _ in range(int(arena.depth[cur])):
+        cur = int(arena.loc[cur])
+        nodes.append(int(arena.node[cur]))
+    return nodes[::-1]

@@ -2,14 +2,47 @@
 the oracle of ``matching.matcher._routed_cols``, which builds the same
 rows for a whole batch with array operations and must equal these frames
 bit for bit. Each matched trip re-derives its hops one ``reach`` call at a
-time and builds its RoutedPath element list in Python."""
+time and builds its RoutedPath element list in Python. ``reach`` is the
+per-pair hop oracle the other tests use too."""
 
 from __future__ import annotations
 
 import numpy as np
 
 from routers_spark.graph.dijkstra import GLOBAL_PREDICATE_CACHE
-from routers_spark.matching import matcher
+
+from dijkstra_oracle import cache_path, edge_row
+
+
+def one_cand(layer: dict, i: int) -> dict:
+    """Row ``i`` of a candidate layer (or flat candidate table) as scalars."""
+    return {k: (int if k == "edge_row" else float)(layer[k][i])
+            for k in ("edge_row", "frac", "px", "py")}
+
+
+def reach(graph, cache, src: dict, tgt: dict,
+          profile=None) -> tuple[str, list[int]] | None:
+    """How tgt is reached from src (Expansion::reach, expansion.rs:63-97),
+    one candidate pair at a time — the hop the compiled weigher and
+    ``PredicateCache.path_rows`` resolve for whole batches.
+
+    Returns (resolution, path_edge_rows) or None when unreachable.
+    resolution: 'direct' (same-edge DistanceOnly) or 'standard'.
+    """
+    if src["edge_row"] == tgt["edge_row"]:
+        # same directed edge: ahead → direct; degenerate frac → unreachable
+        if np.isnan(src["frac"]) or np.isnan(tgt["frac"]):
+            return None
+        if src["frac"] <= tgt["frac"]:
+            return ("direct", [])
+        # same-edge backtrack falls through to routing
+    nodes = cache_path(cache, graph, int(graph.edge_dst[src["edge_row"]]),
+                       int(graph.edge_src[tgt["edge_row"]]), profile)
+    if nodes is None:
+        return None
+    # filter_map semantics: a missing edge is silently skipped (G2)
+    rows = (edge_row(graph, a, b) for a, b in zip(nodes, nodes[1:]))
+    return ("standard", [r for r in rows if r >= 0])
 
 
 def routed_cols(t, graph, status, sel, cost, profile, output: str) -> dict:
@@ -65,9 +98,8 @@ def _emit_cols(trip_id: str, seqs, cand: dict, sel, cost: int, graph,
                profile, output: str) -> dict:
     """A matched trip's 'interpolated' or 'gate_union' rows. Collapse
     re-derives the chosen hops from the warm cache (entity.rs:337-358)."""
-    hops = [matcher.reach(graph, GLOBAL_PREDICATE_CACHE,
-                          matcher._cand(cand, sel[k]),
-                          matcher._cand(cand, sel[k + 1]), profile)
+    hops = [reach(graph, GLOBAL_PREDICATE_CACHE, one_cand(cand, sel[k]),
+                  one_cand(cand, sel[k + 1]), profile)
             for k in range(len(sel) - 1)]
     dedup = _routed_elems(graph, cand, sel, hops)
     m = len(dedup)

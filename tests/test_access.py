@@ -13,13 +13,12 @@ from routers_spark.graph.dijkstra import GLOBAL_PREDICATE_CACHE, PredicateCache
 from routers_spark.graph.packed import build_packed_graph
 from routers_spark.matching.matcher import (
     MatchOptions,
-    _cand,
     candidates_for_points,
-    reach,
     solve_trip,
 )
 
-from dijkstra_oracle import bounded_dijkstra_parents
+from dijkstra_oracle import bounded_dijkstra_parents, cache_path
+from emit_oracle import one_cand, reach
 
 CAR = TripProfile("motorcar")
 TRUCK = TripProfile("hgv")
@@ -131,8 +130,9 @@ def test_match_path_flips_under_profile():
 
     def hop_nodes(result, profile=None):
         path = result["path"]
-        res, rows = reach(g, GLOBAL_PREDICATE_CACHE, _cand(layers[0], path[0]),
-                          _cand(layers[1], path[1]), profile)
+        res, rows = reach(g, GLOBAL_PREDICATE_CACHE,
+                          one_cand(layers[0], path[0]),
+                          one_cand(layers[1], path[1]), profile)
         return [(int(g.edge_src[e]), int(g.edge_dst[e])) for e in rows]
 
     # ungated: bridge over the direct edge 2->3; gated: around via node 5
@@ -151,7 +151,7 @@ def test_profile_keyed_cache_no_taint():
     cache = PredicateCache()
     idx = {n: int(np.searchsorted(g.node_ids, n)) for n in (1, 2, 3, 5)}
     n3 = int(np.searchsorted(g.node_ids, 3))
-    gated = cache.path(g, idx[1], n3, CAR)
-    free = cache.path(g, idx[1], n3, None)
+    gated = cache_path(cache, g, idx[1], n3, CAR)
+    free = cache_path(cache, g, idx[1], n3, None)
     assert gated[-2] == idx[5]
     assert free[-2] == idx[2]

@@ -24,17 +24,17 @@ from routers_spark.graph.dijkstra import (
 )
 from routers_spark.matching.matcher import (
     MatchOptions,
-    _cand,
     candidates_for_points,
-    reach,
     solve_trip,
 )
 
 from dijkstra_oracle import (
     bounded_dijkstra_parents,
+    cache_path,
     nearest_node,
     parent_path,
 )
+from emit_oracle import one_cand, reach
 
 STRAIGHT_TRACK = [(-118.151, 34.1503), (-118.155, 34.1503),
                   (-118.160, 34.1503), (-118.165, 34.1503)]
@@ -56,8 +56,8 @@ def match(g, pts, **kw):
 def chosen_hop(g, layers, result, k, profile=None):
     """(resolution, path_rows) of boundary k between the chosen candidates."""
     path = result["path"]
-    return reach(g, GLOBAL_PREDICATE_CACHE, _cand(layers[k], path[k]),
-                 _cand(layers[k + 1], path[k + 1]), profile)
+    return reach(g, GLOBAL_PREDICATE_CACHE, one_cand(layers[k], path[k]),
+                 one_cand(layers[k + 1], path[k + 1]), profile)
 
 
 def matched_edges(g, layers, result):
@@ -181,7 +181,7 @@ def test_bounded_dijkstra_cutoff():
     for leaf in list(parents)[:50]:
         path = parent_path(parents, 0, leaf)
         assert path is not None and path[0] == 0 and path[-1] == leaf
-        assert cache.path(g, 0, leaf) == path
+        assert cache_path(cache, g, 0, leaf) == path
 
 
 def test_parent_path_outside_bound_is_none():
@@ -190,7 +190,7 @@ def test_parent_path_outside_bound_is_none():
     parents = bounded_dijkstra_parents(g, 0, threshold_cm=100_000)  # 1 km
     far = 30 * 30 - 1  # opposite corner ~8 km away
     assert parent_path(parents, 0, far) is None
-    assert PredicateCache(threshold_cm=100_000).path(g, 0, far) is None
+    assert cache_path(PredicateCache(threshold_cm=100_000), g, 0, far) is None
 
 
 def test_route_nodes_grid():
@@ -334,9 +334,9 @@ def test_batched_solve_calls_no_per_item_kernel(monkeypatch):
     """The batch solve of the broadcast path runs no per-point,
     per-boundary or per-trip Python kernel in any output mode: the scalar
     box query, per-boundary pair classifier, per-root ParentMap, numpy
-    weigher, per-trip emitters and numpy Trellis solve are gone from the
-    package, per-hop collapse (``reach``) and the Trellis are never
-    touched, and the bounded Dijkstra settles each root once, on its cache
+    weigher, per-trip emitters, numpy Trellis solve and per-pair lookups
+    (``reach``, ``edge_row``, ``PredicateCache.path``) are gone from the
+    package, the Trellis is never touched, and the bounded Dijkstra settles each root once, on its cache
     miss only. Its discretized rows equal ``solve_trip`` trip by trip; its
     interpolated and gate_union rows equal the per-trip emitters of
     ``tests/emit_oracle.py``."""
@@ -353,11 +353,14 @@ def test_batched_solve_calls_no_per_item_kernel(monkeypatch):
     assert not hasattr(matcher, "_routed_elems")
     assert not hasattr(dijkstra, "ParentMap")
     assert not hasattr(trellis.Trellis, "solve")
+    assert not hasattr(matcher, "reach")
+    assert not hasattr(matcher, "_cand")
+    assert not hasattr(PackedGraph, "edge_row")
+    assert not hasattr(dijkstra.PredicateCache, "path")
 
     def boom(*a, **k):
         raise AssertionError("called on the discretized batch path")
 
-    monkeypatch.setattr(matcher, "reach", boom)
     monkeypatch.setattr(trellis.Trellis, "__init__", boom)
     settled = []
     real_settle = dijkstra.settle_many
@@ -385,19 +388,16 @@ def test_batched_solve_calls_no_per_item_kernel(monkeypatch):
     assert len(settled) == n_settled  # warm: every root hits the arena
     pd.testing.assert_frame_equal(out, again)
 
-    real_reach, real_routed = reach, matcher._routed_cols
+    real_routed = matcher._routed_cols
     for output in ("interpolated", "gate_union"):
         got = run(output)
         assert len(settled) == n_settled
-        monkeypatch.setattr(matcher, "reach", real_reach)
         monkeypatch.setattr(matcher, "_routed_cols", emit_oracle.routed_cols)
         want = run(output)
-        monkeypatch.setattr(matcher, "reach", boom)
         monkeypatch.setattr(matcher, "_routed_cols", real_routed)
         assert (want.kind == "bridge").any()
         pd.testing.assert_frame_equal(got, want)
 
-    monkeypatch.setattr(matcher, "reach", lambda *a, **k: None)
     matched = out[out.status == "matched"]
     assert matched.trip_id.nunique() > 30
     for tid, t in trips.groupby("trip_id", sort=False):
@@ -524,3 +524,10 @@ def test_graph_payload_is_the_packed_graphs_payload():
     assert packed.graph_payload(nodes, edges)["edge_access"] is not None
     with pytest.raises(IndexError):
         packed.graph_payload(nodes[nodes.node_id < 5], edges)
+    # an endpoint between two node ids, or below the smallest, is no node
+    gappy = pd.DataFrame({"node_id": [1, 2, 4, 5], "lon": 0.0, "lat": 0.0})
+    for src, dst, missing in ((1, 3, 3), (0, 2, 0)):
+        one = pd.DataFrame({"edge_id": [0], "src": [src], "dst": [dst],
+                            "weight": [1]})
+        with pytest.raises(IndexError, match=f"endpoint {missing} is not"):
+            packed.graph_payload(gappy, one)

@@ -31,9 +31,11 @@ from routers_spark.graph.dijkstra import PredicateCache
 from routers_spark.graph.packed import build_packed_graph
 from routers_spark.matching import matcher
 from routers_spark.matching.costing import CostingStrategies, Strategy
-from routers_spark.matching.matcher import _cand, candidates_for_points, reach
+from routers_spark.matching.matcher import candidates_for_points
 from routers_spark.matching.weigh import weigh_boundaries, weigh_flat
 from tests import weigh_oracle
+
+from emit_oracle import one_cand, reach
 
 _EPS = 1e-6
 
@@ -191,14 +193,14 @@ def scalar_matrix(graph, cache, A, B, fanout=None, costing=None):
     m, n = len(A["edge_row"]), len(B["edge_row"])
     mat = np.full((m, n), np.uint32(NO_EDGE), dtype=np.uint32)
     for i in range(m):
-        src = _cand(A, i)
+        src = one_cand(A, i)
         if fanout is not None and n > fanout:
             d = haversine_m_np(src["px"], src["py"], B["px"], B["py"])
             targets = np.argpartition(d, fanout - 1)[:fanout].tolist()
         else:
             targets = range(n)
         for j in targets:
-            cost = transition_cost(graph, cache, src, _cand(B, j),
+            cost = transition_cost(graph, cache, src, one_cand(B, j),
                                    costing_strategies=costing)
             if cost is not None:
                 mat[i, j] = cost

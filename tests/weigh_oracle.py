@@ -146,14 +146,19 @@ def weigh_flat(graph, cache, edge_row, frac, px, py, lo, mid, hi,
     swithin = ragged_within(seg)
     a_nodes = pflat[poffs[srep] + swithin]
     b_nodes = pflat[poffs[srep] + swithin + 1]
-    pkey = a_nodes * graph._n_nodes + b_nodes
-    npk = len(graph._pair_keys)
-    ppos = np.searchsorted(graph._pair_keys, pkey)
+    n_nodes = len(graph.node_ids)
+    edge_key = (graph.edge_src.astype(np.int64) * n_nodes
+                + graph.edge_dst.astype(np.int64))
+    pair_rows = np.argsort(edge_key, kind="stable")  # first row of a pair first
+    pair_keys = edge_key[pair_rows]
+    pkey = a_nodes * n_nodes + b_nodes
+    npk = len(pair_keys)
+    ppos = np.searchsorted(pair_keys, pkey)
     ppc = np.minimum(ppos, max(npk - 1, 0))
-    found = (ppos < npk) & (graph._pair_keys[ppc] == pkey) if npk else \
+    found = (ppos < npk) & (pair_keys[ppc] == pkey) if npk else \
         np.zeros(len(pkey), dtype=bool)
     f_rep = srep[found]
-    f_erow = graph._pair_rows[ppc[found]]
+    f_erow = pair_rows[ppc[found]]
 
     # mp node list per path: edge sources + last edge's target
     # (resolve.rs:67-77)

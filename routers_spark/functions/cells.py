@@ -8,6 +8,9 @@ half-open subdivision with ``p >= mid`` descending):
   - geohash:  libs/routers_shard/src/strategy/geohash.rs:88-137
   - quadkey:  libs/routers_shard/src/strategy/quadtree.rs:88-123
   - hilbert:  libs/routers_tiles/src/primitives/fragment.rs:69-71
+
+A point with a non-finite coordinate (NaN or ±inf) lies in no cell: the
+integer encoders give it -1 and ``geohash_str_np`` gives it ``None``.
 """
 
 from __future__ import annotations
@@ -26,8 +29,23 @@ _SPREAD_STEPS = (
 
 
 def _grid_index(frac: np.ndarray, bits: int) -> np.ndarray:
-    frac = np.clip(frac, 0.0, np.nextafter(1.0, 0.0))
+    """Cell index of each fraction; a non-finite one takes 0, to be masked
+    by the caller through ``_no_cell``."""
+    frac = np.clip(np.where(np.isfinite(frac), frac, 0.0), 0.0,
+                   np.nextafter(1.0, 0.0))
     return np.floor(frac * float(1 << bits)).astype(np.int64)
+
+
+def _no_cell(lon, lat) -> np.ndarray:
+    """True where a point has a non-finite coordinate."""
+    return ~(np.isfinite(np.asarray(lon, dtype=np.float64))
+             & np.isfinite(np.asarray(lat, dtype=np.float64)))
+
+
+def _masked(cell, lon, lat):
+    """``cell`` with -1 for the points in no cell."""
+    none = _no_cell(lon, lat)
+    return np.where(none, -1, cell) if none.any() else cell
 
 
 def _spread(v: np.ndarray) -> np.ndarray:
@@ -72,7 +90,7 @@ def quadkey_np(lon, lat, depth: int) -> np.ndarray:
     yi = _grid_index(lat_frac(lat), depth)
     xr = _bit_reverse32(xi, depth)
     yr = _bit_reverse32(yi, depth)
-    return _interleave(xr, yr, y_low=False)
+    return _masked(_interleave(xr, yr, y_low=False), lon, lat)
 
 
 def geohash_int_np(lon, lat, precision: int) -> np.ndarray:
@@ -83,21 +101,31 @@ def geohash_int_np(lon, lat, precision: int) -> np.ndarray:
     xi = _grid_index(lon_frac(lon), lon_bits).astype(np.uint64)
     yi = _grid_index(lat_frac(lat), lat_bits).astype(np.uint64)
     if total % 2 == 0:
-        return _interleave(xi, yi, y_low=True)
-    hi = _interleave(xi >> np.uint64(1), yi, y_low=False).astype(np.uint64)
-    return ((hi << np.uint64(1)) | (xi & np.uint64(1))).astype(np.int64)
+        gi = _interleave(xi, yi, y_low=True)
+    else:
+        hi = _interleave(xi >> np.uint64(1), yi, y_low=False) \
+            .astype(np.uint64)
+        gi = ((hi << np.uint64(1)) | (xi & np.uint64(1))).astype(np.int64)
+    return _masked(gi, lon, lat)
 
 
 def geohash_str_np(lon, lat, precision: int) -> np.ndarray:
-    """Base-32 geohash strings (vectorized lookup)."""
-    gi = geohash_int_np(lon, lat, precision).astype(np.uint64)
+    """Base-32 geohash strings (vectorized lookup); an object array with
+    ``None`` for the points in no cell, when there are any."""
+    gi = geohash_int_np(lon, lat, precision)
+    none = (np.asarray(gi) < 0).ravel()
+    gi = gi.astype(np.uint64)
     chars = np.frombuffer(_GEOHASH_B32.encode(), dtype=np.uint8)
     cols = []
     for c in range(precision):
         shift = np.uint64(5 * (precision - 1 - c))
         cols.append(chars[((gi >> shift) & np.uint64(31)).astype(np.int64)])
     stacked = np.stack(cols, axis=-1)
-    return stacked.view(f"S{precision}").ravel().astype(str)
+    out = stacked.view(f"S{precision}").ravel().astype(str)
+    if none.any():
+        out = out.astype(object)
+        out[none] = None
+    return out
 
 
 def geohash_subdivide_scalar(lon: float, lat: float, precision: int) -> str:

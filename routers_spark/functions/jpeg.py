@@ -1,4 +1,5 @@
-"""Baseline JPEG (ITU-T T.81 / JFIF) encoder + decoder, pure numpy.
+"""Baseline JPEG (ITU-T T.81 / JFIF) encoder + decoder, numpy plus one
+compiled loop.
 
 Implements the PUBLIC spec from scratch (no image libraries are
 required): ``fmt="jpeg"`` is baseline sequential JPEG, so the PSNR parity
@@ -12,17 +13,20 @@ off the file's own DQT/DHT/SOF0 segments (interval-free baseline, h=v=1
 components), so it is not coupled to the encoder's table choice.
 
 Hot math (color transform, DCT/IDCT over all blocks, quantization) is
-vectorized numpy. The entropy encoder builds the whole symbol stream as
-arrays and bit-packs it in one vector pass. The entropy decoder cuts the
-scan out with two regexes and one replace, reads each Huffman code with one
-lookup in a 16-bit lookahead table per DHT (cached per table), takes every
-bit field as a shift and mask of a precomputed 32-bit word, and scatters
-the nonzero coefficients into the block array once. Damaged input raises
-``ValueError``.
+vectorized numpy; the decoder's IDCT is two batched matrix products. The
+entropy encoder builds the whole symbol stream as arrays and bit-packs it
+in one vector pass. The entropy decoder cuts the scan out with two regexes
+and one replace, then decodes it in one call to ``rc_jpeg_scan``
+(``raster_codecs.c``, built with ``cc`` through ``routers_spark.native``;
+there is no Python fallback): each Huffman code is one lookup in a 16-bit
+lookahead table per DHT (cached per table). Damaged input raises
+``ValueError``, and a header claiming more blocks than its scan can hold
+is refused before the coefficients are allocated.
 """
 
 from __future__ import annotations
 
+import ctypes
 import functools
 import re
 import struct
@@ -30,6 +34,7 @@ import struct
 import numpy as np
 
 from routers_spark.functions.ragged import ragged_within
+from routers_spark.functions.raster import CODECS
 
 # ------------------------------------------------------------- constants
 
@@ -344,19 +349,30 @@ _RST = re.compile(rb"\xff[\xd0-\xd7]")
 
 
 @functools.lru_cache(maxsize=32)
-def _huff_lut(bits: bytes, vals: bytes) -> list[int]:
-    """One DHT as a 16-bit lookahead table: entry ``c`` holds
-    ``symbol << 5 | length`` of the code that prefixes the 16 bits ``c``,
-    or 0 where no code does."""
+def _huff_lut(bits: bytes, vals: bytes) -> np.ndarray:
+    """One DHT as a read-only 16-bit lookahead table (``uint32``): entry
+    ``c`` holds ``symbol << 5 | length`` of the code that prefixes the 16
+    bits ``c``, or 0 where no code does."""
     if sum(bits) != len(vals):
         raise ValueError("bad Huffman table")
-    lut = [0] * 65536
+    lut = np.zeros(65536, dtype=np.uint32)
     for sym, (code, ln) in _canonical_codes(list(bits), list(vals)).items():
         if code >= 1 << ln:
             raise ValueError("bad Huffman table")
         span = 1 << (16 - ln)
-        lut[code * span:(code + 1) * span] = [sym << 5 | ln] * span
+        lut[code * span:(code + 1) * span] = sym << 5 | ln
+    lut.flags.writeable = False
     return lut
+
+
+# rc_jpeg_scan's error codes (raster_codecs.c)
+_SCAN_ERRORS = {
+    -1: "invalid Huffman code",
+    -2: "bad DC category",
+    -3: "bad AC symbol",
+    -4: "AC run past coefficient 63",
+    -5: "truncated JPEG entropy data",
+}
 
 
 def jpeg_decode(data: bytes) -> np.ndarray:
@@ -365,7 +381,7 @@ def jpeg_decode(data: bytes) -> np.ndarray:
     Malformed or truncated input raises ``ValueError``."""
     try:
         return _decode(data)
-    except (IndexError, KeyError, StopIteration, struct.error) as e:
+    except (IndexError, KeyError, struct.error) as e:
         raise ValueError(f"malformed JPEG: {e!r}") from e
 
 
@@ -376,7 +392,7 @@ def _decode(data: bytes) -> np.ndarray:
         raise ValueError("not a JPEG (no SOI)")
     i = 2
     qt: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], list[int]] = {}
+    huff: dict[tuple[int, int], np.ndarray] = {}
     comps: list[tuple[int, int]] = []   # (component id, quant table id)
     scan: list[tuple[int, int, int]] = []  # (comp idx, dc table, ac table)
     h = w = 0
@@ -403,6 +419,8 @@ def _decode(data: bytes) -> np.ndarray:
         elif marker == 0xC0:            # SOF0 baseline
             h, w = struct.unpack(">HH", seg[1:5])
             n = seg[5]
+            if n > 4:
+                raise ValueError(f"{n} components (at most 4)")
             for c in range(n):
                 cid, hv, tq = seg[6 + 3 * c:9 + 3 * c]
                 if hv != 0x11:
@@ -419,9 +437,16 @@ def _decode(data: bytes) -> np.ndarray:
                 j += 17 + nvals
         elif marker == 0xDA:            # SOS
             ns = seg[0]
+            if not 1 <= ns <= 4:
+                raise ValueError(f"{ns} scan components (1 to 4)")
+            ids = [ci for ci, _ in comps]
             for c in range(ns):
                 cid, tabs = seg[1 + 2 * c:3 + 2 * c]
-                idx = next(k for k, (ci, _) in enumerate(comps) if ci == cid)
+                if cid not in ids:
+                    raise ValueError(f"scan names no frame component {cid}")
+                idx = ids.index(cid)
+                if any(k == idx for k, _, _ in scan):
+                    raise ValueError(f"scan names component {cid} twice")
                 scan.append((idx, tabs >> 4, tabs & 0x0F))
             # entropy data runs to the next non-stuffed, non-RST marker
             m = _END.search(data, i + ln)
@@ -436,67 +461,41 @@ def _decode(data: bytes) -> np.ndarray:
     if entropy is None or not h or not w:
         raise ValueError("truncated JPEG")
 
-    # the big-endian 32-bit word starting at every byte offset: a Huffman
-    # lookahead or an amplitude is one shift and mask of words[pos >> 3]
-    b = np.frombuffer(entropy + bytes(4), dtype=np.uint8).astype(np.uint32)
-    words = (b[:-3] << 24 | b[1:-2] << 16 | b[2:-1] << 8 | b[3:]).tolist()
     n_blocks = ((h + 7) // 8) * ((w + 7) // 8)
-    # per scan component: flat (block * 64 + zigzag k) indices, values
-    plan = [([], [], huff[(0, dc_t)], huff[(1, ac_t)])
-            for _, dc_t, ac_t in scan]
-    prev_dc = [0] * len(scan)
-    pos = 0
-    for bi in range(n_blocks):
-        base = bi << 6
-        for si, (idx, val, dc_lut, ac_lut) in enumerate(plan):
-            e = dc_lut[words[pos >> 3] >> (16 - (pos & 7)) & 0xFFFF]
-            if not e:
-                raise ValueError("invalid Huffman code")
-            pos += e & 31
-            s = e >> 5
-            if s:
-                if s > 16:
-                    raise ValueError("bad DC category")
-                v = words[pos >> 3] >> (32 - (pos & 7) - s) & ((1 << s) - 1)
-                pos += s
-                prev_dc[si] += v if v >> (s - 1) else v - (1 << s) + 1
-            idx.append(base)
-            val.append(prev_dc[si])
-            k = 1
-            while k <= 63:
-                e = ac_lut[words[pos >> 3] >> (16 - (pos & 7)) & 0xFFFF]
-                if not e:
-                    raise ValueError("invalid Huffman code")
-                pos += e & 31
-                sym = e >> 5
-                if sym == 0x00:         # EOB
-                    break
-                s = sym & 0x0F
-                if not s:
-                    if sym != 0xF0:
-                        raise ValueError("bad AC symbol")
-                    k += 16             # ZRL
-                    continue
-                k += sym >> 4
-                if k > 63:
-                    raise ValueError("AC run past coefficient 63")
-                v = words[pos >> 3] >> (32 - (pos & 7) - s) & ((1 << s) - 1)
-                pos += s
-                idx.append(base + k)
-                val.append(v if v >> (s - 1) else v - (1 << s) + 1)
-                k += 1
-    if pos > 8 * len(entropy):
-        raise ValueError("truncated JPEG entropy data")
+    n_scan = len(scan)
+    # every block of every scan component takes at least two bits (a DC
+    # code and an EOB), so a header claiming more is refused before the
+    # coefficient buffer is allocated
+    if 2 * n_blocks * n_scan > 8 * len(entropy):
+        raise ValueError(
+            f"truncated JPEG entropy data: {n_blocks} blocks of {n_scan} "
+            f"components in {len(entropy)} bytes")
+    luts = []
+    for _, dc_t, ac_t in scan:
+        for key in ((0, dc_t), (1, ac_t)):
+            if key not in huff:
+                raise ValueError(f"scan names a missing Huffman table {key}")
+            luts.append(huff[key])
+    zz = np.zeros((n_scan, n_blocks, 64), dtype=np.int64)
+    pos = CODECS.rc_jpeg_scan(
+        entropy + bytes(8), len(entropy), n_blocks, n_scan,
+        (ctypes.c_void_p * len(luts))(*(t.ctypes.data for t in luts)),
+        zz.ctypes.data)
+    if pos < 0:
+        raise ValueError(_SCAN_ERRORS[pos])
 
-    coefs = [np.zeros((n_blocks, 64), dtype=np.int64) for _ in comps]
-    for (ci, _, _), (idx, val, _, _) in zip(scan, plan):
-        coefs[ci].flat[idx] = val
+    coefs = [None] * len(comps)
+    for (ci, _, _), c in zip(scan, zz):
+        coefs[ci] = c
     planes = []
     for ci, (cid, tq) in enumerate(comps):
+        if tq not in qt:
+            raise ValueError(f"component {cid} names a missing quant table")
         nat = np.zeros((n_blocks, 64), dtype=np.float64)
-        nat[:, ZIGZAG] = coefs[ci]
+        if coefs[ci] is not None:
+            nat[:, ZIGZAG] = coefs[ci]
         deq = nat.reshape(-1, 8, 8) * qt[tq].reshape(1, 8, 8)
-        px = np.einsum("xu,nuv,yv->nxy", _DCT.T, deq, _DCT.T) + 128.0
+        px = _DCT.T @ deq @ _DCT + 128.0
         planes.append(_unblocks(px, h, w))
     ycc = np.stack(planes, axis=-1)
     return _ycbcr_to_rgb(ycc)

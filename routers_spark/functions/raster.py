@@ -1,9 +1,12 @@
-"""Raster codecs + pyramid kernels (pure python/numpy, stdlib zlib).
+"""Raster codecs + pyramid kernels (numpy, stdlib zlib, and the compiled
+loops of ``raster_codecs.c``, built with ``cc`` on first import through
+``routers_spark.native``; without a compiler the import raises
+``ImportError``).
 
 The container ships no image libraries (no PIL), so:
   - PNG is implemented for real (encode filter-0, decode all five filter
-    types, 8-bit gray/RGB/RGBA, non-interlaced) — lossless, byte-exact
-    round-trips;
+    types in C, 8-bit gray/RGB/RGBA, non-interlaced) — lossless, byte-exact
+    round-trips; damaged input raises ``ValueError``;
   - JPEG goes through functions/jpeg.py (baseline sequential ITU-T T.81,
     4:4:4, Annex-K tables, JFIF) — the PSNR parity gate binds on an actual
     lossy codec.
@@ -14,10 +17,23 @@ Pyramid downsampling is a deterministic integer box filter
 
 from __future__ import annotations
 
+import ctypes
 import struct
 import zlib
 
 import numpy as np
+
+from routers_spark.native import load_kernel
+
+# the codecs' compiled loops (raster_codecs.c): the PNG unfilter here and
+# the JPEG entropy decode in jpeg.py
+CODECS = load_kernel(__package__, "raster_codecs.c")
+CODECS.rc_png_unfilter.argtypes = [ctypes.c_char_p] + [ctypes.c_int64] * 3 \
+    + [ctypes.c_void_p]
+CODECS.rc_png_unfilter.restype = ctypes.c_int64
+CODECS.rc_jpeg_scan.argtypes = [ctypes.c_char_p] + [ctypes.c_int64] * 3 \
+    + [ctypes.c_void_p] * 2
+CODECS.rc_jpeg_scan.restype = ctypes.c_int64
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _COLOR_TYPE = {1: 0, 3: 2, 4: 6}  # channels -> PNG color type
@@ -36,7 +52,9 @@ def png_encode(arr: np.ndarray) -> bytes:
     if arr.ndim == 2:
         arr = arr[:, :, None]
     h, w, c = arr.shape
-    assert arr.dtype == np.uint8 and c in _COLOR_TYPE
+    if arr.dtype != np.uint8 or c not in _COLOR_TYPE:
+        raise ValueError(f"PNG takes uint8 with 1, 3 or 4 channels, not "
+                         f"{arr.dtype} with {c}")
     ihdr = struct.pack(">IIBBBBB", w, h, 8, _COLOR_TYPE[c], 0, 0, 0)
     raw = np.concatenate(
         [np.zeros((h, 1), dtype=np.uint8), arr.reshape(h, w * c)], axis=1
@@ -45,68 +63,51 @@ def png_encode(arr: np.ndarray) -> bytes:
     return _PNG_SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
 def png_decode(data: bytes) -> np.ndarray:
-    """Decode non-interlaced 8-bit PNG (color types 0/2/6, filters 0-4)."""
-    assert data[:8] == _PNG_SIG, "not a PNG"
+    """Decode non-interlaced 8-bit PNG (color types 0/2/6, filters 0-4).
+    Malformed or truncated input raises ``ValueError``."""
+    try:
+        return _png_decode(bytes(data))
+    except (struct.error, zlib.error) as e:
+        raise ValueError(f"malformed PNG: {e!r}") from e
+
+
+def _png_decode(data: bytes) -> np.ndarray:
+    if data[:8] != _PNG_SIG:
+        raise ValueError("not a PNG")
     pos = 8
-    w = h = None
-    color_type = None
-    idat = b""
+    w = h = c = None
+    idat = []
     while pos < len(data):
         (length,) = struct.unpack(">I", data[pos:pos + 4])
         tag = data[pos + 4:pos + 8]
         body = data[pos + 8:pos + 8 + length]
+        if len(body) < length:
+            raise ValueError(f"truncated PNG chunk {bytes(tag)!r}")
         pos += 12 + length
         if tag == b"IHDR":
             w, h, depth, color_type, comp, filt, interlace = struct.unpack(
                 ">IIBBBBB", body
             )
-            assert depth == 8 and interlace == 0, "unsupported PNG variant"
-            assert color_type in _CHANNELS, "unsupported color type"
+            if depth != 8 or interlace != 0:
+                raise ValueError("unsupported PNG variant")
+            if color_type not in _CHANNELS:
+                raise ValueError("unsupported color type")
+            c = _CHANNELS[color_type]
         elif tag == b"IDAT":
-            idat += body
+            idat.append(body)
         elif tag == b"IEND":
             break
-    c = _CHANNELS[color_type]
-    raw = zlib.decompress(idat)
+    if c is None:
+        raise ValueError("PNG without IHDR")
+    raw = zlib.decompress(b"".join(idat))
     stride = w * c
-    out = np.zeros((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    off = 0
-    for y in range(h):
-        ftype = raw[off]
-        line = np.frombuffer(raw[off + 1:off + 1 + stride], dtype=np.uint8).copy()
-        off += 1 + stride
-        if ftype == 0:
-            cur = line
-        elif ftype == 2:  # up
-            cur = (line.astype(np.int32) + prev).astype(np.uint8)
-        elif ftype in (1, 3, 4):
-            cur = np.zeros(stride, dtype=np.uint8)
-            for i in range(stride):
-                a = int(cur[i - c]) if i >= c else 0
-                b = int(prev[i])
-                if ftype == 1:
-                    cur[i] = (int(line[i]) + a) & 0xFF
-                elif ftype == 3:
-                    cur[i] = (int(line[i]) + (a + b) // 2) & 0xFF
-                else:
-                    cc = int(prev[i - c]) if i >= c else 0
-                    cur[i] = (int(line[i]) + _paeth(a, b, cc)) & 0xFF
-        else:
-            raise ValueError(f"bad filter {ftype}")
-        out[y] = cur
-        prev = cur
+    if len(raw) < h * (stride + 1):
+        raise ValueError("truncated PNG image data")
+    out = np.empty((h, stride), dtype=np.uint8)
+    bad = CODECS.rc_png_unfilter(raw, h, stride, c, out.ctypes.data)
+    if bad >= 0:
+        raise ValueError(f"bad filter {raw[bad * (stride + 1)]}")
     return out.reshape(h, w, c)
 
 

@@ -12,9 +12,10 @@ filter: later nodes with shorter distance but larger repr are cut too. That
 is the reference's reachability boundary and is reproduced exactly.
 
 The search itself is compiled: ``bounded_dijkstra.c`` beside this module is
-built with the system C compiler (``cc``) on first import, cached by a hash
-of its source and flags, and loaded through ``ctypes``. There is no Python
-fallback; without a compiler the import raises ``ImportError``. The pure
+built with the system C compiler (``cc``) on first import through
+``routers_spark.native``, cached by a hash of its source and flags, and
+loaded through ``ctypes``. There is no Python fallback; without a compiler
+the import raises ``ImportError``. The pure
 Python version it must equal node for node lives in
 ``tests/dijkstra_oracle.py``. The same library holds the matcher's
 boundary weigher (:class:`WeighCall`, behind ``matching.weigh``) and its
@@ -31,17 +32,8 @@ and empties wholesale when full.
 
 from __future__ import annotations
 
-import atexit
 import ctypes
-import hashlib
 import heapq
-import os
-import platform
-import shutil
-import stat
-import subprocess
-import tempfile
-from importlib import resources
 
 import numpy as np
 
@@ -55,82 +47,9 @@ from routers_spark.config import (
     MIN_HEADING_DIST_M,
     PREDICATE_CACHE_CAPACITY,
 )
+from routers_spark.native import load_kernel
 
-CC = "cc"
-CFLAGS = ("-O2", "-std=c99", "-shared", "-fPIC")
 _SOURCE = "bounded_dijkstra.c"
-
-
-def build_kernel(out_dir: str, cc: str = CC, source: bytes | None = None) -> str:
-    """Path of the compiled kernel in ``out_dir``, compiling it first when
-    no build of this exact source, compiler and flags is there. The output
-    is written under a unique name and renamed into place, so processes
-    that build at once each load a complete library."""
-    if source is None:
-        source = resources.files(__package__).joinpath(_SOURCE).read_bytes()
-    tag = hashlib.sha256(repr((cc, CFLAGS, platform.machine())).encode()
-                         + source).hexdigest()[:16]
-    path = os.path.join(out_dir, f"bounded_dijkstra-{tag}.so")
-    if os.path.exists(path):
-        return path
-    cmd = [cc, *CFLAGS, "-o", "k.so", _SOURCE]
-    try:
-        os.makedirs(out_dir, exist_ok=True)
-        with tempfile.TemporaryDirectory(dir=out_dir) as tmp:
-            with open(os.path.join(tmp, _SOURCE), "wb") as f:
-                f.write(source)
-            subprocess.run(cmd, check=True, capture_output=True, cwd=tmp)
-            os.replace(os.path.join(tmp, "k.so"), path)
-    except subprocess.CalledProcessError as e:
-        raise ImportError(
-            f"compiling {_SOURCE} failed: {' '.join(cmd)}\n"
-            f"{e.stderr.decode(errors='replace')}") from None
-    except OSError as e:  # no compiler, one that cannot run, or no room
-        raise ImportError(
-            f"building the compiled bounded Dijkstra in {out_dir} failed "
-            f"(it needs a working C compiler): "
-            f"running {cc!r} as {' '.join(cmd)} ({e})") from None
-    return path
-
-
-def _private(path: str) -> bool:
-    """True when ``path`` is a real directory (not a symlink) owned by this
-    user and writable by no one else, so no other local user can have put
-    a library in it."""
-    try:
-        st = os.lstat(path)
-    except OSError:
-        return False
-    return (stat.S_ISDIR(st.st_mode) and st.st_uid == os.getuid()
-            and st.st_mode & 0o022 == 0)
-
-
-def _build_dir(pkg_dir: str = os.path.dirname(__file__),
-               tmp_root: str | None = None) -> str:
-    """The package's ``__pycache__``; when the package is not writable (a
-    zip on ``--py-files``), a per-user directory under the temp dir, made
-    with mode 0700 and used only if it passes ``_private``. A shared temp
-    dir lets any local user create that name first, so when the check
-    fails the kernel goes to a fresh private directory of this process,
-    removed at exit."""
-    here = os.path.join(pkg_dir, "__pycache__")
-    try:
-        os.makedirs(here, exist_ok=True)
-        if os.access(here, os.W_OK):
-            return here
-    except OSError:
-        pass
-    tmp_root = tmp_root or tempfile.gettempdir()
-    shared = os.path.join(tmp_root, f"routers_spark-{os.getuid()}")
-    try:
-        os.mkdir(shared, 0o700)
-    except OSError:
-        pass
-    if _private(shared):
-        return shared
-    own = tempfile.mkdtemp(prefix="routers_spark-", dir=tmp_root)
-    atexit.register(shutil.rmtree, own, True)
-    return own
 
 
 class _Graph(ctypes.Structure):
@@ -154,14 +73,7 @@ class _Costs(ctypes.Structure):
         "precision_zeta")] + [("max_weight", ctypes.c_int64)]
 
 
-def _load(path: str) -> ctypes.CDLL:
-    try:
-        lib = ctypes.CDLL(path)
-    except OSError as e:
-        raise ImportError(
-            f"loading the compiled bounded Dijkstra {path} failed ({e}); "
-            f"{os.path.dirname(path)} must allow mapping executable code "
-            f"(it must not be on a noexec mount)") from None
+def _declare(lib: ctypes.CDLL) -> ctypes.CDLL:
     lib.bd_settle_many.argtypes = [
         ctypes.POINTER(_Graph), ctypes.c_void_p, ctypes.c_int64,
         ctypes.c_double] + [ctypes.c_void_p] * 4 + [ctypes.c_int64,
@@ -200,7 +112,7 @@ def _load(path: str) -> ctypes.CDLL:
     return lib
 
 
-_LIB = _load(build_kernel(_build_dir()))
+_LIB = _declare(load_kernel(__package__, _SOURCE))
 
 
 class _Kernel:

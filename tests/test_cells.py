@@ -191,3 +191,25 @@ def test_dbscan_gate_eps_has_wide_margin():
     close = np.array(close)
     assert len(close)  # the ~720 m and ~900 m classes exist
     assert (np.abs(close - 800.0) > 50.0).all()
+
+
+def test_non_finite_points_get_no_cell():
+    """NaN or infinite coordinates lie in no cell (None / -1), not in the
+    cell their int64 cast lands in; every finite point keeps its cell."""
+    lon = np.array([np.nan, 0.0, np.inf, 12.5, -np.inf, 12.5])
+    lat = np.array([0.0, np.nan, 3.0, -7.25, np.nan, -7.25])
+    bad = np.array([True, True, True, False, True, False])
+    for p in (5, 8):
+        got = cells.geohash_str_np(lon, lat, p)
+        assert list(got[bad]) == [None] * 4
+        assert list(got[~bad]) == list(
+            cells.geohash_str_np(lon[~bad], lat[~bad], p))
+        gi = cells.geohash_int_np(lon, lat, p)
+        assert (gi[bad] == -1).all()
+        assert (gi[~bad] == cells.geohash_int_np(lon[~bad], lat[~bad],
+                                                 p)).all()
+    qk = cells.quadkey_np(lon, lat, 9)
+    assert (qk[bad] == -1).all()
+    assert (qk[~bad] == cells.quadkey_np(lon[~bad], lat[~bad], 9)).all()
+    # all-finite input keeps the plain string array
+    assert cells.geohash_str_np(LON, LAT, 5).dtype.kind == "U"

@@ -1,7 +1,8 @@
 """The compiled bounded Dijkstra against the Python oracle in
 ``dijkstra_oracle.py`` (same pop order, parents and depths), and the
-kernel's build: compiler and loader errors, concurrent builds, source-keyed
-rebuilds and the private fallback build directory."""
+kernels' one build path (``routers_spark.native``): compiler and loader
+errors, concurrent builds, source-keyed rebuilds, the private fallback
+build directory, and the image codecs' source built through it too."""
 
 from __future__ import annotations
 
@@ -16,9 +17,9 @@ import pandas as pd
 import pytest
 
 from routers_spark.fixtures.roads import grid_network
-from routers_spark.graph.dijkstra import (
-    _SOURCE, _build_dir, _load, build_kernel, settle_many)
+from routers_spark.graph.dijkstra import _SOURCE, settle_many
 from routers_spark.graph.packed import build_packed_graph
+from routers_spark.native import _build_dir, build_kernel, open_library
 
 from dijkstra_oracle import bounded_dijkstra_parents, pop_order
 
@@ -119,9 +120,12 @@ def test_empty_bound_and_bad_inputs(grid40):
 # ------------------------------------------------------------------ build
 
 
+_PKG = "routers_spark.graph"
+
+
 def test_missing_compiler_names_the_command(tmp_path):
     with pytest.raises(ImportError, match="no-such-cc-4f1d"):
-        build_kernel(str(tmp_path), cc="no-such-cc-4f1d")
+        build_kernel(_PKG, _SOURCE, str(tmp_path), cc="no-such-cc-4f1d")
 
 
 def test_compiler_that_cannot_run_raises_import_error(tmp_path):
@@ -129,14 +133,14 @@ def test_compiler_that_cannot_run_raises_import_error(tmp_path):
     cc.write_text("not a program\n")
     cc.chmod(0o644)
     with pytest.raises(ImportError, match=str(cc)):
-        build_kernel(str(tmp_path / "out"), cc=str(cc))
+        build_kernel(_PKG, _SOURCE, str(tmp_path / "out"), cc=str(cc))
 
 
 def test_unloadable_library_raises_import_error(tmp_path):
     bad = tmp_path / "bounded_dijkstra-0.so"
     bad.write_bytes(b"not a shared object")
     with pytest.raises(ImportError, match=str(bad)):
-        _load(str(bad))
+        open_library(str(bad))
 
 
 def _zipped_package(tmp_path):
@@ -186,11 +190,12 @@ def test_fallback_refuses_a_planted_dir(tmp_path, monkeypatch, plant):
 def test_source_change_rebuilds(tmp_path):
     with open(os.path.join(ROOT, "routers_spark", "graph", _SOURCE), "rb") as f:
         src = f.read()
-    first = build_kernel(str(tmp_path), source=src)
+    first = build_kernel(_PKG, _SOURCE, str(tmp_path), source=src)
     mtime = os.stat(first).st_mtime_ns
-    changed = build_kernel(str(tmp_path), source=src + b"\n/* rev 2 */\n")
+    changed = build_kernel(_PKG, _SOURCE, str(tmp_path),
+                           source=src + b"\n/* rev 2 */\n")
     assert changed != first and os.path.exists(changed)
-    assert build_kernel(str(tmp_path), source=src) == first
+    assert build_kernel(_PKG, _SOURCE, str(tmp_path), source=src) == first
     assert os.stat(first).st_mtime_ns == mtime  # a hit compiles nothing
     assert sorted(os.listdir(tmp_path)) == sorted(
         os.path.basename(p) for p in (first, changed))
@@ -198,10 +203,11 @@ def test_source_change_rebuilds(tmp_path):
 
 _BUILD_AND_LOAD = """
 import os, sys, time
-from routers_spark.graph.dijkstra import _load, build_kernel
+from routers_spark.native import build_kernel, open_library
 while not os.path.exists(sys.argv[2]):
     time.sleep(0.005)
-print(_load(build_kernel(sys.argv[1]))._name)
+print(open_library(build_kernel("routers_spark.graph", "bounded_dijkstra.c",
+                                sys.argv[1]))._name)
 """
 
 
@@ -218,3 +224,27 @@ def test_concurrent_builds_both_load(tmp_path):
     paths = {r[0].strip() for r in results}
     assert len(paths) == 1
     assert os.listdir(out) == [os.path.basename(paths.pop())]
+
+
+def test_codec_source_builds_and_loads_through_the_same_helper(tmp_path):
+    path = build_kernel("routers_spark.functions", "raster_codecs.c",
+                        str(tmp_path))
+    assert os.path.basename(path).startswith("raster_codecs-")
+    lib = open_library(path)
+    assert lib.rc_jpeg_scan and lib.rc_png_unfilter
+    assert os.listdir(tmp_path) == [os.path.basename(path)]
+
+
+def test_submit_zip_ships_every_kernel_source(tmp_path):
+    """The zip ``tools/submit.sh`` builds for ``--py-files`` holds every C
+    source under the package, so executors can build both kernels."""
+    import zipfile
+
+    with open(os.path.join(ROOT, "tools", "submit.sh")) as f:
+        script = f.read()
+    packer = script.split("<<'EOF'\n", 1)[1].split("\nEOF\n", 1)[0]
+    out = str(tmp_path / "deps.zip")
+    subprocess.run([sys.executable, "-c", packer, out], cwd=ROOT, check=True)
+    shipped = {n for n in zipfile.ZipFile(out).namelist() if n.endswith(".c")}
+    assert shipped == {"routers_spark/graph/bounded_dijkstra.c",
+                       "routers_spark/functions/raster_codecs.c"}

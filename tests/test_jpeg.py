@@ -332,3 +332,61 @@ def test_short_entropy_stream_raises_value_error():
     for drop in (1, 2, 3):
         with pytest.raises(ValueError, match="truncated"):
             jpeg_decode(_with_entropy(data, entropy[:-drop]))
+
+
+# ------------------------------------------------------- hostile headers
+
+
+def _with_segment(data: bytes, marker: int, payload: bytes) -> bytes:
+    """``data`` with the payload of its first ``marker`` header segment
+    replaced (segments walked by length, so table bytes never match)."""
+    i = 2
+    while True:
+        m = data[i + 1]
+        (ln,) = struct.unpack(">H", data[i + 2:i + 4])
+        if m == marker:
+            return (data[:i + 2] + struct.pack(">H", len(payload) + 2)
+                    + payload + data[i + 2 + ln:])
+        assert m != 0xDA, "marker not in the header"
+        i += 2 + ln
+
+
+def test_oversized_frame_over_short_scan_raises_before_allocating():
+    """A 65535x65535 SOF0 over a 16x16 image's scan: 67M blocks of 3
+    components would be 100 GB of coefficients; the decoder refuses the
+    header from the scan's length without allocating them."""
+    import tracemalloc
+
+    data = jpeg_encode(_gradient(16, 16), quality=90)
+    sof = struct.pack(">BHHB", 8, 65535, 65535, 3) + bytes(
+        [1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1])
+    bad = _with_segment(data, 0xC0, sof)
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="truncated"):
+            jpeg_decode(bad)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 8 << 20
+
+
+@pytest.mark.parametrize("marker,payload,match", [
+    (0xC0, struct.pack(">BHHB", 8, 16, 16, 5) + bytes(
+        [1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1, 4, 0x11, 1, 5, 0x11, 1]),
+     "5 components"),
+    (0xDA, bytes([3, 1, 0x00, 1, 0x11, 3, 0x11, 0, 63, 0]), "twice"),
+    (0xDA, bytes([3, 1, 0x00, 2, 0x11, 9, 0x11, 0, 63, 0]),
+     "no frame component 9"),
+    (0xDA, bytes([3, 1, 0x22, 2, 0x11, 3, 0x11, 0, 63, 0]),
+     "missing Huffman table"),
+    (0xDA, bytes([5, 1, 0x00, 2, 0x11, 3, 0x11, 1, 0x11, 2, 0x11,
+                  0, 63, 0]), "5 scan components"),
+])
+def test_hostile_headers_raise_value_error(marker, payload, match):
+    """More components than T.81 allows, a component named twice or not
+    at all by the scan, and a scan naming a Huffman table no DHT defined:
+    each is a ValueError naming the fault, not a KeyError or a crash."""
+    data = jpeg_encode(_gradient(16, 16), quality=90)
+    with pytest.raises(ValueError, match=match):
+        jpeg_decode(_with_segment(data, marker, payload))

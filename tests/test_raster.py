@@ -1,6 +1,8 @@
 """Raster codec + pyramid tests: PNG round-trip byte-exactness, all filter
-types decoded, format dispatch, deterministic box-filter pyramid (the
-JPEG PSNR >= 40 dB parity gate of BASELINE.md is in tests/test_jpeg.py)."""
+types decoded (the compiled unfilter against the Python oracle in
+``png_oracle.py``), ValueError on damaged PNG input, format dispatch,
+deterministic box-filter pyramid (the JPEG PSNR >= 40 dB parity gate of
+BASELINE.md is in tests/test_jpeg.py)."""
 
 import struct
 import zlib
@@ -17,6 +19,8 @@ from routers_spark.functions.raster import (
     psnr,
     pyramid,
 )
+
+from png_oracle import unfilter
 
 RNG = np.random.default_rng(42)
 
@@ -74,6 +78,61 @@ def test_png_decode_all_filters():
     buf = sig + chunk(b"IHDR", ihdr) + chunk(b"IDAT", zlib.compress(bytes(raw))) \
         + chunk(b"IEND", b"")
     assert np.array_equal(png_decode(buf), img)
+
+
+def _png(w: int, h: int, color_type: int, raw: bytes) -> bytes:
+    def chunk(tag, data):
+        return (struct.pack(">I", len(data)) + tag + data
+                + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
+
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
+    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+            + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b""))
+
+
+@pytest.mark.parametrize("c", [1, 3, 4])
+def test_png_unfilter_matches_python_oracle(c):
+    """Random filter bytes under a random filter type per row, over many
+    rows and widths (1 pixel, less than a pixel's worth of Sub lookback,
+    odd widths): the compiled unfilter equals the Python loop."""
+    rng = np.random.default_rng(c)
+    color_type = {1: 0, 3: 2, 4: 6}[c]
+    for w, h in ((1, 1), (1, 9), (2, 7), (13, 17), (64, 33)):
+        stride = w * c
+        rows = rng.integers(0, 256, (h, stride + 1), dtype=np.uint8)
+        rows[:, 0] = rng.integers(0, 5, h)
+        raw = rows.tobytes()
+        got = png_decode(_png(w, h, color_type, raw))
+        assert got.shape == (h, w, c)
+        assert np.array_equal(got.reshape(h, stride),
+                              unfilter(raw, h, stride, c))
+
+
+def test_png_damaged_input_raises_value_error():
+    """Truncation anywhere and single-byte flips anywhere either decode to
+    a uint8 image or raise ValueError — never KeyError, struct.error,
+    zlib.error or AssertionError."""
+    img = RNG.integers(0, 256, (12, 10, 3), dtype=np.uint8)
+    data = png_encode(img)
+    damaged = [data[:cut] for cut in range(len(data))]
+    for at in range(len(data)):
+        flipped = bytearray(data)
+        flipped[at] ^= 0xFF
+        damaged.append(bytes(flipped))
+    for bad in damaged:
+        try:
+            out = png_decode(bad)
+        except ValueError:
+            continue
+        assert out.dtype == np.uint8 and out.ndim == 3
+    with pytest.raises(ValueError, match="not a PNG"):
+        png_decode(b"GIF89a" + data[6:])
+    with pytest.raises(ValueError, match="without IHDR"):
+        png_decode(data[:8])
+    with pytest.raises(ValueError, match="bad filter 5"):
+        png_decode(_png(1, 2, 0, b"\x00\x07\x05\x07"))
+    with pytest.raises(ValueError, match="truncated PNG image data"):
+        png_decode(_png(4, 4, 0, bytes(19)))
 
 
 def test_decode_image_dispatch():

@@ -94,19 +94,14 @@ def quadkey_np(lon, lat, depth: int) -> np.ndarray:
 
 
 def geohash_int_np(lon, lat, precision: int) -> np.ndarray:
-    """Geohash bit content as int64 (5*precision bits, lon first from MSB)."""
+    """Geohash bit content as int64 (5*precision bits, lon first from MSB).
+    The last bit is lat's for an even total and lon's for an odd one, so
+    lat takes the low lane of the interleave exactly when the total is
+    even."""
     total = 5 * precision
-    lon_bits = (total + 1) // 2
-    lat_bits = total // 2
-    xi = _grid_index(lon_frac(lon), lon_bits).astype(np.uint64)
-    yi = _grid_index(lat_frac(lat), lat_bits).astype(np.uint64)
-    if total % 2 == 0:
-        gi = _interleave(xi, yi, y_low=True)
-    else:
-        hi = _interleave(xi >> np.uint64(1), yi, y_low=False) \
-            .astype(np.uint64)
-        gi = ((hi << np.uint64(1)) | (xi & np.uint64(1))).astype(np.int64)
-    return _masked(gi, lon, lat)
+    xi = _grid_index(lon_frac(lon), (total + 1) // 2)
+    yi = _grid_index(lat_frac(lat), total // 2)
+    return _masked(_interleave(xi, yi, y_low=total % 2 == 0), lon, lat)
 
 
 def geohash_str_np(lon, lat, precision: int) -> np.ndarray:

@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from routers_spark.functions.sqlgen import Dialect
+
 
 def dated_range_col(ts: Column, start_date: str, end_date: str,
                     weekdays: list[int], inclusive: bool = True) -> Column:
@@ -26,15 +28,10 @@ def dated_range_col(ts: Column, start_date: str, end_date: str,
 
 
 def dated_range_sql(ts: str, start_date: str, end_date: str,
-                    weekdays: list[int], inclusive: bool, dialect: str) -> str:
-    """The same predicate as dialect-portable SQL text (DuckDB: isodow is
-    1=Mon..7 → isodow-1 matches the 0=Mon contract)."""
+                    weekdays: list[int], inclusive: bool, d: Dialect) -> str:
+    """The same predicate as dialect-portable SQL text."""
     ge, le = (">=", "<=") if inclusive else (">", "<")
     days = ", ".join(str(w) for w in weekdays)
-    if dialect == "duckdb":
-        day = f"(isodow(CAST({ts} AS TIMESTAMP)) - 1)"
-    else:
-        day = f"weekday(CAST({ts} AS TIMESTAMP))"
     return (f"(CAST({ts} AS DATE) {ge} DATE '{start_date}' "
             f"AND CAST({ts} AS DATE) {le} DATE '{end_date}' "
-            f"AND {day} IN ({days}))")
+            f"AND {d.weekday(ts)} IN ({days}))")

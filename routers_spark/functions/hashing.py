@@ -6,7 +6,8 @@ built-in ``hash()`` for placement that must survive resume/rewrites (the
 reference calls this out explicitly; Spark's ``hash()`` has the same caveat).
 
 Provided as numpy kernels AND dialect-portable SQL (both Spark and DuckDB
-evaluate the identical unsigned-64 arithmetic via signed BIGINT wrapping).
+evaluate the identical unsigned-64 arithmetic via signed BIGINT wrapping,
+spelled per engine by sqlgen.Dialect).
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ from __future__ import annotations
 import numpy as np
 
 from routers_spark.config import N_PARTITIONS
+from routers_spark.functions.sqlgen import Dialect, to_i64
 
 _FNV_OFFSET = np.uint64(0xCBF29CE484222325)
 _FNV_PRIME = np.uint64(0x00000100000001B3)
@@ -47,97 +49,49 @@ def partition_of_np(vehicle_id) -> np.ndarray:
     return (mix_np(v) % np.uint64(N_PARTITIONS)).astype(np.int64)
 
 
-def to_i64(c: int) -> int:
-    """Unsigned-64 constant as its signed two's-complement literal."""
-    return c - (1 << 64) if c >= (1 << 63) else c
-
-
-def sql_ops(dialect: str):
-    """Dialect-portable unsigned-64 primitives over signed BIGINT:
-    (xor, ushr, wrapping-mul-by-constant).
-
-    Spark BIGINT ``*`` wraps silently (ANSI off); DuckDB raises — so for
-    DuckDB the 64x64 product is decomposed via 128-bit HUGEINT with the
-    constant split in 32-bit limbs (no intermediate exceeds 2^97):
-    ``u*c mod 2^64 = (u*c_lo + (u mod 2^32)*c_hi*2^32) mod 2^64``.
-    """
-
-    def ushr(a: str, n: int) -> str:
-        if dialect == "spark":
-            return f"shiftrightunsigned({a}, {n})"
-        # DuckDB >> on BIGINT is arithmetic; mask the smeared sign bits.
-        mask = (1 << (64 - n)) - 1
-        return f"(({a} >> {n}) & {mask})"
-
-    def xor(a: str, b: str) -> str:
-        return f"({a} ^ {b})" if dialect == "spark" else f"xor({a}, {b})"
-
-    def mul(a: str, c: int) -> str:
-        if dialect == "spark":
-            return f"({a} * {to_i64(c)})"
-        c_lo, c_hi = c & 0xFFFFFFFF, (c >> 32) & 0xFFFFFFFF
-        u = (
-            f"(CAST({a} AS HUGEINT) + CASE WHEN ({a}) < 0"
-            f" THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END)"
-        )
-        p = (
-            f"(({u} * {c_lo} + ({u} % 4294967296) * {c_hi} * 4294967296)"
-            f" % 18446744073709551616::HUGEINT)"
-        )
-        return (
-            f"CAST({p} - CASE WHEN {p} >= 9223372036854775808::HUGEINT"
-            f" THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END AS BIGINT)"
-        )
-
-    return xor, ushr, mul
-
-
-def splitmix64_sql(x: str, dialect: str) -> str:
+def splitmix64_sql(x: str, d: Dialect) -> str:
     """splitmix64 as one nested SQL expression (small inputs only — for
     long chains use :func:`p_splitmix64`)."""
-    xor, ushr, mul = sql_ops(dialect)
     e = f"({x})"
-    e = xor(e, ushr(e, 30))
-    e = mul(e, 0xBF58476D1CE4E5B9)
-    e = xor(e, ushr(e, 27))
-    e = mul(e, 0x94D049BB133111EB)
-    e = xor(e, ushr(e, 31))
+    e = d.xor(e, d.ushr(e, 30))
+    e = d.mul_u64(e, 0xBF58476D1CE4E5B9)
+    e = d.xor(e, d.ushr(e, 27))
+    e = d.mul_u64(e, 0x94D049BB133111EB)
+    e = d.xor(e, d.ushr(e, 31))
     return e
 
 
-def p_splitmix64(p, x_col: str, dialect: str) -> str:
+def p_splitmix64(p, x_col: str, d: Dialect) -> str:
     """splitmix64 as bound program steps (linear SQL text; see
     sqlgen.Program)."""
-    return p_splitmix64_multi(p, [x_col], dialect)[0]
+    return p_splitmix64_multi(p, [x_col], d)[0]
 
 
-def p_splitmix64_multi(p, x_cols: list[str], dialect: str) -> list[str]:
+def p_splitmix64_multi(p, x_cols: list[str], d: Dialect) -> list[str]:
     """splitmix64 over SEVERAL inputs in lockstep: all lanes advance one
     mixing step per CTE level, so an n-lane family costs the same 5 levels
     as one chain. Chain DEPTH (not width) is what Spark's analyzer and
     whole-stage codegen pay for — the 8-hash minhash program dropped from
     ~51 to ~17 levels this way (cold plan seconds, same values)."""
-    xor, ushr, mul = sql_ops(dialect)
-    es = p.let_many([xor(x, ushr(x, 30)) for x in x_cols])
-    es = p.let_many([mul(e, 0xBF58476D1CE4E5B9) for e in es])
-    es = p.let_many([xor(e, ushr(e, 27)) for e in es])
-    es = p.let_many([mul(e, 0x94D049BB133111EB) for e in es])
-    return p.let_many([xor(e, ushr(e, 31)) for e in es])
+    es = p.let_many([d.xor(x, d.ushr(x, 30)) for x in x_cols])
+    es = p.let_many([d.mul_u64(e, 0xBF58476D1CE4E5B9) for e in es])
+    es = p.let_many([d.xor(e, d.ushr(e, 27)) for e in es])
+    es = p.let_many([d.mul_u64(e, 0x94D049BB133111EB) for e in es])
+    return p.let_many([d.xor(e, d.ushr(e, 31)) for e in es])
 
 
-def p_fnv1a_chars(p, text_col: str, start_col: str, k: int, dialect: str) -> str:
+def p_fnv1a_chars(p, text_col: str, start_col: str, k: int, d: Dialect) -> str:
     """FNV-1a-64 over the ``k`` codepoints of ``text_col`` starting at
     1-based position ``start_col`` — bound program steps. Matches
     pipeline.dedup.shingle_hashes (codepoint variant)."""
-    xor, _, mul = sql_ops(dialect)
     h = str(to_i64(0xCBF29CE484222325))
     for j in range(k):
         cp = p.let(f"ascii(substr({text_col}, {start_col} + {j}, 1))")
-        h = p.let(mul(f"({xor(h, cp)})", 0x00000100000001B3))
+        h = p.let(d.mul_u64(f"({d.xor(h, cp)})", 0x00000100000001B3))
     return h
 
 
-def partition_of_sql(x: str, dialect: str) -> str:
+def partition_of_sql(x: str, d: Dialect) -> str:
     """``splitmix64(x) % 1024`` as SQL; the low 10 bits via mask (values are
     uniformly mixed so mask == modulo for a power of two)."""
-    return f"({splitmix64_sql(x, dialect)} & {N_PARTITIONS - 1})"
+    return f"({splitmix64_sql(x, d)} & {N_PARTITIONS - 1})"

@@ -11,16 +11,29 @@ template over a tiny op vocabulary and render it for two dialects:
 Because both engines evaluate the *same* integer expression tree, the oracle
 comparison is bit-exact — no transcendental-function ULP risk.
 
-Dialect deltas handled here:
-  - XOR:   Spark ``(a ^ b)``; DuckDB ``xor(a, b)`` (``^`` is POW in DuckDB!)
-  - SHL/R: Spark ``shiftleft/shiftright``; DuckDB ``<< >>``
-  - floor: both return different types → always ``CAST(floor(x) AS BIGINT)``
+:class:`Dialect` is the one place that spells an operator per engine; the
+generators here, in functions/hashing.py and in queries.py only call it.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
+
+def to_i64(c: int) -> int:
+    """Unsigned-64 constant as its signed two's-complement literal."""
+    return c - (1 << 64) if c >= (1 << 63) else c
+
 
 class Dialect:
+    """Per-engine spelling of each SQL operator the generators use.
+
+    Deltas: XOR is ``^`` in Spark but POW in DuckDB (``xor(a, b)`` there);
+    shifts are functions in Spark and operators in DuckDB; Spark BIGINT
+    ``*`` wraps (ANSI off) where DuckDB's raises; floor returns different
+    types, so it is always cast to BIGINT; DuckDB reads bare decimals as
+    DECIMAL; Spark's parser unescapes backslashes in string literals."""
+
     def __init__(self, name: str):
         assert name in ("spark", "duckdb")
         self.name = name
@@ -39,6 +52,36 @@ class Dialect:
             f"shiftright({a}, {n})" if self.name == "spark" else f"({a} >> {n})"
         )
 
+    def ushr(self, a: str, n: int) -> str:
+        """Logical shift right of a BIGINT's unsigned-64 bit pattern."""
+        if self.name == "spark":
+            return f"shiftrightunsigned({a}, {n})"
+        # DuckDB >> on BIGINT is arithmetic; mask the smeared sign bits.
+        return f"(({a} >> {n}) & {(1 << (64 - n)) - 1})"
+
+    def mul_u64(self, a: str, c: int) -> str:
+        """``a * c mod 2^64`` over signed BIGINT for an unsigned-64 constant.
+
+        DuckDB raises on BIGINT overflow, so its 64x64 product goes through
+        128-bit HUGEINT with the constant split in 32-bit limbs (no
+        intermediate exceeds 2^97):
+        ``u*c mod 2^64 = (u*c_lo + (u mod 2^32)*c_hi*2^32) mod 2^64``."""
+        if self.name == "spark":
+            return f"({a} * {to_i64(c)})"
+        c_lo, c_hi = c & 0xFFFFFFFF, (c >> 32) & 0xFFFFFFFF
+        u = (
+            f"(CAST({a} AS HUGEINT) + CASE WHEN ({a}) < 0"
+            f" THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END)"
+        )
+        p = (
+            f"(({u} * {c_lo} + ({u} % 4294967296) * {c_hi} * 4294967296)"
+            f" % 18446744073709551616::HUGEINT)"
+        )
+        return (
+            f"CAST({p} - CASE WHEN {p} >= 9223372036854775808::HUGEINT"
+            f" THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END AS BIGINT)"
+        )
+
     def band(self, a: str, b: int | str) -> str:
         return f"({a} & {b})"
 
@@ -47,6 +90,59 @@ class Dialect:
 
     def floor_long(self, x: str) -> str:
         return f"CAST(floor({x}) AS BIGINT)"
+
+    def doubles(self, s: str) -> str:
+        """``s`` with its Spark ``d``-suffixed DOUBLE literals cast for
+        DuckDB, which reads a bare decimal as DECIMAL."""
+        if self.name == "duckdb":
+            return (
+                s.replace("180.0d", "180.0::DOUBLE")
+                .replace("360.0d", "360.0::DOUBLE")
+                .replace("90.0d", "90.0::DOUBLE")
+                .replace("0.0d", "0.0::DOUBLE")
+                .replace("0.9999999999999999d", "0.9999999999999999::DOUBLE")
+            )
+        return s
+
+    def epoch_us(self, ts: str) -> str:
+        """Microseconds since the epoch of a timestamp column."""
+        if self.name == "spark":
+            return f"unix_micros(CAST({ts} AS TIMESTAMP))"
+        return f"epoch_us({ts})"
+
+    def weekday(self, ts: str) -> str:
+        """Weekday of a timestamp, 0=Monday … 6=Sunday."""
+        if self.name == "spark":
+            return f"weekday(CAST({ts} AS TIMESTAMP))"
+        # DuckDB's isodow is 1=Monday … 7=Sunday
+        return f"(isodow(CAST({ts} AS TIMESTAMP)) - 1)"
+
+    def _regex(self, pattern: str) -> str:
+        """A regular expression as a SQL string literal."""
+        if self.name == "spark":
+            pattern = pattern.replace("\\", "\\\\")
+        return f"'{pattern}'"
+
+    def regexp_strip(self, text: str, pattern: str) -> str:
+        """``text`` with every match of ``pattern`` removed."""
+        flags = "" if self.name == "spark" else ", 'g'"
+        return f"regexp_replace({text}, {self._regex(pattern)}, ''{flags})"
+
+    def split_count(self, text: str, pattern: str) -> str:
+        """Number of pieces of ``text`` split on ``pattern``."""
+        if self.name == "spark":
+            return f"size(split({text}, {self._regex(pattern)}))"
+        return f"len(string_split_regex({text}, {self._regex(pattern)}))"
+
+    def explode_list(self, table: str, key: str, list_col: str,
+                     value: Callable[[str], str]) -> str:
+        """One row ``(key, pos, v)`` per element of ``list_col``;
+        ``value(e)`` renders ``v`` from the element ``e``."""
+        if self.name == "spark":
+            return (f"SELECT {key}, CAST(pos AS INT) AS pos, {value('v')} AS v "
+                    f"FROM {table} LATERAL VIEW posexplode({list_col}) t AS pos, v")
+        return (f"SELECT {key}, CAST(generate_subscripts({list_col}, 1) AS INT)"
+                f" AS pos, {value(f'unnest({list_col})')} AS v FROM {table}")
 
 
 SPARK = Dialect("spark")
@@ -166,22 +262,17 @@ def p_geohash_int(p: Program, d: Dialect, lon: str, lat: str, precision: int) ->
     (libs/routers_shard/src/strategy/geohash.rs:88-137).
 
     lon occupies the even bit positions counting from the TOP of the
-    5c-bit word. If the total is even, lat sits at bit 0; if odd, lon has
-    one extra bit at both top and bottom, so the value is
-    interleave(lon >> 1, lat) << 1 | (lon & 1)."""
+    5c-bit word. If the total is even, lat sits at bit 0; if odd, lon
+    does, so the value is spread(lon) | spread(lat) << 1."""
     total = 5 * precision
     lon_bits = (total + 1) // 2
     lat_bits = total // 2
     xi, yi = p.let_many(
         [grid_index(d, lon_frac(lon), lon_bits), grid_index(d, lat_frac(lat), lat_bits)]
     )
-    if total % 2 == 0:
-        sx, sy = p_spread_bits_multi(p, d, [xi, yi], lon_bits)
-        return p.let(d.bor(sy, d.shl(f"({sx})", 1)))
-    xhi = p.let(d.shr(xi, 1))
-    sx, sy = p_spread_bits_multi(p, d, [xhi, yi], lat_bits)
-    hi = p.let(d.bor(sx, d.shl(f"({sy})", 1)))
-    return p.let(d.bor(d.shl(hi, 1), d.band(xi, 1)))
+    sx, sy = p_spread_bits_multi(p, d, [xi, yi], lon_bits)
+    low, high = (sy, sx) if total % 2 == 0 else (sx, sy)
+    return p.let(d.bor(low, d.shl(f"({high})", 1)))
 
 
 _GEOHASH_B32 = "0123456789bcdefghjkmnpqrstuvwxyz"
@@ -209,23 +300,9 @@ def lat_frac(lat: str) -> str:
     return f"least(greatest((({lat}) + 90.0d) / 180.0d, 0.0d), 0.9999999999999999d)"
 
 
-def _fix_double_suffix(d: Dialect, s: str) -> str:
-    # Spark SQL needs the 'd' suffix to force DOUBLE literals inside expr;
-    # DuckDB treats bare decimals as DECIMAL which changes arithmetic — cast.
-    if d.name == "duckdb":
-        return (
-            s.replace("180.0d", "180.0::DOUBLE")
-            .replace("360.0d", "360.0::DOUBLE")
-            .replace("90.0d", "90.0::DOUBLE")
-            .replace("0.0d", "0.0::DOUBLE")
-            .replace("0.9999999999999999d", "0.9999999999999999::DOUBLE")
-        )
-    return s
-
-
 def grid_index(d: Dialect, frac: str, bits: int) -> str:
     """``floor(frac * 2^bits)`` as BIGINT — the binary-subdivision cell index."""
-    return d.floor_long(f"({_fix_double_suffix(d, frac)}) * {1 << bits}")
+    return d.floor_long(f"({d.doubles(frac)}) * {1 << bits}")
 
 
 def slippy_xy_expr(d: Dialect, lon: str, lat: str, zoom: int) -> tuple[str, str]:
@@ -233,7 +310,7 @@ def slippy_xy_expr(d: Dialect, lon: str, lat: str, zoom: int) -> tuple[str, str]
     projection (libs/routers_geo/src/project.rs:49-71). Note the reference
     multiplies by the literal 0.0174533 (not pi/180); reproduced verbatim."""
     n = 1 << zoom
-    x = d.floor_long(_fix_double_suffix(d, f"{n} * ((({lon}) + 180.0d) / 360.0d)"))
+    x = d.floor_long(d.doubles(f"{n} * ((({lon}) + 180.0d) / 360.0d)"))
     rad = f"(({lat}) * 0.0174533)"
     y = d.floor_long(
         f"{n} * (1.0 - ln(tan({rad}) + 1.0 / cos({rad})) / pi()) / 2.0"

@@ -9,6 +9,17 @@ sorted by name. So every computed column is aliased identically on both
 sides, all integer outputs are BIGINT, and geo inputs are *derived* from
 integer keys with pure IEEE-double arithmetic (bit-identical across engines).
 
+A SQL-gated query is one of two kinds:
+
+  - shared SQL (``@shared_sql``): one generator ``gen(d: Dialect)``; DuckDB
+    runs ``gen(DUCKDB)`` as the oracle and Spark runs ``gen(SPARK)``. Every
+    per-engine spelling comes from ``sqlgen.Dialect``.
+  - engine (``@engine_query``): a Spark builder that runs the engine
+    operator, registered together with its oracle generator ``gen()``,
+    which renders DuckDB text only.
+
+The rows-only queries (``@nosql_query``) have no oracle text.
+
 The geospatial operators run on synthetic points derived deterministically
 from ``events`` (the corpus stand-in): the engine's real input schema is the
 image+caption table (see routers_spark/fixtures), but the driver's oracle
@@ -18,12 +29,13 @@ gate runs on these shared tables.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
 from routers_spark.functions import hashing, sqlgen
 from routers_spark.functions.geo import bearing_deg_sql, haversine_m_sql
-from routers_spark.functions.hashing import partition_of_sql
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -54,8 +66,7 @@ def _views_token(sf_dir: str) -> tuple:
     return (sf_dir, tuple(st))
 
 
-def register_views(spark: SparkSession, sf_dir: str,
-                   tune_shuffle: bool = True) -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     # This runs under the CALLER's session (the driver uses a vanilla one):
     # - ANSI mode (Spark 4 default ON) makes BIGINT `*` raise on overflow,
     #   but the stable-hash kernels (splitmix/FNV) REQUIRE two's-complement
@@ -73,19 +84,16 @@ def register_views(spark: SparkSession, sf_dir: str,
     # re-registration is idempotent, skipping it is semantics-free.
     import os
 
-    token = (tune_shuffle, *_views_token(sf_dir))
+    token = _views_token(sf_dir)
     if getattr(spark, "_routers_spark_views_token", None) == token:
         return
 
     try:
         # a vanilla session keeps the 200 default: 200 tiny tasks per
         # aggregate at oracle scale is pure scheduling overhead. Size to the
-        # box. A session that DELIBERATELY configured 200 is
-        # indistinguishable from the default — pass ``tune_shuffle=False``
-        # to keep the helper's hands off session state (bench/tests size
-        # partitions in their own builders and are unaffected either way).
-        if tune_shuffle and \
-                spark.conf.get("spark.sql.shuffle.partitions") == "200":
+        # box (a session that deliberately set 200 is indistinguishable
+        # from the default and is resized too).
+        if spark.conf.get("spark.sql.shuffle.partitions") == "200":
             spark.conf.set("spark.sql.shuffle.partitions",
                            str(min(64, (os.cpu_count() or 4) * 2)))
     except Exception:  # noqa: BLE001
@@ -102,31 +110,48 @@ def register_views(spark: SparkSession, sf_dir: str,
     spark._routers_spark_views_token = token
 
 
-# Each entry: name -> sql(dialect_name) returning a full SELECT runnable on
-# both engines (dialect differences isolated behind sqlgen / tiny shims).
-_SQL_QUERIES: dict[str, Callable[[str], str]] = {}
+Builder = Callable[[SparkSession, str], DataFrame]
 
 
-def sql_query(name: str):
-    def deco(fn):
-        _SQL_QUERIES[name] = fn
-        return fn
+class SqlQuery(NamedTuple):
+    """A hash-gated query: ``gen`` renders its DuckDB oracle, ``build`` is
+    its Spark side (None for a shared-SQL query, which Spark runs as
+    ``gen(SPARK)``)."""
+
+    gen: Callable[..., str]
+    build: Builder | None
+
+
+_SQL_QUERIES: dict[str, SqlQuery] = {}
+
+
+def shared_sql(name: str):
+    """Register a shared-SQL query: ``gen(d: Dialect)`` renders the same
+    program for both engines."""
+    def deco(gen: Callable[[sqlgen.Dialect], str]):
+        _SQL_QUERIES[name] = SqlQuery(gen, None)
+        return gen
 
     return deco
 
 
-def _d(dialect: str) -> sqlgen.Dialect:
-    return sqlgen.SPARK if dialect == "spark" else sqlgen.DUCKDB
+def engine_query(name: str, oracle: Callable[[], str]):
+    """Register an engine query: the decorated Spark builder runs the
+    engine operator, and ``oracle()`` renders its DuckDB-only text."""
+    def deco(build: Builder):
+        _SQL_QUERIES[name] = SqlQuery(oracle, build)
+        return build
+
+    return deco
 
 
 # ---------------------------------------------------------------- geospatial
 
 
-@sql_query("cell_encode_geohash")
-def _q_geohash(dialect: str) -> str:
+@shared_sql("cell_encode_geohash")
+def _q_geohash(d: sqlgen.Dialect) -> str:
     """P2 geohash encode (strategy/geohash.rs:88-137) at precision 8 and the
     shard/geo-routing precision 4 (event.rs:245-252)."""
-    d = _d(dialect)
     p = sqlgen.Program("SELECT event_id FROM events", ["event_id"])
     gh8 = sqlgen.p_geohash_str(p, d, EVENT_LON, EVENT_LAT, 8)
     gh4 = sqlgen.p_geohash_str(p, d, EVENT_LON, EVENT_LAT, 4)
@@ -137,10 +162,9 @@ def _q_geohash(dialect: str) -> str:
     ])
 
 
-@sql_query("cell_encode_quadkey")
-def _q_quadkey(dialect: str) -> str:
+@shared_sql("cell_encode_quadkey")
+def _q_quadkey(d: sqlgen.Dialect) -> str:
     """P3 quadkey encode (strategy/quadtree.rs:88-123), depth 9 and 20."""
-    d = _d(dialect)
     p = sqlgen.Program("SELECT event_id FROM events", ["event_id"])
     qk9 = sqlgen.p_quadkey(p, d, EVENT_LON, EVENT_LAT, 9)
     qk20 = sqlgen.p_quadkey(p, d, EVENT_LON, EVENT_LAT, 20)
@@ -151,11 +175,10 @@ def _q_quadkey(dialect: str) -> str:
     ])
 
 
-@sql_query("tile_assign_slippy")
-def _q_tiles(dialect: str) -> str:
+@shared_sql("tile_assign_slippy")
+def _q_tiles(d: sqlgen.Dialect) -> str:
     """T1 slippy projection (project.rs:49-71) at z in {5,12,19} plus MVT
     in-tile offsets at z12 (extent 4096)."""
-    d = _d(dialect)
     cols = []
     for z in (5, 12, 19):
         x, y = sqlgen.slippy_xy_expr(d, EVENT_LON, EVENT_LAT, z)
@@ -172,11 +195,10 @@ def _q_tiles(dialect: str) -> str:
     return f"SELECT CAST(event_id AS BIGINT) AS event_id, {', '.join(cols)} FROM events"
 
 
-@sql_query("tile_hilbert_key")
-def _q_hilbert(dialect: str) -> str:
+@shared_sql("tile_hilbert_key")
+def _q_hilbert(d: sqlgen.Dialect) -> str:
     """T3 hilbert storage key of the z12 tile (fragment.rs:69-71) — the
     range-prunable sort key for tile scans (bigtable.rs:311-320 analog)."""
-    d = _d(dialect)
     x, y = sqlgen.slippy_xy_expr(d, EVENT_LON, EVENT_LAT, 12)
     src = (
         f"SELECT CAST(event_id AS BIGINT) AS event_id, {x} AS tx, {y} AS ty"
@@ -185,30 +207,47 @@ def _q_hilbert(dialect: str) -> str:
     return sqlgen.hilbert_xy2h_cte_sql(d, src, "tx", "ty", 12, ["event_id"])
 
 
-@sql_query("cell_encode_s2")
-def _q_s2(dialect: str) -> str:
+def _q_s2() -> str:
     """S2 cell-id encode of the event points (functions/s2.py): the
     H3/S2 leg of the cell-strategy family next to P2 geohash
     (strategy/geohash.rs:88-137) and P3 quadtree (strategy/quadtree.rs:
     88-123). Leaf (level-30) id plus the level-12 ancestor — the pair a
     shard/tile layer would key on. The oracle side is the generated
     integer/CASE CTE (sqlgen.s2_cellid_cte_sql); the Spark side runs the
-    JVM form (functions/s2_jvm.py, _s2_spark override), whose Hilbert fold
+    JVM form (functions/s2_jvm.py, _s2_spark), whose Hilbert fold
     is the tile key's Column of chunk lookups (functions/hilbert_jvm.py).
     tests/test_s2.py pins the numpy kernel, the Hilbert-curve properties,
     and the fixture's floor-boundary margins that make the float prefix
     of the pipeline cross-engine exact."""
-    d = _d(dialect)
     src = (f"SELECT CAST(event_id AS BIGINT) AS event_id,"
            f" {EVENT_LON} AS elon, {EVENT_LAT} AS elat FROM events")
-    return sqlgen.s2_cellid_cte_sql(d, src, "elon", "elat", ["event_id"])
+    return sqlgen.s2_cellid_cte_sql(sqlgen.DUCKDB, src, "elon", "elat",
+                                    ["event_id"])
 
 
-@sql_query("tile_pyramid_rollup")
-def _q_pyramid(dialect: str) -> str:
+@engine_query("cell_encode_s2", _q_s2)
+def _s2_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark side of cell_encode_s2: functions/s2_jvm.py, a few
+    projections whose Hilbert fold is one Column of in-expression chunk
+    lookups (functions/hilbert_jvm.hilbert_col) — no join, inside
+    whole-stage codegen, instead of the 60-projection CTE chain (which
+    Spark executes correctly but drops out of codegen on method size).
+    Bit-parity with the numpy kernel and the DuckDB oracle CTE is pinned
+    by tests/test_s2.py."""
+    from .functions.s2_jvm import with_s2_jvm
+
+    register_views(spark, sf_dir)
+    src = spark.sql(
+        f"SELECT CAST(event_id AS BIGINT) AS event_id,"
+        f" {EVENT_LON} AS elon, {EVENT_LAT} AS elat FROM events")
+    return (with_s2_jvm(src, "elon", "elat")
+            .select("event_id", "s2_face", "s2_id", "s2_id_l12"))
+
+
+@shared_sql("tile_pyramid_rollup")
+def _q_pyramid(d: sqlgen.Dialect) -> str:
     """T2 tile pyramid: point counts at z19 rolled up to the z12 ancestor
     (fragment.rs:35-67 parent/child arithmetic: x >> (19-12))."""
-    d = _d(dialect)
     x, y = sqlgen.slippy_xy_expr(d, EVENT_LON, EVENT_LAT, 19)
     px = d.shr(f"(CAST({x} AS BIGINT))", 7)
     py = d.shr(f"(CAST({y} AS BIGINT))", 7)
@@ -222,11 +261,11 @@ GROUP BY 1, 2
 """
 
 
-@sql_query("partition_assign")
-def _q_partition(dialect: str) -> str:
+@shared_sql("partition_assign")
+def _q_partition(d: sqlgen.Dialect) -> str:
     """R9 stable vehicle partitioning: splitmix64(id) % 1024 with the pinned
     reference hash contract (partition.rs:13-45)."""
-    p = partition_of_sql("user_id", dialect)
+    p = hashing.partition_of_sql("user_id", d)
     return f"""
 SELECT CAST({p} AS BIGINT) AS partition_id,
        CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -236,12 +275,11 @@ GROUP BY 1
 """
 
 
-@sql_query("spatial_cell_join")
-def _q_cell_join(dialect: str) -> str:
+def _q_cell_join() -> str:
     """X2/X5 cell equi-join: events joined to 'stations' (derived from
     supplier) on the shared geohash-5 cell — the DataFrame-level substitute
     for the R-tree box search (SURVEY §2.2 X2), with exact-distance refine."""
-    d = _d(dialect)
+    d = sqlgen.DUCKDB
     pe = sqlgen.Program("SELECT event_id FROM events", ["event_id"])
     ev_cell = sqlgen.p_geohash_str(pe, d, EVENT_LON, EVENT_LAT, 5)
     ev_sql = pe.render([
@@ -264,6 +302,45 @@ SELECT ev.event_id AS event_id,
        round({dist}, 3) AS dist_m
 FROM ev JOIN st ON ev.cell = st.cell
 """
+
+
+@engine_query("spatial_cell_join", _q_cell_join)
+def _spatial_cell_join_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark side of spatial_cell_join: the geohash-5 cells come from
+    the numpy kernel in Arrow passes (the unrolled SQL geohash is a ~50 KB
+    expression tree whose codegen alone costs seconds per plan); the join +
+    refine stay JVM-side. Values identical to the SQL form (the numpy
+    encoder is pinned against the reference subdivision port AND the SQL
+    program, tests/test_cells.py)."""
+    from routers_spark.functions.cells import geohash_str_np
+
+    register_views(spark, sf_dir)
+
+    def with_cell(prefix: str):
+        def f(batches):
+            for pdf in batches:
+                out = pdf.copy()
+                out["cell"] = geohash_str_np(
+                    pdf[f"{prefix}_lon"].values, pdf[f"{prefix}_lat"].values, 5)
+                yield out
+        return f
+
+    ev = spark.sql(
+        f"SELECT /*+ REPARTITION(32) */ CAST(event_id AS BIGINT) AS event_id,"
+        f" {EVENT_LON} AS ev_lon, {EVENT_LAT} AS ev_lat FROM events"
+    ).mapInPandas(with_cell("ev"),
+                  "event_id bigint, ev_lon double, ev_lat double, cell string")
+    st = spark.sql(
+        f"SELECT CAST(s_suppkey AS BIGINT) AS station_id,"
+        f" {SUPP_LON} AS st_lon, {SUPP_LAT} AS st_lat FROM supplier"
+    ).mapInPandas(with_cell("st"),
+                  "station_id bigint, st_lon double, st_lat double, cell string")
+    from pyspark.sql import functions as F
+
+    dist = haversine_m_sql("ev_lon", "ev_lat", "st_lon", "st_lat")
+    return (ev.join(st, "cell")
+            .select("event_id", "station_id",
+                    F.expr(f"round({dist}, 3)").alias("dist_m")))
 
 
 _KNN_CELL = "2.0e-2"  # degrees; lon & lat share the kNN grid step
@@ -345,8 +422,7 @@ FROM best
 """
 
 
-@sql_query("knn_nearest_station")
-def _q_knn(dialect: str) -> str:
+def _q_knn() -> str:
     """X3/X7 nearest-node snap: per event the nearest station by haversine,
     ties to the lowest id (graph.rs:358-362 min-by semantics).
 
@@ -364,6 +440,79 @@ def _q_knn(dialect: str) -> str:
             f"\n)\n{_KNN_FINAL}")
 
 
+@engine_query("knn_nearest_station", _q_knn)
+def _knn_spark_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark side of knn_nearest_station: Spark inlines (re-executes)
+    a CTE per reference, and ring_best is referenced twice (union + the
+    fallback anti-join) — materializing it once as a persisted view halves
+    the heavy work. Composed from the same CTE bodies as the oracle SQL
+    (no string surgery), so results are identical to the one-shot form.
+
+    One more engine-side swap: the per-event winner comes from a
+    ``min(struct(dist_m, s_suppkey))`` HASH AGGREGATE instead of the
+    oracle's ROW_NUMBER window — identical result (struct min is
+    lexicographic = the window's ORDER BY dist_m, s_suppkey), but the agg
+    partial-combines map-side and never sorts the ring join's output."""
+    register_views(spark, sf_dir)
+    # Engine-side ring radius 3 (7x7 cells; the oracle keeps the one-shot
+    # 3x3 form). Both radii are EXACT by the same argument: a ring winner
+    # is accepted only when its distance is <= the conservative
+    # metres-floor distance to the block boundary (here the 7x7 edge), so
+    # any station outside the block is strictly farther and the accepted
+    # winner is the global nearest; everything else takes the same full
+    # fallback scan, and dist_m is one shared expression on both paths.
+    # Why: at bench density the 3x3 guarantee clears only ~37% of events,
+    # leaving a ~63k-event x full-station fallback cross join; 7x7 clears
+    # ~98%, ~6x fewer haversine evaluations overall.
+    c = _knn_ctes(radius=3)
+
+    def with_ctes(names: list[str], final: str) -> str:
+        ctes = ",\n".join(f"{n} AS ({c[n]}\n)" for n in names)
+        return f"WITH {ctes}\n{final}"
+
+    # ev_g (events + guarantee bands) feeds the ring join AND the fallback
+    # anti-join, ring_best the union AND the fallback anti-join:
+    # materialize each ONCE as a temp view the later bodies read.
+    # bounded_persist (a local checkpoint), not persist — a persisted view
+    # referenced from two branches of one query trips a Spark analyzer
+    # internal error (DeduplicateRelations under InlineCTE on the cached
+    # subtree), and a persisted frame stays in the CacheManager until
+    # someone unpersists it; a checkpointed LogicalRDD dedups cleanly and
+    # is reclaimed once its last consumer is gone.
+    from routers_spark.functions.cache import bounded_persist
+
+    evg = bounded_persist(
+        spark.sql(with_ctes(["ev", "ev_g"], "SELECT * FROM ev_g")), "knn_ev_g")
+    evg.createOrReplaceTempView("ev_g")
+
+    ring_best_agg = """
+  SELECT event_id, mn.s AS s_suppkey, mn.d AS dist_m
+  FROM (SELECT event_id,
+               min(named_struct('d', dist_m, 's', s_suppkey)) AS mn,
+               min(g_m) AS g_m
+        FROM ring GROUP BY event_id) r
+  WHERE mn.d <= g_m"""
+    rb = bounded_persist(spark.sql(with_ctes(
+        ["st", "nbr", "ring"], ring_best_agg)), "knn_ring_best")
+    rb.createOrReplaceTempView("ring_best")
+    # the fallback still needs the cheap st CTE; ev_g / ring_best inside
+    # resolve to the materialized temp views
+    fallback_best_agg = """
+  SELECT event_id, mn.s AS s_suppkey, mn.d AS dist_m FROM (
+    SELECT event_id, min(named_struct('d', dist_m, 's', s_suppkey)) AS mn
+    FROM fallback GROUP BY event_id) f"""
+    out = spark.sql(with_ctes(
+        ["st", "fallback"],
+        "SELECT event_id, s_suppkey AS nearest_station, "
+        "round(dist_m, 3) AS dist_m FROM "
+        f"(SELECT * FROM ring_best UNION ALL {fallback_best_agg}) best"))
+    # the query is analysed, so it holds the views' plans itself: drop the
+    # views, so they neither outlive the call nor pin its checkpoints
+    spark.catalog.dropTempView("ev_g")
+    spark.catalog.dropTempView("ring_best")
+    return out
+
+
 # concave hexagon-ish ring in the synthetic bbox (lon, lat)
 _PIP_RING = [
     (-118.50, 33.75), (-118.30, 33.72), (-118.20, 33.90),
@@ -374,23 +523,25 @@ _PIP_RING2 = [  # axis-aligned box overlapping the hexagon's east side
 ]
 
 
-def _ray_cast_sql(ring: list[tuple], px: str, py: str) -> str:
-    """Crossing-number test unrolled over a fixed ring — boolean SQL expr."""
+def _ray_cast_sql(ring: list[tuple], px: str, py: str,
+                  lit: Callable[[float], str] = "{}e0".format) -> str:
+    """Crossing-number test unrolled over a fixed ring — boolean SQL expr,
+    the expression shape of functions/geo.py point_in_polygon_np. ``lit``
+    writes a ring coordinate as a DOUBLE literal."""
     terms = []
     n = len(ring)
     for i in range(n):
-        x1, y1 = ring[i]
-        x2, y2 = ring[(i + 1) % n]
+        x1, y1, x2, y2 = map(lit, (*ring[i], *ring[(i + 1) % n]))
         terms.append(
-            f"(CASE WHEN (({y1}e0 > {py}) != ({y2}e0 > {py})) AND "
-            f"({px} < {x1}e0 + ({py} - {y1}e0) * ({x2}e0 - {x1}e0) / ({y2}e0 - {y1}e0)) "
+            f"(CASE WHEN (({y1} > {py}) != ({y2} > {py})) AND "
+            f"({px} < {x1} + ({py} - {y1}) * ({x2} - {x1}) / ({y2} - {y1})) "
             f"THEN 1 ELSE 0 END)"
         )
     return f"((({' + '.join(terms)}) % 2) = 1)"
 
 
-@sql_query("zone_assign_pip")
-def _q_pip(dialect: str) -> str:
+@shared_sql("zone_assign_pip")
+def _q_pip(d: sqlgen.Dialect) -> str:
     """Vectorized ray-cast point-in-polygon zone assignment (tz basic
     backend semantics, storage/basic.rs:27-41) — crossing-number test
     unrolled over a fixed concave test ring."""
@@ -402,8 +553,7 @@ FROM (SELECT /*+ REPARTITION(32) */ event_id FROM events)
 """
 
 
-@sql_query("zone_bbox_lookup")
-def _q_zone_bbox(dialect: str) -> str:
+def _q_zone_bbox() -> str:
     """TimezoneService.GetFromBoundingBox, center resolution (the rtree /
     s2cell backends resolve a rect by its CENTER — rtree.rs:30-47,
     s2cell.rs:38-58): asymmetric boxes derived from the event points, the
@@ -423,6 +573,7 @@ FROM (SELECT /*+ REPARTITION(32) */ event_id FROM events)
 """
 
 
+@engine_query("zone_bbox_lookup", _q_zone_bbox)
 def _zone_bbox_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from routers_spark.zones.boxes import zones_for_boxes
 
@@ -440,8 +591,7 @@ def _zone_bbox_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", "zone_id")
 
 
-@sql_query("zone_assign_cells")
-def _q_zone_cells(dialect: str) -> str:
+def _q_zone_cells() -> str:
     """Cell-covering zone lookup (the S2-cell tz backend analog,
     storage/s2cell.rs:38-56): the Spark side answers through the quadtree
     cell index (zones/cells.py, interior-direct + boundary-refine); this
@@ -456,6 +606,7 @@ FROM (SELECT /*+ REPARTITION(32) */ event_id FROM events)
 """
 
 
+@engine_query("zone_assign_cells", _q_zone_cells)
 def _zone_cells_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark side of zone_assign_cells: the ENGINE cell-index backend over
     the synthetic event points (lon/lat derived with the same IEEE-double
@@ -472,8 +623,8 @@ def _zone_cells_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", "zone_id")
 
 
-@sql_query("bearing_heading")
-def _q_bearing(dialect: str) -> str:
+@shared_sql("bearing_heading")
+def _q_bearing(d: sqlgen.Dialect) -> str:
     """Haversine bearing between consecutive points of a user's event stream
     (map_path/entity.rs:149-168 headings; <1 m pairs → NULL)."""
     lon, lat = EVENT_LON, EVENT_LAT
@@ -489,18 +640,14 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 """
 
 
-@sql_query("gap_sessionize")
-def _q_gap(dialect: str) -> str:
+@shared_sql("gap_sessionize")
+def _q_gap(d: sqlgen.Dialect) -> str:
     """R8 gap/teleport cut: per-user monotonic stream broken where
     delta-t > 120 s (orchestrator.rs:626-668); session index = cumulative
     break count."""
-    # events.ts is TIMESTAMP_NTZ in Spark's parquet reader; both casts read
-    # the same stored micros (session TZ pinned to UTC).
-    ep = (
-        "epoch_us(ts)"
-        if dialect == "duckdb"
-        else "unix_micros(CAST(ts AS TIMESTAMP))"
-    )
+    # events.ts is TIMESTAMP_NTZ in Spark's parquet reader; both engines
+    # read the same stored micros (session TZ pinned to UTC).
+    ep = d.epoch_us("ts")
     return f"""
 WITH g AS (
   SELECT event_id, user_id, ts,
@@ -516,8 +663,8 @@ FROM g
 """
 
 
-@sql_query("dedup_stale_events")
-def _q_lane_gate(dialect: str) -> str:
+@shared_sql("dedup_stale_events")
+def _q_lane_gate(d: sqlgen.Dialect) -> str:
     """R7 lane gate / R11 revision merge: keep one row per (user, ts) by
     highest event_id (row_number desc semantics, event.rs:99-115)."""
     return """
@@ -544,12 +691,11 @@ _CAR_CHAIN = ("all", "vehicle", "motor_vehicle", "motorcar")
 _HGV_CHAIN = ("all", "vehicle", "motor_vehicle", "goods", "hgv")
 
 
-@sql_query("access_eval")
-def _q_access(dialect: str) -> str:
+def _q_access() -> str:
     """Runtime accessibility evaluation (mod.rs:200-231): synthetic access
     tags derived from event_id, verdicts for motorcar and hgv profiles.
     The Spark side runs the engine's Python evaluator
-    (routers_spark.graph.access.accessible) via the override below; this
+    (routers_spark.graph.access.accessible, _access_eval_spark); this
     SQL is an INDEPENDENT implementation of the same semantics
     (most-specific mode wins, later tag wins spec ties, directionality,
     default allow)."""
@@ -588,46 +734,7 @@ FROM events"""
             f"{verdict(_HGV_CHAIN, 'ok_hgv')} FROM tags")
 
 
-def _spatial_cell_join_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark override for spatial_cell_join: the geohash-5 cells come from
-    the numpy kernel in Arrow passes (the unrolled SQL geohash is a ~50 KB
-    expression tree whose codegen alone costs seconds per plan); the join +
-    refine stay JVM-side. Values identical to the SQL form (the numpy
-    encoder is pinned against the reference subdivision port AND the SQL
-    program, tests/test_cells.py)."""
-    import pandas as pd
-
-    from routers_spark.functions.cells import geohash_str_np
-
-    register_views(spark, sf_dir)
-
-    def with_cell(prefix: str):
-        def f(batches):
-            for pdf in batches:
-                out = pdf.copy()
-                out["cell"] = geohash_str_np(
-                    pdf[f"{prefix}_lon"].values, pdf[f"{prefix}_lat"].values, 5)
-                yield out
-        return f
-
-    ev = spark.sql(
-        f"SELECT /*+ REPARTITION(32) */ CAST(event_id AS BIGINT) AS event_id,"
-        f" {EVENT_LON} AS ev_lon, {EVENT_LAT} AS ev_lat FROM events"
-    ).mapInPandas(with_cell("ev"),
-                  "event_id bigint, ev_lon double, ev_lat double, cell string")
-    st = spark.sql(
-        f"SELECT CAST(s_suppkey AS BIGINT) AS station_id,"
-        f" {SUPP_LON} AS st_lon, {SUPP_LAT} AS st_lat FROM supplier"
-    ).mapInPandas(with_cell("st"),
-                  "station_id bigint, st_lon double, st_lat double, cell string")
-    from pyspark.sql import functions as F
-
-    dist = haversine_m_sql("ev_lon", "ev_lat", "st_lon", "st_lat")
-    return (ev.join(st, "cell")
-            .select("event_id", "station_id",
-                    F.expr(f"round({dist}, 3)").alias("dist_m")))
-
-
+@engine_query("access_eval", _q_access)
 def _access_eval_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark side of access_eval: the ENGINE evaluator (graph/access.py)
     over the same synthetic tags — proves the Python semantics against the
@@ -663,8 +770,8 @@ def _access_eval_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
                           "event_id bigint, ok_car bigint, ok_hgv bigint")
 
 
-@sql_query("dated_range_filter")
-def _q_dated(dialect: str) -> str:
+@shared_sql("dated_range_filter")
+def _q_dated(d: sqlgen.Dialect) -> str:
     """T6 dated range filter (range.rs:92-104): events on weekdays Mon-Fri
     within an inclusive UTC date range, plus the exclusive variant of the
     same range as a second flag — the tile-source time filter as plain
@@ -672,9 +779,9 @@ def _q_dated(dialect: str) -> str:
     from routers_spark.functions.dated import dated_range_sql
 
     inc = dated_range_sql("ts", "2024-01-08", "2024-01-21",
-                          [0, 1, 2, 3, 4], True, dialect)
+                          [0, 1, 2, 3, 4], True, d)
     exc = dated_range_sql("ts", "2024-01-08", "2024-01-21",
-                          [0, 1, 2, 3, 4], False, dialect)
+                          [0, 1, 2, 3, 4], False, d)
     return f"""
 SELECT CAST(event_id AS BIGINT) AS event_id,
        CAST(CASE WHEN {exc} THEN 1 ELSE 0 END AS BIGINT) AS in_exclusive
@@ -686,8 +793,8 @@ WHERE {inc}
 # ------------------------------------------------------- relational baseline
 
 
-@sql_query("pricing_summary")
-def _q_pricing(dialect: str) -> str:
+@shared_sql("pricing_summary")
+def _q_pricing(d: sqlgen.Dialect) -> str:
     """TPC-H Q1-shape aggregation — the relational-glue baseline showing
     partial-aggregate (map-side combine) shuffle shape."""
     # Sums are computed in integer cents so they are exact and independent
@@ -741,8 +848,7 @@ SELECT CAST(p_partkey AS BIGINT) AS way_id,
 FROM part"""
 
 
-@sql_query("maxspeed_parse")
-def _q_maxspeed_sql(dialect: str) -> str:
+def _q_maxspeed_sql() -> str:
     """OSM speed-limit tag parsing (NEW r4 — the largest reference surface
     earlier rounds scoped out, parsers/speed_limit/*.rs): the Spark side
     runs the REAL vectorized parser (functions/tags.py: key-section
@@ -818,6 +924,7 @@ SELECT way_id, key, CAST(lane AS INT) AS lane, CAST(kmh AS INT) AS kmh,
 FROM rows_out"""
 
 
+@engine_query("maxspeed_parse", _q_maxspeed_sql)
 def _maxspeed_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
@@ -854,8 +961,7 @@ SELECT CAST(o_orderkey AS BIGINT) AS way_id,
 FROM orders"""
 
 
-@sql_query("access_parse")
-def _q_access_parse_sql(dialect: str) -> str:
+def _q_access_parse_sql() -> str:
     """OSM access-tag parsing (late r4 — completes the tag family with
     maxspeed_parse; access_tag/access.rs:94-105 from_key_value): the
     Spark side runs the REAL vectorized parser (functions/tags.py
@@ -889,6 +995,7 @@ out_rows AS (
 SELECT way_id, mode, direction, value FROM out_rows"""
 
 
+@engine_query("access_parse", _q_access_parse_sql)
 def _access_parse_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from routers_spark.functions.tags import parse_access_tags
 
@@ -919,8 +1026,7 @@ SELECT CAST(o_orderkey AS BIGINT) AS id,
 FROM orders"""
 
 
-@sql_query("opening_hours_parse")
-def _q_opening_hours_sql(dialect: str) -> str:
+def _q_opening_hours_sql() -> str:
     """OSM opening-hours parsing (NEW r5, round-4 verdict Next #4 — the
     last big tag-parser surface, opening_hours.rs:1-426): the Spark side
     runs the REAL parser (functions/hours.py — 24/7 special, ';' rule
@@ -987,6 +1093,7 @@ SELECT id, CAST(ok AS INT) AS ok, CAST(rule AS INT) AS rule,
 FROM out_rows"""
 
 
+@engine_query("opening_hours_parse", _q_opening_hours_sql)
 def _opening_hours_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
@@ -1000,8 +1107,8 @@ def _opening_hours_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tr", "start_h", "start_m", "end_h", "end_m")
 
 
-@sql_query("dedup_exact_docs")
-def _q_dedup_exact(dialect: str) -> str:
+@shared_sql("dedup_exact_docs")
+def _q_dedup_exact(d: sqlgen.Dialect) -> str:
     """Exact dedup on the documents table: canonical doc id per identical
     text (hash-groupBy dedup; training-pipeline op)."""
     return """
@@ -1013,18 +1120,13 @@ GROUP BY text
 """
 
 
-@sql_query("text_quality")
-def _q_text_quality(dialect: str) -> str:
+@shared_sql("text_quality")
+def _q_text_quality(d: sqlgen.Dialect) -> str:
     """Text quality scoring: whitespace token count, alpha ratio, mean token
     length (training-pipeline op; pure string ops portable across engines)."""
-    if dialect == "duckdb":
-        n_tok = "len(string_split_regex(trim(text), '\\s+'))"
-        n_alpha = "length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))"
-        n_space = "length(regexp_replace(text, '[^ ]', '', 'g'))"
-    else:
-        n_tok = "size(split(trim(text), '\\\\s+'))"
-        n_alpha = "length(regexp_replace(text, '[^a-zA-Z]', ''))"
-        n_space = "length(regexp_replace(text, '[^ ]', ''))"
+    n_tok = d.split_count("trim(text)", r"\s+")
+    n_alpha = f"length({d.regexp_strip('text', '[^a-zA-Z]')})"
+    n_space = f"length({d.regexp_strip('text', '[^ ]')})"
     return f"""
 SELECT CAST(doc_id AS BIGINT) AS doc_id,
        CAST({n_tok} AS BIGINT) AS n_tokens,
@@ -1039,66 +1141,48 @@ WHERE length(text) > 0
 # -------------------------------------------------- training-data pipeline
 
 
-def _shingle_source(dialect: str, k: int = 5) -> str:
-    """Per-shingle rows (doc_id, i) over documents with len >= k — the
-    lateral-explode differs per dialect."""
-    if dialect == "duckdb":
-        # correlated generate_series is unsupported; unnest(range(...)) is
-        # the scalar-list equivalent (range end is exclusive)
-        return (
-            f"SELECT doc_id, text, "
-            f"CAST(unnest(range(1, length(text) - {k - 2})) AS INT) AS i "
-            f"FROM (SELECT doc_id, text FROM documents WHERE length(text) >= {k}) d"
-        )
-    # REPARTITION spreads the explode across cores (the small parquet scan
-    # is otherwise one task and the 20-step hash chain runs single-threaded)
-    return (
-        f"SELECT doc_id, text, CAST(i AS INT) AS i "
-        f"FROM (SELECT /*+ REPARTITION(32) */ doc_id, text FROM documents"
-        f" WHERE length(text) >= {k}) d "
-        f"LATERAL VIEW explode(sequence(1, length(text) - {k - 1})) g AS i"
-    )
+# Per-shingle rows (doc_id, text, i) over documents with len >= 5 (DuckDB:
+# correlated generate_series is unsupported; unnest(range(...)) is the
+# scalar-list equivalent, and its end is exclusive).
+_SHINGLE_ROWS = (
+    "SELECT doc_id, text, "
+    "CAST(unnest(range(1, length(text) - 3)) AS INT) AS i "
+    "FROM (SELECT doc_id, text FROM documents WHERE length(text) >= 5) d"
+)
 
 
 _I64_MSB = -9223372036854775808  # sign-flip constant: signed MIN == u64 MIN
 
 
-def _q_minhash(dialect: str) -> str:
+def _q_minhash() -> str:
     """MinHash signatures (8 hashes) over 5-codepoint shingles — the exact
     contract of pipeline.dedup.minhash_signature (FNV-1a codepoints +
     splitmix64 family). Unsigned MIN emulated via sign-flip XOR."""
-    from routers_spark.functions.hashing import p_fnv1a_chars, sql_ops, to_i64
     from routers_spark.pipeline.dedup import DEFAULT_N_HASHES, seed_of
 
-    xor, _, _ = sql_ops(dialect)
-    p = sqlgen.Program(_shingle_source(dialect), ["doc_id"])
-    h = p_fnv1a_chars(p, "text", "i", 5, dialect)
+    d = sqlgen.DUCKDB
+    p = sqlgen.Program(_SHINGLE_ROWS, ["doc_id"])
+    h = hashing.p_fnv1a_chars(p, "text", "i", 5, d)
     # all 8 hash-family lanes advance in LOCKSTEP (one CTE level per mixing
-    # step, not one chain per lane): ~17 levels instead of ~51 — the cold
-    # plan's analyzer+codegen cost tracks chain depth
+    # step, not one chain per lane): ~17 levels instead of ~51
     xs = p.let_many([
-        xor(h, str(to_i64(int(seed_of(s)))))
+        d.xor(h, str(hashing.to_i64(int(seed_of(s)))))
         for s in range(DEFAULT_N_HASHES)
     ])
-    ms = hashing.p_splitmix64_multi(p, xs, dialect)
-    flipped = p.let_many([xor(m, str(_I64_MSB)) for m in ms])
+    ms = hashing.p_splitmix64_multi(p, xs, d)
+    flipped = p.let_many([d.xor(m, str(_I64_MSB)) for m in ms])
     finals = ["CAST(doc_id AS BIGINT) AS doc_id"] + [
-        f"CAST({xor(f'MIN({f})', str(_I64_MSB))} AS BIGINT) AS mh{s}"
+        f"CAST({d.xor(f'MIN({f})', str(_I64_MSB))} AS BIGINT) AS mh{s}"
         for s, f in enumerate(flipped)
     ]
     return p.render(finals, group_by=["doc_id"])
 
 
-@sql_query("minhash_engine")
-def _q_minhash_engine(dialect: str) -> str:
-    """ENGINE-path MinHash: the Spark side runs pipeline.dedup's numpy
-    Arrow kernel (one narrow pass, the production shape — the SQL CTE twin
-    above is the oracle form, ~100x slower per doc); the oracle is the
-    identical signature contract."""
-    return _q_minhash(dialect)
-
-
+@engine_query("minhash_engine", _q_minhash)
 def _minhash_engine_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ENGINE-path MinHash: pipeline.dedup's numpy Arrow kernel (one narrow
+    pass, the production shape — the SQL CTE oracle is ~100x slower per
+    doc), gated by the identical signature contract."""
     from pyspark.sql import functions as F
 
     from routers_spark.pipeline.dedup import DEFAULT_N_HASHES, minhash_signatures
@@ -1114,23 +1198,19 @@ def _minhash_engine_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_simhash(dialect: str) -> str:
+def _q_simhash() -> str:
     """SimHash-64 per document: per-bit majority vote over splitmix-mixed
     shingle hashes — contract of pipeline.dedup.simhash64."""
-    from routers_spark.functions.hashing import p_fnv1a_chars
-
-    from routers_spark.functions.hashing import sql_ops
-
-    _, ushr, _ = sql_ops(dialect)
-    p = sqlgen.Program(_shingle_source(dialect), ["doc_id"])
-    h = p_fnv1a_chars(p, "text", "i", 5, dialect)
-    m = hashing.p_splitmix64(p, h, dialect)
+    d = sqlgen.DUCKDB
+    p = sqlgen.Program(_SHINGLE_ROWS, ["doc_id"])
+    h = hashing.p_fnv1a_chars(p, "text", "i", 5, d)
+    m = hashing.p_splitmix64(p, h, d)
     # pack 3 bit-counters per 64-bit SUM (20-bit lanes, docs < 1M shingles):
-    # 22 aggregates instead of 64 keeps the HashAggregate codegen-friendly.
+    # 22 aggregates instead of 64.
     agg_cols = []
     for g in range(0, 64, 3):
         lanes = [
-            f"(({ushr(m, j)} & 1) * {1 << (20 * k)})"
+            f"(({d.ushr(m, j)} & 1) * {1 << (20 * k)})"
             for k, j in enumerate(range(g, min(g + 3, 64)))
         ]
         agg_cols.append(f"SUM({' + '.join(lanes)}) AS s{g // 3}")
@@ -1141,7 +1221,7 @@ def _q_simhash(dialect: str) -> str:
     bit_terms = []
     for j in range(64):
         word, lane = j // 3, j % 3
-        cnt = f"(({ushr(f's{word}', 20 * lane)}) & 1048575)"
+        cnt = f"(({d.ushr(f's{word}', 20 * lane)}) & 1048575)"
         val = str(_I64_MSB) if j == 63 else str(1 << j)
         bit_terms.append(
             f"(CASE WHEN {cnt} * 2 > n_sh THEN CAST({val} AS BIGINT) ELSE 0 END)"
@@ -1154,24 +1234,20 @@ def _q_simhash(dialect: str) -> str:
     )
 
 
-@sql_query("simhash_dedup_pairs")
-def _q_simhash_dedup(dialect: str) -> str:
+def _q_simhash_dedup() -> str:
     """SimHash Hamming-ball dedup pairs: 4 × 16-bit bands, equi-join on
     (band, slice) — pigeonhole guarantees every pair within Hamming
     distance 3 shares a band — then exact bit_count(XOR) ≤ 3 verify. The
     Spark side runs the engine pipeline (pipeline.dedup.simhash_dedup_pairs,
     Arrow signature pass + JVM join); this SQL is the independent oracle."""
-    from routers_spark.functions.hashing import sql_ops
-
-    xor, ushr, _ = sql_ops(dialect)
-    inner = _q_simhash(dialect)
+    d = sqlgen.DUCKDB
     slices = " UNION ALL ".join(
         f"SELECT doc_id, simhash, {b} AS band, "
-        f"({ushr('simhash', b * 16)} & 65535) AS slc FROM sh"
+        f"({d.ushr('simhash', b * 16)} & 65535) AS slc FROM sh"
         for b in range(4))
-    ham = f"bit_count({xor('a.simhash', 'b.simhash')})"
+    ham = f"bit_count({d.xor('a.simhash', 'b.simhash')})"
     return f"""
-WITH sh AS ({inner}),
+WITH sh AS ({_q_simhash()}),
 banded AS ({slices}),
 pairs AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -1183,6 +1259,7 @@ SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= 3
 """
 
 
+@engine_query("simhash_dedup_pairs", _q_simhash_dedup)
 def _simhash_dedup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
@@ -1198,23 +1275,14 @@ def _simhash_dedup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@sql_query("embedding_topk_cosine")
-def _q_embed_topk(dialect: str) -> str:
+@shared_sql("embedding_topk_cosine")
+def _q_embed_topk(d: sqlgen.Dialect) -> str:
     """Brute-force cosine top-5 of every vector against the 8 query vectors
     (vec_id < 8). Dot/norms computed in SCALED INTEGERS (round(val*1e6)) so
     sums are exact and order-independent across engines."""
-    if dialect == "duckdb":
-        flat = (
-            "SELECT vec_id, CAST(generate_subscripts(embedding, 1) AS INT) AS pos, "
-            "CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000.0) AS BIGINT) AS v "
-            "FROM embeddings"
-        )
-    else:
-        flat = (
-            "SELECT vec_id, CAST(pos AS INT) AS pos, "
-            "CAST(round(CAST(v AS DOUBLE) * 1000000.0) AS BIGINT) AS v "
-            "FROM embeddings LATERAL VIEW posexplode(embedding) t AS pos, v"
-        )
+    flat = d.explode_list(
+        "embeddings", "vec_id", "embedding",
+        lambda v: f"CAST(round(CAST({v} AS DOUBLE) * 1000000.0) AS BIGINT)")
     return f"""
 WITH flat AS ({flat}),
 q AS (SELECT * FROM flat WHERE vec_id < 8),
@@ -1246,20 +1314,14 @@ FROM ranked WHERE rnk <= 5
 """
 
 
-@sql_query("token_counts")
-def _q_token_counts(dialect: str) -> str:
+def _q_token_counts() -> str:
     """Token counting (whitespace split + the BPE-ish pre-tokenizer regex):
     the Spark side is the engine operator (pipeline/text.py
-    with_token_counts); this oracle restates both counts per dialect."""
+    with_token_counts); this oracle restates both counts."""
     from routers_spark.pipeline.text import BPE_TOKEN_RE
 
-    if dialect == "spark":
-        bpe = BPE_TOKEN_RE.replace("\\", "\\\\")
-        ws_cnt = "size(split(trim(text), '\\\\s+'))"
-        bpe_cnt = f"size(regexp_extract_all(text, '{bpe}', 0))"
-    else:
-        ws_cnt = "len(string_split_regex(trim(text), '\\s+'))"
-        bpe_cnt = f"len(regexp_extract_all(text, '{BPE_TOKEN_RE}'))"
+    ws_cnt = sqlgen.DUCKDB.split_count("trim(text)", r"\s+")
+    bpe_cnt = f"len(regexp_extract_all(text, '{BPE_TOKEN_RE}'))"
     return f"""
 SELECT CAST(doc_id AS BIGINT) AS doc_id,
        CAST({ws_cnt} AS BIGINT) AS ws_tokens,
@@ -1268,6 +1330,7 @@ FROM documents
 """
 
 
+@engine_query("token_counts", _q_token_counts)
 def _token_counts_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
@@ -1282,30 +1345,18 @@ def _token_counts_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bpe_tokens").cast("long").alias("bpe_tokens"))
 
 
-@sql_query("lang_id_stopwords")
-def _q_lang(dialect: str) -> str:
+@shared_sql("lang_id_stopwords")
+def _q_lang(d: sqlgen.Dialect) -> str:
     """Language-ID heuristic: per-language stopword mass via regex replace
     (char-count delta — RE2-compatible, no lookahead), argmax with
     alphabetical tie-break. The engine's token-based twin is
     pipeline.text.with_lang_id; this is its SQL-expressible scoring."""
     from routers_spark.pipeline.text import STOPWORDS
 
-    # one whitespace-class literal per dialect: Spark's parser unescapes
-    # string literals (needs \\s in SQL text), DuckDB does not (needs \s)
-    ws = "\\\\s" if dialect == "spark" else "\\s"
-
     def hits(words: list[str]) -> str:
-        pat = "|".join(words)
-        full = f"(^|{ws})({pat})({ws}|$)"
-        if dialect == "duckdb":
-            return (
-                f"(length(lower(text)) - length(regexp_replace(lower(text),"
-                f" '{full}', '', 'g')))"
-            )
-        return (
-            f"(length(lower(text)) - length(regexp_replace(lower(text),"
-            f" '{full}', '')))"
-        )
+        full = rf"(^|\s)({'|'.join(words)})(\s|$)"
+        return (f"(length(lower(text)) -"
+                f" length({d.regexp_strip('lower(text)', full)}))")
 
     cols = {lang: hits(ws) for lang, ws in sorted(STOPWORDS.items())}
     hit_cols = ", ".join(f"{e} AS hits_{lang}" for lang, e in cols.items())
@@ -1347,7 +1398,7 @@ def _wt_case(hw: str) -> str:
     return f"(CASE {hw} {whens} ELSE 100 END)"
 
 
-def _q_way_edges(dialect: str) -> str:
+def _q_way_edges() -> str:
     """S2/S3: way→edge expansion with the highway whitelist filter and the
     bidirectional reversed twin (graph.rs:226-252), over a ways table
     derived from lineitem (way = order, refs = parts by line number) —
@@ -1381,19 +1432,6 @@ UNION ALL
 SELECT edge_id, b AS src, a AS dst, weight, FALSE AS fwd
 FROM edges WHERE NOT oneway
 """
-
-
-@sql_query("osm_pbf_way_expansion")
-def _q_pbf_way_edges(dialect: str) -> str:
-    """S1 OSM PBF source, ORACLE-GATED: the _q_way_edges corpus is
-    ENCODED into a spec-compliant OSM PBF file (io/osm_pbf.py writer:
-    zlib blobs, stringtable tags, delta-coded refs), then DECODED by the
-    distributed blob reader and expanded by the S2/S3 relational pipeline.
-    Way/node ids are integers, so the PBF cycle is exact and the oracle is
-    the SAME windowed SQL as _q_way_edges — a hash mismatch anywhere
-    in framing, varint/zigzag, stringtable, or tag handling fails the
-    gate."""
-    return _q_way_edges(dialect)
 
 
 def _pbf_fixture_path(sf_dir: str) -> str:
@@ -1448,9 +1486,17 @@ def _pbf_fixture_valid(path: str) -> bool:
         return False
 
 
+@engine_query("osm_pbf_way_expansion", _q_way_edges)
 def _pbf_way_edges_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S1 OSM PBF source, ORACLE-GATED: the _q_way_edges corpus is
+    ENCODED into a spec-compliant OSM PBF file (io/osm_pbf.py writer:
+    zlib blobs, stringtable tags, delta-coded refs), then DECODED by the
+    distributed blob reader and expanded by the S2/S3 relational pipeline.
+    Way/node ids are integers, so the PBF cycle is exact and the oracle is
+    the SAME windowed SQL as _q_way_edges — a hash mismatch anywhere
+    in framing, varint/zigzag, stringtable, or tag handling fails the
+    gate."""
     import os
-    import tempfile
 
     import numpy as np
     import pandas as pd
@@ -1507,8 +1553,7 @@ def _pbf_way_edges_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@sql_query("tile_range_scan")
-def _q_tile_range(dialect: str) -> str:
+def _q_tile_range() -> str:
     """S8 range-pruned tile scan: hilbert keys of the z9 fragment (87,204)'s
     z12 descendants are one contiguous range [h<<6, (h+1)<<6) — the
     BigTable RowRange analog (bigtable.rs:311-320, range.rs:207-237). This
@@ -1517,7 +1562,7 @@ def _q_tile_range(dialect: str) -> str:
     same rows by tile prefix."""
     from routers_spark.tiling.pipeline import fragment_hilbert_range
 
-    d = _d(dialect)
+    d = sqlgen.DUCKDB
     lo, hi = fragment_hilbert_range(9, 87, 204, 12)
     x, y = sqlgen.slippy_xy_expr(d, EVENT_LON, EVENT_LAT, 12)
     src = (
@@ -1525,23 +1570,19 @@ def _q_tile_range(dialect: str) -> str:
         f" FROM events"
     )
     inner = sqlgen.hilbert_xy2h_cte_sql(d, src, "tx", "ty", 12, ["event_id"])
-    # Fence the filter from the 12-level CTE program: an optimizer that
-    # inlines CTEs (DuckDB; Catalyst does the same to projection chains)
-    # would substitute the whole per-level expression into the pushed-down
-    # predicate and blow up exponentially — the stored-column semantics
-    # (S8: hilbert is a physical sort key) are a materialization anyway.
-    if dialect == "duckdb":
-        return (
-            f"WITH keyed AS MATERIALIZED (\n{inner}\n)"
-            f" SELECT event_id, hilbert FROM keyed"
-            f" WHERE hilbert BETWEEN {lo} AND {hi}"
-        )
+    # Fence the filter from the 12-level CTE program: DuckDB inlines CTEs,
+    # and would substitute the whole per-level expression into the
+    # pushed-down predicate and blow up exponentially — the stored-column
+    # semantics (S8: hilbert is a physical sort key) are a materialization
+    # anyway.
     return (
-        f"SELECT event_id, hilbert FROM ({inner}) t"
+        f"WITH keyed AS MATERIALIZED (\n{inner}\n)"
+        f" SELECT event_id, hilbert FROM keyed"
         f" WHERE hilbert BETWEEN {lo} AND {hi}"
     )
 
 
+@engine_query("tile_range_scan", _q_tile_range)
 def _tile_range_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine side of tile_range_scan: hilbert keys from assign_tile_cells,
     and the z9 fragment (87, 204) selected by its z12 descendants' tile
@@ -1571,22 +1612,19 @@ def _tile_range_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GEO_ROUTE_HOT = 1000  # rows per gh4 cell beyond which the lane is salted
 
 
-@sql_query("geo_route_assign")
-def _q_geo_route(dialect: str) -> str:
+def _q_geo_route() -> str:
     """R10 geo routing of work: shard = geohash-4 of the point (the
     events.match.<hash> subject key, event.rs:245-252); cells holding more
     than the hot threshold are salted into 4 sub-lanes by splitmix64 of the
     event key (north-rule skew handling). Spark side = the engine's
     streaming/routing.py (numpy kernels in one Arrow pass + tiny broadcast
     count join)."""
-    from routers_spark.functions.hashing import splitmix64_sql
-
-    d = _d(dialect)
+    d = sqlgen.DUCKDB
     p = sqlgen.Program("SELECT event_id FROM events", ["event_id"])
     gh4 = sqlgen.p_geohash_str(p, d, EVENT_LON, EVENT_LAT, 4)
     inner = p.render([
         "CAST(event_id AS BIGINT) AS event_id", f"{gh4} AS shard"])
-    salt = f"({splitmix64_sql('l.event_id', dialect)} & 3)"
+    salt = f"({hashing.splitmix64_sql('l.event_id', d)} & 3)"
     return f"""
 WITH lanes AS ({inner}),
 counts AS (SELECT shard, COUNT(*) AS n_in_cell FROM lanes GROUP BY shard)
@@ -1597,6 +1635,7 @@ FROM lanes l JOIN counts c ON l.shard = c.shard
 """
 
 
+@engine_query("geo_route_assign", _q_geo_route)
 def _geo_route_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from routers_spark.streaming.routing import route_assignments
 
@@ -1608,8 +1647,7 @@ def _geo_route_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
                              salt_buckets=4)
 
 
-@sql_query("cell_count_rollup")
-def _q_cell_count_rollup(dialect: str) -> str:
+def _q_cell_count_rollup() -> str:
     """The streaming per-cell rollup's batch form (streaming/rollup.py):
     tumbling 1-minute event-time windows keyed by the geohash-5 cell.
     The Spark side runs the ENGINE operator (same code path the watermarked
@@ -1617,16 +1655,14 @@ def _q_cell_count_rollup(dialect: str) -> str:
     Spark's window() aligns tumbling windows to the epoch, which for one
     minute equals the minute truncation. Window bounds as epoch seconds
     (BIGINT) keep the comparison timestamp-format-free."""
-    d = _d(dialect)
     p = sqlgen.Program("SELECT event_id, ts FROM events", ["event_id", "ts"])
-    gh5 = sqlgen.p_geohash_str(p, d, EVENT_LON, EVENT_LAT, 5)
+    gh5 = sqlgen.p_geohash_str(p, sqlgen.DUCKDB, EVENT_LON, EVENT_LAT, 5)
     inner = p.render(["ts", f"{gh5} AS cell"])
-    epoch = (lambda x: f"CAST(CAST({x} AS TIMESTAMP) AS LONG)") \
-        if dialect == "spark" else (lambda x: f"CAST(epoch({x}) AS BIGINT)")
+    epoch = "CAST(epoch(date_trunc('minute', ts)) AS BIGINT)"
     return f"""
 WITH keyed AS ({inner})
-SELECT {epoch("date_trunc('minute', ts)")} AS window_start,
-       {epoch("date_trunc('minute', ts)")} + 60 AS window_end,
+SELECT {epoch} AS window_start,
+       {epoch} + 60 AS window_end,
        cell,
        CAST(COUNT(*) AS BIGINT) AS n
 FROM keyed
@@ -1634,6 +1670,7 @@ GROUP BY 1, 2, 3
 """
 
 
+@engine_query("cell_count_rollup", _q_cell_count_rollup)
 def _cell_count_rollup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
@@ -1651,26 +1688,22 @@ def _cell_count_rollup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cell", F.col("n").cast("long").alias("n"))
 
 
-@sql_query("phash_hamming_pairs")
-def _q_phash_hamming(dialect: str) -> str:
+def _q_phash_hamming() -> str:
     """Perceptual-hash Hamming-ball near-dup pairs: corpus = splitmix64 of
     doc_id as the 64-bit phash plus a 2-bit-flipped twin for every 10th doc;
     pairs within Hamming ≤ 3. The Spark side is the engine's banded
     pigeonhole equi-join (pipeline/multimodal.py phash_dedup_pairs); this
     oracle is the brute-force all-pairs restatement (equal by the
     max_hamming < bands guarantee)."""
-    from routers_spark.functions.hashing import splitmix64_sql
-
-    sm = splitmix64_sql("CAST(doc_id AS BIGINT)", dialect)
-    xor = (lambda a, b: f"({a} ^ {b})") if dialect == "spark" \
-        else (lambda a, b: f"xor({a}, {b})")
-    ham = f"bit_count({xor('a.phash', 'b.phash')})"
+    d = sqlgen.DUCKDB
+    sm = hashing.splitmix64_sql("CAST(doc_id AS BIGINT)", d)
+    ham = f"bit_count({d.xor('a.phash', 'b.phash')})"
     return f"""
 WITH c AS (
   SELECT CAST(doc_id AS BIGINT) AS pid, {sm} AS phash FROM documents
   UNION ALL
   SELECT CAST(doc_id + 10000000 AS BIGINT) AS pid,
-         {xor(f"({sm})", "5")} AS phash
+         {d.xor(f"({sm})", "5")} AS phash
   FROM documents WHERE doc_id % 10 = 0
 )
 SELECT a.pid AS id_a, b.pid AS id_b, CAST({ham} AS BIGINT) AS hamming
@@ -1679,6 +1712,7 @@ WHERE {ham} <= 3
 """
 
 
+@engine_query("phash_hamming_pairs", _q_phash_hamming)
 def _phash_hamming_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark side of phash_hamming_pairs: derive the identical corpus with
     the numpy splitmix kernel in one Arrow pass, then the engine's banded
@@ -1718,7 +1752,7 @@ def _phash_hamming_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (driver records a rows-only check; correctness is evidenced by the pytest
 # suite's brute-force/golden oracles instead — SURVEY.md §5)
 
-_NOSQL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+_NOSQL_QUERIES: dict[str, Builder] = {}
 
 
 def nosql_query(name: str):
@@ -1790,8 +1824,7 @@ SELECT CAST({trip} AS STRING) AS trip_id,
 FROM events"""
 
 
-@sql_query("map_match_exact")
-def _q_map_match_exact(dialect: str) -> str:
+def _q_map_match_exact() -> str:
     """§2.4 ORACLE-GATED map matching (round-3 verdict Next #1): the Spark
     side routes the corridor fixture through the REAL ``match_trips``
     facade (M1 candidate box search → M2/M3 emission → M10 trellis → M11
@@ -1901,6 +1934,7 @@ def _mme_run(spark: SparkSession, sf_dir: str,
     )
 
 
+@engine_query("map_match_exact", _q_map_match_exact)
 def _map_match_exact_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _mme_run(spark, sf_dir, "broadcast")
 
@@ -1929,8 +1963,9 @@ def _q_match_celljoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     return match_trips(points, nodes, edges, candidate_path="celljoin")
 
 
-@sql_query("map_match_exact_celljoin")
-def _q_map_match_exact_celljoin(dialect: str) -> str:
+@engine_query("map_match_exact_celljoin", _q_map_match_exact)
+def _map_match_exact_celljoin_spark(spark: SparkSession,
+                                    sf_dir: str) -> DataFrame:
     """The NO-BROADCAST scale path under the driver oracle (late r4): the
     SAME corridor closed form as map_match_exact, but the Spark side runs
     ``match_trips(candidate_path='celljoin')`` — distributed padded
@@ -1942,19 +1977,46 @@ def _q_map_match_exact_celljoin(dialect: str) -> str:
     per-element edge, 4-decimal lon/lat) through their respective
     candidate paths, so the interpolated variant that lost its registry
     slot in r4 is driver-gated again without spending one."""
-    return _q_map_match_exact(dialect)
-
-
-def _map_match_exact_celljoin_spark(spark: SparkSession,
-                                    sf_dir: str) -> DataFrame:
     return _mme_run(spark, sf_dir, "celljoin")
 
 
 _RAS_Z = 19  # base zoom; levels halve to z-1, z-2
 
 
-@sql_query("raster_pyramid_tiles")
-def _q_raster_sql(dialect: str) -> str:
+def _pixel_rows(images: DataFrame, keys: list[str], data: str, x: str,
+                y: str) -> DataFrame:
+    """One row per pixel of the PNG in column ``data`` of each image row:
+    the row's ``keys`` columns, the pixel's ``x``/``y`` and its r, g, b."""
+    from collections.abc import Iterator
+
+    import numpy as np
+    import pandas as pd
+
+    from routers_spark.functions.raster import png_decode
+
+    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            parts = []
+            for row in pdf.itertuples(index=False):
+                arr = png_decode(bytes(getattr(row, data)))
+                h, w = arr.shape[:2]
+                yy, xx = np.meshgrid(np.arange(h), np.arange(w),
+                                     indexing="ij")
+                parts.append(pd.DataFrame({
+                    **{k: getattr(row, k) for k in keys},
+                    x: xx.ravel(), y: yy.ravel(),
+                    **{ch: arr[:, :, ci].ravel().astype(np.int64)
+                       for ci, ch in enumerate("rgb")}}))
+            if parts:
+                yield pd.concat(parts, ignore_index=True)
+
+    key_ddl = "".join(f"{k} {images.schema[k].dataType.simpleString()}, "
+                      for k in keys)
+    return images.mapInPandas(
+        explode, schema=f"{key_ddl}{x} int, {y} int, r long, g long, b long")
+
+
+def _q_raster_sql() -> str:
     """T7 raster pyramid, ORACLE-GATED pixel-exact through the PNG codec
     (upgraded from rows-only in r4): the Spark side encodes the integer
     pixel pattern as REAL PNG bytes, runs the REAL ``raster_pyramid``
@@ -2007,13 +2069,14 @@ SELECT ('img' || CAST(iid AS STRING)) AS image_id,
 FROM lvl"""
 
 
+@engine_query("raster_pyramid_tiles", _q_raster_sql)
 def _raster_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
 
-    from routers_spark.functions.raster import decode_image, png_encode
+    from routers_spark.functions.raster import png_encode
     from routers_spark.tiling.pipeline import raster_pyramid
 
     register_views(spark, sf_dir)
@@ -2041,35 +2104,8 @@ def _raster_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         gen, schema="image_id string, bytes binary, fmt string, "
                     "lon double, lat double")
     out = raster_pyramid(images, base_zoom=_RAS_Z, levels=2)
-
-    def explode_px(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {k: [] for k in ("image_id", "z", "x", "y", "level",
-                                    "tile_w", "tile_h", "px", "py",
-                                    "r", "g", "b")}
-            for row in pdf.itertuples(index=False):
-                arr = decode_image(bytes(row.tile_png), "png")
-                h, w = arr.shape[:2]
-                yy, xx = np.meshgrid(np.arange(h), np.arange(w),
-                                     indexing="ij")
-                m = h * w
-                cols["image_id"].append(np.full(m, row.image_id, object))
-                for k in ("z", "x", "y", "level", "tile_w", "tile_h"):
-                    cols[k].append(np.full(m, getattr(row, k)))
-                cols["px"].append(xx.ravel())
-                cols["py"].append(yy.ravel())
-                for ci, ch in enumerate("rgb"):
-                    cols[ch].append(arr[:, :, ci].ravel().astype(np.int64))
-            if not cols["px"]:
-                continue
-            yield pd.DataFrame({k: np.concatenate(v)
-                                for k, v in cols.items()})
-
-    return out.mapInPandas(
-        explode_px,
-        schema="image_id string, z int, x long, y long, level int, "
-               "tile_w int, tile_h int, px int, py int, "
-               "r long, g long, b long")
+    return _pixel_rows(out, ["image_id", "z", "x", "y", "level", "tile_w",
+                             "tile_h"], "tile_png", "px", "py")
 
 
 # Zonal-statistics gate fixture: a z=15 tile grid covering the tz test
@@ -2106,26 +2142,7 @@ _ZS_HEX = _zonal_ring_px(_PIP_RING)
 _ZS_BOX = _zonal_ring_px(_PIP_RING2)
 
 
-def _ray_cast_px_sql(ring_px: list[tuple], px: str, py: str) -> str:
-    """Crossing-number test over a projected ring — full-precision DOUBLE
-    literals (repr round-trips exactly), expression shape identical to
-    _ray_cast_sql / functions/geo.py point_in_polygon_np."""
-    terms = []
-    n = len(ring_px)
-    for i in range(n):
-        x1, y1 = ring_px[i]
-        x2, y2 = ring_px[(i + 1) % n]
-        d = "CAST({!r} AS DOUBLE)"
-        X1, Y1, X2, Y2 = d.format(x1), d.format(y1), d.format(x2), d.format(y2)
-        terms.append(
-            f"(CASE WHEN (({Y1} > {py}) != ({Y2} > {py})) AND "
-            f"({px} < {X1} + ({py} - {Y1}) * ({X2} - {X1}) / ({Y2} - {Y1})) "
-            f"THEN 1 ELSE 0 END)")
-    return f"((({' + '.join(terms)}) % 2) = 1)"
-
-
-@sql_query("raster_zonal_stats")
-def _q_zonal_sql(dialect: str) -> str:
+def _q_zonal_sql() -> str:
     """Raster zonal statistics, ORACLE-GATED integer-exact through the PNG
     codec: the Spark side encodes each tile's closed-form pixel pattern as
     REAL PNG bytes and runs the engine operator (tiling/zonal.py
@@ -2134,8 +2151,10 @@ def _q_zonal_sql(dialect: str) -> str:
     recomputes every pixel's value and first-match ray-cast zone directly
     in SQL and aggregates. Sums/mins/maxes are integers end-to-end — no
     rounding slack anywhere. DuckDB-only text; Spark runs the engine."""
-    hexc = _ray_cast_px_sql(_ZS_HEX, "px", "py")
-    boxc = _ray_cast_px_sql(_ZS_BOX, "px", "py")
+    # full-precision literals: repr round-trips the projected doubles
+    exact = "CAST({!r} AS DOUBLE)".format
+    hexc = _ray_cast_sql(_ZS_HEX, "px", "py", exact)
+    boxc = _ray_cast_sql(_ZS_BOX, "px", "py", exact)
     r = _ZS_PIXEL.format(c=0)
     g = _ZS_PIXEL.format(c=97)
     b = _ZS_PIXEL.format(c=194)
@@ -2179,6 +2198,7 @@ def _zonal_tile_np(tx: int, ty: int):
     return (((gx * 7 + gy * 13 + c * 97) * 2654435761) % 256).astype("uint8")
 
 
+@engine_query("raster_zonal_stats", _q_zonal_sql)
 def _zonal_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
@@ -2227,8 +2247,7 @@ SELECT CAST(event_id AS BIGINT) AS event_id,
 FROM events"""
 
 
-@sql_query("mvt_point_tiles")
-def _q_mvt_sql(dialect: str) -> str:
+def _q_mvt_sql() -> str:
     """T4/S9 MVT tiles, ORACLE-GATED through the WIRE FORMAT (upgraded
     from rows-only in r4, the same recipe as the PBF gate): the Spark side
     projects the fixture points, groups them into slippy tiles, ENCODES
@@ -2248,6 +2267,7 @@ SELECT CAST({_MVT_ZOOM} AS BIGINT) AS z, tx AS x, ty AS y,
 FROM pts"""
 
 
+@engine_query("mvt_point_tiles", _q_mvt_sql)
 def _mvt_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
@@ -2307,8 +2327,7 @@ def _mvt_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
                         for c in ("z", "x", "y", "n_points", "px", "py")])
 
 
-@sql_query("dbscan_clusters")
-def _q_dbscan_sql(dialect: str) -> str:
+def _q_dbscan_sql() -> str:
     """T5 DBSCAN, ORACLE-GATED (upgraded from rows-only in r4): the Spark
     side runs the REAL cell-partitioned engine (tiling/cluster.py
     cluster_points: geohash-5 Arrow cell pass, per-cell vectorized
@@ -2322,9 +2341,8 @@ def _q_dbscan_sql(dialect: str) -> str:
     size filter. Compared columns are counts and EXACT member-coordinate
     bboxes (no float aggregation — bit-reproducible across engines; the
     float centroid/hull stay in the engine output but out of the hash)."""
-    d = _d(dialect)
     p = sqlgen.Program("SELECT event_id FROM events", ["event_id"])
-    gh5 = sqlgen.p_geohash_str(p, d, EVENT_LON, EVENT_LAT, 5)
+    gh5 = sqlgen.p_geohash_str(p, sqlgen.DUCKDB, EVENT_LON, EVENT_LAT, 5)
     pts_sql = p.render([
         "CAST(event_id AS BIGINT) AS event_id",
         f"{EVENT_LON} AS lon", f"{EVENT_LAT} AS lat",
@@ -2333,9 +2351,8 @@ def _q_dbscan_sql(dialect: str) -> str:
     hv = haversine_m_sql("a.lon", "a.lat", "b.lon", "b.lat")
     # fence the geohash program from the join predicate (CTE-inlining
     # blowup — same fix as tile_range_scan)
-    mat = " MATERIALIZED" if dialect == "duckdb" else ""
     return f"""
-WITH RECURSIVE pts AS{mat} ({pts_sql}),
+WITH RECURSIVE pts AS MATERIALIZED ({pts_sql}),
 pairs AS (
   SELECT a.event_id AS u, b.event_id AS v
   FROM pts a JOIN pts b ON a.cell = b.cell AND a.event_id <> b.event_id
@@ -2363,6 +2380,7 @@ FROM clusters WHERE n_points >= 3
 """
 
 
+@engine_query("dbscan_clusters", _q_dbscan_sql)
 def _dbscan_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
@@ -2377,23 +2395,20 @@ def _dbscan_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         "min_lon", "min_lat", "max_lon", "max_lat")
 
 
-@sql_query("minhash_dedup_pipeline")
-def _q_minhash_dedup_sql(dialect: str) -> str:
+def _q_minhash_dedup_sql() -> str:
     """Full MinHash+LSH near-dup pipeline over the documents table:
     signatures → LSH band join (2 bands × 4 rows) → exact-Jaccard verify →
     canonical ids via connected components. The Spark side runs the ENGINE
     pipeline (pipeline.dedup.minhash_dedup: Arrow signature pass, banded
     equi-join, distributed min-label propagation to fixpoint); this oracle
     restates every stage in SQL — the signature/shingle programs are the
-    already-gated dual-dialect twins, candidates are the same band-equality
+    minhash_engine oracle's programs, candidates are the same band-equality
     pairs, Jaccard is int/int division in both engines (IEEE-identical),
     and the component labels come from a recursive transitive-closure CTE
     (min label per node == the engine's fixpoint label)."""
-    from routers_spark.functions.hashing import p_fnv1a_chars
-
-    sig_sql = _q_minhash(dialect)  # doc_id, mh0..mh7 — exact engine contract
-    p = sqlgen.Program(_shingle_source(dialect), ["doc_id"])
-    h = p_fnv1a_chars(p, "text", "i", 5, dialect)
+    sig_sql = _q_minhash()  # doc_id, mh0..mh7 — exact engine contract
+    p = sqlgen.Program(_SHINGLE_ROWS, ["doc_id"])
+    h = hashing.p_fnv1a_chars(p, "text", "i", 5, sqlgen.DUCKDB)
     sh_sql = p.render([f"doc_id AS doc_id, {h} AS h"], distinct=True)
     band0 = " AND ".join(f"a.mh{i} = b.mh{i}" for i in range(4))
     band1 = " AND ".join(f"a.mh{i} = b.mh{i}" for i in range(4, 8))
@@ -2432,6 +2447,7 @@ FROM documents d LEFT JOIN canon c ON c.doc_id = d.doc_id
 """
 
 
+@engine_query("minhash_dedup_pipeline", _q_minhash_dedup_sql)
 def _minhash_dedup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
@@ -2488,8 +2504,7 @@ def _image_corpus(spark: SparkSession):
         gen, schema="image_id string, bytes binary, fmt string")
 
 
-@sql_query("image_features")
-def _q_image_features_sql(dialect: str) -> str:
+def _q_image_features_sql() -> str:
     """Multimodal feature extraction, ORACLE-GATED through the PNG codec
     (upgraded from rows-only in r4): the Spark side encodes the integer
     pixel pattern as REAL PNG bytes (functions/raster.py: zlib/deflate,
@@ -2525,6 +2540,7 @@ SELECT ('img' || CAST(iid AS STRING)) AS image_id,
 FROM px GROUP BY iid"""
 
 
+@engine_query("image_features", _q_image_features_sql)
 def _image_features_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from routers_spark.pipeline.multimodal import image_features
 
@@ -2534,39 +2550,33 @@ def _image_features_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
                       *[f"hist_{j}" for j in range(8)])
 
 
-def _phash_corpus_sql(dialect: str) -> str:
+def _phash_corpus_sql(d: sqlgen.Dialect) -> str:
     """STRING-id image corpus with SQL-derivable phashes: splitmix64 of the
     doc key, plus a 2-bit-flipped 'dup…' twin for every 10th image (the
     planted near-duplicates). Fixed-width lpad keeps string order ==
     numeric order in both engines."""
-    from routers_spark.functions.hashing import splitmix64_sql, sql_ops
-
-    xor, _, _ = sql_ops(dialect)
-    sm = splitmix64_sql("CAST(doc_id AS BIGINT)", dialect)
+    sm = hashing.splitmix64_sql("CAST(doc_id AS BIGINT)", d)
     return (
         f"SELECT ('img' || lpad(CAST(doc_id AS STRING), 9, '0')) AS image_id,"
         f" {sm} AS phash FROM documents"
         f" UNION ALL "
         f"SELECT ('dup' || lpad(CAST(doc_id AS STRING), 9, '0')) AS image_id,"
-        f" {xor(f'({sm})', '5')} AS phash"
+        f" {d.xor(f'({sm})', '5')} AS phash"
         f" FROM documents WHERE doc_id % 10 = 0"
     )
 
 
-@sql_query("phash_dedup_pairs")
-def _q_phash_dedup_sql(dialect: str) -> str:
+def _q_phash_dedup_sql() -> str:
     """Perceptual-hash image near-dup PIPELINE over string image ids: the
     Spark side runs pipeline.multimodal.phash_dedup_pairs (banded
     Hamming-ball pigeonhole join — the engine path, here exercised on the
     input_hint's string image_id key, complementing the long-keyed
     phash_hamming_pairs gate); this oracle is the brute-force all-pairs
     restatement, equal by the max_hamming < bands guarantee."""
-    from routers_spark.functions.hashing import sql_ops
-
-    xor, _, _ = sql_ops(dialect)
-    ham = f"bit_count({xor('a.phash', 'b.phash')})"
+    d = sqlgen.DUCKDB
+    ham = f"bit_count({d.xor('a.phash', 'b.phash')})"
     return f"""
-WITH c AS ({_phash_corpus_sql(dialect)})
+WITH c AS ({_phash_corpus_sql(d)})
 SELECT a.image_id AS id_a, b.image_id AS id_b,
        CAST({ham} AS BIGINT) AS hamming
 FROM c a JOIN c b ON a.image_id < b.image_id
@@ -2574,13 +2584,14 @@ WHERE {ham} <= 3
 """
 
 
+@engine_query("phash_dedup_pairs", _q_phash_dedup_sql)
 def _phash_dedup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from routers_spark.pipeline.multimodal import phash_dedup_pairs
 
     register_views(spark, sf_dir)
-    corpus = spark.sql(_phash_corpus_sql("spark"))
+    corpus = spark.sql(_phash_corpus_sql(sqlgen.SPARK))
     out = phash_dedup_pairs(corpus, max_hamming=3, bands=4)
     return out.select("id_a", "id_b",
                       F.col("hamming").cast("long").alias("hamming"))
@@ -2589,8 +2600,7 @@ def _phash_dedup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 _VID_N = 48  # distinct clips in the gate corpus
 
 
-@sql_query("video_frame_sample")
-def _q_frame_sample_sql(dialect: str) -> str:
+def _q_frame_sample_sql() -> str:
     """Multimodal frame sampling, ORACLE-GATED on the container metadata
     (upgraded from rows-only in r4): the Spark side encodes deterministic
     gradient frames as a REAL Motion-JPEG AVI (functions/avi.py over the
@@ -2600,7 +2610,7 @@ def _q_frame_sample_sql(dialect: str) -> str:
     (frame_idx, t_ms, w, h) rows from the clip-length formula. A mismatch
     in RIFF framing, chunk indexing, header fps, the sampling bound, or
     the decoded frame dimensions fails the gate. Pixels stay
-    pytest-gated (JPEG is lossy — PSNR ≥ 40 dB parity; the SQL twin
+    pytest-gated (JPEG is lossy — PSNR ≥ 40 dB parity; the SQL oracle
     cannot express a DCT). DuckDB-only text; Spark runs the engine."""
     return f"""
 WITH vid AS (SELECT DISTINCT CAST(event_id % {_VID_N} AS BIGINT) AS i
@@ -2622,6 +2632,7 @@ SELECT ('vid' || CAST(i AS STRING)) AS video_id,
 FROM samp"""
 
 
+@engine_query("video_frame_sample", _q_frame_sample_sql)
 def _frame_sample_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
@@ -2674,8 +2685,7 @@ _AUDIO_K = ("((aid * 7919 + t * 104729 + 12345) * 2654435761) % 65536"
             " - 32768")
 
 
-@sql_query("audio_window_features")
-def _q_audio_windows_sql(dialect: str) -> str:
+def _q_audio_windows_sql() -> str:
     """Multimodal audio windowing, ORACLE-GATED through the WIRE FORMAT
     (upgraded from rows-only in r4): the Spark side synthesizes the
     integer PCM pattern, encodes it as a REAL RIFF/WAVE file
@@ -2683,8 +2693,7 @@ def _q_audio_windows_sql(dialect: str) -> str:
     windows them — the oracle recomputes rms/peak from the integer
     pattern directly. A mismatch anywhere in PCM quantization, RIFF
     framing, chunk walking, sample-rate-driven window sizing, or the
-    window math fails the gate. (DuckDB-only text; the Spark side runs
-    the engine, as with every engine-override gate.)"""
+    window math fails the gate. DuckDB-only text; Spark runs the engine."""
     return f"""
 WITH aud AS (SELECT DISTINCT CAST(event_id % {_AUDIO_N} AS BIGINT) AS aid
              FROM events),
@@ -2706,6 +2715,7 @@ SELECT ('aud' || CAST(aid AS STRING)) AS audio_id,
 FROM win"""
 
 
+@engine_query("audio_window_features", _q_audio_windows_sql)
 def _audio_windows_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
@@ -2747,8 +2757,7 @@ def _audio_windows_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RSZ_W, _RSZ_H = 5, 5  # 16→5 is non-integral: exercises the general boxes
 
 
-@sql_query("image_resize")
-def _q_image_resize_sql(dialect: str) -> str:
+def _q_image_resize_sql() -> str:
     """Multimodal resize, ORACLE-GATED through a full PNG
     encode→resize→encode→decode cycle (upgraded from rows-only in r4):
     the Spark side runs the REAL ``resize_images`` facade (integral-image
@@ -2801,40 +2810,13 @@ SELECT ('img' || CAST(iid AS STRING)) AS image_id,
 FROM cell"""
 
 
+@engine_query("image_resize", _q_image_resize_sql)
 def _image_resize_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from routers_spark.functions.raster import decode_image
     from routers_spark.pipeline.multimodal import resize_images
 
     register_views(spark, sf_dir)
     out = resize_images(_image_corpus(spark), _RSZ_W, _RSZ_H)
-
-    def explode_px(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {k: [] for k in ("image_id", "x", "y", "r", "g", "b")}
-            for row in pdf.itertuples(index=False):
-                arr = decode_image(bytes(row.bytes), row.fmt)
-                h, w = arr.shape[:2]
-                yy, xx = np.meshgrid(np.arange(h), np.arange(w),
-                                     indexing="ij")
-                cols["image_id"].append(
-                    np.full(h * w, row.image_id, dtype=object))
-                cols["x"].append(xx.ravel())
-                cols["y"].append(yy.ravel())
-                for ci, ch in enumerate("rgb"):
-                    cols[ch].append(arr[:, :, ci].ravel().astype(np.int64))
-            if not cols["x"]:
-                continue
-            yield pd.DataFrame({k: np.concatenate(v)
-                                for k, v in cols.items()})
-
-    return out.mapInPandas(
-        explode_px,
-        schema="image_id string, x int, y int, r long, g long, b long")
+    return _pixel_rows(out, ["image_id"], "bytes", "x", "y")
 
 
 _EMB_DEDUP_CORPUS = """
@@ -2847,8 +2829,7 @@ _EMB_DEDUP_CORPUS = """
   FROM embeddings WHERE vec_id % 20 = 0"""
 
 
-@sql_query("embedding_dedup")
-def _q_embedding_dedup_sql(dialect: str) -> str:
+def _q_embedding_dedup_sql() -> str:
     """Embedding-cosine near-dup canonical ids. Corpus = embeddings plus
     EXACT-copy twins (every 10th vector at +1e6; every 20th also at +2e6, so
     3-node chains exercise the component collapse). Exact copies make the
@@ -2878,6 +2859,7 @@ FROM c LEFT JOIN canon cn ON cn.u = c.vid
 """
 
 
+@engine_query("embedding_dedup", _q_embedding_dedup_sql)
 def _embedding_dedup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
@@ -2911,22 +2893,14 @@ def _q_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_topk_cosine(emb, q, head["vec_id"].values, k=5)
 
 
-def _brute_topk_sql(dialect: str) -> str:
+def _brute_topk_sql() -> str:
     """Shared brute-force top-k-cosine oracle (ann_ivf_exact +
     ann_lsh_exact): explode embeddings, dot/norm join, window re-rank.
     Cosines in plain DOUBLE, rounded to 6 (engine float64 vs SQL
     sequential sums differ at ~1e-15 — far inside the rounding slack);
     self-matches kept (rank 1, cosine 1)."""
-    if dialect == "duckdb":
-        flat = (
-            "SELECT vec_id, CAST(generate_subscripts(embedding, 1) AS INT) AS pos, "
-            "CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings"
-        )
-    else:
-        flat = (
-            "SELECT vec_id, CAST(pos AS INT) AS pos, CAST(v AS DOUBLE) AS v "
-            "FROM embeddings LATERAL VIEW posexplode(embedding) t AS pos, v"
-        )
+    flat = sqlgen.DUCKDB.explode_list("embeddings", "vec_id", "embedding",
+                                      lambda v: f"CAST({v} AS DOUBLE)")
     return f"""
 WITH flat AS ({flat}),
 q AS (SELECT * FROM flat WHERE vec_id < 8),
@@ -2957,49 +2931,14 @@ FROM ranked WHERE rnk <= 5
 """
 
 
-@sql_query("ann_ivf_exact")
-def _q_ann_ivf_exact_sql(dialect: str) -> str:
-    """ORACLE-GATED IVF: the Spark side runs the full engine IVF pipeline
-    (spherical-k-means training, inverted-list build, probe join, Arrow
-    cosine, window re-rank) in its exact-degenerate configuration
-    nprobe == nlist — mathematically the brute top-k scan — against the
-    shared brute-force SQL twin. Gates the probe machinery end-to-end; the
-    approximate configs remain pytest-gated by recall floors."""
-    return _brute_topk_sql(dialect)
-
-
-@sql_query("ann_lsh_exact")
-def _q_ann_lsh_exact_sql(dialect: str) -> str:
-    """ORACLE-GATED LSH (round-3 verdict Next #2): the Spark side runs the
-    full engine LSH pipeline (sign-bucket index build, broadcast probe
-    join, candidate dedup, Arrow cosine, window re-rank) in its
-    exact-degenerate configuration n_tables=1, n_planes=0 — every vector
-    lands in the single empty-bit bucket, so candidate membership is the
-    whole corpus and LSH ≡ brute top-k — against the same shared SQL twin.
-    The approximate config (ann_lsh_topk) stays rows-only with its pytest
-    recall floor."""
-    return _brute_topk_sql(dialect)
-
-
-def _ann_lsh_exact_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from routers_spark.pipeline.similarity import lsh_topk_cosine
-
-    register_views(spark, sf_dir)
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    head = emb.orderBy("vec_id").limit(8).toPandas()
-    q = np.stack(head["embedding"].values).astype(np.float64)
-    out = lsh_topk_cosine(emb, q, head["vec_id"].values, k=5,
-                          n_planes=0, n_tables=1)
-    return out.select(F.col("query_id").cast("bigint").alias("query_id"),
-                      F.col("vec_id").cast("bigint").alias("vec_id"),
-                      F.round("cosine", 6).alias("cosine"),
-                      F.col("rank").cast("bigint").alias("rank"))
-
-
+@engine_query("ann_ivf_exact", _brute_topk_sql)
 def _ann_ivf_exact_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ORACLE-GATED IVF: the full engine IVF pipeline (spherical-k-means
+    training, inverted-list build, probe join, Arrow cosine, window
+    re-rank) in its exact-degenerate configuration nprobe == nlist —
+    mathematically the brute top-k scan — against the shared brute-force
+    SQL oracle. Gates the probe machinery end-to-end; the approximate
+    configs remain pytest-gated by recall floors."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -3011,6 +2950,33 @@ def _ann_ivf_exact_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = np.stack(head["embedding"].values).astype(np.float64)
     out = ivf_topk_cosine(emb, q, head["vec_id"].values, k=5,
                           nlist=16, nprobe=16)
+    return out.select(F.col("query_id").cast("bigint").alias("query_id"),
+                      F.col("vec_id").cast("bigint").alias("vec_id"),
+                      F.round("cosine", 6).alias("cosine"),
+                      F.col("rank").cast("bigint").alias("rank"))
+
+
+@engine_query("ann_lsh_exact", _brute_topk_sql)
+def _ann_lsh_exact_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ORACLE-GATED LSH (round-3 verdict Next #2): the full engine LSH
+    pipeline (sign-bucket index build, broadcast probe join, candidate
+    dedup, Arrow cosine, window re-rank) in its exact-degenerate
+    configuration n_tables=1, n_planes=0 — every vector lands in the
+    single empty-bit bucket, so candidate membership is the whole corpus
+    and LSH ≡ brute top-k — against the shared brute-force SQL oracle.
+    The approximate config (ann_lsh_topk) stays rows-only with its pytest
+    recall floor."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from routers_spark.pipeline.similarity import lsh_topk_cosine
+
+    register_views(spark, sf_dir)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    head = emb.orderBy("vec_id").limit(8).toPandas()
+    q = np.stack(head["embedding"].values).astype(np.float64)
+    out = lsh_topk_cosine(emb, q, head["vec_id"].values, k=5,
+                          n_planes=0, n_tables=1)
     return out.select(F.col("query_id").cast("bigint").alias("query_id"),
                       F.col("vec_id").cast("bigint").alias("vec_id"),
                       F.round("cosine", 6).alias("cosine"),
@@ -3036,145 +3002,18 @@ def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------------------------------- registry
 
 
-def _knn_spark_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark override for knn_nearest_station: Spark inlines (re-executes)
-    a CTE per reference, and ring_best is referenced twice (union + the
-    fallback anti-join) — materializing it once as a persisted view halves
-    the heavy work. Composed from the same CTE bodies as the oracle SQL
-    (no string surgery), so results are identical to the one-shot form.
-
-    One more engine-side swap: the per-event winner comes from a
-    ``min(struct(dist_m, s_suppkey))`` HASH AGGREGATE instead of the
-    oracle's ROW_NUMBER window — identical result (struct min is
-    lexicographic = the window's ORDER BY dist_m, s_suppkey), but the agg
-    partial-combines map-side and never sorts the ring join's output."""
+def _run_shared(gen: Callable[[sqlgen.Dialect], str], spark: SparkSession,
+                sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
-    # Engine-side ring radius 3 (7x7 cells; the oracle keeps the one-shot
-    # 3x3 form). Both radii are EXACT by the same argument: a ring winner
-    # is accepted only when its distance is <= the conservative
-    # metres-floor distance to the block boundary (here the 7x7 edge), so
-    # any station outside the block is strictly farther and the accepted
-    # winner is the global nearest; everything else takes the same full
-    # fallback scan, and dist_m is one shared expression on both paths.
-    # Why: at bench density the 3x3 guarantee clears only ~37% of events,
-    # leaving a ~63k-event x full-station fallback cross join; 7x7 clears
-    # ~98%, ~6x fewer haversine evaluations overall.
-    c = _knn_ctes(radius=3)
-
-    def with_ctes(names: list[str], final: str) -> str:
-        ctes = ",\n".join(f"{n} AS ({c[n]}\n)" for n in names)
-        return f"WITH {ctes}\n{final}"
-
-    # ev_g (events + guarantee bands) feeds the ring join AND the fallback
-    # anti-join, ring_best the union AND the fallback anti-join:
-    # materialize each ONCE as a temp view the later bodies read.
-    # bounded_persist (a local checkpoint), not persist — a persisted view
-    # referenced from two branches of one query trips a Spark analyzer
-    # internal error (DeduplicateRelations under InlineCTE on the cached
-    # subtree), and a persisted frame stays in the CacheManager until
-    # someone unpersists it; a checkpointed LogicalRDD dedups cleanly and
-    # is reclaimed once its last consumer is gone.
-    from routers_spark.functions.cache import bounded_persist
-
-    evg = bounded_persist(
-        spark.sql(with_ctes(["ev", "ev_g"], "SELECT * FROM ev_g")), "knn_ev_g")
-    evg.createOrReplaceTempView("ev_g")
-
-    ring_best_agg = """
-  SELECT event_id, mn.s AS s_suppkey, mn.d AS dist_m
-  FROM (SELECT event_id,
-               min(named_struct('d', dist_m, 's', s_suppkey)) AS mn,
-               min(g_m) AS g_m
-        FROM ring GROUP BY event_id) r
-  WHERE mn.d <= g_m"""
-    rb = bounded_persist(spark.sql(with_ctes(
-        ["st", "nbr", "ring"], ring_best_agg)), "knn_ring_best")
-    rb.createOrReplaceTempView("ring_best")
-    # the fallback still needs the cheap st CTE; ev_g / ring_best inside
-    # resolve to the materialized temp views
-    fallback_best_agg = """
-  SELECT event_id, mn.s AS s_suppkey, mn.d AS dist_m FROM (
-    SELECT event_id, min(named_struct('d', dist_m, 's', s_suppkey)) AS mn
-    FROM fallback GROUP BY event_id) f"""
-    out = spark.sql(with_ctes(
-        ["st", "fallback"],
-        "SELECT event_id, s_suppkey AS nearest_station, "
-        "round(dist_m, 3) AS dist_m FROM "
-        f"(SELECT * FROM ring_best UNION ALL {fallback_best_agg}) best"))
-    # the query is analysed, so it holds the views' plans itself: drop the
-    # views, so they neither outlive the call nor pin its checkpoints
-    spark.catalog.dropTempView("ev_g")
-    spark.catalog.dropTempView("ring_best")
-    return out
+    return spark.sql(gen(sqlgen.SPARK))
 
 
-def _s2_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark override for cell_encode_s2: functions/s2_jvm.py, a few
-    projections whose Hilbert fold is one Column of in-expression chunk
-    lookups (functions/hilbert_jvm.hilbert_col) — no join, inside
-    whole-stage codegen, instead of the 60-projection CTE chain (which
-    Spark executes correctly but drops out of codegen on method size).
-    Bit-parity with the numpy kernel and the DuckDB oracle CTE is pinned
-    by tests/test_s2.py."""
-    from .functions.s2_jvm import with_s2_jvm
-
-    register_views(spark, sf_dir)
-    src = spark.sql(
-        f"SELECT CAST(event_id AS BIGINT) AS event_id,"
-        f" {EVENT_LON} AS elon, {EVENT_LAT} AS elat FROM events")
-    return (with_s2_jvm(src, "elon", "elat")
-            .select("event_id", "s2_face", "s2_id", "s2_id_l12"))
+def spark_fn(name: str) -> Builder:
+    q = _SQL_QUERIES[name]
+    return q.build or partial(_run_shared, q.gen)
 
 
-_SPARK_OVERRIDES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "cell_encode_s2": _s2_spark,
-    "knn_nearest_station": _knn_spark_materialized,
-    "access_eval": _access_eval_spark,
-    "zone_assign_cells": _zone_cells_spark,
-    "minhash_engine": _minhash_engine_spark,
-    "simhash_dedup_pairs": _simhash_dedup_spark,
-    "spatial_cell_join": _spatial_cell_join_spark,
-    "tile_range_scan": _tile_range_spark,
-    "geo_route_assign": _geo_route_spark,
-    "phash_hamming_pairs": _phash_hamming_spark,
-    "token_counts": _token_counts_spark,
-    "cell_count_rollup": _cell_count_rollup_spark,
-    "minhash_dedup_pipeline": _minhash_dedup_spark,
-    "phash_dedup_pairs": _phash_dedup_spark,
-    "embedding_dedup": _embedding_dedup_spark,
-    "ann_ivf_exact": _ann_ivf_exact_spark,
-    "ann_lsh_exact": _ann_lsh_exact_spark,
-    "map_match_exact": _map_match_exact_spark,
-    "map_match_exact_celljoin": _map_match_exact_celljoin_spark,
-    "maxspeed_parse": _maxspeed_spark,
-    "access_parse": _access_parse_spark,
-    "opening_hours_parse": _opening_hours_spark,
-    "dbscan_clusters": _dbscan_spark,
-    "mvt_point_tiles": _mvt_spark,
-    "audio_window_features": _audio_windows_spark,
-    "image_features": _image_features_spark,
-    "image_resize": _image_resize_spark,
-    "video_frame_sample": _frame_sample_spark,
-    "raster_pyramid_tiles": _raster_spark,
-    "raster_zonal_stats": _zonal_spark,
-    "osm_pbf_way_expansion": _pbf_way_edges_spark,
-    "zone_bbox_lookup": _zone_bbox_spark,
-}
-
-
-def spark_fn(name: str) -> Callable[[SparkSession, str], DataFrame]:
-    if name in _SPARK_OVERRIDES:
-        return _SPARK_OVERRIDES[name]
-    gen = _SQL_QUERIES[name]
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir)
-        return spark.sql(gen("spark"))
-
-    return run
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def queries() -> dict[str, Builder]:
     out = {name: spark_fn(name) for name in _SQL_QUERIES}
     nos = dict(_NOSQL_QUERIES)
     # keep the historically-dropped rows away from the registry tail: if a
@@ -3188,4 +3027,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {name: gen("duckdb") for name, gen in _SQL_QUERIES.items()}
+    return {name: q.gen() if q.build else q.gen(sqlgen.DUCKDB)
+            for name, q in _SQL_QUERIES.items()}

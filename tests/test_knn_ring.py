@@ -13,13 +13,14 @@ from __future__ import annotations
 
 def test_knn_radius3_matches_oneshot_sql(spark, sf_dir):
     from routers_spark.queries import (
-        _SQL_QUERIES,
         _knn_spark_materialized,
+        oracle_sql,
         register_views,
     )
 
+    # the oracle text is plain SQL that Spark parses as well
     register_views(spark, sf_dir)
-    oneshot = spark.sql(_SQL_QUERIES["knn_nearest_station"]("spark"))
+    oneshot = spark.sql(oracle_sql()["knn_nearest_station"])
     staged = _knn_spark_materialized(spark, sf_dir)
 
     a = sorted(map(tuple, oneshot.collect()))

@@ -195,13 +195,14 @@ def test_driver_registry_holds_fifty_entries():
     rows-only entries at the exact tail — if the cap still holds, the
     loss lands on map_match_discretized + map_match_celljoin (both
     rows-only perf rows, facade gated by their hash-green exact twins)
-    per the ordering queries() keeps. Every oracle name and every
-    engine override must belong to a registered query."""
+    per the ordering queries() keeps. Every oracle name must belong to a
+    registered query."""
     from routers_spark import queries as Q
 
     qs = Q.queries()
     os_ = Q.oracle_sql()
     assert len(qs) == 52
+    assert len(os_) == 48
     assert "cell_encode_s2" in os_
     assert "raster_zonal_stats" in os_
     # the tail rows are the documented cheapest drops
@@ -213,30 +214,38 @@ def test_driver_registry_holds_fifty_entries():
     rows_only = [n for n in names if n not in os_]
     assert rows_only.index("ann_ivf_topk") < 2
     assert rows_only.index("ann_lsh_topk") < 2
-    # an override for a name queries() never exposes is dead code
-    assert set(Q._SPARK_OVERRIDES) <= set(Q.queries())
+
+
+SHARED_SQL = [
+    "tile_assign_slippy", "tile_hilbert_key", "cell_encode_geohash",
+    "cell_encode_quadkey", "tile_pyramid_rollup", "partition_assign",
+    "zone_assign_pip", "bearing_heading", "gap_sessionize",
+    "dedup_stale_events", "dated_range_filter", "pricing_summary",
+    "dedup_exact_docs", "text_quality", "lang_id_stopwords",
+    "embedding_topk_cosine",
+]
 
 
 def test_engine_gates_run_the_engine():
-    """Anti-vacuous-gate guard (review-2 catch): every oracle-gated query
-    whose docstring claims the Spark side runs the REAL engine must have a
-    _SPARK_OVERRIDES entry — otherwise spark_fn falls back to executing
-    the oracle SQL on both engines and the gate compares the oracle to
-    itself."""
+    """Anti-vacuous-gate guard: a query is either shared SQL (one
+    ``gen(d)`` rendered for both engines, no builder) or an engine query
+    whose Spark builder is registered with an oracle generator that takes
+    no dialect — so it cannot render Spark text, and the gate can never
+    compare the oracle with itself."""
+    import inspect
+
     from routers_spark import queries as Q
 
-    engine_gates = [
-        "maxspeed_parse", "access_parse", "opening_hours_parse",
-        "map_match_exact", "map_match_exact_celljoin",
-        "dbscan_clusters", "mvt_point_tiles", "audio_window_features",
-        "image_features", "image_resize", "video_frame_sample",
-        "raster_pyramid_tiles", "ann_lsh_exact", "ann_ivf_exact",
-        "osm_pbf_way_expansion", "embedding_dedup",
-        "minhash_dedup_pipeline", "zone_bbox_lookup",
-        "cell_encode_s2",
-    ]
-    missing = [n for n in engine_gates if n not in Q._SPARK_OVERRIDES]
-    assert not missing, missing
+    shared = [n for n, q in Q._SQL_QUERIES.items() if q.build is None]
+    assert sorted(shared) == sorted(SHARED_SQL)
+    for name, q in Q._SQL_QUERIES.items():
+        params = list(inspect.signature(q.gen).parameters)
+        if q.build is None:
+            assert params == ["d"], name
+        else:
+            assert params == [], name
+            assert Q.spark_fn(name) is q.build
+    assert len(Q._SQL_QUERIES) - len(shared) == 32
 
 
 @pytest.mark.parametrize("candidate_path", ["broadcast", "celljoin"])

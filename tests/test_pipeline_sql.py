@@ -1,6 +1,6 @@
-"""SQL-twin parity: the dual-dialect minhash/simhash oracles must equal the
-numpy engine kernels bit-for-bit (DuckDB side; the Spark side is covered by
-the driver gate + tools/check_oracle.py)."""
+"""SQL-oracle parity: the DuckDB minhash/simhash oracles must equal the
+numpy engine kernels bit-for-bit (the Spark side runs those kernels and is
+covered by the driver gate + tools/check_oracle.py)."""
 
 import duckdb
 import numpy as np
@@ -30,7 +30,7 @@ def duck():
 
 
 def test_minhash_sql_matches_numpy(duck):
-    sql = Q._q_minhash("duckdb")
+    sql = Q._q_minhash()
     got = duck.execute(sql + " ORDER BY doc_id").df()
     assert len(got) == len(DOCS)
     for i, (did, text) in enumerate(DOCS):
@@ -42,7 +42,7 @@ def test_minhash_sql_matches_numpy(duck):
 
 
 def test_simhash_sql_matches_numpy(duck):
-    sql = Q._q_simhash("duckdb")
+    sql = Q._q_simhash()
     got = duck.execute(sql + " ORDER BY doc_id").df()
     for i, (did, text) in enumerate(DOCS):
         assert int(got.iloc[i]["simhash"]) == int(np.int64(simhash64(text))), did

@@ -1,5 +1,5 @@
-"""S2 cell-id encoding: curve properties, kernel parity, dialect parity,
-and the gate fixture's boundary-margin guard (the precondition that makes
+"""S2 cell-id encoding: curve properties, kernel parity, DuckDB oracle
+parity, and the gate fixture's boundary-margin guard (the precondition that makes
 a float-bearing oracle comparison exact)."""
 
 from __future__ import annotations
@@ -107,7 +107,7 @@ def test_faces_4_5_set_sign_bit():
     assert (ids < 0).all()  # two's-complement convention, faces 4 and 5
 
 
-# ------------------------------------------------------- dialect parity
+# ------------------------------------------------- DuckDB oracle parity
 
 
 def test_duckdb_sql_matches_numpy_kernel():
@@ -127,24 +127,6 @@ def test_duckdb_sql_matches_numpy_kernel():
     np.testing.assert_array_equal(got["s2_id_l12"].to_numpy(), parents)
     face, _, _ = s2.face_uv_np(lon, lat)
     np.testing.assert_array_equal(got["s2_face"].to_numpy(), face)
-
-
-def test_spark_sql_matches_numpy_kernel(spark):
-    import pandas as pd
-
-    # the 60-CTE chain needs more analyzer passes than the default 100
-    # (register_views sets the same conf on the gate path)
-    spark.conf.set("spark.sql.analyzer.maxIterations", "1000")
-    lon, lat = _rand_lonlat(2000, 23)
-    ids = s2.s2_cellid_np(lon, lat)
-    sdf = spark.createDataFrame(pd.DataFrame(
-        {"rid": np.arange(len(lon)), "lon": lon, "lat": lat}))
-    sdf.createOrReplaceTempView("s2pts")
-    sql = sqlgen.s2_cellid_cte_sql(
-        sqlgen.SPARK, "SELECT rid, lon, lat FROM s2pts", "lon", "lat",
-        ["rid"])
-    got = spark.sql(sql).toPandas().sort_values("rid")
-    np.testing.assert_array_equal(got["s2_id"].to_numpy(), ids)
 
 
 # ------------------------------------------- gate fixture margin guard
